@@ -5,11 +5,11 @@ Debezium-style CDC records land as parquet batches in a directory that
 one long-running query (``write_stream_txn_append`` with Delta export)
 ingests into the activities table, while a second one
 (``write_stream_final_pipeline``) maintains jmv1 -> agg -> final ->
-prime. One client runs a closed loop: land the next batch (every k-th
-step also MERGE a salary raise into the employees table), wait until
+prime. One client runs a closed loop: land the next batch, wait until
 both queries have processed everything available, then serve prime.
-A maintenance pass (DV delete, merge, compact, chain drain) follows,
-and the served prime is checked against a batch recompute."""
+The served prime is then checked against a batch recompute. Traced runs
+then stop both queries and time a maintenance pass (HR merge, DV
+delete, merge, compact)."""
 
 from __future__ import annotations
 
@@ -96,6 +96,28 @@ def _is_log(path: str) -> bool:
     return "/_txnlog/" in path or "/_delta_log/" in path
 
 
+def _last_data_batch(q) -> int:
+    """Id of the query's latest trigger that read rows. An idle trigger
+    reports the id of the batch still to come, so lastProgress cannot
+    mark where a window starts."""
+    return max((p.batchId for p in q.recentProgress if p.numInputRows > 0),
+               default=-1)
+
+
+def _write_counts(before_files: dict[str, int], before_v: dict[str, int],
+                  root: str) -> dict:
+    """Commits, files and bytes written under ``root`` since the
+    ``_tree_files``/``_txn_versions`` snapshot given."""
+    after_files, after_v = _tree_files(root), _txn_versions(root)
+    new = {p: s for p, s in after_files.items() if p not in before_files}
+    return {
+        "commits": sum(v - before_v.get(t, 0) for t, v in after_v.items()),
+        "files_written": len(new),
+        "data_bytes_written": sum(s for p, s in new.items() if not _is_log(p)),
+        "log_bytes_written": sum(s for p, s in new.items() if _is_log(p)),
+    }
+
+
 class CdcLakehouse:
     name = "cdc_lakehouse"
 
@@ -125,13 +147,12 @@ class CdcLakehouse:
                         "is_valid", "error_message", "created_at"))
         self.emp.overwrite(emp0)
         self.val.overwrite(val0)
-        self.hr_rows = [tuple(r) for r in self.emp.read(spark)
-                        .orderBy("id_employee").collect()]
 
         raw = D.cdc_events(spark, sf).withColumn(
             "b", F.pmod(F.xxhash64(F.col("offset"), F.lit(seed)),
                         F.lit(N_BATCHES)).cast("int"))
-        raw.repartition(F.col("b")).write.partitionBy("b").parquet(self.stage)
+        # one writer task, so one file per batch
+        raw.coalesce(1).write.partitionBy("b").parquet(self.stage)
         self.order = sorted(int(d[2:]) for d in os.listdir(self.stage)
                             if d.startswith("b="))
         self.rng.shuffle(self.order)
@@ -176,14 +197,14 @@ class CdcLakehouse:
                 TimedProxy(self.prime, tr, {"refresh": "mv.prime_refresh"}),
             ]
         self._start_queries()
-        # HR merges update employees in place and CDC rows only touch
-        # activities, so every later serve must return this many rows
+        # CDC rows only touch activities, so every later serve must
+        # return this many rows
         self.n_prime = self._serve()
 
     def _start_queries(self) -> None:
-        """Start (or restart from their checkpoints) both queries and
-        drain them: on a fresh run the first batch creates the activities
-        table and the chain's first trigger builds all four layers."""
+        """Start both queries and drain them: the first batch creates the
+        activities table and the chain's first trigger builds all four
+        layers."""
         spark, work = self.spark, self.run.work
         feed = P.stream_cdc_from_files(spark, self.src).select(
             "id", "id_employee", "sport_type", "activity_duration")
@@ -232,9 +253,11 @@ class CdcLakehouse:
         run = self.run
         self.freshness, self.serve_s = [], []
         self.rows_in = self.bytes_in = 0
-        before_files, before_v = (_tree_files(self.root),
-                                  _txn_versions(self.root))
-        self.batch_ids = {q: (q.lastProgress or {}).get("batchId", -1)
+        traced = run.tracer.enabled
+        if traced:
+            before_files, before_v = (_tree_files(self.root),
+                                      _txn_versions(self.root))
+        self.batch_ids = {q: _last_data_batch(q)
                           for q in (self.q_ingest, self.q_chain)}
         t_start = time.perf_counter()
         step = 0
@@ -248,38 +271,33 @@ class CdcLakehouse:
             run.count_spark()
         self.loop_s = time.perf_counter() - t_start
         self.window = (t_start, t_start + self.loop_s)
-        self.batch_ids_end = {q: (q.lastProgress or {}).get("batchId", -1)
+        self.batch_ids_end = {q: _last_data_batch(q)
                               for q in (self.q_ingest, self.q_chain)}
-        after_files, after_v = _tree_files(self.root), _txn_versions(self.root)
-        new = {p: s for p, s in after_files.items() if p not in before_files}
-        self.write = {
-            "commits": sum(v - before_v.get(t, 0) for t, v in after_v.items()),
-            "files_written": len(new),
-            "data_bytes_written": sum(s for p, s in new.items()
-                                      if not _is_log(p)),
-            "log_bytes_written": sum(s for p, s in new.items() if _is_log(p)),
-        }
+        if traced:
+            self.write = _write_counts(before_files, before_v, self.root)
 
-    def speedup_steps(self, n: int) -> float:
-        """Restart both queries on the current session (their checkpoints
-        carry them over) and return the median freshness of ``n`` more
-        steps."""
+    def speedup_pass(self) -> float:
+        """The batch prime recompute on the current session, run twice;
+        returns the second (warm) time."""
         self.spark = self.run.spark
-        self._start_queries()
-        fresh = []
-        for i in range(n):
-            with self.run.checks.guard(f"scaling step {i}"):
-                fresh.append(self._step(10_000 + i)[0])
-        return median(fresh)
+        t = 0.0
+        for i in range(2):
+            with self.run.checks.guard(f"scaling recompute {i}"):
+                t0 = time.perf_counter()
+                self._batch_prime()
+                t = time.perf_counter() - t0
+        return t
 
     def maintenance(self) -> float:
         """An HR MERGE of salary raises into the employees table, then on
         the activities table a DV delete of one employee's rows, a merge
         of seeded rows and a compaction."""
         spark, tr, act = self.spark, self.run.tracer, self.act
+        hr_rows = [tuple(r) for r in self.emp.read(spark)
+                   .orderBy("id_employee").collect()]
         raises = spark.createDataFrame(
             [(r[0], r[1] + 100, r[2], r[3])
-             for r in self.rng.sample(self.hr_rows, HR_KEYS)],
+             for r in self.rng.sample(hr_rows, HR_KEYS)],
             self.emp.read(spark).schema)
         ids = [r[0] for r in act.read(spark).select("id_employee")
                .distinct().orderBy("id_employee").collect()]
@@ -306,15 +324,19 @@ class CdcLakehouse:
 
     # -- checks ----------------------------------------------------------
 
-    def verify(self) -> None:
-        """The maintained prime equals prime_query(final_table(...))
-        recomputed in batch over the current inputs."""
+    def _batch_prime(self):
+        """prime_query(final_table(...)) recomputed in batch over the
+        current inputs, collected."""
         spark = self.spark
         expected = R.prime_query(R.final_table(
             self.emp.read(spark), self.val.read(spark),
             self.act.read(spark).select("id_employee", "activity_duration")))
-        want = canonical_rows(expected.select(*PRIME_COLS).toPandas())
-        got = canonical_rows(self.prime.read(spark).select(*PRIME_COLS)
+        return expected.select(*PRIME_COLS).toPandas()
+
+    def verify(self) -> None:
+        """The maintained prime equals the batch recompute."""
+        want = canonical_rows(self._batch_prime())
+        got = canonical_rows(self.prime.read(self.spark).select(*PRIME_COLS)
                              .toPandas())
         self.run.checks.record(
             rows_close(got, want),
@@ -361,20 +383,25 @@ class CdcLakehouse:
         self.loop(time.perf_counter() + deadline_s)
         with run.checks.guard("verify final prime"):
             self.verify()
-        e2e = {"build_s": build_s, "mix_s": self.loop_s}
+        pass_s = median([f + v for f, v in zip(self.freshness, self.serve_s)])
+        e2e = {"build_s": build_s, "run_s": build_s + pass_s}
         layers = {
+            "loop.pass_s": pass_s,
             "cdc.steps": len(self.freshness),
             "cdc.freshness_p50_s": median(self.freshness),
             "cdc.prime_serve_p50_s": median(self.serve_s),
             "cdc.rows_per_s": self.rows_in / self.loop_s,
-            **{f"txnlog.{k}": v for k, v in self.write.items()},
-            "txnlog.write_amp": ((self.write["data_bytes_written"]
-                                  + self.write["log_bytes_written"])
-                                 / max(1, self.bytes_in)),
         }
         if tr.enabled:
-            # the maintenance pass runs in traced runs only: it does not
-            # fit the untraced runs' time budget (README.md)
+            layers.update({f"txnlog.{k}": v for k, v in self.write.items()})
+            layers["txnlog.write_amp"] = (
+                (self.write["data_bytes_written"]
+                 + self.write["log_bytes_written"]) / max(1, self.bytes_in))
+            layers.update(self.stream_layers())
+            # the maintenance pass runs in traced runs only, with both
+            # queries stopped: neither it nor a chain drain after it fits
+            # the run budget (README.md)
+            self.stop()
             with run.checks.guard("maintenance"):
                 layers["cdc.maintenance_s"] = self.maintenance()
             run.count_spark()
@@ -382,7 +409,6 @@ class CdcLakehouse:
                                         + tr.total("txnlog.hr_merge"))
             layers["txnlog.delete_dv_s"] = tr.total("txnlog.delete_dv")
             layers["txnlog.compact_s"] = tr.total("txnlog.compact")
-            layers.update(self.stream_layers())
         p = tail_percentile(len(self.freshness)) or 50
         layers["cdc.freshness_tail_s"] = percentile(self.freshness, p)
         layers["cdc.freshness_tail_pct"] = p

@@ -2,10 +2,12 @@
 
 ``plans.catalog.build_indexes`` runs first in the fresh benchmark
 process (empty index cache); then one client makes seeded passes over
-the 18 text, dedup and ANN catalog queries. This is the only workload
-that runs ``plans.textops``/``plans.simops`` and the dedup, IVF and PQ
-operators; it is shuffle-heavy where ``cdc_lakehouse`` runs many small
-fixed-cost batches."""
+the core mix, two of the 18 text, dedup and ANN catalog queries.
+Traced runs then run the other sixteen once, for their per-query
+figures and the ANN recall. This is the only workload that runs
+``plans.textops``/``plans.simops`` and the dedup, IVF and PQ operators;
+it is shuffle-heavy where ``cdc_lakehouse`` runs many small fixed-cost
+batches."""
 
 from __future__ import annotations
 
@@ -21,22 +23,27 @@ from sport_advantages_moderne_data_infrastructure_spark.plans import (
     catalog as C,
 )
 
-CORPUS_MIX = [
-    "ann_lsh_bucketed", "ann_ivf_topk", "ann_cosine_topk", "ann_sq8_topk",
-    "ann_pq_topk", "ann_ivfpq_topk", "ann_ivfpq_refined_topk",
-    "ann_filtered_topk", "dedup_exact", "dedup_jaccard_pairs",
-    "dedup_minhash_lsh", "text_bm25_topk", "dedup_lsh_verified",
-    "dedup_chunks", "dedup_repeated_spans", "bigram_surprisal_score",
-    "mixture_token_budget", "training_order_shuffle",
+#: the timed mix of every run: the roadmap's first targets. A pass over
+#: all 18 queries does not fit the run budget (README.md).
+CORE_MIX = ["dedup_minhash_lsh", "text_bm25_topk"]
+#: the rest of the 18 bench-flagged corpus queries, run once in traced
+#: runs after the timed mix
+COVERAGE = [
+    "dedup_jaccard_pairs", "dedup_repeated_spans", "ann_lsh_bucketed",
+    "ann_ivf_topk", "ann_cosine_topk", "ann_sq8_topk", "ann_pq_topk",
+    "ann_ivfpq_topk", "ann_ivfpq_refined_topk", "ann_filtered_topk",
+    "dedup_exact", "dedup_lsh_verified", "dedup_chunks",
+    "bigram_surprisal_score", "mixture_token_budget",
+    "training_order_shuffle",
 ]
+CORPUS_MIX = CORE_MIX + COVERAGE
 #: the approximate ANN queries without an oracle; their recall is taken
 #: against ann_cosine_topk's exact answer
 ANN_APPROX = ["ann_lsh_bucketed", "ann_ivf_topk", "ann_pq_topk",
               "ann_ivfpq_topk", "ann_ivfpq_refined_topk"]
 ANN_EXACT = "ann_cosine_topk"
-#: queries whose build/exec/jobs split is reported on its own
-NAMED = ["dedup_minhash_lsh", "dedup_jaccard_pairs", "dedup_repeated_spans",
-         "text_bm25_topk"]
+#: queries whose build/exec/jobs split is reported on its own (traced)
+NAMED = CORE_MIX + ["dedup_jaccard_pairs", "dedup_repeated_spans"]
 #: index builders that build_indexes calls, by artifact
 BUILDERS = {"shingle": ("textops", "shingle_index"),
             "capped": ("textops", "capped_shingle_index"),
@@ -156,7 +163,7 @@ class LlmCorpus:
         self.passes: list[float] = []
         self.orders: list[list[str]] = []
         while not self.passes or time.perf_counter() < deadline:
-            order = list(CORPUS_MIX)
+            order = list(CORE_MIX)
             self.rng.shuffle(order)
             self.orders.append(order)
             t0 = time.perf_counter()
@@ -172,6 +179,12 @@ class LlmCorpus:
                     run.checks.record(False, f"{name}: {rec['rows']} rows, "
                                       f"first run had {len(want)}")
             self.passes.append(time.perf_counter() - t0)
+
+    def coverage(self) -> None:
+        """The queries outside the core mix, once each (traced runs)."""
+        for name in COVERAGE:
+            with self.run.checks.guard(f"{name} coverage"):
+                self.records.append(self.one_query(name, keep=True))
 
     # -- checks ----------------------------------------------------------
 
@@ -216,17 +229,22 @@ class LlmCorpus:
         build_s = time.perf_counter() - t0
         build_counts = run.count_spark()
         self.loop(time.perf_counter() + deadline_s)
-        self.verify()
         lat = [r["build_s"] + r["exec_s"] for r in self.records]
-        e2e = {"build_s": build_s, "mix_s": median(self.passes)}
-        layers = {"ann.recall": self.ann_recall(),
-                  "corpus.query_p50_s": median(lat)}
-        for name in NAMED:
-            recs = [r for r in self.records if r["query"] == name]
-            layers[f"q.{name}.build_s"] = median([r["build_s"] for r in recs])
-            layers[f"q.{name}.exec_s"] = median([r["exec_s"] for r in recs])
-            layers[f"q.{name}.jobs"] = median([r["jobs"] for r in recs])
         if tr.enabled:
+            self.coverage()
+        self.verify()
+        pass_s = median(self.passes)
+        e2e = {"build_s": build_s, "run_s": build_s + pass_s}
+        layers = {"loop.pass_s": pass_s, "corpus.query_p50_s": median(lat)}
+        if tr.enabled:
+            for name in NAMED:
+                recs = [r for r in self.records if r["query"] == name]
+                if not recs:
+                    continue  # its failure is already counted
+                for k in ("build_s", "exec_s", "jobs"):
+                    layers[f"q.{name}.{k}"] = median([r[k] for r in recs])
+            with run.checks.guard("ann recall"):
+                layers["ann.recall"] = self.ann_recall()
             layers.update(self.index_layers())
             layers["index.jobs"] = build_counts.get("jobs", 0)
         detail = {"orders": self.orders, "passes_s": self.passes,
@@ -234,10 +252,9 @@ class LlmCorpus:
         return e2e, layers, detail
 
     def speedup_pass(self) -> float:
-        """A warm pass over the named queries, for the single-core
-        baseline."""
+        """A warm pass over the core mix, for the single-core baseline."""
         t0 = time.perf_counter()
-        for name in NAMED:
+        for name in CORE_MIX:
             with self.run.checks.guard(f"{name} scaling pass"):
                 self.one_query(name, keep=False)
         return time.perf_counter() - t0

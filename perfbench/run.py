@@ -42,14 +42,10 @@ from common import (  # noqa: E402
     add_counts,
     cpu_steal_s,
     driver_mem_arg,
-    median,
     nproc,
     physical_mem_bytes,
     retained_mb,
 )
-
-#: steps of the single-core baseline pass on cdc_lakehouse
-SPEEDUP_STEPS = 1
 
 
 class Run:
@@ -152,7 +148,7 @@ def execute(args, run: Run) -> dict:
         if tr.enabled:
             layers.update(_spark_layers(run, tr, wall, n))
             layers["session.start_s"] = start_s
-            layers["spark.speedup"] = _speedup(args.workload, run, wl, detail)
+            layers["spark.speedup"] = _speedup(run, wl)
     finally:
         if hasattr(wl, "stop"):
             wl.stop()
@@ -181,22 +177,17 @@ def _spark_layers(run: Run, tr: Tracer, wall: float, n: int) -> dict:
             "spark.core_busy_share": t.get("run_ms", 0) / 1000 / (wall * n)}
 
 
-def _speedup(workload: str, run: Run, wl, detail: dict) -> float:
+def _speedup(run: Run, wl) -> float:
     """The same unit of work at local[1] over local[nproc]: a warm pass of
-    the named queries, or closed-loop steps of the CDC chain."""
-    if workload == "llm_corpus":
-        multi = wl.speedup_pass()
-        run.stop_session()
-        run.start_session(1)
-        wl.spark = run.spark
-        single = wl.speedup_pass()
-    else:
-        multi = median(detail["freshness_s"])
+    the core query mix, or the batch prime recompute. Restarting the CDC
+    queries at local[1] does not fit the run budget (README.md)."""
+    multi = wl.speedup_pass()
+    if hasattr(wl, "stop"):
         wl.stop()
-        run.stop_session()
-        run.start_session(1)
-        single = wl.speedup_steps(SPEEDUP_STEPS)
-    return single / multi
+    run.stop_session()
+    run.start_session(1)
+    wl.spark = run.spark
+    return wl.speedup_pass() / multi
 
 
 def result_line(record: dict, declared: dict, trace: bool, checks: Checks) -> str:

@@ -79,10 +79,10 @@ def test_smoke_emits_every_declared_metric(workload, trace):
 
 @needs_fixture
 def test_corrupted_expected_hash_is_counted_not_raised():
-    proc, record = run_bench("llm_corpus", 1, 0, "--corrupt", "dedup_exact")
+    proc, record = run_bench("llm_corpus", 1, 0, "--corrupt", "text_bm25_topk")
     out = result(proc)
     assert out["correct"] is False and out["failed"] == 1
-    assert record["failures"] == ["verify dedup_exact"]
+    assert record["failures"] == ["verify text_bm25_topk"]
     clean = result(run_bench("llm_corpus", 1, 0)[0])
     # counted once, nothing retried: the same operations were attempted
     assert out["attempted"] == clean["attempted"]
@@ -90,11 +90,12 @@ def test_corrupted_expected_hash_is_counted_not_raised():
 
 @needs_fixture
 def test_seed_changes_order_not_verified_outputs():
+    # seeds 1 and 5 order the two-query core mix differently
     _, one = run_bench("llm_corpus", 1, 0)
-    _, two = run_bench("llm_corpus", 2, 0)
+    _, two = run_bench("llm_corpus", 5, 0)
     assert one["detail"]["orders"][0] != two["detail"]["orders"][0]
     assert one["detail"]["hashes"] == two["detail"]["hashes"]
-    assert len(one["detail"]["hashes"]) == 18
+    assert set(one["detail"]["hashes"]) == set(one["detail"]["orders"][0])
 
 
 def test_refuses_to_run_without_the_package(tmp_path):
