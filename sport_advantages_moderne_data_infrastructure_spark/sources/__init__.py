@@ -3,5 +3,5 @@ from .domain import (  # noqa: F401
     employees, commute_validations, sport_activities, cdc_events,
     register_domain_views, domain_cte_sql,
 )
-from .txnlog import TxnTable, TxnConflictError  # noqa: F401
+from .txnlog import TxnTable, TxnConflictError, TxnReplayError  # noqa: F401
 from .txnstream import register_txn_source  # noqa: F401

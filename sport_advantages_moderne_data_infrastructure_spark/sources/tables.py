@@ -76,18 +76,24 @@ def write_index_clustered(df: DataFrame, path: str, *keys: str) -> None:
     index_build regression. MEMORY_AND_DISK spills gracefully; at a
     scale where the artifact frame shouldn't be cached at all, a
     deployment materializes it as a staging table and range-writes from
-    that (same one-computation property, storage-backed).
+    that (same one-computation property, storage-backed). A frame the
+    caller already cached is used as it is: its cache is the caller's,
+    so it is neither re-persisted nor evicted here.
     """
     from pyspark import StorageLevel
 
     n = df.sparkSession.sparkContext.defaultParallelism
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    level = df.storageLevel
+    owned = not (level.useMemory or level.useDisk)
+    if owned:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         (df.repartitionByRange(n, *keys)
            .sortWithinPartitions(*keys)
            .write.parquet(path))
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def register_star_views(spark: SparkSession, sf_dir: str) -> None:

@@ -67,6 +67,12 @@ class TxnConflictError(RuntimeError):
     """Another writer committed the version this writer raced for."""
 
 
+class TxnReplayError(TxnConflictError):
+    """The commit's ``(stream_app_id, stream_batch_id)`` is already in
+    the table's ledger: a replayed stream batch. Terminal — the batch
+    is committed, so writers drop their data instead of retrying."""
+
+
 class TxnProtocolError(RuntimeError):
     """The table requires a newer reader/writer than this library."""
 
@@ -909,6 +915,15 @@ class TxnTable:
             return cp.get("stream_batch_ids", {}).get(app_id)
         return cp.get("last_stream_batch_id")
 
+    def _replays(self, meta: dict | None) -> bool:
+        """True when ``meta`` names a stream batch the ledger already
+        covers. None-safe: a high water of 0 covers batch 0."""
+        bid = (meta or {}).get("stream_batch_id")
+        if bid is None:
+            return False
+        seen = self.max_stream_batch_id(meta.get("stream_app_id"))
+        return seen is not None and bid <= seen
+
     def read_increment(self, spark: SparkSession,
                        since_version: int) -> DataFrame:
         """Rows added by commits AFTER ``since_version`` (a change feed for
@@ -1604,7 +1619,7 @@ class TxnTable:
         _time.sleep(min(1.0, random.uniform(0, 0.05 * (2 ** attempt))))
 
     def _append_identity(self, df: DataFrame, meta: dict | None,
-                         ident: dict, retries: int = 5) -> int:
+                         ident: dict, retries: int = 5) -> int | None:
         """Identity-allocating append: unlike a blind append, losing the
         commit race here IS a semantic conflict ONLY when a racing
         commit also allocated (the loser's ids came from a stale high
@@ -1644,6 +1659,10 @@ class TxnTable:
                             [rel], [], {**(meta or {}), **hw_meta},
                             expected_version=v0, column_mapping=cm_o,
                             physical_used=used_o)
+                    except TxnReplayError:
+                        shutil.rmtree(os.path.join(self.path, rel),
+                                      ignore_errors=True)
+                        return None
                     except TxnConflictError as e:
                         last_err = e
                         if self._interleaved_allocation(v0):
@@ -2347,24 +2366,19 @@ class TxnTable:
         if bloom_cfg and adds:
             doc["bloom"] = {rel: self._dir_bloom(rel, bloom_cfg)
                             for rel in adds}
-        m_ = meta or {}
-        if "stream_batch_id" in m_:
+        if self._replays(meta):
             # Delta's SetTransaction discipline INSIDE the commit: a
             # replica racing this same (app_id, batch_id) either (a)
             # already published — the ledger walk up to the
             # expected_version just read sees it and we refuse here, or
             # (b) publishes between this check and our link — then both
-            # target the SAME version and the atomic put-if-absent
-            # makes the loser conflict. Either way the caller's
-            # conflict handler re-checks the ledger and drops the
-            # replay; the pre-commit ledger check alone left a window
-            # where a racer landing after it double-committed a batch.
-            seen_ = self.max_stream_batch_id(m_.get("stream_app_id"))
-            if seen_ is not None and m_["stream_batch_id"] <= seen_:
-                raise TxnConflictError(
-                    f"stream batch {m_['stream_batch_id']} already "
-                    f"committed to {self.path} (ledger high water "
-                    f"{seen_}) — replay absorbed")
+            # target the SAME version, the atomic put-if-absent makes
+            # the loser conflict, and its retry lands here. The typed
+            # refusal tells every writer the batch is done: drop the
+            # data, no retry, no backoff.
+            raise TxnReplayError(
+                f"stream batch {meta['stream_batch_id']} already "
+                f"committed to {self.path} — replay absorbed")
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
         final = os.path.join(self.log_dir, f"{version:011d}.json")
         with open(tmp, "w") as fh:
@@ -2411,12 +2425,21 @@ class TxnTable:
                 "overwrite() for schema evolution")
 
     def append(self, df: DataFrame, meta: dict | None = None,
-               retries: int = 5, merge_schema: bool = False) -> int:
+               retries: int = 5, merge_schema: bool = False) -> int | None:
         """Blind appends touch no existing files, so losing a commit race
         is never a semantic conflict — re-reading the latest version and
         re-publishing is always safe (the optimistic-retry rule real log
         stores apply to AddFile-only transactions). Data is written once;
         only the metadata publish retries.
+
+        Exactly-once stream appends: a ``meta`` built by
+        :func:`_stream_meta` carries the micro-batch's
+        ``(stream_app_id, stream_batch_id)``. When the ledger already
+        covers that batch the append writes nothing and returns None;
+        when a racing replica wins, the commit's :class:`TxnReplayError`
+        is terminal — the written data is dropped and None returned,
+        with no retry and no backoff (Delta's ``txnAppId``/
+        ``txnVersion`` write options, kept in the writer).
 
         ``merge_schema=True`` (Delta's mergeSchema) admits a frame whose
         columns differ from the live schema: new columns null-fill old
@@ -2426,6 +2449,8 @@ class TxnTable:
         write time, as Delta does without the type-widening feature —
         committing it would brick every subsequent snapshot read at the
         parquet schema merge, a fail-at-read corruption)."""
+        if self._replays(meta):
+            return None
         gcfg = self.generation_config()
         if gcfg.get("generated"):
             df = self._apply_generated(df)
@@ -2472,6 +2497,13 @@ class TxnTable:
                                     {**(meta or {}), **hw_meta,
                                      "partition_by": pb},
                                     expected_version=v0)
+                            except TxnReplayError:
+                                _shutil.rmtree(
+                                    os.path.join(
+                                        self.path,
+                                        _commit_root(adds[0])),
+                                    ignore_errors=True)
+                                return None
                             except TxnConflictError as e:
                                 if self._interleaved_allocation(v0):
                                     last = e  # stale ids: scrap, redo
@@ -2495,23 +2527,8 @@ class TxnTable:
             # existing files, so the commit race stays retry-safe
             self._check_append_schema(df)
             adds = self._write_data_partitioned(df, part_keys)
-            last = None
-            for _ in range(max(1, retries + 1)):
-                try:
-                    return self.commit(
-                        adds, [],
-                        {**(meta or {}), "partition_by": pb},
-                        expected_version=self.latest_version())
-                except TxnConflictError as e:
-                    last = e
-            # exhausted retries / ledger-absorbed replay (ADVICE r12):
-            # the written layout is orphaned — reclaim its commit root
-            # now instead of leaking a batch of parquet until vacuum,
-            # mirroring the unpartitioned streaming path's rmtree
-            _shutil.rmtree(
-                os.path.join(self.path, _commit_root(adds[0])),
-                ignore_errors=True)
-            raise last
+            return self._commit_blind(
+                adds, {**(meta or {}), "partition_by": pb}, retries)
         if ident is not None:
             if merge_schema:
                 raise ValueError(
@@ -2596,18 +2613,36 @@ class TxnTable:
         mapping, cm_override, used_override = \
             self._extend_mapping(df.columns)
         rel = self._write_data(df, mapping=mapping)
-        for _ in range(retries):
+        return self._commit_blind([rel], meta, retries,
+                                  column_mapping=cm_override,
+                                  physical_used=used_override)
+
+    def _commit_blind(self, adds: list[str], meta: dict | None,
+                      retries: int, **commit_kw) -> int | None:
+        """Publish a blind append's ``adds`` (one commit root): a lost
+        version race re-reads the latest version and re-publishes, up
+        to ``retries + 1`` attempts. A ledger refusal (a replayed
+        stream batch) returns None at once; it and running out of
+        attempts both reclaim the written commit root instead of
+        leaking it until vacuum (ADVICE r12)."""
+        import shutil
+
+        last = None
+        for _ in range(max(1, retries + 1)):
             try:
-                return self.commit([rel], [], meta,
+                return self.commit(adds, [], meta,
                                    expected_version=self.latest_version(),
-                                   column_mapping=cm_override,
-                                   physical_used=used_override)
-            except TxnConflictError:
-                continue
-        return self.commit([rel], [], meta,
-                           expected_version=self.latest_version(),
-                           column_mapping=cm_override,
-                           physical_used=used_override)
+                                   **commit_kw)
+            except TxnReplayError:
+                last = None  # the batch is committed: nothing to raise
+                break
+            except TxnConflictError as e:
+                last = e
+        shutil.rmtree(os.path.join(self.path, _commit_root(adds[0])),
+                      ignore_errors=True)
+        if last is not None:
+            raise last
+        return None
 
     def overwrite(self, df: DataFrame, meta: dict | None = None,
                   changes: DataFrame | None = None) -> int:
@@ -3414,6 +3449,8 @@ class TxnTable:
                 return self.commit(adds, removes, meta,
                                    expected_version=expected,
                                    changes=changes, dvs=dvs)
+            except TxnReplayError:
+                raise  # the batch is already committed: no rebase
             except TxnConflictError:
                 latest = self.latest_version()
                 for v in range(expected + 1, latest + 1):
@@ -4871,6 +4908,39 @@ class TxnTable:
                 victims.append(rel)
                 shutil.rmtree(os.path.join(self.path, rel))
         return sorted(victims)
+
+
+def _stream_meta(batch_id: int, app_id: str | None, operation: str) -> dict:
+    """Commit meta of one exactly-once stream leg: the
+    ``(stream_app_id, stream_batch_id)`` key of the table's ledger,
+    which ``TxnTable.commit`` and ``append`` check."""
+    meta = {"stream_batch_id": batch_id, "operation": operation}
+    if app_id is not None:
+        meta["stream_app_id"] = app_id
+    return meta
+
+
+def _guarded_commit(table: TxnTable, batch_id: int, app_id: str | None,
+                    attempt) -> None:
+    """Run one exactly-once stream leg: ``attempt()`` writes and commits
+    to ``table`` under ``_stream_meta(batch_id, app_id, ...)``. A batch
+    the ledger already covers skips the leg before any work; a replica
+    that commits the batch first surfaces as the commit's
+    :class:`TxnReplayError`, which ends the leg. A plain lost version
+    race re-runs ``attempt()``, up to 6 attempts. A committed leg then
+    runs the log's checkpoint maintenance."""
+    if table._replays(_stream_meta(batch_id, app_id, "")):
+        return
+    for n in range(6):
+        try:
+            attempt()
+            break
+        except TxnReplayError:
+            return
+        except TxnConflictError:
+            if n == 5:
+                raise
+    table.checkpoint_if_needed()
 
 
 def agg_delta_from_changes(changes: DataFrame, group_cols: list[str],

@@ -37,7 +37,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .txnlog import TxnConflictError, TxnTable
+from .txnlog import TxnConflictError, TxnReplayError, TxnTable, _stream_meta
 
 
 @dataclass
@@ -508,47 +508,40 @@ class _TxnWriterBase:
 
 
 class _TxnStreamWriter(_TxnWriterBase, DataSourceStreamArrowWriter):
-    """Exactly-once sink. The replay guard is Delta's SetTransaction rule:
-    scan the WHOLE log for this sink's highest committed batch id — not
-    just the head commit, which an interleaved compact()/second writer
-    would mask (ADVICE r3). Batch ids are monotonic per checkpoint, so
-    ``batchId <= max seen`` means replay. ``txnAppId`` (option) scopes the
-    guard when several independent streams append to one table."""
+    """Exactly-once sink. The replay guard is the table's stream-batch
+    ledger, checked inside ``TxnTable.commit`` (Delta's SetTransaction
+    rule: it scans the WHOLE log for this sink's highest committed batch
+    id, so an interleaved compact()/second writer cannot mask it —
+    ADVICE r3). A replayed batch surfaces as :class:`TxnReplayError`
+    and its files are dropped. ``txnAppId`` (option) scopes the ledger
+    when several independent streams append to one table."""
 
     def __init__(self, path: str, schema, app_id: str | None):
         super().__init__(path, schema)
         self.app_id = app_id
 
     def commit(self, messages, batchId: int) -> None:
-        table = TxnTable(self.path)
-        seen = table.max_stream_batch_id(self.app_id)
-        if seen is not None and batchId <= seen:
-            self._drop(messages)  # replayed batch: already committed
-            return
         adds = self._adds(messages)
-        if adds:
-            meta = {"stream_batch_id": batchId,
-                    "operation": "stream_append"}
-            if self.app_id is not None:
-                meta["stream_app_id"] = self.app_id
-            stats = self._stats(messages)
-            for _ in range(5):  # blind append: commit races are retryable
-                try:
-                    table.commit(adds, [], meta, stats=stats)
-                    # Delta-style maintenance from the writer: one commit
-                    # per micro-batch makes the log the fastest-growing
-                    # metadata in the system, so the sink checkpoints it
-                    # every 10 commits — snapshot planning stays
-                    # O(interval), not O(stream lifetime).
-                    table.checkpoint_if_needed()
-                    return
-                except TxnConflictError:
-                    seen = table.max_stream_batch_id(self.app_id)
-                    if seen is not None and seen >= batchId:
-                        self._drop(messages)  # racer was our own replay
-                        return
-            table.commit(adds, [], meta, stats=stats)
-            table.checkpoint_if_needed()
+        if not adds:
+            return
+        table = TxnTable(self.path)
+        meta = _stream_meta(batchId, self.app_id, "stream_append")
+        stats = self._stats(messages)
+        for n in range(6):  # blind append: version races are retryable
+            try:
+                table.commit(adds, [], meta, stats=stats)
+                break
+            except TxnReplayError:
+                self._drop(messages)  # replayed batch: already committed
+                return
+            except TxnConflictError:
+                if n == 5:
+                    raise
+        # Delta-style maintenance from the writer: one commit per
+        # micro-batch makes the log the fastest-growing metadata in the
+        # system, so the sink checkpoints it every 10 commits — snapshot
+        # planning stays O(interval), not O(stream lifetime).
+        table.checkpoint_if_needed()
 
     def abort(self, messages, batchId: int) -> None:
         self._drop(messages)

@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import (AggMaterializedView, _last_meta_version_with,
                             _last_meta_with)
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 
 def make_df_view(index_root: str, n_buckets: int = 32,

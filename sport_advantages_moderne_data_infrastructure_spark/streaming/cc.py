@@ -75,8 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_two_phase
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 N_BUCKETS = 32
 

@@ -54,8 +54,7 @@ from pyspark.sql import functions as F
 from ..operators.mv import (AggMaterializedView, MapMaterializedView,
                             _last_meta_version_with, _last_meta_with)
 from ..operators.retrieval import chunk_postings_frame
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 
 class ChunkPostingsView(MapMaterializedView):

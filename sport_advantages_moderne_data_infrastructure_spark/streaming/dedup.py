@@ -43,38 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_signatures, signature_bands
-from ..sources.txnlog import TxnConflictError, TxnTable
-from .scd2 import _ledger_seen
-
-
-def _guarded_append(table_path: str, df: DataFrame, batch_id: int,
-                    app_id: str | None, op: str) -> None:
-    """Append ``df`` unless this table already committed ``batch_id``
-    (the write_stream_txn_append contract, shared by both state
-    tables)."""
-    import os
-    import shutil
-
-    table = TxnTable(table_path)
-    seen = table.max_stream_batch_id(app_id)
-    if seen is not None and batch_id <= seen:
-        return
-    rel = table._write_data(df)  # noqa: SLF001 — package-internal
-    meta = {"stream_batch_id": batch_id, "operation": op}
-    if app_id is not None:
-        meta["stream_app_id"] = app_id
-    for _ in range(5):
-        try:
-            table.commit([rel], [], meta)
-            table.checkpoint_if_needed()
-            return
-        except TxnConflictError:
-            if _ledger_seen(table, app_id, batch_id):
-                shutil.rmtree(os.path.join(table_path, rel),
-                              ignore_errors=True)
-                return
-    raise TxnConflictError(
-        f"could not commit batch {batch_id} to {table_path}")
+from ..sources.txnlog import TxnTable, _stream_meta
 
 
 def dedup_batch(batch_df: DataFrame, index_bands: DataFrame | None,
@@ -165,10 +134,13 @@ def write_stream_dedup(stream_docs: DataFrame, corpus_path: str,
             if uniques.isEmpty():
                 return
             # corpus FIRST (see module docstring for the crash argument)
-            _guarded_append(corpus_path, uniques.coalesce(spread),
-                            batch_id, app_id, "stream_dedup_append")
-            _guarded_append(index_path, kept_bands.coalesce(spread),
-                            batch_id, app_id, "stream_dedup_index")
+            for path, leg, op in (
+                    (corpus_path, uniques, "stream_dedup_append"),
+                    (index_path, kept_bands, "stream_dedup_index")):
+                table = TxnTable(path)
+                table.append(leg.coalesce(spread),
+                             _stream_meta(batch_id, app_id, op))
+                table.checkpoint_if_needed()
         finally:
             uniques.unpersist()
             for c in caches:  # bands + dup-id set (ADVICE r14: a

@@ -48,8 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import _last_meta_version_with, _last_meta_with
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 #: default DataSketches lgConfigK (2^12 registers, ~1.6% rse) —
 #: recorded per root in the sketch commit meta

@@ -45,9 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txnlog import TxnTable
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .joinmv import apply_join_mv_stream_batch
-from .scd2 import _guarded_commit, _stream_meta
 
 #: union tag column; change-feed frames never carry it
 _SIDE = "__side"

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import JoinMaterializedView
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 #: the union tag column; change-feed frames never carry it
 _SIDE = "__side"

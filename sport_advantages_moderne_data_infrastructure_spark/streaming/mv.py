@@ -23,8 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.mv import apply_delta
-from ..sources.txnlog import TxnTable, agg_delta_from_changes
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import (
+    TxnTable,
+    _guarded_commit,
+    _stream_meta,
+    agg_delta_from_changes,
+)
 
 
 def write_stream_agg_view(spark: SparkSession, source_path: str,

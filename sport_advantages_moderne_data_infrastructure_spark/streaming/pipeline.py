@@ -168,10 +168,10 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
     mode the plain-parquet write_stream_merge can only narrow, not close).
 
     Exactly-once comes from two independent layers: the commit meta
-    records the micro-batch id, so a batch replayed after
-    crash-after-commit-before-checkpoint is detected and skipped; and the
-    merge itself is keyed, so even a double-applied batch converges to
-    the same state.
+    records the micro-batch id in the table's ledger, so a batch
+    replayed after crash-after-commit-before-checkpoint is skipped
+    (``txnlog._guarded_commit``); and the merge itself is keyed, so
+    even a double-applied batch converges to the same state.
 
     ``matched_delete`` / ``insert`` (r11): the MERGE clause surface for
     streaming CDC APPLY — a feed carrying tombstones (e.g. a
@@ -180,27 +180,21 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
     atomic commit as the batch's upserts. Last-event-per-key dedup runs
     first, so a key that is updated then tombstoned within one batch
     deletes."""
-    from ..sources.txnlog import TxnTable
+    from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         table = TxnTable(target)
-        # Delta SetTransaction rule (ADVICE r3): scan the WHOLE log for
-        # this sink's highest batch id — a compact() or second writer
-        # interleaving between commit and crash-replay hides it from the
-        # head commit. Batch ids are monotonic per checkpoint.
-        seen = table.max_stream_batch_id()
-        if seen is not None and batch_id <= seen:
-            return  # replay of an already-committed batch
         latest = (batch_df.withColumn(
             "__rn", F.row_number().over(
                 W.partitionBy(key).orderBy(F.desc(order_col))))
             .filter(F.col("__rn") == 1).drop("__rn"))
-        table.merge(spark, latest, key,
-                    meta={"stream_batch_id": batch_id},
-                    matched_delete=matched_delete, insert=insert)
+        _guarded_commit(table, batch_id, None, lambda: table.merge(
+            spark, latest, key,
+            meta=_stream_meta(batch_id, None, "stream_merge"),
+            matched_delete=matched_delete, insert=insert))
 
     w = (df.writeStream.foreachBatch(_merge)
          .option("checkpointLocation", checkpoint))
@@ -215,83 +209,42 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
                             processing_time: str | None = None,
                             export_delta: bool = False):
     """Exactly-once streaming APPEND into a transactional table on the
-    JVM write path: each micro-batch writes its parquet with Spark's
-    native writer (whole-stage codegen straight into the commit dir — no
-    Arrow hop into Python workers) and then publishes one atomic log
-    commit. Same exactly-once contract as ``format("txnlog")``
-    (SetTransaction-style log-scan replay guard keyed by
-    ``stream_batch_id``/``app_id``); same crash story (an unreferenced
-    dir from a crash between write and commit is invisible and falls to
-    ``vacuum()``). Use this when sink throughput matters — the Python
-    DataSource sink pays the JVM→Arrow→Python→parquet round trip per
-    batch (~1.8x slower on the CDC bench); this one matches the plain
-    parquet sink minus one footer-stats harvest per commit (footer
-    metadata only, O(files-per-batch), fine at micro-batch file counts —
+    JVM write path: each micro-batch is one ``TxnTable.append`` — Spark's
+    native writer (whole-stage codegen straight into the commit dir, no
+    Arrow hop into Python workers), then one atomic log commit. The
+    commit meta carries ``(app_id, batch_id)`` into the table's ledger
+    (Delta's ``txnAppId``/``txnVersion``), the same exactly-once
+    contract as ``format("txnlog")``: ``append`` writes nothing for a
+    batch the ledger already covers, and drops its data when a racing
+    replica commits the batch first. Generated, identity and
+    partition-declared targets are laid out by ``append`` inside the
+    same commit. An unreferenced dir from a crash between write and
+    commit is invisible and falls to ``vacuum()``. Use this when sink
+    throughput matters — the Python DataSource sink pays the
+    JVM→Arrow→Python→parquet round trip per batch (~1.8x slower on the
+    CDC bench); this one matches the plain parquet sink minus one
+    footer-stats harvest per commit (footer metadata only,
+    O(files-per-batch), fine at micro-batch file counts —
     executor-computed stats stay the DataSource path's advantage).
     Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
     sink).
 
     ``export_delta=True`` (r14) re-exports the table's Delta-protocol
-    ``_delta_log`` after every committed micro-batch — the INCREMENTAL
-    export writes only the new commit's JSON (O(batch), the
-    export-per-commit shape the interop module documents), so a real
-    Delta reader can tail the streamed table continuously."""
-    import os
-    import shutil as _shutil
-
-    from ..sources.txnlog import TxnConflictError, TxnTable
+    ``_delta_log`` after every micro-batch, committed or replayed — the
+    INCREMENTAL export writes only the new commit's JSON (O(batch), the
+    export-per-commit shape the interop module documents) and is a
+    no-op when the exported log is current, so a crash between commit
+    and export catches up on the replay, and a real Delta reader can
+    tail the streamed table continuously."""
+    from ..sources.txnlog import TxnTable, _stream_meta
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         table = TxnTable(target)
-        seen = table.max_stream_batch_id(app_id)
-        if seen is not None and batch_id <= seen:
-            # replay of an already-committed batch: still catch up the
-            # export — a crash BETWEEN commit and export would
-            # otherwise leave the exported log one commit behind
-            # indefinitely on a quiet stream (incremental export is a
-            # no-op when already current)
-            _maybe_export(table)
-            return
-        meta = {"stream_batch_id": batch_id, "operation": "stream_append"}
-        if app_id is not None:
-            meta["stream_app_id"] = app_id
-        if table.generation_config():
-            # generated/identity/partition-declared tables: route
-            # through append(), which computes/allocates/lays out
-            # INSIDE the same commit (the identity conflict loop
-            # re-reads the high water and re-assigns on a lost race;
-            # a partition-declared target gets col=value subdir adds —
-            # streaming ingest into a date-partitioned table). The
-            # shared helper absorbs same-batch replica races via the
-            # in-commit ledger raise + a None-safe ledger re-check.
-            from .scd2 import _routed_append
-
-            _routed_append(table, batch_df, batch_id, app_id, meta)
-            _maybe_export(table)
-            return
-        rel = table._write_data(batch_df)  # noqa: SLF001 — package-internal
-        for _ in range(5):  # blind append: commit races are retryable
-            try:
-                table.commit([rel], [], meta)
-                table.checkpoint_if_needed()
-                _maybe_export(table)
-                return
-            except TxnConflictError:
-                from .scd2 import _ledger_seen
-                if _ledger_seen(table, app_id, batch_id):
-                    # racer was our own replay: drop the duplicate dir
-                    _shutil.rmtree(os.path.join(target, rel),
-                                   ignore_errors=True)
-                    _maybe_export(table)  # crash-between-commit-and-
-                    # export catch-up, same as the seen path above
-                    return
-        table.commit([rel], [], meta)
+        table.append(batch_df,
+                     _stream_meta(batch_id, app_id, "stream_append"))
         table.checkpoint_if_needed()
-        _maybe_export(table)
-
-    def _maybe_export(table) -> None:
         if export_delta:
             from ..sources.deltainterop import (
                 compact_delta_log_if_needed,

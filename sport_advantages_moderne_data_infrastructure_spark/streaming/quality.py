@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.txnlog import TxnTable, _stream_meta
+
 
 def violations_col(rules: list[tuple[str, str]]):
     """Array<string> of the rule names the row violates — pure
@@ -50,50 +52,15 @@ def split_quarantine(df: DataFrame, rules: list[tuple[str, str]]
     return clean, bad
 
 
-def _txn_append_leg(path: str, batch_df: DataFrame, batch_id: int,
-                    app_id: str | None,
-                    op: str = "stream_quarantine_append") -> None:
-    """One replay-guarded txn append — the per-table leg both routing
-    sinks share (quality quarantine and the decontamination gate): a
-    crash between a batch's two legs replays the batch and re-commits
-    only the missing one."""
-    import os
-    import shutil as _shutil
-
-    from ..sources.txnlog import TxnConflictError, TxnTable
-
-    table = TxnTable(path)
-    seen = table.max_stream_batch_id(app_id)
-    if seen is not None and batch_id <= seen:
-        return  # this leg already committed this batch
-    meta = {"stream_batch_id": batch_id, "operation": op}
-    if app_id is not None:
-        meta["stream_app_id"] = app_id
-    if table.generation_config():
-        # generated/identity/partition-declared target: route through
-        # append() so the writer computes/allocates/lays out inside
-        # the same commit (a raw _write_data here would bypass
-        # generation and strand rows outside a declared partition
-        # layout); same-batch replica races are absorbed via the
-        # in-commit ledger raise + the shared None-safe re-check
-        from .scd2 import _routed_append
-
-        _routed_append(table, batch_df, batch_id, app_id, meta)
-        return
-    rel = table._write_data(batch_df)  # noqa: SLF001
-    for _ in range(5):
-        try:
-            table.commit([rel], [], meta)
-            table.checkpoint_if_needed()
-            return
-        except TxnConflictError:
-            from .scd2 import _ledger_seen
-            if _ledger_seen(table, app_id, batch_id):
-                _shutil.rmtree(os.path.join(path, rel),
-                               ignore_errors=True)
-                return
-    table.commit([rel], [], meta)
-    table.checkpoint_if_needed()
+def _append_legs(batch_id: int, app_id: str | None, op: str,
+                 legs) -> None:
+    """Append each ``(path, frame)`` leg of one routed batch in order.
+    ``TxnTable.append`` skips a leg whose table already committed the
+    batch, so a replay re-commits only the missing leg."""
+    for path, frame in legs:
+        table = TxnTable(path)
+        table.append(frame, _stream_meta(batch_id, app_id, op))
+        table.checkpoint_if_needed()
 
 
 def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
@@ -107,21 +74,16 @@ def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
     txn commit guarded by (app_id, batch_id) — replay after any crash
     re-commits only the leg that is missing."""
 
-    def _append_leg(path: str, batch_df: DataFrame, batch_id: int) -> None:
-        _txn_append_leg(path, batch_df, batch_id, app_id)
-
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         batch_df.persist()
         try:
             clean, bad = split_quarantine(batch_df, rules)
-            _append_leg(target, clean, batch_id)
-            _append_leg(
-                quarantine,
-                bad.withColumn("violations",
-                               F.array_join("violations", ",")),
-                batch_id)
+            _append_legs(batch_id, app_id, "stream_quarantine_append", (
+                (target, clean),
+                (quarantine, bad.withColumn(
+                    "violations", F.array_join("violations", ",")))))
         finally:
             batch_df.unpersist()
 
@@ -190,10 +152,8 @@ def write_stream_decontaminate(df: DataFrame, eval_hashes: DataFrame,
             clean = (tagged.filter(F.col("n_shared").isNull())
                      .drop("eval_id", "n_shared"))
             bad = tagged.filter(F.col("n_shared").isNotNull())
-            _txn_append_leg(target, clean, batch_id, app_id,
-                            op="stream_decontaminate_append")
-            _txn_append_leg(quarantine, bad, batch_id, app_id,
-                            op="stream_decontaminate_append")
+            _append_legs(batch_id, app_id, "stream_decontaminate_append",
+                         ((target, clean), (quarantine, bad)))
         finally:
             batch_df.unpersist()
 

@@ -55,71 +55,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txnlog import TxnConflictError, TxnTable, _partition_of
+from ..sources.txnlog import (
+    TxnConflictError,
+    TxnTable,
+    _guarded_commit,
+    _partition_of,
+    _stream_meta,
+)
 
 _INTERNAL = ("key_bucket", "valid_from_tie", "last_ts", "last_tie")
-
-
-def _ledger_seen(table: TxnTable, app_id: str | None,
-                 batch_id: int) -> bool:
-    """True when the (app_id, batch_id) ledger already covers this
-    batch. None-SAFE: batch 0's high water is 0, which the
-    ``(x or -1) >= batch_id`` idiom mis-read as absent — with the r12
-    in-commit ledger raise, that false negative turned a batch-0
-    replay race into 10+ doomed retries and a dead stream instead of
-    an absorbed replay."""
-    seen = table.max_stream_batch_id(app_id)
-    return seen is not None and seen >= batch_id
-
-
-def _routed_append(table: TxnTable, batch_df, batch_id: int,
-                   app_id: str | None, meta: dict) -> None:
-    """Replay-guarded append THROUGH the table's declared write path —
-    the shared leg for sinks whose target declares generated/identity/
-    partition_by config (a raw ``_write_data`` would bypass generation
-    and strand rows outside a declared partition layout). ``append()``
-    handles ordinary version races internally (data written once, only
-    the metadata publish retries — except identity re-assignment,
-    which must rewrite); a conflict that ESCAPES it is re-checked
-    against the ledger (the in-commit ledger raise surfaces same-batch
-    replica races this way) and absorbed when it was our own replay."""
-    from ..sources.txnlog import TxnConflictError
-
-    try:
-        table.append(batch_df, meta)
-    except TxnConflictError:
-        if not _ledger_seen(table, app_id, batch_id):
-            raise
-        return  # racer was our own replay: batch already committed
-    table.checkpoint_if_needed()
-
-
-def _guarded_commit(table: TxnTable, batch_id: int, app_id: str | None,
-                    attempt) -> None:
-    """Run ``attempt()`` (which must raise TxnConflictError on a lost
-    commit race) unless the (app_id, batch_id) guard says this leg
-    already committed; re-check the guard after every lost race."""
-    seen = (table.max_stream_batch_id(app_id)
-            if table.latest_version() is not None else None)
-    if seen is not None and batch_id <= seen:
-        return
-    for _ in range(5):
-        try:
-            attempt()
-            table.checkpoint_if_needed()
-            return
-        except TxnConflictError:
-            if _ledger_seen(table, app_id, batch_id):
-                return
-    attempt()
-    table.checkpoint_if_needed()
-
-
-def _stream_meta(batch_id: int, app_id: str | None, operation: str) -> dict:
-    meta = {"stream_batch_id": batch_id, "operation": operation}
-    if app_id is not None:
-        meta["stream_app_id"] = app_id
-    return meta
 
 
 def scd2_tracked(df: DataFrame, key: str, attr: str, ts: str,

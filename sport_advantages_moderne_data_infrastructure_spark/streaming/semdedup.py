@@ -44,9 +44,8 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
 from ..operators.ivf import assign_centroids
-from ..sources.txnlog import TxnTable
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .annindex import _append_partitioned
-from .scd2 import _guarded_commit, _stream_meta
 
 COS_THRESHOLD = 0.99
 

@@ -48,8 +48,7 @@ from ..operators.mv import _last_meta_with
 from ..operators.sketches import (exact_pass, grouped_exact_pass,
                                   grouped_mg_merge, grouped_mg_partial,
                                   mg_merge, mg_partial)
-from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
 
 def _tables(root: str) -> tuple[TxnTable, TxnTable]:

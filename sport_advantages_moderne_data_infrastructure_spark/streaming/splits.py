@@ -48,9 +48,8 @@ from ..operators.dedup import (
     jaccard_for_pairs, minhash_signatures, shingle_hashes,
     signature_bands,
 )
-from ..sources.txnlog import TxnTable
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from . import cc as CC
-from .scd2 import _guarded_commit, _stream_meta
 
 N_SB = 32  # band-key hash buckets for the persisted band index
 

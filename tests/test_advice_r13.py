@@ -3,12 +3,12 @@ sources/txnlog.py, commit 0f2b828): (1) update_where's generated-column
 recompute is TRANSITIVE across chained generations; (2) partition
 values round-trip TYPED — the recorded write-time type overrides Hive
 path inference, so a generated 'yyyy' key reads back string, never int;
-(3) a partitioned append that exhausts its commit retries reclaims its
-orphaned commit root instead of leaking the batch until vacuum;
-(4) generation expressions referencing a SET column through BACKQUOTED
-identifiers still substitute as whole tokens; (5) _hot_partitions
-downgrades to a sizing scan only on AnalysisException and rejects
-nondeterministic row-level conditions outright."""
+(3) an append (partitioned or plain) that exhausts its commit retries
+reclaims its orphaned commit root instead of leaking the batch until
+vacuum; (4) generation expressions referencing a SET column through
+BACKQUOTED identifiers still substitute as whole tokens; (5)
+_hot_partitions downgrades to a sizing scan only on AnalysisException
+and rejects nondeterministic row-level conditions outright."""
 
 from __future__ import annotations
 
@@ -76,15 +76,17 @@ def test_partition_values_round_trip_typed(spark, tmp_path):
         "order_year >= '1996'").count()
 
 
-def test_partitioned_append_reclaims_orphan_on_exhausted_retries(
-        spark, tmp_path, monkeypatch):
-    """When every commit attempt of a partitioned append raises
-    TxnConflictError, the written data/<uuid> layout must be reclaimed
-    immediately (the unpartitioned streaming path already rmtree'd its
-    orphan; the partitioned path leaked a full batch until vacuum —
-    ADVICE r12 #3)."""
+@pytest.mark.parametrize("partitioned", [True, False],
+                         ids=["partitioned", "plain"])
+def test_append_reclaims_orphan_on_exhausted_retries(
+        spark, tmp_path, monkeypatch, partitioned):
+    """When every commit attempt of an append raises TxnConflictError,
+    the written data/<uuid> layout must be reclaimed immediately
+    instead of leaking a full batch until vacuum (ADVICE r12 #3) — on a
+    partition-declared table and on a plain one alike."""
     t = TxnTable(str(tmp_path / "orph"))
-    t.set_partition_column("day")
+    if partitioned:
+        t.set_partition_column("day")
     t.append(spark.createDataFrame([(1, 0)], "id int, day int"))
 
     def always_conflict(*a, **k):

@@ -656,30 +656,40 @@ def test_show_partitions_metadata_only(spark, tmp_path):
     assert all(":" in v and "%3A" not in v for v in t2.show_partitions())
 
 
-def test_batch_zero_replay_race_absorbed(spark, tmp_path):
+def test_batch_zero_replay_race_absorbed(spark, tmp_path, monkeypatch):
     """Review r12 #2: a same-batch replica race at BATCH 0 must be
     absorbed — the ledger high water of 0 is falsy and the old
     `(x or -1) >= batch_id` re-check mis-read it as absent, turning the
     in-commit ledger conflict into a dead stream."""
-    from sport_advantages_moderne_data_infrastructure_spark.streaming.scd2 import (
-        _ledger_seen,
-        _routed_append,
+    from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+        _stream_meta,
     )
 
     o = _orders(spark, 30)
     t = _ptable(tmp_path, "bz")
-    meta = {"stream_batch_id": 0, "stream_app_id": "bz",
-            "operation": "stream_append"}
+    meta = _stream_meta(0, "bz", "stream_append")
     # replica A commits batch 0
-    _routed_append(t, o.limit(10), 0, "bz", dict(meta))
-    assert _ledger_seen(t, "bz", 0)
-    # replica B replays batch 0: the in-commit ledger raise + the
-    # None-safe re-check absorb it (no raise, no duplicate rows)
-    _routed_append(t, o.limit(10), 0, "bz", dict(meta))
+    t.append(o.limit(10), dict(meta))
+    assert t.max_stream_batch_id("bz") == 0
+    # replica B replays batch 0: append skips it (no raise, no
+    # duplicate rows)
+    assert t.append(o.limit(10), dict(meta)) is None
+    assert t.read(spark).count() == 10
+    # replica B checked the ledger before A committed: the in-commit
+    # ledger refusal absorbs the replay just the same
+    real = t._replays
+    checks = {"n": 0}
+
+    def _stale_first_check(m):
+        checks["n"] += 1
+        return False if checks["n"] == 1 else real(m)
+
+    monkeypatch.setattr(t, "_replays", _stale_first_check)
+    assert t.append(o.limit(10), dict(meta)) is None
+    monkeypatch.undo()
     assert t.read(spark).count() == 10
     # the next batch commits normally
-    _routed_append(t, o.offset(10).limit(5), 1, "bz",
-                   {**meta, "stream_batch_id": 1})
+    t.append(o.offset(10).limit(5), _stream_meta(1, "bz", "stream_append"))
     assert t.read(spark).count() == 15
 
 
