@@ -96,8 +96,7 @@ def maintain_agg_view(spark: SparkSession, source: TxnTable,
     if src_v is None:
         raise ValueError(f"source has no commits: {source.path}")
     last = (_last_meta_with(view, "mv_source_version")
-            .get("mv_source_version", -1)
-            if view.latest_version() is not None else -1)
+            .get("mv_source_version", -1))
     if src_v <= last:
         return last
     meta = {"operation": "mv_refresh", "mv_source_version": src_v}
@@ -302,8 +301,7 @@ class JoinMaterializedView:
         lv, rv = left.latest_version(), right.latest_version()
         if lv is None or rv is None:
             raise ValueError("both sources need at least one commit")
-        last = (_last_meta_with(self.view, "mv_left_version")
-                if self.view.latest_version() is not None else {})
+        last = _last_meta_with(self.view, "mv_left_version")
         llast = last.get("mv_left_version", -1)
         rlast = last.get("mv_right_version", -1)
         if lv <= llast and rv <= rlast:
@@ -597,8 +595,7 @@ class MapMaterializedView(JoinMaterializedView):
         if sv is None:
             raise ValueError(f"source has no commits: {source.path}")
         last = (_last_meta_with(self.view, "mv_source_version")
-                .get("mv_source_version", -1)
-                if self.view.latest_version() is not None else -1)
+                .get("mv_source_version", -1))
         if sv <= last:
             return last
         meta = {"operation": "map_mv_refresh", "mv_source_version": sv}
@@ -695,8 +692,7 @@ class AggMaterializedView(JoinMaterializedView):
         if sv is None:
             raise ValueError(f"source has no commits: {source.path}")
         last = (_last_meta_with(self.view, "mv_source_version")
-                .get("mv_source_version", -1)
-                if self.view.latest_version() is not None else -1)
+                .get("mv_source_version", -1))
         if sv <= last:
             return last
         meta = {"operation": "agg_mv_refresh", "mv_source_version": sv}
@@ -788,11 +784,8 @@ class AggMaterializedView(JoinMaterializedView):
                            self.value_col)
                  .withColumn("__kb", self._bucket())
                  .repartition(1))  # one 0-row file carries the schema
-        rel = self.view._write_data(empty)  # noqa: SLF001
-        self.view.commit([rel], [],
-                         {**(meta or {}),
-                          "operation": "agg_mv_init_empty"},
-                         expected_version=None)
+        self.view.append(empty, {**(meta or {}),
+                                 "operation": "agg_mv_init_empty"})
 
     def _rebuild_from(self, spark, source: TxnTable, sv: int,
                       meta: dict) -> None:

@@ -1872,6 +1872,12 @@ class TxnTable:
                         _walk(p, depth + 1)
 
         _walk(abs_dir, 0)
+        if not leaves:
+            # a 0-row frame writes no partition subdir: the bare commit
+            # root holds only markers and no commit can reference it
+            import shutil
+
+            shutil.rmtree(abs_dir, ignore_errors=True)
         return sorted(leaves)
 
     def _record_partition_types(self, df: DataFrame,
@@ -2441,6 +2447,11 @@ class TxnTable:
         with no retry and no backoff (Delta's ``txnAppId``/
         ``txnVersion`` write options, kept in the writer).
 
+        A table that declares no partition key lays out the key that
+        ``meta["partition_by"]`` names, as ``col=value`` subdirs of this
+        commit only — the per-commit layout the streaming index legs
+        prune their reads by.
+
         ``merge_schema=True`` (Delta's mergeSchema) admits a frame whose
         columns differ from the live schema: new columns null-fill old
         rows, missing columns null-fill the new rows — the snapshot read
@@ -2454,7 +2465,7 @@ class TxnTable:
         gcfg = self.generation_config()
         if gcfg.get("generated"):
             df = self._apply_generated(df)
-        part_keys = self._part_keys(gcfg)
+        part_keys = self._part_keys(gcfg) or self._part_keys(meta or {})
         ident = gcfg.get("identity")
         if part_keys:
             if merge_schema:
@@ -2463,9 +2474,7 @@ class TxnTable:
                     "table is not supported — additive evolution on "
                     "partition-granular layouts rides overwrite() of "
                     "the evolved shape")
-            import shutil as _shutil
-
-            pb = gcfg.get("partition_by")
+            pb = gcfg.get("partition_by") or meta["partition_by"]
             if ident is not None:
                 # identity × partitioned layout (r13, lifting the r12
                 # exclusion): allocation makes a lost commit race a
@@ -2498,20 +2507,12 @@ class TxnTable:
                                      "partition_by": pb},
                                     expected_version=v0)
                             except TxnReplayError:
-                                _shutil.rmtree(
-                                    os.path.join(
-                                        self.path,
-                                        _commit_root(adds[0])),
-                                    ignore_errors=True)
+                                self._reclaim(adds)
                                 return None
                             except TxnConflictError as e:
                                 if self._interleaved_allocation(v0):
                                     last = e  # stale ids: scrap, redo
-                                    _shutil.rmtree(
-                                        os.path.join(
-                                            self.path,
-                                            _commit_root(adds[0])),
-                                        ignore_errors=True)
+                                    self._reclaim(adds)
                                     break
                                 # non-allocating racer (delete,
                                 # compaction, plain append): the ids
@@ -2625,8 +2626,6 @@ class TxnTable:
         stream batch) returns None at once; it and running out of
         attempts both reclaim the written commit root instead of
         leaking it until vacuum (ADVICE r12)."""
-        import shutil
-
         last = None
         for _ in range(max(1, retries + 1)):
             try:
@@ -2638,11 +2637,19 @@ class TxnTable:
                 break
             except TxnConflictError as e:
                 last = e
-        shutil.rmtree(os.path.join(self.path, _commit_root(adds[0])),
-                      ignore_errors=True)
+        self._reclaim(adds)
         if last is not None:
             raise last
         return None
+
+    def _reclaim(self, adds: list[str]) -> None:
+        """Delete the commit root of ``adds`` that no commit published.
+        A 0-row partitioned write has no adds and left no root."""
+        if adds:
+            import shutil
+
+            shutil.rmtree(os.path.join(self.path, _commit_root(adds[0])),
+                          ignore_errors=True)
 
     def overwrite(self, df: DataFrame, meta: dict | None = None,
                   changes: DataFrame | None = None) -> int:
@@ -4922,8 +4929,11 @@ def _stream_meta(batch_id: int, app_id: str | None, operation: str) -> dict:
 
 def _guarded_commit(table: TxnTable, batch_id: int, app_id: str | None,
                     attempt) -> None:
-    """Run one exactly-once stream leg: ``attempt()`` writes and commits
-    to ``table`` under ``_stream_meta(batch_id, app_id, ...)``. A batch
+    """Run one exactly-once stream leg that does not append — a merge,
+    overwrite, fold or bucket replace: ``attempt()`` writes and commits
+    to ``table`` under ``_stream_meta(batch_id, app_id, ...)``. Append
+    legs call ``table.append`` instead, which re-publishes the same
+    files on a lost race rather than re-running the write. A batch
     the ledger already covers skips the leg before any work; a replica
     that commits the batch first surfaces as the commit's
     :class:`TxnReplayError`, which ends the leg. A plain lost version

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 def write_stream_ivf_index(df: DataFrame, index_path: str,
@@ -42,39 +43,10 @@ def write_stream_ivf_index(df: DataFrame, index_path: str,
     vec_id + embedding). Returns the StreamingQuery; read the index
     back with :func:`read_index`."""
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(TxnTable(index_path), batch_df, centroids,
                      batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def _append_partitioned(idx: TxnTable, frame: DataFrame, batch_id: int,
-                        app_id: str | None, op: str) -> None:
-    """Shared commit leg: write the batch's rows as ``centroid_id=``
-    partition subdirs and commit them atomically, cleaning up the
-    orphaned dirs if the commit loses a race."""
-    import os
-    import shutil
-
-    def _leg():
-        adds = idx._write_data_partitioned(  # noqa: SLF001
-            frame, "centroid_id")
-        try:
-            idx.commit(adds, [], _stream_meta(batch_id, app_id, op),
-                       expected_version=idx.latest_version())
-        except Exception:
-            for rel in {os.path.dirname(a) for a in adds}:
-                shutil.rmtree(os.path.join(idx.path, rel),
-                              ignore_errors=True)
-            raise
-
-    _guarded_commit(idx, batch_id, app_id, _leg)
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def ingest_batch(idx: TxnTable, batch_df: DataFrame,
@@ -91,8 +63,10 @@ def ingest_batch(idx: TxnTable, batch_df: DataFrame,
             F.sqrt(F.expr(dot_expr("embedding", "embedding")))
             .alias("e_norm")),
         centroids)
-    _append_partitioned(idx, assigned, batch_id, app_id,
-                        "ivf_index_append")
+    idx.append(assigned, {**_stream_meta(batch_id, app_id,
+                                         "ivf_index_append"),
+                          "partition_by": "centroid_id"})
+    idx.checkpoint_if_needed()
 
 
 def write_stream_ivfpq_index(df: DataFrame, index_path: str,
@@ -111,17 +85,11 @@ def write_stream_ivfpq_index(df: DataFrame, index_path: str,
     every point in time; drift is handled by periodic retrain+rebuild,
     exactly as for the raw-embedding sink above."""
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch_pq(TxnTable(index_path), batch_df, centroids,
                         codebooks, batch_id, app_id,
                         meta_cols=meta_cols)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def ingest_batch_pq(idx: TxnTable, batch_df: DataFrame,
@@ -145,8 +113,10 @@ def ingest_batch_pq(idx: TxnTable, batch_df: DataFrame,
         batch_df.select("vec_id", "embedding", *meta_cols), centroids)
     coded = pq_encode(assigned, codebooks,
                       keep=("centroid_id",) + tuple(meta_cols))
-    _append_partitioned(idx, coded, batch_id, app_id,
-                        "ivfpq_index_append")
+    idx.append(coded, {**_stream_meta(batch_id, app_id,
+                                      "ivfpq_index_append"),
+                       "partition_by": "centroid_id"})
+    idx.checkpoint_if_needed()
 
 
 def read_index(spark: SparkSession, index_path: str) -> DataFrame:
@@ -471,16 +441,10 @@ def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
             .option("readChangeFeed", "true").load(embeddings_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_cdf_batch(idx, batch_df, centroids, batch_id, app_id,
                         codebooks=codebooks, meta_cols=meta_cols)
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
 
 
 def check_and_rebuild(spark: SparkSession, index_path: str,

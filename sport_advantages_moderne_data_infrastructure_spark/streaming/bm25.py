@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..operators.mv import (AggMaterializedView, _last_meta_version_with,
                             _last_meta_with)
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 def make_df_view(index_root: str, n_buckets: int = 32,
@@ -59,19 +60,12 @@ def ingest_batch(postings: TxnTable, df_view: AggMaterializedView,
                .agg(F.count(F.lit(1)), F.sum("dl")).first())
         b_docs, b_len = int(row[0]), int(row[1] or 0)
 
-        def _postings_leg():
-            prev = (_last_meta_with(postings, "bm25_n_docs")
-                    if postings.latest_version() is not None else {})
-            meta = _stream_meta(batch_id, app_id,
-                                "bm25_postings_append")
-            meta["bm25_n_docs"] = prev.get("bm25_n_docs", 0) + b_docs
-            meta["bm25_total_len"] = (prev.get("bm25_total_len", 0)
-                                      + b_len)
-            rel = postings._write_data(post)  # noqa: SLF001
-            postings.commit([rel], [], meta,
-                            expected_version=postings.latest_version())
-
-        _guarded_commit(postings, batch_id, app_id, _postings_leg)
+        prev = _last_meta_with(postings, "bm25_n_docs")
+        meta = _stream_meta(batch_id, app_id, "bm25_postings_append")
+        meta["bm25_n_docs"] = prev.get("bm25_n_docs", 0) + b_docs
+        meta["bm25_total_len"] = prev.get("bm25_total_len", 0) + b_len
+        postings.append(post, meta)
+        postings.checkpoint_if_needed()
 
         # df leg: fold the postings feed into the bucketed view. The
         # change rows since the view's high-water are exactly this
@@ -80,8 +74,7 @@ def ingest_batch(postings: TxnTable, df_view: AggMaterializedView,
         # feed covers both.
         sv = postings.latest_version()
         last = (_last_meta_with(df_view.view, "mv_source_version")
-                .get("mv_source_version", -1)
-                if df_view.view.latest_version() is not None else -1)
+                .get("mv_source_version", -1))
         if sv > last:
             ch = postings.read_changes(
                 batch_docs.sparkSession, since_version=last, upto=sv)
@@ -107,15 +100,9 @@ def write_stream_bm25_index(df: DataFrame, index_root: str,
     df_view = make_df_view(index_root, n_buckets)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(postings, df_view, batch_df, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def compact_if_needed(spark: SparkSession, index_root: str,

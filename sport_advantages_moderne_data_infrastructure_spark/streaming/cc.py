@@ -75,7 +75,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_two_phase
-from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _stream_meta
+from .pipeline import _start_foreach_batch
 
 N_BUCKETS = 32
 
@@ -216,16 +217,11 @@ def ingest_batch(assign: TxnTable, remap: TxnTable, batch: DataFrame,
                       .select(F.col("doc_id").alias("src"),
                               F.col("cluster_id").alias("dst")))
 
-        def _assign_leg():
-            adds = assign._write_data_partitioned(  # noqa: SLF001
-                new_assign, "__kb")
-            assign.commit(
-                adds, [],
-                {**_stream_meta(batch_id, app_id, "cc_assign_append"),
-                 "partition_by": "__kb"},
-                expected_version=assign.latest_version())
-
-        _guarded_commit(assign, batch_id, app_id, _assign_leg)
+        assign.append(
+            new_assign,
+            {**_stream_meta(batch_id, app_id, "cc_assign_append"),
+             "partition_by": "__kb"})
+        assign.checkpoint_if_needed()
 
         # the remap leg commits EVERY batch (0-row marker when no
         # merges — the semdedup marker-commit discipline), recording
@@ -236,18 +232,13 @@ def ingest_batch(assign: TxnTable, remap: TxnTable, batch: DataFrame,
         # with a remap missing their merges — which would SPLIT a
         # true cluster across labels (for the splits built on these
         # labels, a train/test leakage hazard, not just staleness)
-        av = assign.latest_version()
-        no_merges = lost_roots.isEmpty()
-
-        def _remap_leg():
-            meta = _stream_meta(batch_id, app_id, "cc_remap_append")
-            meta["cc_assign_version"] = av
-            remap.append(
-                lost_roots.repartition(1) if no_merges else lost_roots,
-                meta)  # repartition(1): a 0-row marker still writes
-            # one schema-bearing file, keeping the table readable
-
-        _guarded_commit(remap, batch_id, app_id, _remap_leg)
+        meta = _stream_meta(batch_id, app_id, "cc_remap_append")
+        meta["cc_assign_version"] = assign.latest_version()
+        # repartition(1): a 0-row marker still writes one schema-bearing
+        # file, keeping the table readable
+        remap.append(lost_roots.repartition(1) if lost_roots.isEmpty()
+                     else lost_roots, meta)
+        remap.checkpoint_if_needed()
     finally:
         for df in pinned:
             df.unpersist()
@@ -262,15 +253,9 @@ def write_stream_cc(df: DataFrame, root: str, checkpoint: str,
     assign, remap = _tables(root)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(assign, remap, batch_df, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def current_labels(spark: SparkSession, root: str) -> DataFrame:

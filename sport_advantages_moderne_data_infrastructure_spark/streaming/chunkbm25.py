@@ -55,6 +55,7 @@ from ..operators.mv import (AggMaterializedView, MapMaterializedView,
                             _last_meta_version_with, _last_meta_with)
 from ..operators.retrieval import chunk_postings_frame
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 class ChunkPostingsView(MapMaterializedView):
@@ -170,8 +171,7 @@ def refresh_chunk_index(spark: SparkSession, docs: TxnTable,
     if sv is None:
         raise ValueError(f"documents table has no commits: {docs.path}")
     last = (_last_meta_with(cpost.view, "mv_source_version")
-            .get("mv_source_version", -1)
-            if cpost.view.latest_version() is not None else -1)
+            .get("mv_source_version", -1))
     if sv > last:
         ch = docs.read_changes(spark, since_version=last, upto=sv)
         cpost.apply_change_batch(
@@ -182,8 +182,7 @@ def refresh_chunk_index(spark: SparkSession, docs: TxnTable,
 
     pv = cpost.view.latest_version()
     lastp = (_last_meta_with(cdfv.view, "mv_source_version")
-             .get("mv_source_version", -1)
-             if cdfv.view.latest_version() is not None else -1)
+             .get("mv_source_version", -1))
     if pv is not None and pv > lastp:
         ch2 = cpost.view.read_changes(spark, since_version=lastp,
                                       upto=pv)
@@ -213,8 +212,6 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
             .option("readChangeFeed", "true").load(docs_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # the feed IS docs' change rows, but fold via the table's own
         # read_changes bracketed by mv_source_version bookkeeping so
         # batch and streaming refreshes share one code path (the
@@ -222,11 +219,7 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
         refresh_chunk_index(spark, docs, index_root, batch_id, app_id,
                             n_buckets)
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
 
 
 def read_chunk_bm25_index(spark: SparkSession, index_root: str,

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_signatures, signature_bands
 from ..sources.txnlog import TxnTable, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 def dedup_batch(batch_df: DataFrame, index_bands: DataFrame | None,
@@ -112,8 +113,6 @@ def write_stream_dedup(stream_docs: DataFrame, corpus_path: str,
     band index that makes each batch O(batch), not O(corpus)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         idx = (TxnTable(index_path).read(batch_df.sparkSession)
                if TxnTable.is_table(index_path) else None)
         caches: list = []
@@ -147,10 +146,5 @@ def write_stream_dedup(stream_docs: DataFrame, corpus_path: str,
                 c.unpersist()  # processingTime stream leaked one cached
                 # plan/blocks per micro-batch otherwise)
 
-    writer = stream_docs.writeStream.foreachBatch(_process) \
-        .option("checkpointLocation", checkpoint)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_docs, _process, checkpoint,
+                                available_now, processing_time)

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import _last_meta_version_with, _last_meta_with
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 #: default DataSketches lgConfigK (2^12 registers, ~1.6% rse) —
 #: recorded per root in the sketch commit meta
@@ -72,19 +73,13 @@ def ingest_batch(events: TxnTable, sketch: TxnTable,
     spark = batch_df.sparkSession
     gcols = [group_col] if group_col else []
 
-    def _events_leg():
-        meta = _stream_meta(batch_id, app_id, "hll_events_append")
-        rel = events._write_data(  # noqa: SLF001
-            batch_df.select(*gcols, col))
-        events.commit([rel], [], meta,
-                      expected_version=events.latest_version())
-
-    _guarded_commit(events, batch_id, app_id, _events_leg)
+    events.append(batch_df.select(*gcols, col),
+                  _stream_meta(batch_id, app_id, "hll_events_append"))
+    events.checkpoint_if_needed()
 
     sv = events.latest_version()
     last = (_last_meta_with(sketch, "hll_source_version")
-            .get("hll_source_version", -1)
-            if sketch.latest_version() is not None else -1)
+            .get("hll_source_version", -1))
     if sv > last:
         ch = (events.read_changes(spark, since_version=last, upto=sv)
               .filter(F.col("_change_type") == "insert")
@@ -117,16 +112,10 @@ def write_stream_approx_distinct(df: DataFrame, root: str,
     events, sketch = _tables(root)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(events, sketch, batch_df, batch_id, col,
                      app_id, group_col=group_col, lg_k=lg_k)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .joinmv import apply_join_mv_stream_batch
+from .pipeline import _start_foreach_batch
 
 #: union tag column; change-feed frames never carry it
 _SIDE = "__side"
@@ -105,8 +106,6 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
     acols = [f.name for f in af]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             # layer 1: emp ⋈ val join view (three guarded legs inside)
@@ -134,20 +133,12 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
             # 280-294) — so an undelivered agg layer is initialized
             # with zero partials and the chain proceeds
             if jmv1.view.latest_version() is not None:
-                if aggv.view.latest_version() is None:
-                    _guarded_commit(
-                        aggv.view, batch_id, app_id,
-                        lambda: aggv.initialize_empty(
-                            spark, TxnTable(act_path),
-                            _stream_meta(batch_id, app_id,
-                                         "final_pipe_agg_init")))
+                aggv.initialize_empty(
+                    spark, TxnTable(act_path),
+                    _stream_meta(batch_id, app_id, "final_pipe_agg_init"))
                 jmv2.refresh(spark, jmv1.view, aggv.view)
                 prime.refresh(spark, jmv2.view)
         finally:
             batch_df.unpersist()
 
-    w = (unioned.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(unioned, _apply, checkpoint, available_now)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import JoinMaterializedView
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 #: the union tag column; change-feed frames never carry it
 _SIDE = "__side"
@@ -102,8 +103,6 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     lcols, rcols = [f.name for f in lf], [f.name for f in rf]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             apply_join_mv_stream_batch(spark, jmv, batch_df, batch_id,
@@ -111,8 +110,4 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
         finally:
             batch_df.unpersist()
 
-    w = (unioned.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(unioned, _apply, checkpoint, available_now)

@@ -29,6 +29,7 @@ from ..sources.txnlog import (
     _stream_meta,
     agg_delta_from_changes,
 )
+from .pipeline import _start_foreach_batch
 
 
 def write_stream_agg_view(spark: SparkSession, source_path: str,
@@ -51,8 +52,6 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
             .option("readChangeFeed", "true").load(source_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             view = TxnTable(view_path)
@@ -72,11 +71,7 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
         finally:
             batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
 
 
 def write_stream_map_view(spark: SparkSession, source_path: str,
@@ -103,8 +98,6 @@ def write_stream_map_view(spark: SparkSession, source_path: str,
             .option("readChangeFeed", "true").load(source_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             mmv.apply_change_batch(
@@ -115,11 +108,7 @@ def write_stream_map_view(spark: SparkSession, source_path: str,
         finally:
             batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
 
 
 def write_stream_bucketed_agg_view(spark: SparkSession,
@@ -141,8 +130,6 @@ def write_stream_bucketed_agg_view(spark: SparkSession,
             .option("readChangeFeed", "true").load(source_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             aggmv.apply_change_batch(
@@ -153,8 +140,4 @@ def write_stream_bucketed_agg_view(spark: SparkSession,
         finally:
             batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(feed, _apply, checkpoint, available_now)

@@ -79,6 +79,35 @@ def stream_rate_fallback(spark: SparkSession, rows_per_second: int = 1) -> DataF
     )
 
 
+def _trigger(writer, available_now: bool, processing_time: str | None):
+    """The one trigger rule of every sink: a given ``processing_time``
+    (T1: "30 seconds") wins; else ``available_now`` drains what has
+    arrived and stops; else Spark's default trigger runs micro-batches
+    back to back."""
+    if processing_time is not None:
+        return writer.trigger(processingTime=processing_time)
+    if available_now:
+        return writer.trigger(availableNow=True)
+    return writer
+
+
+def _start_foreach_batch(df: DataFrame, fn, checkpoint: str,
+                         available_now: bool,
+                         processing_time: str | None = None):
+    """Start the checkpointed ``foreachBatch`` query every sink in this
+    package runs: ``fn(batch_df, batch_id)`` sees non-empty
+    micro-batches only, under the :func:`_trigger` rule. Returns the
+    StreamingQuery."""
+
+    def _nonempty(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            fn(batch_df, batch_id)
+
+    w = (df.writeStream.foreachBatch(_nonempty)
+         .option("checkpointLocation", checkpoint))
+    return _trigger(w, available_now, processing_time).start()
+
+
 def write_stream_parquet(df: DataFrame, path: str, checkpoint: str,
                          available_now: bool = True, processing_time: str | None = None):
     """K1 (SaveDelta.scala:156-163): checkpointed append sink. Parquet here;
@@ -90,19 +119,13 @@ def write_stream_parquet(df: DataFrame, path: str, checkpoint: str,
         .option("path", path)
         .option("checkpointLocation", checkpoint)
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)  # T1: "30 seconds"
-    return w.start()
+    return _trigger(w, available_now, processing_time).start()
 
 
 def write_stream_memory(df: DataFrame, name: str, available_now: bool = True):
     """Test sink: in-memory table queryable as ``SELECT * FROM {name}``."""
     w = df.writeStream.format("memory").queryName(name).outputMode("append")
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _trigger(w, available_now, None).start()
 
 
 def write_stream_merge(df: DataFrame, target: str, checkpoint: str,
@@ -124,8 +147,6 @@ def write_stream_merge(df: DataFrame, target: str, checkpoint: str,
     from ..operators.merge import merge_upsert
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # last event per key within the batch wins (micro-batches can
         # carry several CDC frames for one key)
@@ -149,11 +170,7 @@ def write_stream_merge(df: DataFrame, target: str, checkpoint: str,
             merged = latest
         merged.write.mode("overwrite").parquet(target)
 
-    w = (df.writeStream.foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _merge, checkpoint, available_now)
 
 
 def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
@@ -183,8 +200,6 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
     from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         table = TxnTable(target)
         latest = (batch_df.withColumn(
@@ -196,11 +211,7 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
             meta=_stream_meta(batch_id, None, "stream_merge"),
             matched_delete=matched_delete, insert=insert))
 
-    w = (df.writeStream.foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _merge, checkpoint, available_now)
 
 
 def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
@@ -227,7 +238,9 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     O(files-per-batch), fine at micro-batch file counts —
     executor-computed stats stay the DataSource path's advantage).
     Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
-    sink).
+    sink). A given ``processing_time`` (T1: "30 seconds") keeps the
+    query running on that interval, whatever ``available_now`` says
+    (:func:`_trigger`).
 
     ``export_delta=True`` (r14) re-exports the table's Delta-protocol
     ``_delta_log`` after every micro-batch, committed or replayed — the
@@ -239,8 +252,6 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     from ..sources.txnlog import TxnTable, _stream_meta
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         table = TxnTable(target)
         table.append(batch_df,
                      _stream_meta(batch_id, app_id, "stream_append"))
@@ -262,13 +273,8 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
                 df.sparkSession, table.path)
             compact_delta_log_if_needed(table.path, span=5)
 
-    w = (df.writeStream.foreachBatch(_append)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+    return _start_foreach_batch(df, _append, checkpoint, available_now,
+                                processing_time)
 
 
 def notify_foreach_batch(df: DataFrame, send, checkpoint: str,
@@ -285,10 +291,4 @@ def notify_foreach_batch(df: DataFrame, send, checkpoint: str,
         for row in batch_df.toLocalIterator():
             send(row.asDict())
 
-    w = (
-        msgs.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(msgs, _emit, checkpoint, available_now)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.txnlog import TxnTable, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 def violations_col(rules: list[tuple[str, str]]):
@@ -75,8 +76,6 @@ def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
     re-commits only the leg that is missing."""
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             clean, bad = split_quarantine(batch_df, rules)
@@ -87,11 +86,7 @@ def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
         finally:
             batch_df.unpersist()
 
-    w = (df.writeStream.foreachBatch(_route)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _route, checkpoint, available_now)
 
 
 # --- decontamination at ingest (r11): the eval-overlap gate ---------------
@@ -135,8 +130,6 @@ def write_stream_decontaminate(df: DataFrame, eval_hashes: DataFrame,
     leaves a window where training reads tainted docs)."""
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             hits = contamination_hits(batch_df, eval_hashes,
@@ -157,8 +150,4 @@ def write_stream_decontaminate(df: DataFrame, eval_hashes: DataFrame,
         finally:
             batch_df.unpersist()
 
-    w = (df.writeStream.foreachBatch(_route)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _route, checkpoint, available_now)

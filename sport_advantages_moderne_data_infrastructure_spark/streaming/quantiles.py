@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import _last_meta_version_with, _last_meta_with
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 #: default frozen grid (documented per root in the vals commit meta)
 N_VB = 64
@@ -91,24 +92,18 @@ def ingest_batch(vals: TxnTable, hist: TxnTable, batch_df: DataFrame,
             .filter(F.col("v").isNotNull())
             .withColumn("__vb", _vb(F.col("v"), lo, hi, n_vb)))
 
-    def _vals_leg():
-        meta = _stream_meta(batch_id, app_id, "q_vals_append")
-        meta["q_grid"] = [lo, hi, n_vb]
-        meta["partition_by"] = "__vb"
-        # shape by the bucket column before the partitioned write so a
-        # commit adds <= one file per bucket, not shuffle-partitions x
-        # buckets (the stream_splits_e2e lesson)
-        adds = vals._write_data_partitioned(  # noqa: SLF001
-            rows.repartition(16, "__vb"), "__vb")
-        vals.commit(adds, [], meta,
-                    expected_version=vals.latest_version())
-
-    _guarded_commit(vals, batch_id, app_id, _vals_leg)
+    meta = _stream_meta(batch_id, app_id, "q_vals_append")
+    meta["q_grid"] = [lo, hi, n_vb]
+    meta["partition_by"] = "__vb"
+    # shape by the bucket column before the partitioned write so a
+    # commit adds <= one file per bucket, not shuffle-partitions x
+    # buckets (the stream_splits_e2e lesson)
+    vals.append(rows.repartition(16, "__vb"), meta)
+    vals.checkpoint_if_needed()
 
     sv = vals.latest_version()
     last = (_last_meta_with(hist, "q_source_version")
-            .get("q_source_version", -1)
-            if hist.latest_version() is not None else -1)
+            .get("q_source_version", -1))
     if sv > last:
         ch = (vals.read_changes(spark, since_version=last, upto=sv)
               .filter(F.col("_change_type") == "insert"))
@@ -141,16 +136,10 @@ def write_stream_quantiles(df: DataFrame, root: str, checkpoint: str,
     vals, hist = _tables(root)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(vals, hist, batch_df, batch_id, col, lo, hi,
                      n_vb, app_id, group_col=group_col)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -49,19 +49,16 @@ because raw already contains exactly the batches delivered so far).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txnlog import (
-    TxnConflictError,
     TxnTable,
     _guarded_commit,
     _partition_of,
     _stream_meta,
 )
+from .pipeline import _start_foreach_batch
 
 _INTERNAL = ("key_bucket", "valid_from_tie", "last_ts", "last_tie")
 
@@ -117,28 +114,15 @@ def write_stream_scd2(df: DataFrame, raw_path: str, dim_path: str,
     bucket = (F.col(key) % n_buckets).cast("int")
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df.persist()
         try:
             spark = batch_df.sparkSession
             raw = TxnTable(raw_path)
 
-            def _raw_leg():
-                adds = raw._write_data_partitioned(  # noqa: SLF001
-                    batch_df.withColumn("key_bucket", bucket), "key_bucket")
-                try:
-                    raw.commit(adds, [],
-                               _stream_meta(batch_id, app_id,
-                                            "scd2_raw_append"),
-                               expected_version=raw.latest_version())
-                except TxnConflictError:
-                    for rel in {os.path.dirname(a) for a in adds}:
-                        shutil.rmtree(os.path.join(raw_path, rel),
-                                      ignore_errors=True)
-                    raise
-
-            _guarded_commit(raw, batch_id, app_id, _raw_leg)
+            raw.append(batch_df.withColumn("key_bucket", bucket),
+                       {**_stream_meta(batch_id, app_id, "scd2_raw_append"),
+                        "partition_by": "key_bucket"})
+            raw.checkpoint_if_needed()
 
             dim = TxnTable(dim_path)
             events = (batch_df.select(key, attr, ts, tie)
@@ -178,11 +162,7 @@ def write_stream_scd2(df: DataFrame, raw_path: str, dim_path: str,
         finally:
             batch_df.unpersist()
 
-    w = (df.writeStream.foreachBatch(_maintain)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _maintain, checkpoint, available_now)
 
 
 def _incremental_rows(spark, raw: TxnTable, prior: DataFrame,

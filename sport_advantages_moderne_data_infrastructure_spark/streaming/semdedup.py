@@ -25,8 +25,8 @@ exact function):
    against the stored pruned set, appended (PRUNE LEG FIRST — a pure
    function of batch + pre-batch index, so a crash between legs
    replays identically);
-4. the assigned batch appends to the centroid-partitioned index
-   (annindex._append_partitioned), replay-guarded.
+4. the assigned batch appends to the ``centroid_id``-partitioned index
+   (annindex.py's layout) through ``TxnTable.append``, replay-guarded.
 
 Per-batch cost: O(batch x touched-cluster width) — never a corpus
 scan; the k ∝ N centroid-count policy (ivf.k_for_corpus) bounds
@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
 from ..operators.ivf import assign_centroids
-from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
-from .annindex import _append_partitioned
+from ..sources.txnlog import TxnTable, _stream_meta
+from .pipeline import _start_foreach_batch
 
 COS_THRESHOLD = 0.99
 
@@ -103,19 +103,19 @@ def ingest_batch(root: str, batch_df: DataFrame,
         newly = newly.join(pruned.read(spark), ["pruned_vec_id"],
                            "left_anti")
 
-    def _prune_leg():
-        # committed even when `newly` is empty: the empty commit is the
-        # batch's marker in the pruned table's stream meta, so a replay
-        # skips this leg via the (app_id, batch_id) guard even for the
-        # common batch that pruned nothing (second, independent guard
-        # against the redelivery self-pair hazard above)
-        pruned.append(newly, _stream_meta(batch_id, app_id,
-                                          "semdedup_prune_append"))
+    # committed even when `newly` is empty: the empty commit is the
+    # batch's marker in the pruned table's stream meta, so a replay
+    # skips this leg via the (app_id, batch_id) ledger even for the
+    # common batch that pruned nothing (second, independent guard
+    # against the redelivery self-pair hazard above)
+    pruned.append(newly, _stream_meta(batch_id, app_id,
+                                      "semdedup_prune_append"))
+    pruned.checkpoint_if_needed()
 
-    _guarded_commit(pruned, batch_id, app_id, _prune_leg)
-
-    _append_partitioned(idx, assigned, batch_id, app_id,
-                        "semdedup_index_append")
+    idx.append(assigned, {**_stream_meta(batch_id, app_id,
+                                         "semdedup_index_append"),
+                          "partition_by": "centroid_id"})
+    idx.checkpoint_if_needed()
 
 
 def write_stream_semdedup(df: DataFrame, root: str,
@@ -128,15 +128,9 @@ def write_stream_semdedup(df: DataFrame, root: str,
     :func:`pruned_ids`."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(root, batch_df, centroids, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def pruned_ids(spark: SparkSession, root: str) -> DataFrame:

@@ -49,6 +49,7 @@ from ..operators.sketches import (exact_pass, grouped_exact_pass,
                                   grouped_mg_merge, grouped_mg_partial,
                                   mg_merge, mg_partial)
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from .pipeline import _start_foreach_batch
 
 
 def _tables(root: str) -> tuple[TxnTable, TxnTable]:
@@ -62,25 +63,18 @@ def ingest_batch(events: TxnTable, sketch: TxnTable,
     legs, each individually (app_id, batch_id) replay-guarded."""
     spark = batch_df.sparkSession
 
-    def _events_leg():
-        prev = (_last_meta_with(events, "mg_n_rows")
-                if events.latest_version() is not None else {})
-        meta = _stream_meta(batch_id, app_id, "mg_events_append")
-        meta["mg_n_rows"] = (prev.get("mg_n_rows", 0)
-                             + batch_df.count())
-        rel = events._write_data(batch_df.select(col))  # noqa: SLF001
-        events.commit([rel], [], meta,
-                      expected_version=events.latest_version())
-
-    _guarded_commit(events, batch_id, app_id, _events_leg)
+    meta = _stream_meta(batch_id, app_id, "mg_events_append")
+    meta["mg_n_rows"] = (_last_meta_with(events, "mg_n_rows")
+                         .get("mg_n_rows", 0) + batch_df.count())
+    events.append(batch_df.select(col), meta)
+    events.checkpoint_if_needed()
 
     # sketch leg: fold the events feed since the sketch's high-water.
     # On replay the guard skips; on crash-between-legs the next
     # batch's feed covers the gap (the bm25 df-leg discipline).
     sv = events.latest_version()
     last = (_last_meta_with(sketch, "mg_source_version")
-            .get("mg_source_version", -1)
-            if sketch.latest_version() is not None else -1)
+            .get("mg_source_version", -1))
     if sv > last:
         ch = (events.read_changes(spark, since_version=last, upto=sv)
               .filter(F.col("_change_type") == "insert"))
@@ -112,19 +106,13 @@ def ingest_batch_grouped(events: TxnTable, sketch: TxnTable,
     the same crash-between-legs feed coverage as the flat path."""
     spark = batch_df.sparkSession
 
-    def _events_leg():
-        meta = _stream_meta(batch_id, app_id, "gmg_events_append")
-        rel = events._write_data(  # noqa: SLF001
-            batch_df.select(group_col, col))
-        events.commit([rel], [], meta,
-                      expected_version=events.latest_version())
-
-    _guarded_commit(events, batch_id, app_id, _events_leg)
+    events.append(batch_df.select(group_col, col),
+                  _stream_meta(batch_id, app_id, "gmg_events_append"))
+    events.checkpoint_if_needed()
 
     sv = events.latest_version()
     last = (_last_meta_with(sketch, "mg_source_version")
-            .get("mg_source_version", -1)
-            if sketch.latest_version() is not None else -1)
+            .get("mg_source_version", -1))
     if sv > last:
         ch = (events.read_changes(spark, since_version=last, upto=sv)
               .filter(F.col("_change_type") == "insert"))
@@ -154,16 +142,10 @@ def write_stream_grouped_mg_sketch(df: DataFrame, root: str,
     k = math.ceil(1.0 / phi)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch_grouped(events, sketch, batch_df, batch_id,
                              group_col, col, k, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,
@@ -233,16 +215,10 @@ def write_stream_mg_sketch(df: DataFrame, root: str, checkpoint: str,
     k = math.ceil(1.0 / phi)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(events, sketch, batch_df, batch_id, col, k,
                      app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def heavy_hitters_served(spark: SparkSession, root: str, col: str,

@@ -48,8 +48,9 @@ from ..operators.dedup import (
     jaccard_for_pairs, minhash_signatures, shingle_hashes,
     signature_bands,
 )
-from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _stream_meta
 from . import cc as CC
+from .pipeline import _start_foreach_batch
 
 N_SB = 32  # band-key hash buckets for the persisted band index
 
@@ -150,31 +151,18 @@ def ingest_batch(root: str, batch_docs: DataFrame, batch_id: int,
                                       F.col("doc_b").alias("nbr"))))
         CC.ingest_batch(assign, remap, cc_batch, batch_id, app_id)
 
-        def _postings_leg():
-            adds = post_t._write_data_partitioned(  # noqa: SLF001
-                hashes_b.withColumn("__kb", CC._bucket(F.col("doc_id")))
-                .repartition(CC.N_BUCKETS, "__kb"),
-                "__kb")
-            post_t.commit(
-                adds, [],
-                {**_stream_meta(batch_id, app_id,
-                                "splits_postings_append"),
-                 "partition_by": "__kb"},
-                expected_version=post_t.latest_version())
-
-        _guarded_commit(post_t, batch_id, app_id, _postings_leg)
-
-        def _bands_leg():
-            adds = bands_t._write_data_partitioned(  # noqa: SLF001
-                bands_b.withColumn("__sb", _sb(F.col("key")))
-                .repartition(N_SB, "__sb"), "__sb")
-            bands_t.commit(
-                adds, [],
-                {**_stream_meta(batch_id, app_id, "splits_bands_append"),
-                 "partition_by": "__sb"},
-                expected_version=bands_t.latest_version())
-
-        _guarded_commit(bands_t, batch_id, app_id, _bands_leg)
+        post_t.append(
+            hashes_b.withColumn("__kb", CC._bucket(F.col("doc_id")))
+            .repartition(CC.N_BUCKETS, "__kb"),
+            {**_stream_meta(batch_id, app_id, "splits_postings_append"),
+             "partition_by": "__kb"})
+        post_t.checkpoint_if_needed()
+        bands_t.append(
+            bands_b.withColumn("__sb", _sb(F.col("key")))
+            .repartition(N_SB, "__sb"),
+            {**_stream_meta(batch_id, app_id, "splits_bands_append"),
+             "partition_by": "__sb"})
+        bands_t.checkpoint_if_needed()
     finally:
         bands_b.unpersist()
         hashes_b.unpersist()
@@ -189,15 +177,9 @@ def write_stream_splits(df: DataFrame, root: str, checkpoint: str,
     :func:`current_splits`."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(root, batch_df, batch_id, app_id, threshold)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

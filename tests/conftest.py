@@ -1,14 +1,19 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
+from types import SimpleNamespace
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sport_advantages_moderne_data_infrastructure_spark.session import get_spark
+from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+    TxnTable,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_T2 = "/root/testdata/sf0.01"
@@ -72,3 +77,33 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def crash_at_commit(monkeypatch):
+    """``with crash_at_commit(path, batch_id) as crash:`` — inside the
+    block, ``TxnTable.commit`` raises ``crash.error`` for any commit to
+    the table at ``path`` whose meta carries ``stream_batch_id ==
+    batch_id``, before it publishes; ``crash.hits`` counts the raises.
+    One hook reaches every sink leg, since every leg commits there."""
+    @contextlib.contextmanager
+    def _arm(path: str, batch_id: int):
+        crash = SimpleNamespace(
+            error=RuntimeError(
+                f"injected crash at commit of batch {batch_id} to {path}"),
+            hits=0)
+        real = TxnTable.commit
+        target = os.path.abspath(path)
+
+        def _commit(self, adds, removes, meta=None, *a, **k):
+            if (os.path.abspath(self.path) == target
+                    and (meta or {}).get("stream_batch_id") == batch_id):
+                crash.hits += 1
+                raise crash.error
+            return real(self, adds, removes, meta, *a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(TxnTable, "commit", _commit)
+            yield crash
+
+    return _arm

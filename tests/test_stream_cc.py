@@ -123,7 +123,7 @@ def test_stream_cc_restart_exactly_once(spark, tmp_path_factory):
     assert got1 == [(2, 2), (3, 2), (5, 2), (7, 2), (9, 2)]
 
 
-def test_crash_between_legs_recovers(spark, monkeypatch):
+def test_crash_between_legs_recovers(spark, crash_at_commit):
     """Crash AFTER the assign append but BEFORE the remap append: the
     legs are pure functions of (batch, pre-batch state), so
     redelivery recomputes the identical remap rows; a further replay
@@ -132,24 +132,13 @@ def test_crash_between_legs_recovers(spark, monkeypatch):
     a, r = C._tables(root)
     C.ingest_batch(a, r, _mk(spark, [(5, None), (9, None)]), 0, "t")
 
-    boom = RuntimeError("injected crash before remap append")
-    real = C._guarded_commit
-    calls = {"n": 0}
-
-    def _crashy(table, batch_id, app_id, attempt):
-        if table is r and batch_id == 1:
-            calls["n"] += 1
-            raise boom
-        return real(table, batch_id, app_id, attempt)
-
-    monkeypatch.setattr(C, "_guarded_commit", _crashy)
-    try:
-        C.ingest_batch(a, r, _mk(spark, [(3, None), (3, 5), (3, 9)]),
-                       1, "t")
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as ex:
-        assert ex is boom and calls["n"] == 1
-    monkeypatch.setattr(C, "_guarded_commit", real)
+    with crash_at_commit(r.path, 1) as crash:
+        try:
+            C.ingest_batch(a, r, _mk(spark, [(3, None), (3, 5), (3, 9)]),
+                           1, "t")
+            raise AssertionError("injected crash did not fire")
+        except RuntimeError as ex:
+            assert ex is crash.error and crash.hits == 1
     # torn: assign carries batch 1, remap still at batch 0's marker
     assert a.latest_version() == 1 and r.latest_version() == 0
 

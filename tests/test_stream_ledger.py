@@ -3,27 +3,48 @@ exactly-once append path for every streaming sink.
 
 A replayed ``(stream_app_id, stream_batch_id)`` is terminal in every
 append branch — plain, partition-declared and identity: no new version,
-no leaked data dir, no commit retry and no backoff. A structural check
-keeps the ledger lookups and hand-built stream metas inside
-``sources/txnlog.py``, so per-sink guard copies cannot come back."""
+no leaked data dir, no commit retry and no backoff. Every streaming
+append leg goes through ``TxnTable.append``, so neither a racing
+replica nor a lost version race leaves an unreferenced data dir.
+Structural checks keep the ledger lookups and hand-built stream metas
+inside ``sources/txnlog.py``, append-shaped commits inside
+``sources/``, and ``writeStream.foreachBatch`` inside the one starter,
+so per-sink copies cannot come back."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
 import pytest
 
 import sport_advantages_moderne_data_infrastructure_spark as pkg
+from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (
+    AggMaterializedView,
+)
 from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+    TxnConflictError,
     TxnTable,
+    _commit_root,
     _stream_meta,
+)
+from sport_advantages_moderne_data_infrastructure_spark.streaming import (
+    annindex,
+    bm25,
+    cc,
+    distinct,
+    quantiles,
+    scd2,
+    semdedup,
+    sketches,
+    splits,
 )
 
 
 def _table(tmp_path, layout: str) -> TxnTable:
     t = TxnTable(str(tmp_path / layout))
-    if layout == "partitioned":
+    if layout.startswith("partitioned"):
         t.set_partition_column("day")
     elif layout == "identity":
         t.set_identity_column("rid")
@@ -45,11 +66,15 @@ def _bypass_first_ledger_check(t: TxnTable, monkeypatch) -> None:
 
 
 @pytest.mark.parametrize("race", [False, True], ids=["replay", "race"])
-@pytest.mark.parametrize("layout", ["plain", "partitioned", "identity"])
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "identity",
+                                    "partitioned-0rows"])
 def test_replayed_batch_is_terminal(spark, tmp_path, monkeypatch,
                                     layout, race):
     t = _table(tmp_path, layout)
     df = spark.createDataFrame([(1, 0), (2, 1)], "id int, day int")
+    # the replayed frame: the same rows, or none on "-0rows" (a 0-row
+    # partitioned write has no adds to publish or reclaim)
+    replayed = df.limit(0) if layout.endswith("-0rows") else df
     meta = _stream_meta(0, "rt", "stream_append")
     assert t.append(df, meta) == 0
     data_root = os.path.join(t.path, "data")
@@ -70,7 +95,7 @@ def test_replayed_batch_is_terminal(spark, tmp_path, monkeypatch,
     if race:
         _bypass_first_ledger_check(t, monkeypatch)
 
-    assert t.append(df, dict(meta)) is None
+    assert t.append(replayed, dict(meta)) is None
     assert t.latest_version() == 0
     assert set(os.listdir(data_root)) == dirs
     assert calls["commit"] == (1 if race else 0)
@@ -78,6 +103,169 @@ def test_replayed_batch_is_terminal(spark, tmp_path, monkeypatch,
     assert t.read(spark).count() == 2
     # the next batch commits normally
     assert t.append(df, _stream_meta(1, "rt", "stream_append")) == 1
+
+
+# -- every streaming append leg: no orphaned data dir ----------------------
+
+_CENTROIDS = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+_CODEBOOKS = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]]
+
+
+def _vals(spark):
+    return spark.createDataFrame(
+        [(i % 3, i) for i in range(12)], "g int, v long")
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(i, f"streamed document {i % 3} about lakehouse sinks, copy {i}")
+         for i in range(6)], "doc_id long, text string")
+
+
+def _vecs(spark):
+    return spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0, 0.2] if i % 2 else [0.1 * i, 1.0, 0.3, 0.0])
+         for i in range(8)], "vec_id long, embedding array<double>")
+
+
+def _scd2(spark, root, delivery):
+    src = os.path.join(root, "src")
+    schema = "k long, attr string, ts long, tie long"
+    if not os.path.exists(src):
+        spark.createDataFrame([(i % 3, f"a{i % 2}", i, i) for i in range(6)],
+                              schema).write.parquet(src)
+    # a fresh checkpoint per delivery: the second run replays batch 0
+    q = scd2.write_stream_scd2(
+        spark.readStream.schema(schema).parquet(src),
+        os.path.join(root, "raw"), os.path.join(root, "dim"),
+        os.path.join(root, f"ck{delivery}"), "k", "attr", "ts", "tie",
+        n_buckets=4, app_id="orph")
+    q.awaitTermination(120)
+
+
+def _distinct(spark, root, _):
+    distinct.ingest_batch(*distinct._tables(root), _vals(spark), 0, "v",
+                          app_id="orph", group_col="g")
+
+
+def _mg(spark, root, _):
+    sketches.ingest_batch(*sketches._tables(root), _vals(spark), 0, "v", 4,
+                          "orph")
+
+
+def _mg_grouped(spark, root, _):
+    sketches.ingest_batch_grouped(*sketches._tables(root), _vals(spark), 0,
+                                  "g", "v", 4, "orph")
+
+
+def _quantiles(spark, root, _):
+    quantiles.ingest_batch(*quantiles._tables(root), _vals(spark), 0, "v",
+                           0.0, 12.0, 4, "orph")
+
+
+def _bm25(spark, root, _):
+    bm25.ingest_batch(TxnTable(os.path.join(root, "postings")),
+                      bm25.make_df_view(root, 4), _docs(spark), 0, "orph")
+
+
+def _splits(spark, root, _):
+    splits.ingest_batch(root, _docs(spark), 0, "orph")
+
+
+def _cc(spark, root, _):
+    batch = spark.createDataFrame([(1, None), (2, None), (3, None), (2, 1)],
+                                  "doc_id long, nbr long")
+    cc.ingest_batch(*cc._tables(root), batch, 0, "orph")
+
+
+def _ivf(spark, root, _):
+    annindex.ingest_batch(TxnTable(os.path.join(root, "index")),
+                          _vecs(spark), _CENTROIDS, 0, "orph")
+
+
+def _ivfpq(spark, root, _):
+    annindex.ingest_batch_pq(TxnTable(os.path.join(root, "index")),
+                             _vecs(spark), _CENTROIDS, _CODEBOOKS, 0, "orph")
+
+
+def _semdedup(spark, root, _):
+    semdedup.ingest_batch(root, _vecs(spark), _CENTROIDS, 0, "orph")
+
+
+def _agg_init(spark, root, _):
+    src = TxnTable(os.path.join(root, "src"))
+    if src.latest_version() is None:
+        src.append(_vals(spark))
+    AggMaterializedView(os.path.join(root, "view"), "g", "v").initialize_empty(
+        spark, src, _stream_meta(0, "orph", "final_pipe_agg_init"))
+
+
+_LEGS = {
+    "scd2_raw": (_scd2, "raw"),
+    "distinct_events": (_distinct, "events"),
+    "mg_events": (_mg, "events"),
+    "mg_grouped_events": (_mg_grouped, "events"),
+    "quantiles_vals": (_quantiles, "vals"),
+    "bm25_postings": (_bm25, "postings"),
+    "splits_postings": (_splits, "postings"),
+    "splits_bands": (_splits, "bands"),
+    "cc_assign": (_cc, "assign"),
+    "cc_remap": (_cc, "remap"),
+    "ivf_index": (_ivf, "index"),
+    "ivfpq_index": (_ivfpq, "index"),
+    "semdedup_index": (_semdedup, "index"),
+    "semdedup_pruned": (_semdedup, "pruned"),
+    "agg_view_init": (_agg_init, "view"),
+}
+
+
+@pytest.mark.parametrize("leg", sorted(_LEGS))
+def test_append_leg_leaves_no_orphan_dirs(spark, tmp_path, monkeypatch,
+                                          leg):
+    """The first delivery of a batch loses one version race on the leg's
+    table; a replica of the same batch then races it (its up-front
+    ledger check reads stale, so the refusal comes from ``commit``).
+    Afterwards every dir under the table's ``data/`` is a commit root
+    the log references."""
+    run, table = _LEGS[leg]
+    root = str(tmp_path / "root")
+    target = os.path.abspath(os.path.join(root, table))
+    real_commit, real_replays = TxnTable.commit, TxnTable._replays
+    lose, stale = {"n": 1}, {"n": 0}
+
+    def _ours(t, meta):
+        return (os.path.abspath(t.path) == target
+                and (meta or {}).get("stream_batch_id") is not None)
+
+    def _commit(self, adds, removes, meta=None, *a, **k):
+        if _ours(self, meta) and lose["n"]:
+            lose["n"] -= 1
+            raise TxnConflictError("injected lost version race")
+        return real_commit(self, adds, removes, meta, *a, **k)
+
+    def _replays(self, meta):
+        if _ours(self, meta) and stale["n"]:
+            stale["n"] -= 1
+            return False
+        return real_replays(self, meta)
+
+    monkeypatch.setattr(TxnTable, "commit", _commit)
+    monkeypatch.setattr(TxnTable, "_replays", _replays)
+    run(spark, root, 0)
+    assert lose["n"] == 0
+    t = TxnTable(target)
+    v = t.latest_version()
+    stale["n"] = 1
+    run(spark, root, 1)
+    # initialize_empty returns before any ledger check once the view
+    # exists, so its replica never writes
+    assert stale["n"] == (1 if leg == "agg_view_init" else 0)
+    assert t.latest_version() == v
+    referenced = {_commit_root(a) for n in range(v + 1)
+                  for a in t._doc(n)["adds"]}
+    on_disk = {os.path.join("data", d)
+               for d in os.listdir(os.path.join(target, "data"))}
+    assert on_disk <= referenced, sorted(on_disk - referenced)
 
 
 _PKG_ROOT = os.path.dirname(pkg.__file__)
@@ -91,23 +279,79 @@ _FORBIDDEN = {
 }
 
 
+def _package_modules():
+    """(path relative to the package root, source) of every module."""
+    for root, _, files in os.walk(_PKG_ROOT):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    yield os.path.relpath(path, _PKG_ROOT), fh.read()
+
+
+def _calls(tree, attr: str):
+    return [n for n in ast.walk(tree) if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute) and n.func.attr == attr]
+
+
+def test_one_append_path_and_one_starter():
+    """Outside ``sources/`` no code makes an append-shaped
+    ``commit(adds, [], ...)`` or calls ``_commit_blind`` (append legs
+    call ``TxnTable.append``), no ``_guarded_commit`` leg appends, and
+    only
+    ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``.
+    Parsed, so docstring usage examples do not count."""
+    hits = []
+    for rel, src in _package_modules():
+        tree = ast.parse(src)
+        starter = {id(c) for f in ast.walk(tree)
+                   if isinstance(f, ast.FunctionDef)
+                   and f.name == "_start_foreach_batch"
+                   and rel == os.path.join("streaming", "pipeline.py")
+                   for c in _calls(f, "foreachBatch")}
+        for c in _calls(tree, "foreachBatch"):
+            if (isinstance(c.func.value, ast.Attribute)
+                    and c.func.value.attr == "writeStream"
+                    and id(c) not in starter):
+                hits.append(f"{rel}:{c.lineno}: writeStream.foreachBatch "
+                            "outside _start_foreach_batch")
+        if rel.startswith("sources" + os.sep):
+            continue
+        for c in _calls(tree, "commit"):
+            if (len(c.args) >= 2 and isinstance(c.args[1], ast.List)
+                    and not c.args[1].elts):
+                hits.append(f"{rel}:{c.lineno}: append-shaped commit")
+        defs = {f.name: f for f in ast.walk(tree)
+                if isinstance(f, ast.FunctionDef)}
+        for c in ast.walk(tree):
+            if not (isinstance(c, ast.Call)
+                    and isinstance(c.func, ast.Name)
+                    and c.func.id == "_guarded_commit"
+                    and len(c.args) == 4):
+                continue
+            leg = c.args[3]
+            if isinstance(leg, ast.Name):
+                leg = defs.get(leg.id)
+            # TxnTable.append(df, meta): two arguments; list.append: one
+            if leg is not None and any(len(a.args) >= 2
+                                       for a in _calls(leg, "append")):
+                hits.append(f"{rel}:{c.lineno}: _guarded_commit leg "
+                            "appends")
+        hits += [f"{rel}:{c.lineno}: _commit_blind"
+                 for c in _calls(tree, "_commit_blind")]
+    assert not hits, "\n".join(hits)
+
+
 def test_ledger_stays_in_txnlog():
     """Only sources/txnlog.py reads the ledger or builds a stream meta;
     every sink goes through ``TxnTable.append``/``_guarded_commit`` and
     ``_stream_meta``."""
     hits = []
-    for root, _, files in os.walk(_PKG_ROOT):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            rel = os.path.relpath(path, _PKG_ROOT)
-            if rel == _LEDGER_HOME:
-                continue
-            with open(path) as fh:
-                for n, line in enumerate(fh, 1):
-                    for what, rx in _FORBIDDEN.items():
-                        if rx.search(line):
-                            hits.append(f"{rel}:{n}: {what}: "
-                                        f"{line.strip()}")
+    for rel, src in _package_modules():
+        if rel == _LEDGER_HOME:
+            continue
+        for n, line in enumerate(src.splitlines(), 1):
+            for what, rx in _FORBIDDEN.items():
+                if rx.search(line):
+                    hits.append(f"{rel}:{n}: {what}: {line.strip()}")
     assert not hits, "\n".join(hits)

@@ -147,7 +147,7 @@ def test_self_pair_filter_without_guard(spark, sf_dir):
 
 
 def test_crash_between_legs_replays_identically(spark, sf_dir,
-                                                monkeypatch):
+                                                crash_at_commit):
     """Crash AFTER the prune append but BEFORE the index append: the
     prune leg is a pure function of (batch, pre-batch index), so
     redelivery skips it (guard) and lands the index; replay is a
@@ -159,24 +159,15 @@ def test_crash_between_legs_replays_identically(spark, sf_dir,
     root = tempfile.mkdtemp(prefix="semdd_crash_")
     SD.ingest_batch(root, b(0), centroids, 0, "sd_c")
 
-    boom = RuntimeError("injected crash before index append")
-    real = SD._append_partitioned
-
-    def _crashy(idx, frame, batch_id, app_id, op):
-        if batch_id == 1:
-            raise boom
-        return real(idx, frame, batch_id, app_id, op)
-
-    monkeypatch.setattr(SD, "_append_partitioned", _crashy)
-    try:
-        SD.ingest_batch(root, b(1), centroids, 1, "sd_c")
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as ex:
-        assert ex is boom
-    monkeypatch.setattr(SD, "_append_partitioned", real)
+    idx, pruned = SD._tables(root)
+    with crash_at_commit(idx.path, 1) as crash:
+        try:
+            SD.ingest_batch(root, b(1), centroids, 1, "sd_c")
+            raise AssertionError("injected crash did not fire")
+        except RuntimeError as ex:
+            assert ex is crash.error
 
     SD.ingest_batch(root, b(1), centroids, 1, "sd_c")  # redelivery
-    idx, pruned = SD._tables(root)
     vs = (idx.latest_version(), pruned.latest_version())
     SD.ingest_batch(root, b(1), centroids, 1, "sd_c")  # replay no-op
     assert (idx.latest_version(), pruned.latest_version()) == vs

@@ -57,7 +57,7 @@ def test_stream_splits_restart_exactly_once(spark, sf_dir,
                   .collect()) == got1
 
 
-def test_stream_splits_crash_between_legs(spark, sf_dir, monkeypatch):
+def test_stream_splits_crash_between_legs(spark, sf_dir, crash_at_commit):
     """Crash AFTER the CC legs but BEFORE the postings/bands appends:
     redelivery must re-derive the identical edges (per-doc-pure math +
     pre-batch state), skip the committed CC legs, land the state
@@ -67,22 +67,13 @@ def test_stream_splits_crash_between_legs(spark, sf_dir, monkeypatch):
     b = lambda i: corpus.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i)  # noqa: E731
     SP.ingest_batch(root, b(0), 0, "sp_c")
 
-    boom = RuntimeError("injected crash before state appends")
     bands_t, post_t = SP._tables(root)
-    real = SP._guarded_commit
-
-    def _crashy(table, batch_id, app_id, attempt):
-        if table.path == post_t.path and batch_id == 1:
-            raise boom
-        return real(table, batch_id, app_id, attempt)
-
-    monkeypatch.setattr(SP, "_guarded_commit", _crashy)
-    try:
-        SP.ingest_batch(root, b(1), 1, "sp_c")
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as ex:
-        assert ex is boom
-    monkeypatch.setattr(SP, "_guarded_commit", real)
+    with crash_at_commit(post_t.path, 1) as crash:
+        try:
+            SP.ingest_batch(root, b(1), 1, "sp_c")
+            raise AssertionError("injected crash did not fire")
+        except RuntimeError as ex:
+            assert ex is crash.error
     assign, _ = CC._tables(root)
     assert assign.latest_version() is not None
     assert post_t.latest_version() == 0  # batch 1's append missing

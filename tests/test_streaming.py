@@ -334,6 +334,28 @@ def test_txn_append_sink_app_id_scopes_guard(spark, cdc_dir, tmp_path):
     assert t.read(spark).count() == 2 * n1
 
 
+def test_txn_append_sink_processing_time_wins(spark, cdc_dir, tmp_path):
+    """A given processing_time wins over the available_now default: the
+    query keeps polling after it drains what has arrived, instead of
+    running availableNow and stopping."""
+    from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+        TxnTable,
+    )
+
+    table = str(tmp_path / "t")
+    q = P.write_stream_txn_append(
+        P.stream_cdc_from_files(spark, cdc_dir), table,
+        str(tmp_path / "ck"), processing_time="1 second")
+    try:
+        q.processAllAvailable()
+        assert not q.awaitTermination(3)
+        assert q.isActive
+        assert (TxnTable(table).read(spark).count()
+                == parse_cdc(spark.read.parquet(cdc_dir)).count())
+    finally:
+        q.stop()
+
+
 # -- streaming incremental dedup -------------------------------------------
 
 
