@@ -14,27 +14,31 @@ change data feed (``TxnTable.read_changes`` — insert / pre/postimage /
 delete rows with ``_commit_version``) and
 ``txnlog.agg_delta_from_changes`` (CDF frame → signed per-group deltas;
 preimages subtract, postimages add — which is WHY the feed carries
-preimages). A history range the feed cannot express row-wise (a full
-overwrite / compaction landed since the last refresh) degrades to a
-full recompute from the snapshot — same answer, full-scan cost, exactly
+preimages). Every refresh is incremental. A history range the feed
+cannot express row-wise (a full overwrite / compaction landed since the
+last refresh) degrades to a full recompute from the snapshot, flagged
+``mv_resync`` in the commit meta — same answer, full-scan cost, exactly
 Delta's "resync after a non-CDF commit" rule.
+
+Two view shapes live here. ``maintain_agg_view`` keeps a plain table of
+partials, overwritten per refresh — right while the group count stays
+tiny (per-BU rollups). The bucketed views (join, agg, map) share
+:class:`_BucketedView`: ``__kb`` partition-granular bucket replace and
+net-count application, so a refresh rewrites only the buckets its
+changed keys hash to. The single-source ones also share one high-water
+fold (:meth:`_SingleSourceView.fold`), which the streaming index legs
+(streaming/bm25.py, streaming/chunkbm25.py) call as well.
 """
 
 from __future__ import annotations
+
+import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txnlog import TxnTable, agg_delta_from_changes
-
-
-# Measured crossover (PLANS.md §Incremental materialized view): at
-# 0.8M source rows a full rescan beat the incremental refresh (506 vs
-# 824 ms — the refresh's fixed cost dominates), at 8M the incremental
-# path was flat while rescan grew 2.56x. "auto" picks rescan below
-# this row count (metadata-only, from commit-log footers) — the
-# threshold sits between the two measured points.
-_AUTO_RESCAN_ROWS = 2_000_000
 
 
 def _last_meta_with(table: TxnTable, key: str) -> dict:
@@ -68,18 +72,12 @@ def _last_meta_version_with(table: TxnTable, key: str
 def maintain_agg_view(spark: SparkSession, source: TxnTable,
                       view: TxnTable, group_cols: list[str],
                       value_col: str,
-                      strategy: str = "incremental",
                       capture_changes: bool = False) -> int:
     """Bring ``view`` (per-group ``cnt``/``sm`` partials over
     ``source``) up to the source's latest version. Returns the source
     version now reflected. Idempotent: re-running with no new source
-    commits is a no-op (no empty commit).
-
-    ``strategy``: ``"incremental"`` (change-feed delta; degrades to
-    rescan on non-row-wise history), ``"rescan"`` (always recompute
-    from the snapshot — same answer, full-scan cost), or ``"auto"``
-    (rescan while the source's metadata row count is under the
-    measured crossover, incremental above it).
+    commits is a no-op (no empty commit). Non-row-wise history
+    degrades to a flagged rescan from the snapshot.
 
     ``capture_changes``: write row-level change files (CHANGED GROUPS
     only — old partial rows as ``delete``, new as ``insert``, volume
@@ -90,8 +88,6 @@ def maintain_agg_view(spark: SparkSession, source: TxnTable,
     JOINs the activity aggregate, read_delta.py:280-285). Rescan
     refreshes carry no row-level delta and commit without change
     files; downstream consumers resync there, Delta's rule."""
-    if strategy not in ("incremental", "rescan", "auto"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
     src_v = source.latest_version()
     if src_v is None:
         raise ValueError(f"source has no commits: {source.path}")
@@ -100,33 +96,24 @@ def maintain_agg_view(spark: SparkSession, source: TxnTable,
     if src_v <= last:
         return last
     meta = {"operation": "mv_refresh", "mv_source_version": src_v}
-    if strategy == "auto":
-        rows = source.snapshot_row_count(src_v)
-        strategy = ("rescan" if rows is not None
-                    and rows < _AUTO_RESCAN_ROWS else "incremental")
-    if strategy == "incremental":
-        try:
-            # bounded to src_v: a commit landing mid-refresh must NOT
-            # be applied now (it would be replayed next refresh, whose
-            # since_version is this src_v — double-applying its delta)
-            changes = source.read_changes(spark, since_version=last,
-                                          upto=src_v)
-        except ValueError:
-            strategy = "rescan"  # non-row-level history: full resync
-            meta["mv_resync"] = True
-        else:
-            delta = agg_delta_from_changes(changes, group_cols,
-                                           value_col)
-            new = apply_delta(spark, view, delta, group_cols)
-            ch_df = (agg_view_changes(spark, view, delta, group_cols,
-                                      new)
-                     if capture_changes else None)
-            # the view is O(groups) — tiny next to the source — so an
-            # atomic overwrite is the right write shape at any scale
-            view.overwrite(new, meta, changes=ch_df)
-            return src_v
-    snap = source.read(spark, version=src_v)
-    view.overwrite(_partials(snap, group_cols, value_col), meta)
+    try:
+        # bounded to src_v: a commit landing mid-refresh must NOT be
+        # applied now (it would be replayed next refresh, whose
+        # since_version is this src_v — double-applying its delta)
+        changes = source.read_changes(spark, since_version=last,
+                                      upto=src_v)
+    except ValueError:  # non-row-level history: full resync
+        snap = source.read(spark, version=src_v)
+        view.overwrite(_partials(snap, group_cols, value_col),
+                       {**meta, "mv_resync": True})
+        return src_v
+    delta = agg_delta_from_changes(changes, group_cols, value_col)
+    new = apply_delta(spark, view, delta, group_cols)
+    ch_df = (agg_view_changes(spark, view, delta, group_cols, new)
+             if capture_changes else None)
+    # the view is O(groups) — tiny next to the source — so an atomic
+    # overwrite is the right write shape at any scale
+    view.overwrite(new, meta, changes=ch_df)
     return src_v
 
 
@@ -150,40 +137,45 @@ def agg_view_changes(spark: SparkSession, view: TxnTable,
             .unionByName(ins))
 
 
+def _nullsafe_on(a: DataFrame, b: DataFrame, cols: list[str]):
+    """Join condition: ``a`` and ``b`` equal on every column of
+    ``cols``, NULL matching NULL (group and row columns can be NULL; a
+    plain column-name join would drop the NULL group)."""
+    return reduce(lambda x, y: x & y,
+                  [a[c].eqNullSafe(b[c]) for c in cols])
+
+
 def _semi_nullsafe(df: DataFrame, keys_df: DataFrame,
                    cols: list[str]) -> DataFrame:
-    """LEFT SEMI join on ``cols`` with NULL-safe equality (group
-    columns can be NULL; a plain column-name semi join would drop the
-    NULL group)."""
-    from functools import reduce
-
+    """LEFT SEMI join on ``cols`` with NULL-safe equality."""
     a, b = df.alias("a"), keys_df.alias("b")
-    cond = reduce(lambda x, y: x & y,
-                  [a[c].eqNullSafe(b[c]) for c in cols])
-    return a.join(b, cond, "left_semi")
+    return a.join(b, _nullsafe_on(a, b, cols), "left_semi")
 
 
 def apply_delta(spark: SparkSession, view: TxnTable, delta: DataFrame,
                 group_cols: list[str]) -> DataFrame:
-    """Current partials + a signed delta frame (d_count/d_sum) → the new
-    partials. Fully-deleted groups (cnt reaches 0) drop, matching GROUP
-    BY over the post-delete source."""
+    """Current partials of ``view`` + a signed delta frame
+    (d_count/d_sum) → the new partials."""
     if view.latest_version() is None:
         return (delta.select(
             *group_cols,
             F.col("d_count").alias("cnt"), F.col("d_sum").alias("sm"))
             .filter(F.col("cnt") != 0))
-    cur = view.read(spark).alias("c")
-    d = delta.alias("d")
-    cond = cur[group_cols[0]].eqNullSafe(d[group_cols[0]])
-    for c in group_cols[1:]:
-        cond = cond & cur[c].eqNullSafe(d[c])
-    return (cur.join(d, cond, "full_outer")
+    return _merge_partials(view.read(spark), delta, group_cols)
+
+
+def _merge_partials(cur: DataFrame, delta: DataFrame,
+                    group_cols: list[str]) -> DataFrame:
+    """Partials ``cur`` (cnt/sm) full-outer a signed delta
+    (d_count/d_sum) → the new partials. Fully-deleted groups (cnt
+    reaches 0) drop, matching GROUP BY over the post-delete source."""
+    c, d = cur.alias("c"), delta.alias("d")
+    return (c.join(d, _nullsafe_on(c, d, group_cols), "full_outer")
             .select(
-                *[F.coalesce(cur[c], d[c]).alias(c) for c in group_cols],
-                (F.coalesce(cur["cnt"], F.lit(0))
+                *[F.coalesce(c[g], d[g]).alias(g) for g in group_cols],
+                (F.coalesce(c["cnt"], F.lit(0))
                  + F.coalesce(d["d_count"], F.lit(0))).alias("cnt"),
-                (F.coalesce(cur["sm"], F.lit(0))
+                (F.coalesce(c["sm"], F.lit(0))
                  + F.coalesce(d["d_sum"], F.lit(0))).alias("sm"))
             .filter(F.col("cnt") != 0))
 
@@ -204,7 +196,7 @@ def read_agg_view(spark: SparkSession, view: TxnTable) -> DataFrame:
                     (F.col("sm") / F.col("cnt")).alias("mean"))
 
 
-# --- incremental JOIN materialized view -----------------------------------
+# --- bucketed materialized views ----------------------------------------
 
 def buckets_for_rows(n_rows: int, target_rows: int = 100_000) -> int:
     """Bucket-count policy for the join state: hold E[bucket width]
@@ -216,43 +208,171 @@ def buckets_for_rows(n_rows: int, target_rows: int = 100_000) -> int:
     return max(8, min(65_536, -(-n_rows // max(target_rows, 1))))
 
 
-class JoinMaterializedView:
+class _BucketedView:
+    """The bucket machinery every bucketed view shares: one view table
+    partitioned by ``__kb = pmod(hash(keys), n_buckets)``, written
+    either whole (a (re)build) or bucket by bucket (a refresh replaces
+    exactly the buckets its changed keys hash to), with rows applied
+    by NET ROW COUNT — inserts/postimages +1, deletes/preimages -1,
+    summed per exact row value, so application is correct for
+    arbitrary multisets and independent of commit order. With
+    ``capture_changes`` every bucket replace of the view also writes
+    change files, so the view is itself a CDF source and further
+    incremental views stack on it. ``keys``: one column name or a
+    list of them."""
+
+    def __init__(self, view_root: str, keys, n_buckets: int,
+                 capture_changes: bool):
+        self.keys = [keys] if isinstance(keys, str) else list(keys)
+        self.n_buckets = n_buckets
+        self.capture_changes = capture_changes
+        self.view = TxnTable(view_root)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return self.view.read(spark).drop("__kb")
+
+    def _bucket(self):
+        return F.pmod(F.hash(*[F.col(k) for k in self.keys]),
+                      F.lit(self.n_buckets)).cast("int")
+
+    def _affected(self, df: DataFrame) -> list[int]:
+        """Sorted ids of the buckets ``df``'s keys hash to — a bounded
+        collect: at most n_buckets ints (the scd2.py discipline)."""
+        return sorted(r["__kb"] for r in
+                      df.select(self._bucket().alias("__kb"))
+                      .distinct().collect())
+
+    @staticmethod
+    def _read_buckets(spark, state: TxnTable,
+                      affected: list[int]) -> DataFrame:
+        """Partition-pruned bucket read, empty-graceful: a bucket can
+        be live on one side only (read_partitions raises when nothing
+        matches)."""
+        try:
+            return state.read_partitions(spark, affected)
+        except ValueError:
+            return (state.read(spark).limit(0)
+                    .withColumn("__kb", F.lit(0).cast("int")))
+
+    @staticmethod
+    def _replace_all(tbl: TxnTable, df: DataFrame, meta: dict) -> None:
+        """Whole-table replace for a (re)build: ``df`` (with ``__kb``)
+        becomes ``tbl``'s entire content in one commit. A partitioned
+        write of ZERO rows leaves no files at all, which would commit
+        an unreadable first snapshot (no schema source) — an empty
+        side of a join is legal (e.g. an activity feed that has not
+        delivered yet), so fall back to ONE 0-row plain file that
+        carries the schema; later partition-granular commits coexist
+        with it (mixed plain/partitioned reads are the normal txnlog
+        read path)."""
+        base = tbl.latest_version()
+        adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
+        if adds:
+            meta = {**meta, "partition_by": "__kb"}
+        else:
+            adds = [tbl._write_data(df.repartition(1))]  # noqa: SLF001
+        removes = tbl.snapshot_dirs(base) if base is not None else []
+        tbl.commit(adds, removes, meta, expected_version=base)
+
+    def _apply_side(self, spark, state: TxnTable, changes: DataFrame,
+                    affected: list[int], meta: dict) -> None:
+        """Apply change rows to ``state`` by net row count, replacing
+        the affected buckets."""
+        cols = [c for c in changes.columns
+                if c not in ("_change_type", "_commit_version")]
+        net = (changes
+               .withColumn("__w", F.when(
+                   F.col("_change_type").isin("insert",
+                                              "update_postimage"),
+                   F.lit(1)).otherwise(F.lit(-1)))
+               .groupBy(*cols).agg(F.sum("__w").alias("__net")))
+        if state.latest_version() is None:  # first batch: empty state
+            from pyspark.sql.types import LongType, StructType
+            schema = StructType(
+                [changes.schema[c] for c in cols]).add("__cur", LongType())
+            old = spark.createDataFrame([], schema)
+        else:
+            old = (self._read_buckets(spark, state, affected)
+                   .drop("__kb")
+                   .groupBy(*cols).agg(F.count(F.lit(1)).alias("__cur")))
+        o, n = old.alias("o"), net.alias("n")
+        total = (o.join(n, _nullsafe_on(o, n, cols), "full_outer")
+                 .select(*[F.coalesce(o[c], n[c]).alias(c)
+                           for c in cols],
+                         (F.coalesce(o["__cur"], F.lit(0))
+                          + F.coalesce(n["__net"], F.lit(0)))
+                         .alias("__n"))
+                 .filter(F.col("__n") > 0))
+        rows = (total.select(
+            *cols,
+            F.explode(F.sequence(F.lit(1),
+                                 F.col("__n").cast("int"))).alias("__i"))
+            .drop("__i")
+            .withColumn("__kb", self._bucket()))
+        self._replace_buckets(state, rows, affected, meta)
+
+    def _replace_buckets(self, table: TxnTable, df: DataFrame,
+                         affected: list[int], meta: dict) -> None:
+        """Partition-granular replace of exactly the affected buckets —
+        unlike overwrite_partitions (which replaces partitions PRESENT
+        in df), this also removes a bucket the delta emptied. When the
+        table being replaced is the VIEW and ``capture_changes`` is on,
+        the commit also writes change files (old bucket rows as
+        ``delete``, new rows as ``insert`` — unchanged rows inside a
+        replaced bucket appear as a cancelling delete+insert pair,
+        which every net-count/partial-sum consumer absorbs), so the
+        maintained view is itself a row-wise CDF source and FURTHER
+        incremental views stack on top of it (an agg MV over the join
+        MV — see tests/test_mv.py stacked test). Change volume is
+        O(replaced buckets), the same order as the write itself."""
+        base = table.latest_version()
+        live = table.snapshot_dirs(base) if base is not None else []
+        aff = {f"__kb={v}" for v in affected}
+        adds = table._write_data_partitioned(df, "__kb")  # noqa: SLF001
+        stray = [a for a in adds if os.path.basename(a) not in aff]
+        if stray:  # delta rows must land in affected buckets only
+            raise AssertionError(f"rows outside affected buckets: {stray}")
+        removes = [d for d in live if os.path.basename(d) in aff]
+        changes_rel = None
+        if self.capture_changes and table is self.view:
+            spark = df.sparkSession
+            old = (self._read_buckets(spark, table, affected)
+                   if base is not None
+                   else df.limit(0))
+            changes_rel = table._write_changes(  # noqa: SLF001
+                old.withColumn("_change_type", F.lit("delete"))
+                .unionByName(
+                    df.withColumn("_change_type", F.lit("insert"))))
+        table.commit(adds, removes, {**meta, "partition_by": "__kb"},
+                     expected_version=base, changes=changes_rel)
+
+
+class JoinMaterializedView(_BucketedView):
     """Inner equi-join of two txn tables, maintained incrementally from
     BOTH sides' change feeds — the reference's ``final`` table is a JOIN
     rebuilt wholesale every DAG run (read_delta.py:280-285); at 100 TB a
     refresh must cost O(changed keys), not O(join).
 
     The classic streaming-join state shape (what Flink keeps for a
-    two-sided join), materialized on the lakehouse: three tables under
-    one root, all partitioned by ``__kb = pmod(hash(key), n_buckets)`` —
-    a keyed replica of each side (the per-key state) and the join
-    output. A refresh (1) reads each side's change feed bounded to the
-    captured version, (2) derives the set of AFFECTED BUCKETS from the
-    changed keys (a bounded collect: at most n_buckets ints, the
-    scd2.py discipline), (3) applies each side's delta to its replica
-    by NET ROW COUNT — inserts/postimages +1, deletes/preimages -1,
-    summed per exact row value, so application is correct for arbitrary
-    multisets and independent of commit order within the range — and
-    (4) recomputes the join for those buckets only, from the
-    partition-pruned replicas, never touching the sources. Every read
-    and write in the refresh is partition-granular
-    (``commit(adds, removes)`` of ``__kb=`` subdirs), so refresh cost
-    is O(changed keys x bucket width) while a rescan pays O(join).
+    two-sided join), materialized on the lakehouse: three bucketed
+    tables under one root — a keyed replica of each side (the per-key
+    state) and the join output. A refresh (1) reads each side's change
+    feed bounded to the captured version, (2) derives the set of
+    AFFECTED BUCKETS from the changed keys, (3) applies each side's
+    delta to its replica by net row count and (4) recomputes the join
+    for those buckets only, from the partition-pruned replicas, never
+    touching the sources. Every read and write in the refresh is
+    partition-granular (``commit(adds, removes)`` of ``__kb=``
+    subdirs), so refresh cost is O(changed keys x bucket width) while a
+    rebuild pays O(join).
 
-    Non-row-wise source history (overwrite / uncaptured-DV delete — the
-    feed raises) degrades to a flagged full rebuild, after which
-    incremental maintenance resumes. Join columns other than ``key``
-    must be distinct between the two sides."""
+    The first refresh builds all three tables from the source
+    snapshots. Non-row-wise source history (overwrite / uncaptured-DV
+    delete — the feed raises) degrades to a flagged full rebuild, after
+    which incremental maintenance resumes. Join columns other than the
+    keys must be distinct between the two sides."""
 
-    #: measured crossover (PLANS.md §Incremental JOIN materialized
-    #: view): at 20M source rows the wholesale re-join still beat the
-    #: refresh (2.27 vs 2.91 s — fixed multi-commit overhead
-    #: dominates), at 40M the flat refresh won (2.40 vs 3.64 s).
-    #: "auto" rebuilds below this combined row count (metadata-only,
-    #: from commit-log footers) and refreshes incrementally above it.
-    AUTO_REBUILD_ROWS = 25_000_000
-
-    def __init__(self, root: str, key: str, n_buckets: int = 32,
+    def __init__(self, root: str, key, n_buckets: int = 32,
                  how: str = "inner", capture_changes: bool = False):
         """``how``: ``"inner"`` or ``"left"`` (the reference's
         ``final`` table is a LEFT join — read_delta.py:280-285, NULL
@@ -270,34 +390,18 @@ class JoinMaterializedView:
         Delta's rule requires)."""
         if how not in ("inner", "left"):
             raise ValueError(f"unsupported join type: {how!r}")
-        # single name or a composite key (list/tuple of names); stored
-        # normalized, `self.key` kept as the single-name convenience
-        self.keys = [key] if isinstance(key, str) else list(key)
-        self.key = self.keys[0] if len(self.keys) == 1 else None
+        super().__init__(f"{root}/join", key, n_buckets, capture_changes)
         self.how = how
-        self.capture_changes = capture_changes
-        self.n_buckets = n_buckets
         self.left_state = TxnTable(f"{root}/left_state")
         self.right_state = TxnTable(f"{root}/right_state")
-        self.view = TxnTable(f"{root}/join")
 
     # -- public ------------------------------------------------------
 
     def refresh(self, spark: SparkSession, left: TxnTable,
-                right: TxnTable,
-                strategy: str = "incremental") -> tuple[int, int]:
+                right: TxnTable) -> tuple[int, int]:
         """Bring the join view up to (left.latest, right.latest);
         returns the (left, right) versions now reflected. No-op (no
-        empty commits) when neither source moved.
-
-        ``strategy``: ``"incremental"`` (both change feeds, affected
-        buckets only; degrades to rebuild on non-row-wise history),
-        ``"rebuild"`` (recompute the whole join — same answer, full
-        cost), or ``"auto"`` (rebuild while the sources' combined
-        metadata row count is under the measured crossover
-        ``AUTO_REBUILD_ROWS``, incremental above it)."""
-        if strategy not in ("incremental", "rebuild", "auto"):
-            raise ValueError(f"unknown strategy: {strategy!r}")
+        empty commits) when neither source moved."""
         lv, rv = left.latest_version(), right.latest_version()
         if lv is None or rv is None:
             raise ValueError("both sources need at least one commit")
@@ -308,14 +412,7 @@ class JoinMaterializedView:
             return llast, rlast
         meta = {"operation": "join_mv_refresh",
                 "mv_left_version": lv, "mv_right_version": rv}
-        if strategy == "auto":
-            lrows = left.snapshot_row_count(lv)
-            rrows = right.snapshot_row_count(rv)
-            strategy = ("incremental"
-                        if lrows is not None and rrows is not None
-                        and lrows + rrows >= self.AUTO_REBUILD_ROWS
-                        else "rebuild")
-        if llast < 0 or strategy == "rebuild":  # first build / forced
+        if llast < 0:  # first build
             self._rebuild(spark, left, right, lv, rv, meta)
             return lv, rv
         try:
@@ -395,12 +492,9 @@ class JoinMaterializedView:
             lch_state = lch_state.drop("__kb")
         if rch_state is not None:
             rch_state = rch_state.drop("__kb")
-        keys = (lch.select(*self.keys)
-                .unionByName(rch.select(*self.keys)).distinct())
-        affected = sorted(
-            r["__kb"] for r in
-            keys.select(self._bucket().alias("__kb"))
-            .distinct().collect())  # bounded: <= n_buckets ints
+        affected = self._affected(
+            lch.select(*self.keys)
+            .unionByName(rch.select(*self.keys)).distinct())
         if not affected:
             return affected
         lapply = lch if lch_state is None else lch_state
@@ -421,42 +515,7 @@ class JoinMaterializedView:
         run(self.view, _view_leg)
         return affected
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self.view.read(spark).drop("__kb")
-
     # -- internals ---------------------------------------------------
-
-    def _bucket(self):
-        return F.pmod(F.hash(*[F.col(k) for k in self.keys]),
-                      F.lit(self.n_buckets)).cast("int")
-
-    @staticmethod
-    def _read_buckets(spark, state: TxnTable,
-                      affected: list[int]) -> DataFrame:
-        """Partition-pruned bucket read, empty-graceful: a bucket can
-        be live on one side only (read_partitions raises when nothing
-        matches)."""
-        try:
-            return state.read_partitions(spark, affected)
-        except ValueError:
-            return (state.read(spark).limit(0)
-                    .withColumn("__kb", F.lit(0).cast("int")))
-
-    @staticmethod
-    def _bucketed_or_empty(tbl: TxnTable, df: DataFrame,
-                           meta: dict) -> tuple[list[str], dict]:
-        """(adds, meta) for a ``__kb``-partitioned rebuild write. A
-        partitioned write of ZERO rows leaves no files at all, which
-        would commit an unreadable first snapshot (no schema source) —
-        an empty side of a join is legal (e.g. an activity feed that
-        has not delivered yet), so fall back to ONE 0-row plain file
-        that carries the schema; later partition-granular commits
-        coexist with it (mixed plain/partitioned reads are the normal
-        txnlog read path)."""
-        adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
-        if adds:
-            return adds, {**meta, "partition_by": "__kb"}
-        return [tbl._write_data(df.repartition(1))], dict(meta)  # noqa: SLF001
 
     def _join_of(self, l: DataFrame, r: DataFrame) -> DataFrame:
         lc = [c for c in l.columns
@@ -473,89 +532,75 @@ class JoinMaterializedView:
               .withColumn("__kb", self._bucket()))
         for tbl, df in ((self.left_state, ls), (self.right_state, rs),
                         (self.view, self._join_of(ls, rs))):
-            base = tbl.latest_version()
-            adds, m = self._bucketed_or_empty(tbl, df, meta)
-            removes = tbl.snapshot_dirs(base) if base is not None else []
-            tbl.commit(adds, removes, m, expected_version=base)
-
-    def _apply_side(self, spark, state: TxnTable, changes: DataFrame,
-                    affected: list[int], meta: dict) -> None:
-        from functools import reduce
-
-        cols = [c for c in changes.columns
-                if c not in ("_change_type", "_commit_version")]
-        net = (changes
-               .withColumn("__w", F.when(
-                   F.col("_change_type").isin("insert",
-                                              "update_postimage"),
-                   F.lit(1)).otherwise(F.lit(-1)))
-               .groupBy(*cols).agg(F.sum("__w").alias("__net")))
-        if state.latest_version() is None:  # first batch: empty state
-            from pyspark.sql.types import LongType, StructType
-            schema = StructType(
-                [changes.schema[c] for c in cols]).add("__cur", LongType())
-            old = spark.createDataFrame([], schema)
-        else:
-            old = (self._read_buckets(spark, state, affected)
-                   .drop("__kb")
-                   .groupBy(*cols).agg(F.count(F.lit(1)).alias("__cur")))
-        o, n = old.alias("o"), net.alias("n")
-        cond = reduce(lambda a, b: a & b,
-                      [o[c].eqNullSafe(n[c]) for c in cols])
-        total = (o.join(n, cond, "full_outer")
-                 .select(*[F.coalesce(o[c], n[c]).alias(c)
-                           for c in cols],
-                         (F.coalesce(o["__cur"], F.lit(0))
-                          + F.coalesce(n["__net"], F.lit(0)))
-                         .alias("__n"))
-                 .filter(F.col("__n") > 0))
-        rows = (total.select(
-            *cols,
-            F.explode(F.sequence(F.lit(1),
-                                 F.col("__n").cast("int"))).alias("__i"))
-            .drop("__i")
-            .withColumn("__kb", self._bucket()))
-        self._replace_buckets(state, rows, affected, meta)
-
-    def _replace_buckets(self, table: TxnTable, df: DataFrame,
-                         affected: list[int], meta: dict) -> None:
-        """Partition-granular replace of exactly the affected buckets —
-        unlike overwrite_partitions (which replaces partitions PRESENT
-        in df), this also removes a bucket the delta emptied. When the
-        table being replaced is the VIEW and ``capture_changes`` is on,
-        the commit also writes change files (old bucket rows as
-        ``delete``, new rows as ``insert`` — unchanged rows inside a
-        replaced bucket appear as a cancelling delete+insert pair,
-        which every net-count/partial-sum consumer absorbs), so the
-        maintained view is itself a row-wise CDF source and FURTHER
-        incremental views stack on top of it (an agg MV over the join
-        MV — see tests/test_mv.py stacked test). Change volume is
-        O(replaced buckets), the same order as the write itself."""
-        import os
-
-        base = table.latest_version()
-        live = table.snapshot_dirs(base) if base is not None else []
-        aff = {f"__kb={v}" for v in affected}
-        adds = table._write_data_partitioned(df, "__kb")  # noqa: SLF001
-        stray = [a for a in adds if os.path.basename(a) not in aff]
-        if stray:  # delta rows must land in affected buckets only
-            raise AssertionError(f"rows outside affected buckets: {stray}")
-        removes = [d for d in live if os.path.basename(d) in aff]
-        changes_rel = None
-        if self.capture_changes and table is self.view:
-            spark = df.sparkSession
-            old = (self._read_buckets(spark, table, affected)
-                   if base is not None
-                   else df.limit(0))
-            changes_rel = table._write_changes(  # noqa: SLF001
-                old.withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    df.withColumn("_change_type", F.lit("insert"))))
-        table.commit(adds, removes, {**meta, "partition_by": "__kb"},
-                     expected_version=base, changes=changes_rel)
+            self._replace_all(tbl, df, meta)
 
 
-class MapMaterializedView(JoinMaterializedView):
+class _SingleSourceView(_BucketedView):
+    """A bucketed view over ONE CDF source, whose view table is its
+    only state. Subclasses name their commits (``NAME``), derive the
+    view from a source snapshot (``_from_snapshot``) and apply a batch
+    of change rows (``apply_change_batch``)."""
+
+    #: commit operations are ``<NAME>_refresh`` (batch refresh) and
+    #: ``<NAME>_stream_refresh`` (streaming/mv.write_stream_bucketed_view)
+    NAME: str
+
+    def refresh(self, spark: SparkSession, source: TxnTable) -> int:
+        """Bring the view up to ``source.latest_version()``; returns
+        the source version now reflected. No empty commits. The first
+        refresh builds from the source snapshot, and so does a flagged
+        (``mv_resync``) resync over history the feed cannot express
+        row-wise; every other refresh is incremental."""
+        return self.fold(spark, source,
+                         {"operation": f"{self.NAME}_refresh"},
+                         rebuild=self._rebuild_from)
+
+    def fold(self, spark: SparkSession, source: TxnTable, meta: dict,
+             guard=None, rebuild=None) -> int:
+        """The single-source high-water fold: apply ``source``'s change
+        rows since the version this view last recorded, up to the
+        source's version now, as ONE ``apply_change_batch`` (``guard``
+        passed through) whose commit meta is ``meta`` plus the new
+        ``mv_source_version``. Returns the source version now
+        reflected; no commit when the source has not moved. Bounded to
+        the captured version: a commit landing mid-fold is left to the
+        next fold, whose since_version is this one's target.
+
+        ``rebuild`` — ``callable(spark, source, version, meta)`` — is
+        how :meth:`refresh` builds the first view and resyncs from the
+        snapshot. Without it (the streaming index legs) the first fold
+        replays the whole feed and non-row-wise history raises
+        ``ValueError``: a rebuild there would skip the leg's ledger
+        guard and the running totals it folds into its commit meta."""
+        sv = source.latest_version()
+        if sv is None:
+            raise ValueError(f"source has no commits: {source.path}")
+        last = (_last_meta_with(self.view, "mv_source_version")
+                .get("mv_source_version", -1))
+        if sv <= last:
+            return last
+        meta = {**meta, "mv_source_version": sv}
+        if last < 0 and rebuild is not None:
+            rebuild(spark, source, sv, meta)
+            return sv
+        try:
+            ch = source.read_changes(spark, since_version=last, upto=sv)
+        except ValueError:
+            if rebuild is None:
+                raise
+            rebuild(spark, source, sv, {**meta, "mv_resync": True})
+            return sv
+        self.apply_change_batch(spark, ch, meta, guard=guard)
+        return sv
+
+    def _rebuild_from(self, spark, source: TxnTable, sv: int,
+                      meta: dict) -> None:
+        snap = source.read(spark, version=sv).drop("__kb")
+        self._replace_all(self.view, self._from_snapshot(snap)
+                          .withColumn("__kb", self._bucket()), meta)
+
+
+class MapMaterializedView(_SingleSourceView):
     """Row-wise PROJECTION materialized view over one CDF source: the
     maintained form of a SELECT-expression layer — the reference's
     flagship prime/total-salary query (README.md:140-164) is exactly
@@ -564,60 +609,26 @@ class MapMaterializedView(JoinMaterializedView):
     and applies them by net row count to the bucketed view, so refresh
     cost is O(changed rows x bucket width), never O(view).
 
-    Inherits the bucket machinery of :class:`JoinMaterializedView`
-    (``__kb`` partition-granular replace, net-count application,
-    optional ``capture_changes`` so further views stack on top); keeps
-    a single table — the view IS the state, because a projection needs
-    no other side. ``map_fn`` must be a deterministic per-row
-    DataFrame transform that PRESERVES the key columns; change rows
-    are projected sign-by-sign (inserted rows through the map stay
-    inserts, deleted stay deletes), which is correct precisely because
-    the map is a function of the row. Non-row-wise source history
-    degrades to a flagged rebuild from the source snapshot, as
-    everywhere else in this module."""
+    ``map_fn`` must be a deterministic per-row DataFrame transform that
+    PRESERVES the key columns; change rows are projected sign-by-sign
+    (inserted rows through the map stay inserts, deleted stay deletes),
+    which is correct precisely because the map is a function of the
+    row."""
+
+    NAME = "map_mv"
 
     def __init__(self, root: str, key, map_fn, n_buckets: int = 32,
                  capture_changes: bool = False):
-        self.keys = [key] if isinstance(key, str) else list(key)
-        self.key = self.keys[0] if len(self.keys) == 1 else None
+        super().__init__(root, key, n_buckets, capture_changes)
         self.map_fn = map_fn
-        self.n_buckets = n_buckets
-        self.capture_changes = capture_changes
-        self.view = TxnTable(root)
-
-    def refresh(self, spark: SparkSession, source: TxnTable,
-                strategy: str = "incremental") -> int:
-        """Bring the view up to ``source.latest_version()``; returns
-        the source version now reflected. No empty commits."""
-        if strategy not in ("incremental", "rebuild"):
-            raise ValueError(f"unknown strategy: {strategy!r}")
-        sv = source.latest_version()
-        if sv is None:
-            raise ValueError(f"source has no commits: {source.path}")
-        last = (_last_meta_with(self.view, "mv_source_version")
-                .get("mv_source_version", -1))
-        if sv <= last:
-            return last
-        meta = {"operation": "map_mv_refresh", "mv_source_version": sv}
-        if last < 0 or strategy == "rebuild":
-            self._rebuild_from(spark, source, sv, meta)
-            return sv
-        try:
-            ch = source.read_changes(spark, since_version=last, upto=sv)
-        except ValueError:
-            self._rebuild_from(spark, source, sv,
-                               {**meta, "mv_resync": True})
-            return sv
-        self.apply_change_batch(spark, ch, meta)
-        return sv
 
     def apply_change_batch(self, spark: SparkSession, ch: DataFrame,
                            meta: dict, guard=None) -> list[int]:
         """Apply one batch of change rows (read_changes shape) through
         the projection; returns the affected bucket ids. The shared
         core of the batch ``refresh`` and the streaming maintenance
-        (``streaming/mv.write_stream_map_view``); ``guard`` wraps the
-        single view commit the same way the join MV's legs are
+        (``streaming/mv.write_stream_bucketed_view``); ``guard`` wraps
+        the single view commit the same way the join MV's legs are
         wrapped, so the streaming sink is replay-guarded."""
         run = guard if guard is not None else (lambda table, fn: fn())
         ch = ch.drop("_commit_version", "__kb")
@@ -633,10 +644,7 @@ class MapMaterializedView(JoinMaterializedView):
             .drop("_change_type"))
             .withColumn("_change_type", F.lit("delete")))
         projected = pos.unionByName(neg)
-        affected = sorted(
-            r["__kb"] for r in
-            projected.select(self._bucket().alias("__kb"))
-            .distinct().collect())  # bounded: <= n_buckets ints
+        affected = self._affected(projected)
         if not affected:
             return affected  # nothing changed: no empty commit
         run(self.view,
@@ -644,25 +652,18 @@ class MapMaterializedView(JoinMaterializedView):
                                      affected, meta))
         return affected
 
-    def _rebuild_from(self, spark, source: TxnTable, sv: int,
-                      meta: dict) -> None:
-        df = (self.map_fn(source.read(spark, version=sv).drop("__kb"))
-              .withColumn("__kb", self._bucket()))
-        base = self.view.latest_version()
-        adds, m = self._bucketed_or_empty(self.view, df, meta)
-        removes = (self.view.snapshot_dirs(base)
-                   if base is not None else [])
-        self.view.commit(adds, removes, m, expected_version=base)
+    def _from_snapshot(self, snap: DataFrame) -> DataFrame:
+        return self.map_fn(snap)
 
 
-class AggMaterializedView(JoinMaterializedView):
+class AggMaterializedView(_SingleSourceView):
     """Per-group partials (cnt/sm) maintained BUCKETED: the
-    ``maintain_agg_view`` semantics on the join MV's ``__kb``
-    partition-granular layout, for aggregates whose group count scales
-    WITH the corpus (e.g. per-employee activity partials — O(groups) =
-    O(dimension rows)). The plain agg view overwrites its whole table
-    every refresh, which is fine while groups are tiny (per-BU rollups)
-    but becomes the chain's bottleneck when groups track the corpus:
+    ``maintain_agg_view`` semantics on the ``__kb`` partition-granular
+    layout, for aggregates whose group count scales WITH the corpus
+    (e.g. per-employee activity partials — O(groups) = O(dimension
+    rows)). The plain agg view overwrites its whole table every
+    refresh, which is fine while groups are tiny (per-BU rollups) but
+    becomes the chain's bottleneck when groups track the corpus:
     measured in scripts/bench_final_pipeline_stress.py, the composed
     pipeline's refresh slope was the agg overwrite. Here a refresh
     applies the signed delta to ONLY the affected buckets (read
@@ -671,42 +672,12 @@ class AggMaterializedView(JoinMaterializedView):
     the bucketed view a CDF source through the same bucket-level
     change files the join MV writes, so downstream views stack."""
 
+    NAME = "agg_mv"
+
     def __init__(self, root: str, group_cols, value_col: str,
                  n_buckets: int = 32, capture_changes: bool = False):
-        self.keys = ([group_cols] if isinstance(group_cols, str)
-                     else list(group_cols))
-        self.key = self.keys[0] if len(self.keys) == 1 else None
-        self.group_cols = list(self.keys)
+        super().__init__(root, group_cols, n_buckets, capture_changes)
         self.value_col = value_col
-        self.n_buckets = n_buckets
-        self.capture_changes = capture_changes
-        self.view = TxnTable(root)
-
-    def refresh(self, spark: SparkSession, source: TxnTable,
-                strategy: str = "incremental") -> int:
-        """Bring the partials up to ``source.latest_version()``;
-        returns the version now reflected. No empty commits."""
-        if strategy not in ("incremental", "rebuild"):
-            raise ValueError(f"unknown strategy: {strategy!r}")
-        sv = source.latest_version()
-        if sv is None:
-            raise ValueError(f"source has no commits: {source.path}")
-        last = (_last_meta_with(self.view, "mv_source_version")
-                .get("mv_source_version", -1))
-        if sv <= last:
-            return last
-        meta = {"operation": "agg_mv_refresh", "mv_source_version": sv}
-        if last < 0 or strategy == "rebuild":
-            self._rebuild_from(spark, source, sv, meta)
-            return sv
-        try:
-            ch = source.read_changes(spark, since_version=last, upto=sv)
-        except ValueError:
-            self._rebuild_from(spark, source, sv,
-                               {**meta, "mv_resync": True})
-            return sv
-        self.apply_change_batch(spark, ch, meta)
-        return sv
 
     def apply_change_batch(self, spark: SparkSession, ch: DataFrame,
                            meta: dict, guard=None) -> list[int]:
@@ -714,30 +685,24 @@ class AggMaterializedView(JoinMaterializedView):
         bucket ids. ``guard`` wraps the single commit for streaming
         replay protection (same contract as the join MV's legs)."""
         run = guard if guard is not None else (lambda table, fn: fn())
-        delta = agg_delta_from_changes(ch.drop("__kb"),
-                                       self.group_cols, self.value_col)
+        delta = agg_delta_from_changes(ch.drop("__kb"), self.keys,
+                                       self.value_col)
         changed = delta.filter((F.col("d_count") != 0)
                                | (F.col("d_sum") != 0))
-        affected = sorted(
-            r["__kb"] for r in
-            changed.select(self._bucket().alias("__kb"))
-            .distinct().collect())  # bounded: <= n_buckets ints
+        affected = self._affected(changed)
         if not affected:
             return affected
-        gc = self.group_cols
 
         def _leg():
-            from functools import reduce
-
             if self.view.latest_version() is None:
                 # first batch ever (streaming path): empty partials —
                 # built from scratch, NOT derived from `changed` (a
-                # limit(0) of it would make the join below an
-                # ambiguous self-join)
+                # limit(0) of it would make the merge an ambiguous
+                # self-join), typed like the merge's later inputs
                 from pyspark.sql.types import StructField, StructType
 
                 sch = StructType(
-                    [changed.schema[c] for c in gc]
+                    [changed.schema[c] for c in self.keys]
                     + [StructField("cnt",
                                    changed.schema["d_count"].dataType),
                        StructField("sm",
@@ -746,19 +711,7 @@ class AggMaterializedView(JoinMaterializedView):
             else:
                 old = (self._read_buckets(spark, self.view, affected)
                        .drop("__kb"))
-            o, d = old.alias("o"), changed.alias("d")
-            cond = reduce(lambda a, b: a & b,
-                          [o[c].eqNullSafe(d[c]) for c in gc])
-            new = (o.join(d, cond, "full_outer")
-                   .select(*[F.coalesce(o[c], d[c]).alias(c)
-                             for c in gc],
-                           (F.coalesce(o["cnt"], F.lit(0))
-                            + F.coalesce(d["d_count"], F.lit(0)))
-                           .alias("cnt"),
-                           (F.coalesce(o["sm"], F.lit(0))
-                            + F.coalesce(d["d_sum"], F.lit(0)))
-                           .alias("sm"))
-                   .filter(F.col("cnt") != 0)
+            new = (_merge_partials(old, changed, self.keys)
                    .withColumn("__kb", self._bucket()))
             self._replace_buckets(self.view, new, affected, meta)
 
@@ -780,23 +733,14 @@ class AggMaterializedView(JoinMaterializedView):
         if self.view.latest_version() is not None:
             return
         src = source.read(spark).limit(0)
-        empty = (_partials(src.drop("__kb"), self.group_cols,
-                           self.value_col)
+        empty = (self._from_snapshot(src.drop("__kb"))
                  .withColumn("__kb", self._bucket())
                  .repartition(1))  # one 0-row file carries the schema
         self.view.append(empty, {**(meta or {}),
                                  "operation": "agg_mv_init_empty"})
 
-    def _rebuild_from(self, spark, source: TxnTable, sv: int,
-                      meta: dict) -> None:
-        df = (_partials(source.read(spark, version=sv).drop("__kb"),
-                        self.group_cols, self.value_col)
-              .withColumn("__kb", self._bucket()))
-        base = self.view.latest_version()
-        adds, m = self._bucketed_or_empty(self.view, df, meta)
-        removes = (self.view.snapshot_dirs(base)
-                   if base is not None else [])
-        self.view.commit(adds, removes, m, expected_version=base)
+    def _from_snapshot(self, snap: DataFrame) -> DataFrame:
+        return _partials(snap, self.keys, self.value_col)
 
     def read(self, spark: SparkSession,
              version: int | None = None) -> DataFrame:

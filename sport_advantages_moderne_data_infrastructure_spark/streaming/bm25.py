@@ -71,19 +71,12 @@ def ingest_batch(postings: TxnTable, df_view: AggMaterializedView,
         # change rows since the view's high-water are exactly this
         # batch's inserts (single-writer stream) — on replay the guard
         # skips the commit, on crash-between-legs the next batch's
-        # feed covers both.
-        sv = postings.latest_version()
-        last = (_last_meta_with(df_view.view, "mv_source_version")
-                .get("mv_source_version", -1))
-        if sv > last:
-            ch = postings.read_changes(
-                batch_docs.sparkSession, since_version=last, upto=sv)
-            df_view.apply_change_batch(
-                batch_docs.sparkSession, ch,
-                {**_stream_meta(batch_id, app_id, "bm25_df_refresh"),
-                 "mv_source_version": sv},
-                guard=lambda table, fn: _guarded_commit(
-                    table, batch_id, app_id, fn))
+        # fold covers both.
+        df_view.fold(
+            batch_docs.sparkSession, postings,
+            _stream_meta(batch_id, app_id, "bm25_df_refresh"),
+            guard=lambda table, fn: _guarded_commit(
+                table, batch_id, app_id, fn))
     finally:
         post.unpersist()
 

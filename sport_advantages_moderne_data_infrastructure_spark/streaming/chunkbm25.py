@@ -93,10 +93,7 @@ class ChunkPostingsView(MapMaterializedView):
                                "delete")))
         projected.persist()
         try:
-            affected = sorted(
-                r["__kb"] for r in
-                projected.select(self._bucket().alias("__kb"))
-                .distinct().collect())  # bounded: <= n_buckets ints
+            affected = self._affected(projected)
             if not affected:
                 return affected
             # signed scalar deltas, ONE chunks-per-row-copy job: an
@@ -115,9 +112,7 @@ class ChunkPostingsView(MapMaterializedView):
             applied = projected.drop("__rid")
 
             def _leg():
-                prev = (_last_meta_with(self.view, "cbm25_n_chunks")
-                        if self.view.latest_version() is not None
-                        else {})
+                prev = _last_meta_with(self.view, "cbm25_n_chunks")
                 m = {**meta,
                      "cbm25_n_chunks":
                          prev.get("cbm25_n_chunks", 0) + d_chunks,
@@ -160,37 +155,17 @@ def refresh_chunk_index(spark: SparkSession, docs: TxnTable,
     foreachBatch sink runs, exposed so the driver-gated batch twin
     (``stream_chunk_bm25_equiv``) exercises identical code."""
     cpost, cdfv = make_chunk_views(index_root, n_buckets)
-    if batch_id is None:
-        def guard(table, fn):
-            fn()
-    else:
-        def guard(table, fn):
-            _guarded_commit(table, batch_id, app_id, fn)
-
-    sv = docs.latest_version()
-    if sv is None:
-        raise ValueError(f"documents table has no commits: {docs.path}")
-    last = (_last_meta_with(cpost.view, "mv_source_version")
-            .get("mv_source_version", -1))
-    if sv > last:
-        ch = docs.read_changes(spark, since_version=last, upto=sv)
-        cpost.apply_change_batch(
-            spark, ch,
-            {**_stream_meta(batch_id, app_id, "chunk_postings_refresh"),
-             "mv_source_version": sv},
-            guard=guard)
-
-    pv = cpost.view.latest_version()
-    lastp = (_last_meta_with(cdfv.view, "mv_source_version")
-             .get("mv_source_version", -1))
-    if pv is not None and pv > lastp:
-        ch2 = cpost.view.read_changes(spark, since_version=lastp,
-                                      upto=pv)
-        cdfv.apply_change_batch(
-            spark, ch2,
-            {**_stream_meta(batch_id, app_id, "chunk_df_refresh"),
-             "mv_source_version": pv},
-            guard=guard)
+    guard = (None if batch_id is None
+             else lambda table, fn: _guarded_commit(table, batch_id,
+                                                    app_id, fn))
+    sv = cpost.fold(
+        spark, docs,
+        _stream_meta(batch_id, app_id, "chunk_postings_refresh"),
+        guard=guard)
+    if cpost.view.latest_version() is not None:
+        cdfv.fold(spark, cpost.view,
+                  _stream_meta(batch_id, app_id, "chunk_df_refresh"),
+                  guard=guard)
     return sv
 
 
@@ -272,8 +247,5 @@ def checkpoint_if_needed(index_root: str,
     pinned serve stays readable. Returns the (cpost, cdf) checkpoint
     versions (None where below the interval)."""
     cpost, cdfv = make_chunk_views(index_root)
-    out = []
-    for t in (cpost.view, cdfv.view):
-        out.append(t.checkpoint_if_needed(interval=interval)
-                   if t.latest_version() is not None else None)
-    return tuple(out)
+    return tuple(t.checkpoint_if_needed(interval=interval)
+                 for t in (cpost.view, cdfv.view))

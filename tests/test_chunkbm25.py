@@ -176,6 +176,31 @@ def test_refresh_without_commits_raises(spark, tmp_path):
         refresh_chunk_index(spark, docs, str(tmp_path / "idx"))
 
 
+def test_docs_overwrite_fails_loudly(spark, sf_dir, tmp_path):
+    """A full overwrite of the documents table has no row-level delta:
+    the refresh raises instead of rebuilding (a rebuild would drop the
+    ``cbm25_*`` scalars folded into cpost's commit meta), and neither
+    view nor the scalars move."""
+    d = _docs(spark, sf_dir, n=12)
+    docs = TxnTable(str(tmp_path / "docs"))
+    root = str(tmp_path / "idx")
+    docs.append(d)
+    refresh_chunk_index(spark, docs, root, batch_id=0, app_id="ow")
+    cpost, cdfv = make_chunk_views(root)
+
+    def _state():
+        meta = cpost.view.last_meta()
+        return (cpost.view.latest_version(), cdfv.view.latest_version(),
+                meta["cbm25_n_chunks"], meta["cbm25_total_len"])
+
+    before = _state()
+    docs.overwrite(d.limit(4))
+    with pytest.raises(ValueError):
+        refresh_chunk_index(spark, docs, root, batch_id=1, app_id="ow")
+    assert _state() == before
+    _assert_matches_batch(spark, root, d)
+
+
 def test_maintenance_checkpoint_and_pinned_vacuum(spark, sf_dir,
                                                   tmp_path):
     """The maintenance policy for a bucket-replace view: many

@@ -84,6 +84,12 @@ def test_mv_resyncs_over_non_cdf_history(spark, tmp_path):
     maintain_agg_view(spark, src, view, ["grp"], "val")
     assert _got(spark, view) == {("z", 2, 10)}
     assert view.last_meta().get("mv_resync") is None
+    # a first refresh over history that already holds the overwrite
+    # rescans too
+    fresh = TxnTable(str(tmp_path / "fresh"))
+    maintain_agg_view(spark, src, fresh, ["grp"], "val")
+    assert _got(spark, fresh) == _want(spark, src)
+    assert fresh.last_meta().get("mv_resync") is True
 
 
 def test_mv_streaming_maintenance(spark, tmp_path):
@@ -155,46 +161,6 @@ def test_mv_concurrent_commit_not_double_applied(spark, tmp_path,
     maintain_agg_view(spark, src, view, ["grp"], "val")
     maintain_agg_view(spark, src, view, ["grp"], "val")  # picks up id=3
     assert _got(spark, view) == _want(spark, src) == {("a", 3, 115)}
-
-
-def test_mv_auto_strategy_picks_by_table_size(spark, tmp_path,
-                                              monkeypatch):
-    """auto = rescan under the measured crossover row count (the
-    refresh's fixed cost dominates a cheap scan), incremental above
-    it. Observed via whether the change feed is consulted at all."""
-    import sport_advantages_moderne_data_infrastructure_spark.operators.mv as mvmod
-
-    src = TxnTable(str(tmp_path / "src"))
-    view = TxnTable(str(tmp_path / "view"))
-    src.append(_df(spark, [(1, "a", 10), (2, "b", 20)]))
-
-    calls = []
-    real_rc = src.read_changes
-
-    def counting_rc(*a, **kw):
-        calls.append(1)
-        return real_rc(*a, **kw)
-
-    monkeypatch.setattr(src, "read_changes", counting_rc)
-    maintain_agg_view(spark, src, view, ["grp"], "val", strategy="auto")
-    assert not calls  # tiny table: rescan, feed never read
-    assert _got(spark, view) == _want(spark, src)
-
-    monkeypatch.setattr(mvmod, "_AUTO_RESCAN_ROWS", 1)
-    src.append(_df(spark, [(3, "a", 7)]))
-    maintain_agg_view(spark, src, view, ["grp"], "val", strategy="auto")
-    assert calls  # "large" table: incremental, feed consulted
-    assert _got(spark, view) == _want(spark, src)
-
-
-def test_mv_explicit_rescan_strategy(spark, tmp_path):
-    src = TxnTable(str(tmp_path / "src"))
-    view = TxnTable(str(tmp_path / "view"))
-    src.append(_df(spark, [(1, "a", 1), (2, "b", 2)]))
-    src.overwrite(_df(spark, [(9, "z", 9)]))  # non-CDF history: fine
-    maintain_agg_view(spark, src, view, ["grp"], "val",
-                      strategy="rescan")
-    assert _got(spark, view) == _want(spark, src) == {("z", 1, 9)}
 
 
 # --- incremental JOIN materialized view ---------------------------------
@@ -324,37 +290,6 @@ def test_join_mv_resyncs_over_non_cdf_history(spark, tmp_path):
     jmv.refresh(spark, left, right)
     assert _jgot(spark, jmv) == _jwant(spark, left, right)
     assert jmv.view.last_meta().get("mv_resync") is None
-
-
-def test_join_mv_auto_strategy_small_rebuilds_large_refreshes(
-        spark, tmp_path, monkeypatch):
-    """auto: below the measured crossover a refresh is a wholesale
-    rebuild (meta carries no incremental trace, result identical);
-    above it (threshold patched down) the incremental path runs and
-    stays partition-granular."""
-    left = TxnTable(str(tmp_path / "l"))
-    right = TxnTable(str(tmp_path / "r"))
-    jmv = JoinMaterializedView(str(tmp_path / "mv"), "k", n_buckets=4)
-    left.append(_ldf(spark, [(1, "a"), (2, "b")]))
-    right.append(_rdf(spark, [(1, 10), (2, 20)]))
-    jmv.refresh(spark, left, right, strategy="auto")
-    v_small = jmv.view.latest_version()
-    left.merge(spark, _ldf(spark, [(1, "A")]), "k")
-    jmv.refresh(spark, left, right, strategy="auto")  # tiny -> rebuild
-    assert _jgot(spark, jmv) == _jwant(spark, left, right)
-    # a rebuild commits all three tables wholesale: the view replaced
-    # every live dir, not just bucket hash(1)%4
-    assert jmv.view.latest_version() == v_small + 1
-    assert jmv.view.last_meta()["operation"] == "join_mv_refresh"
-    monkeypatch.setattr(JoinMaterializedView, "AUTO_REBUILD_ROWS", 1)
-    left.merge(spark, _ldf(spark, [(2, "B")]), "k")
-    before = set(jmv.view.snapshot_dirs())
-    jmv.refresh(spark, left, right, strategy="auto")  # now incremental
-    assert _jgot(spark, jmv) == _jwant(spark, left, right)
-    import os
-    changed = {os.path.basename(d) for d in
-               before ^ set(jmv.view.snapshot_dirs())}
-    assert len(changed) == 1  # partition-granular: one bucket replaced
 
 
 def test_stream_join_mv_maintains_and_restarts(spark, tmp_path):

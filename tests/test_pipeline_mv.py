@@ -6,7 +6,6 @@ layer refreshing at O(its own delta) from one stream of commits."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (
@@ -150,14 +149,6 @@ def test_map_mv_duplicates_and_resync(spark, tmp_path):
     src.append(_df(spark, [(10, "z", 19)]))
     mmv.refresh(spark, src)
     assert _mgot(spark, mmv) == _mwant(spark, src)
-
-
-def test_map_mv_rejects_unknown_strategy(spark, tmp_path):
-    src = TxnTable(str(tmp_path / "src"))
-    src.append(_df(spark, [(1, "a", 1)]))
-    mmv = MapMaterializedView(str(tmp_path / "mv"), "id", _proj)
-    with pytest.raises(ValueError, match="unknown strategy"):
-        mmv.refresh(spark, src, strategy="bogus")
 
 
 def test_map_mv_stacks_on_join_view_cdf(spark, tmp_path):
@@ -405,9 +396,9 @@ def test_final_pipeline_fully_streaming(spark, tmp_path):
     aggregate by write_stream_agg_view(capture_changes=True) — its
     per-batch overwrite commits now carry changed-groups change files
     so the downstream join MV follows it — and the prime projection by
-    write_stream_map_view over final's CDF. Three commit rounds, four
-    availableNow streams per round, each on its own checkpoint; the
-    chain must converge to the wholesale recompute."""
+    write_stream_bucketed_view over final's CDF. Three commit rounds,
+    four availableNow streams per round, each on its own checkpoint;
+    the chain must converge to the wholesale recompute."""
     from sport_advantages_moderne_data_infrastructure_spark.operators import (  # noqa: E501
         relational as R,
     )
@@ -422,7 +413,7 @@ def test_final_pipeline_fully_streaming(spark, tmp_path):
     )
     from sport_advantages_moderne_data_infrastructure_spark.streaming.mv import (  # noqa: E501
         write_stream_agg_view,
-        write_stream_map_view,
+        write_stream_bucketed_view,
     )
 
     root = str(tmp_path / "pipe")
@@ -471,7 +462,7 @@ def test_final_pipeline_fully_streaming(spark, tmp_path):
         write_stream_join_mv(
             spark, jmv1.view.path, aggv.path, jmv2, f"{root}/ck3",
             app_id="s_jmv2").awaitTermination(120)
-        write_stream_map_view(
+        write_stream_bucketed_view(
             spark, jmv2.view.path, prime, f"{root}/ck4",
             app_id="s_prime").awaitTermination(120)
 
@@ -562,14 +553,14 @@ def test_bucketed_agg_mv_replaces_only_affected_buckets(spark,
 
 
 def test_bucketed_agg_mv_streaming_twin(spark, tmp_path):
-    """write_stream_bucketed_agg_view: per-batch guarded bucket
+    """write_stream_bucketed_view: per-batch guarded bucket
     replace, restart exactly-once, downstream join MV stacks on its
     CDF."""
     from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
         AggMaterializedView,
     )
     from sport_advantages_moderne_data_infrastructure_spark.streaming.mv import (  # noqa: E501
-        write_stream_bucketed_agg_view,
+        write_stream_bucketed_view,
     )
 
     src = TxnTable(str(tmp_path / "src"))
@@ -577,17 +568,17 @@ def test_bucketed_agg_mv_streaming_twin(spark, tmp_path):
                                 n_buckets=4, capture_changes=True)
     ck = str(tmp_path / "ck")
     src.append(_df(spark, [(1, "a", 10), (2, "b", 5)]))
-    write_stream_bucketed_agg_view(
+    write_stream_bucketed_view(
         spark, src.path, aggmv, ck, app_id="bagg").awaitTermination(120)
     assert _agg_got(spark, aggmv) == _agg_want(spark, src)
     src.merge(spark, _df(spark, [(1, "a", 99), (3, "c", 3)]), "id")
     src.delete_where(spark, "id = 2", use_dv=True)
-    write_stream_bucketed_agg_view(
+    write_stream_bucketed_view(
         spark, src.path, aggmv, ck, app_id="bagg").awaitTermination(120)
     assert _agg_got(spark, aggmv) == _agg_want(spark, src)
     # restart with nothing new: no extra commits
     v = aggmv.view.latest_version()
-    write_stream_bucketed_agg_view(
+    write_stream_bucketed_view(
         spark, src.path, aggmv, ck, app_id="bagg").awaitTermination(120)
     assert aggmv.view.latest_version() == v
     # downstream join MV follows the bucketed view's CDF incrementally

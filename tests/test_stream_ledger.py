@@ -8,8 +8,9 @@ append leg goes through ``TxnTable.append``, so neither a racing
 replica nor a lost version race leaves an unreferenced data dir.
 Structural checks keep the ledger lookups and hand-built stream metas
 inside ``sources/txnlog.py``, append-shaped commits inside
-``sources/``, and ``writeStream.foreachBatch`` inside the one starter,
-so per-sink copies cannot come back."""
+``sources/``, ``writeStream.foreachBatch`` inside the one starter, and
+the single-source view high-water fold inside ``operators/mv.py``, so
+per-sink copies cannot come back."""
 
 from __future__ import annotations
 
@@ -354,4 +355,43 @@ def test_ledger_stays_in_txnlog():
             for what, rx in _FORBIDDEN.items():
                 if rx.search(line):
                     hits.append(f"{rel}:{n}: {what}: {line.strip()}")
+    assert not hits, "\n".join(hits)
+
+
+_MV_HOME = os.path.join("operators", "mv.py")
+_SINGLE_SOURCE_VIEWS = {"MapMaterializedView", "AggMaterializedView",
+                        "ChunkPostingsView"}
+
+
+def _meta_keys(node) -> list:
+    """The keys ``node`` puts into a dict: a ``{...}`` literal, a
+    ``d[k] = ...`` store or a ``dict(k=...)`` call."""
+    if isinstance(node, ast.Dict):
+        return [k.value for k in node.keys if isinstance(k, ast.Constant)]
+    if (isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store)
+            and isinstance(node.slice, ast.Constant)):
+        return [node.slice.value]
+    if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.func.id == "dict"):
+        return [k.arg for k in node.keywords]
+    return []
+
+
+def test_one_high_water_fold():
+    """Only operators/mv.py builds a meta with ``mv_source_version``
+    (every single-source view leg goes through the one high-water
+    fold), and no single-source view class defines its own
+    ``refresh``."""
+    hits = []
+    for rel, src in _package_modules():
+        tree = ast.parse(src)
+        for n in ast.walk(tree):
+            if rel != _MV_HOME and "mv_source_version" in _meta_keys(n):
+                hits.append(f"{rel}:{n.lineno}: mv_source_version meta")
+            if (isinstance(n, ast.ClassDef)
+                    and n.name in _SINGLE_SOURCE_VIEWS):
+                hits += [f"{rel}:{f.lineno}: {n.name} defines refresh"
+                         for f in n.body
+                         if isinstance(f, ast.FunctionDef)
+                         and f.name == "refresh"]
     assert not hits, "\n".join(hits)
