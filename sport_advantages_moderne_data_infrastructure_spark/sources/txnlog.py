@@ -972,31 +972,15 @@ class TxnTable:
 
         frames = []
         for v in self._versions_tail(since_version, upto):
-            doc = self._doc(v)
-            op = doc.get("meta", {}).get("operation")
-            if doc.get("changes"):
-                df = (spark.read.parquet(
-                        os.path.join(self.path, doc["changes"]))
-                      .withColumn("_commit_version", F.lit(v)))
-            elif op == "compact":
-                continue  # bin-packing/clustering: layout only
-            elif doc.get("dvs"):
-                raise ValueError(
-                    f"version {v} is a deletion-vector "
-                    f"{op or 'delete'} with no change files; "
-                    "reprocess from a snapshot read")
-            elif not doc["removes"]:
-                if not doc["adds"]:
-                    continue  # metadata-only (rename/drop): no row delta
-                df = (self._read_dirs(spark, doc["adds"], mapped=False)
-                      .withColumn("_change_type", F.lit("insert"))
-                      .withColumn("_commit_version", F.lit(v)))
+            dirs, change_type = self._change_dirs(v)
+            if not dirs:
+                continue
+            if change_type is None:
+                df = spark.read.parquet(os.path.join(self.path, dirs[0]))
             else:
-                raise ValueError(
-                    f"version {v} is a full rewrite "
-                    f"({op or 'overwrite'}) with no change files; "
-                    "reprocess from a snapshot read")
-            frames.append(df)
+                df = (self._read_dirs(spark, dirs, mapped=False)
+                      .withColumn("_change_type", F.lit(change_type)))
+            frames.append(df.withColumn("_commit_version", F.lit(v)))
         if not frames:
             return (self.read(spark).limit(0)
                     .withColumn("_change_type", F.lit(""))
@@ -1025,6 +1009,31 @@ class TxnTable:
                             .alias(f.name))
             out = out.select(*cols, "_change_type", "_commit_version")
         return out
+
+    def _change_dirs(self, v: int) -> tuple[list[str], str | None]:
+        """The change-feed rule for commit ``v``, shared by
+        :meth:`read_changes` and the ``format("txnlog")`` streaming
+        source: ``(dirs, change_type)`` — the commit's change files as
+        recorded (``change_type`` None: they carry ``_change_type``), a
+        plain append's adds as ``"insert"``, or no dirs for a layout-only
+        compaction or a metadata-only commit. A deletion-vector commit
+        without change files and a full rewrite have no row-level delta
+        and raise."""
+        doc = self._doc(v)
+        op = doc.get("meta", {}).get("operation")
+        if doc.get("changes"):
+            return [doc["changes"]], None
+        if op == "compact":
+            return [], None  # bin-packing/clustering: layout only
+        if doc.get("dvs"):
+            raise ValueError(
+                f"version {v} is a deletion-vector {op or 'delete'} with "
+                "no change files; reprocess from a snapshot read")
+        if doc["removes"]:
+            raise ValueError(
+                f"version {v} is a full rewrite ({op or 'overwrite'}) "
+                "with no change files; reprocess from a snapshot read")
+        return doc["adds"], "insert"
 
     def _write_changes(self, df: DataFrame,
                        mapping: dict | None = None) -> str:

@@ -19,11 +19,25 @@ committed data file — executors read files directly with pyarrow (no
 driver data movement, unlike SimpleDataSourceStreamReader); at scale the
 per-batch task count equals the files the commits added, exactly the
 Kafka-partition ≙ file mapping the rest of the streaming layer assumes.
+``format("txnlog")`` stays the public source for outside readers.
+
+The package's own change-feed sinks (``streaming/``) do not read rows
+through it. They stream ``format("txnversions")`` (:class:`TxnVersionFeed`),
+a driver-only ``SimpleDataSourceStreamReader`` over all of a sink's
+source tables. Its offsets are log versions too, checkpointed the same
+way, but a trigger's rows are only one ``(table, lo, hi)`` per table
+that moved, so ``numInputRows`` on those queries counts version ranges,
+not change rows. The sink reads each range inside ``foreachBatch``
+with ``TxnTable.read_changes`` — Spark's parquet reader — the way a
+Delta streaming reader follows the log and scans the files it names,
+with no Python worker on the data path. Both sources classify each
+commit with ``TxnTable._change_dirs``.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 from dataclasses import dataclass
 
@@ -34,6 +48,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -317,35 +332,17 @@ class _TxnStreamReader(DataSourceStreamReader):
         follows an upserted table through routine maintenance instead of
         failing on the first rewrite. Every row carries _change_type and
         _commit_version. A full overwrite still raises: it has no
-        row-level delta (resync from a snapshot read)."""
+        row-level delta (resync from a snapshot read). The per-commit
+        rule is ``TxnTable._change_dirs``, the one ``read_changes``
+        applies."""
         parts: list[_FilePartition] = []
-        for v in self.table.versions():
-            if not start["version"] < v <= end["version"]:
-                continue
-            doc = self.table._doc(v)  # noqa: SLF001
-            op = doc.get("meta", {}).get("operation")
-            if doc.get("changes"):
-                batch = _files_of(self.table, [doc["changes"]])
-                for p in batch:
-                    p.commit_version = v
-            elif op == "compact":
-                continue
-            elif doc.get("dvs"):
-                raise ValueError(
-                    f"txnlog stream: version {v} is a deletion-vector "
-                    "delete with change capture disabled — its deletes "
-                    "have no row-level change files; restart the "
-                    "change-feed stream from a snapshot read")
-            elif not doc["removes"]:
-                batch = _files_of(self.table, doc["adds"])
-                for p in batch:
-                    p.change_type = "insert"
-                    p.commit_version = v
-            else:
-                raise ValueError(
-                    f"txnlog stream: version {v} is a full rewrite "
-                    f"({op or 'overwrite'}) with no change files; "
-                    "restart the change-feed stream from a snapshot read")
+        for v in self.table._versions_tail(start["version"],  # noqa: SLF001
+                                           end["version"]):
+            dirs, change_type = self.table._change_dirs(v)  # noqa: SLF001
+            batch = _files_of(self.table, dirs)
+            for p in batch:
+                p.change_type = change_type
+                p.commit_version = v
             parts.extend(batch)
         _attach_mapping(self.table, parts, end["version"])
         for p in parts:
@@ -357,6 +354,49 @@ class _TxnStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # the log is immutable; nothing to clean up
+
+
+def _latest(path: str) -> int:
+    v = TxnTable(path).latest_version()
+    return -1 if v is None else v
+
+
+class _VersionFeedReader(SimpleDataSourceStreamReader):
+    """The version feed: offsets are ``{"versions": {path: version}}``
+    over every source table of one sink, and a trigger's rows are one
+    ``(table, lo, hi)`` per table whose log moved past ``lo`` — the
+    commits ``(lo, hi]`` the sink reads with ``read_changes``. Runs on
+    the driver; a replayed batch re-reads its logged offsets."""
+
+    def __init__(self, paths: list[str]):
+        self.paths = paths
+
+    def initialOffset(self) -> dict:
+        return {"versions": {p: -1 for p in self.paths}}
+
+    def read(self, start: dict):
+        end = {"versions": {p: _latest(p) for p in self.paths}}
+        return self.readBetweenOffsets(start, end), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        lo, hi = start["versions"], end["versions"]
+        return iter([(p, lo[p], hi[p]) for p in self.paths if hi[p] > lo[p]])
+
+
+class TxnVersionFeed(DataSource):
+    """``format("txnversions")`` with option ``paths`` (a JSON list of
+    table roots): the change-feed signal every CDF sink in
+    ``streaming/`` starts from (``pipeline._start_change_feed``)."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "txnversions"
+
+    def schema(self) -> str:
+        return "table string, lo long, hi long"
+
+    def simpleStreamReader(self, schema) -> _VersionFeedReader:
+        return _VersionFeedReader(json.loads(self.options["paths"]))
 
 
 def _typed(v: str | None):

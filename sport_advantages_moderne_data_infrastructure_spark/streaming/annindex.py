@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
-from .pipeline import _start_foreach_batch
+from .pipeline import _start_change_feed, _start_foreach_batch
 
 
 def write_stream_ivf_index(df: DataFrame, index_path: str,
@@ -427,24 +427,21 @@ def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
                          meta_cols: tuple = (),
                          available_now: bool = True):
     """Maintain the index FROM a governed embeddings TxnTable's
-    ``format("txnlog")`` change feed (exactly-once version offsets):
-    each trigger is one :func:`apply_cdf_batch`. ``codebooks=None``
+    change feed (``pipeline._start_change_feed``: exactly-once version
+    offsets, each range read with ``TxnTable.read_changes``): each
+    trigger is one :func:`apply_cdf_batch`. ``codebooks=None``
     maintains the raw IVF lists; with codebooks, the compressed
     (IVF-PQ) code table, ``meta_cols`` carrying filterable attributes
     as in the append-only sink. Returns the StreamingQuery; read the
     index back with :func:`read_index`."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     idx = TxnTable(index_path)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(embeddings_path))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdf_batch(idx, batch_df, centroids, batch_id, app_id,
-                        codebooks=codebooks, meta_cols=meta_cols)
+    def _apply(changes: dict, batch_id: int) -> None:
+        apply_cdf_batch(idx, changes[embeddings_path], centroids, batch_id,
+                        app_id, codebooks=codebooks, meta_cols=meta_cols)
 
-    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [embeddings_path], _apply, checkpoint,
+                              available_now)
 
 
 def check_and_rebuild(spark: SparkSession, index_path: str,

@@ -55,7 +55,7 @@ from ..operators.mv import (AggMaterializedView, MapMaterializedView,
                             _last_meta_version_with, _last_meta_with)
 from ..operators.retrieval import chunk_postings_frame
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
-from .pipeline import _start_foreach_batch
+from .pipeline import _start_change_feed
 
 
 class ChunkPostingsView(MapMaterializedView):
@@ -174,27 +174,23 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
                                   app_id: str | None = None,
                                   n_buckets: int = 32,
                                   available_now: bool = True):
-    """Start the maintenance stream over the documents table's
-    ``format("txnlog")`` change feed (exactly-once version offsets) —
-    each trigger is one :func:`refresh_chunk_index` guarded by the
-    (app_id, batch_id) ledger. Returns the StreamingQuery; read the
-    index back with :func:`read_chunk_bm25_index`."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
+    """Start the maintenance stream over the documents table's change
+    feed (``pipeline._start_change_feed``, exactly-once version
+    offsets) — each trigger is one :func:`refresh_chunk_index` guarded
+    by the (app_id, batch_id) ledger. Returns the StreamingQuery; read
+    the index back with :func:`read_chunk_bm25_index`."""
     docs = TxnTable(docs_path)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(docs_path))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # the feed IS docs' change rows, but fold via the table's own
-        # read_changes bracketed by mv_source_version bookkeeping so
-        # batch and streaming refreshes share one code path (the
-        # micro-batch only signals that new versions exist)
+    def _apply(changes: dict, batch_id: int) -> None:
+        # the trigger only signals that docs has new versions: fold via
+        # the table's own read_changes bracketed by mv_source_version
+        # bookkeeping so batch and streaming refreshes share one code
+        # path (``changes`` is a plan only; its rows are never read)
         refresh_chunk_index(spark, docs, index_root, batch_id, app_id,
                             n_buckets)
 
-    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [docs_path], _apply, checkpoint,
+                              available_now)
 
 
 def read_chunk_bm25_index(spark: SparkSession, index_root: str,

@@ -7,10 +7,14 @@ read_delta.py:280-294) and the flagship prime projection
 (README.md:140-164) — inside each trigger.
 
 This generalizes ``streaming/joinmv.py``'s two-feed union to the full
-four-layer chain (VERDICT r8 #4). The three CDF streams are tagged,
-schema-conformed and UNIONED into one query, so a micro-batch carries
-every source's row-level changes and one foreachBatch advances the
-whole DAG:
+four-layer chain (VERDICT r8 #4). The query streams one version feed
+over the three source tables (``pipeline._start_change_feed``): a
+micro-batch carries a ``(table, lo, hi)`` log-version range per source
+that moved — ``numInputRows`` counts ranges, not change rows — and the
+foreachBatch reads each range with ``TxnTable.read_changes`` (Spark's
+parquet reader), tags and schema-conforms the change rows and unions
+them, so one trigger advances the whole DAG; a layer whose sources did
+not move is skipped:
 
 1. emp/val rows → ``JoinMaterializedView.apply_change_batch`` (jmv1) —
    each of its three commits (left state, right state, view)
@@ -26,12 +30,13 @@ whole DAG:
 
 Exactly-once across a crash ANYWHERE in the trigger: the checkpoint
 only advances after foreachBatch returns, so a crash replays the same
-batch — steps 1-2 skip their already-applied commits via the ledger,
-and steps 3-4 are high-water no-ops when nothing new was produced
-(and catch-up refreshes when the crash tore between layers). Do not
-mix with batch refreshes of jmv1/aggv on the same tables (ledger vs
-``mv_*_version`` bookkeeping); jmv2/prime here use ONLY the batch
-high-water path and must not also be fed by separate streams.
+batch (its logged version ranges, re-read) — steps 1-2 skip their
+already-applied commits via the ledger, and steps 3-4 are high-water
+no-ops when nothing new was produced (and catch-up refreshes when the
+crash tore between layers). Do not mix with batch refreshes of
+jmv1/aggv on the same tables (ledger vs ``mv_*_version``
+bookkeeping); jmv2/prime here use ONLY the batch high-water path and
+must not also be fed by separate streams.
 
 Scale shape: per trigger cost is O(batch rows + changed ``__kb``
 buckets) at every layer — the chain never rescans a source, and the
@@ -42,28 +47,12 @@ of the layers drifting apart across restarts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
-from .joinmv import apply_join_mv_stream_batch
-from .pipeline import _start_foreach_batch
-
-#: union tag column; change-feed frames never carry it
-_SIDE = "__side"
-
-
-def _conform(feed: DataFrame, side: str, keys: list[str],
-             own: list, pads: list) -> DataFrame:
-    """Tag one source's change feed and pad it to the three-way union
-    schema: key, own value columns, the other sources' value columns
-    as typed NULLs, ``_change_type``, tag."""
-    null_cols = [F.lit(None).cast(f.dataType).alias(f.name)
-                 for f in pads]
-    return feed.select(
-        *[F.col(k) for k in keys],
-        *[F.col(f.name) for f in own], *null_cols,
-        F.col("_change_type"), F.lit(side).alias(_SIDE))
+from .joinmv import _SIDE, _union_changes, apply_join_mv_stream_batch
+from .pipeline import _start_change_feed
 
 
 def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
@@ -78,9 +67,6 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
     employee/validation and activity feeds; ``jmv2`` is the LEFT-join
     view (= ``final``); ``prime`` the MapMaterializedView serving the
     flagship projection. Read the output with ``prime.read``."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     keys = list(jmv1.keys)
     ef = [f for f in TxnTable(emp_path).read(spark).schema.fields
           if f.name not in keys and f.name != "__kb"]
@@ -93,36 +79,33 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
         raise ValueError(
             "value columns must be distinct across the three sources")
 
-    def _feed(path):
-        return (spark.readStream.format("txnlog")
-                .option("readChangeFeed", "true").load(path))
-
-    unioned = (
-        _conform(_feed(emp_path), "e", keys, ef, vf + af)
-        .unionByName(_conform(_feed(val_path), "v", keys, vf, ef + af))
-        .unionByName(_conform(_feed(act_path), "a", keys, af, ef + vf)))
+    feeds = [(emp_path, "e", ef, vf + af), (val_path, "v", vf, ef + af),
+             (act_path, "a", af, ef + vf)]
     ecols = [f.name for f in ef]
     vcols = [f.name for f in vf]
     acols = [f.name for f in af]
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(changes: dict, batch_id: int) -> None:
+        batch_df = _union_changes(changes, feeds, keys)
         batch_df.persist()
         try:
             # layer 1: emp ⋈ val join view (three guarded legs inside)
-            apply_join_mv_stream_batch(
-                spark, jmv1,
-                batch_df.filter(F.col(_SIDE).isin("e", "v"))
-                .withColumn(_SIDE, F.when(F.col(_SIDE) == "e", "l")
-                            .otherwise("r")),
-                batch_id, app_id, ecols, vcols)
+            if emp_path in changes or val_path in changes:
+                apply_join_mv_stream_batch(
+                    spark, jmv1,
+                    batch_df.filter(F.col(_SIDE).isin("e", "v"))
+                    .withColumn(_SIDE, F.when(F.col(_SIDE) == "e", "l")
+                                .otherwise("r")),
+                    batch_id, app_id, ecols, vcols)
             # layer 2: bucketed activity aggregate (one guarded leg)
-            ach = (batch_df.filter(F.col(_SIDE) == "a")
-                   .select(*keys, *acols, "_change_type"))
-            aggv.apply_change_batch(
-                spark, ach,
-                _stream_meta(batch_id, app_id, "final_pipe_agg"),
-                guard=lambda table, fn: _guarded_commit(
-                    table, batch_id, app_id, fn))
+            if act_path in changes:
+                ach = (batch_df.filter(F.col(_SIDE) == "a")
+                       .select(*keys, *acols, "_change_type"))
+                aggv.apply_change_batch(
+                    spark, ach,
+                    _stream_meta(batch_id, app_id, "final_pipe_agg"),
+                    guard=lambda table, fn: _guarded_commit(
+                        table, batch_id, app_id, fn))
             # layers 3-4: intermediate views produced inside THIS
             # trigger — followed via the crash-idempotent batch
             # high-water refresh (reads exactly the deltas above).
@@ -141,4 +124,5 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
         finally:
             batch_df.unpersist()
 
-    return _start_foreach_batch(unioned, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [emp_path, val_path, act_path],
+                              _apply, checkpoint, available_now)

@@ -1,14 +1,17 @@
 """Continuously-maintained JOIN materialized view: the batch refresh of
 ``operators/mv.JoinMaterializedView`` turned into ONE Structured
-Streaming job over BOTH sources' ``format("txnlog")`` change feeds.
+Streaming job over BOTH sources' change feeds.
 
 The reference rebuilds its ``final`` JOIN table wholesale every DAG run
 (airflow/config/read_delta.py:280-285); the streaming form keeps it
-never more than one trigger behind either source. The two CDF streams
-are tagged, schema-conformed and UNIONED into a single query (each
-source keeps its own version offsets in the one checkpoint), so a
-micro-batch carries both sides' row-level changes and the foreachBatch
-applies them through the exact batch core
+never more than one trigger behind either source. The query streams
+one version feed over both tables (``pipeline._start_change_feed``;
+each source keeps its own log-version offset in the one checkpoint): a
+micro-batch carries a ``(table, lo, hi)`` range per side that moved —
+``numInputRows`` counts ranges, not change rows. The foreachBatch
+reads each range with ``TxnTable.read_changes`` (Spark's parquet
+reader), tags, schema-conforms and unions the two sides' change rows,
+and applies them through the exact batch core
 (``JoinMaterializedView.apply_change_batch``): net-row-count delta to
 each side's keyed replica, then a re-join of ONLY the affected
 ``__kb=`` buckets. Per trigger cost is O(batch + changed buckets),
@@ -16,22 +19,25 @@ never O(join).
 
 Exactly-once: each of the three commits a batch makes (left state,
 right state, view) is individually guarded by the (app_id, batch_id)
-ledger — a crash between legs replays only the unapplied legs, and the
-legs recompute from current state so replay is idempotent. A full
-overwrite or compaction on either source has no row-level delta; the
-CDF source fails the stream there by design (Delta's rule) — restart
-from a batch ``JoinMaterializedView.refresh`` resync (which detects
-the non-row-wise history and rebuilds), then resume streaming.
+ledger — a crash between legs replays only the unapplied legs over the
+same logged version ranges, and the legs recompute from current state
+so replay is idempotent. A full overwrite on either source has no
+row-level delta; ``read_changes`` fails the stream there by design
+(Delta's rule) — restart from a batch ``JoinMaterializedView.refresh``
+resync (which detects the non-row-wise history and rebuilds), then
+resume streaming. Compaction is layout-only and streams through.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import JoinMaterializedView
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
-from .pipeline import _start_foreach_batch
+from .pipeline import _start_change_feed
 
 #: the union tag column; change-feed frames never carry it
 _SIDE = "__side"
@@ -39,16 +45,24 @@ _SIDE = "__side"
 
 def _conform(feed: DataFrame, side: str, keys: list,
              own: list, other: list) -> DataFrame:
-    """Tag one side's change feed and pad it to the union schema: the
-    (possibly composite) key, both sides' value columns (the other
-    side's as typed NULLs), ``_change_type``, tag. Value-column names
-    must be distinct between the sides (the JoinMaterializedView
-    contract)."""
+    """Tag one source's change rows and pad them to the union schema:
+    the (possibly composite) key, every source's value columns (the
+    other sources' as typed NULLs), ``_change_type``, tag. Value-column
+    names must be distinct between the sources (the
+    JoinMaterializedView contract)."""
     pads = [F.lit(None).cast(f.dataType).alias(f.name) for f in other]
     return feed.select(
         *[F.col(k) for k in keys],
         *[F.col(f.name) for f in own], *pads,
         F.col("_change_type"), F.lit(side).alias(_SIDE))
+
+
+def _union_changes(changes: dict, feeds: list, keys: list) -> DataFrame:
+    """One tagged frame over the change rows of the sources that moved:
+    ``feeds`` lists ``(path, side, own fields, other fields)``."""
+    return reduce(DataFrame.unionByName, [
+        _conform(changes[path], side, keys, own, other)
+        for path, side, own, other in feeds if path in changes])
 
 
 def apply_join_mv_stream_batch(spark: SparkSession,
@@ -79,9 +93,6 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     StreamingQuery. Read the view with ``jmv.read``. Do not mix with
     batch ``jmv.refresh`` on the same view: the stream's bookkeeping
     is the (app_id, batch_id) ledger, not ``mv_left_version``."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     keys = jmv.keys
     # "__kb" excluded: a source that is itself a maintained bucketed
     # view carries its bucket column — physical layout, not data
@@ -93,16 +104,12 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     if clash:
         raise ValueError(f"value columns must be distinct: {clash}")
 
-    def _feed(path):
-        return (spark.readStream.format("txnlog")
-                .option("readChangeFeed", "true").load(path))
-
-    unioned = (_conform(_feed(left_path), "l", keys, lf, rf)
-               .unionByName(_conform(_feed(right_path), "r", keys,
-                                     rf, lf)))
     lcols, rcols = [f.name for f in lf], [f.name for f in rf]
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(changes: dict, batch_id: int) -> None:
+        batch_df = _union_changes(
+            changes, [(left_path, "l", lf, rf), (right_path, "r", rf, lf)],
+            keys)
         batch_df.persist()
         try:
             apply_join_mv_stream_batch(spark, jmv, batch_df, batch_id,
@@ -110,4 +117,5 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
         finally:
             batch_df.unpersist()
 
-    return _start_foreach_batch(unioned, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [left_path, right_path], _apply,
+                              checkpoint, available_now)

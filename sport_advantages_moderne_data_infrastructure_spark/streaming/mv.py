@@ -1,31 +1,37 @@
 """Continuously-maintained materialized views: the batch refreshes of
-``operators/mv.py`` turned into Structured Streaming jobs over the
-``format("txnlog")`` change-feed source. Two starters: one for the
-plain agg view (``write_stream_agg_view``, the twin of
+``operators/mv.py`` turned into Structured Streaming jobs over a source
+table's change feed. Two starters: one for the plain agg view
+(``write_stream_agg_view``, the twin of
 ``maintain_agg_view``) and one for the single-source bucketed views
 (``write_stream_bucketed_view``, the twin of ``MapMaterializedView`` /
 ``AggMaterializedView.refresh``); the join view's twin is
 streaming/joinmv.py.
 
-The composition is the point: the CDF stream delivers row-level changes
-(inserts, update pre/postimages, deletes with ``_commit_version``)
-exactly-once via version offsets, each micro-batch becomes a signed
-delta, and the view txn table absorbs it as one guarded atomic commit
-per batch. The view is never more than one trigger behind the source,
-each trigger costs O(changed rows) + O(touched view), and a crash
-replays only unapplied batches (the (app_id, batch_id) guard skips
-applied ones — the same exactly-once contract as every other sink in
-this package).
+The composition is the point: both start from
+``pipeline._start_change_feed``, whose stream carries only the
+source's log-version range per trigger (``numInputRows`` counts
+ranges, not change rows) with exactly-once version offsets; the
+foreachBatch reads the range's row-level changes (inserts, update
+pre/postimages, deletes with ``_commit_version``) with
+``TxnTable.read_changes`` — Spark's parquet reader — each micro-batch
+becomes a signed delta, and the view txn table absorbs it as one
+guarded atomic commit per batch. The view is never more than one
+trigger behind the source, each trigger costs O(changed rows) +
+O(touched view), and a crash replays only unapplied batches over the
+same logged version ranges (the (app_id, batch_id) guard skips applied
+ones — the same exactly-once contract as every other sink in this
+package).
 
-A full overwrite or compaction on the source has no row-level delta;
-the CDF source fails the stream there by design (Delta's rule) —
+A full overwrite on the source has no row-level delta;
+``read_changes`` fails the stream there by design (Delta's rule) —
 restart the view from a batch resync (``maintain_agg_view`` /
-``refresh``), then resume streaming.
+``refresh``), then resume streaming. Compaction is layout-only and
+streams through.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..operators.mv import apply_delta
 from ..sources.txnlog import (
@@ -34,7 +40,7 @@ from ..sources.txnlog import (
     _stream_meta,
     agg_delta_from_changes,
 )
-from .pipeline import _start_foreach_batch
+from .pipeline import _start_change_feed
 
 
 def write_stream_agg_view(spark: SparkSession, source_path: str,
@@ -50,14 +56,9 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
     downstream view — e.g. the composed pipeline's LEFT-join MV — can
     follow the streamed aggregate incrementally."""
     from ..operators.mv import agg_view_changes
-    from ..sources.txnstream import TxnLogDataSource
 
-    spark.dataSource.register(TxnLogDataSource)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(source_path))
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
+    def _apply(changes: dict, batch_id: int) -> None:
+        batch_df = changes[source_path].persist()
         try:
             view = TxnTable(view_path)
             delta = agg_delta_from_changes(batch_df, group_cols, value_col)
@@ -76,7 +77,8 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
         finally:
             batch_df.unpersist()
 
-    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [source_path], _apply, checkpoint,
+                              available_now)
 
 
 def write_stream_bucketed_view(spark: SparkSession, source_path: str,
@@ -87,20 +89,15 @@ def write_stream_bucketed_view(spark: SparkSession, source_path: str,
     constructed ``operators/mv.MapMaterializedView`` (e.g. the
     flagship prime projection) or ``AggMaterializedView`` (aggregates
     whose group count scales with the corpus): each micro-batch of the
-    source's ``format("txnlog")`` change feed goes through
+    source's change feed goes through
     ``mv.apply_change_batch``, which replaces only the affected
     ``__kb`` buckets, one replay-guarded commit per batch. Read the
     view with ``mv.read``. Do not mix with batch ``mv.refresh`` on the
     same view: the stream's bookkeeping is the (app_id, batch_id)
     ledger, not ``mv_source_version``."""
-    from ..sources.txnstream import TxnLogDataSource
 
-    spark.dataSource.register(TxnLogDataSource)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(source_path))
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
+    def _apply(changes: dict, batch_id: int) -> None:
+        batch_df = changes[source_path].persist()
         try:
             mv.apply_change_batch(
                 spark, batch_df,
@@ -111,4 +108,5 @@ def write_stream_bucketed_view(spark: SparkSession, source_path: str,
         finally:
             batch_df.unpersist()
 
-    return _start_foreach_batch(feed, _apply, checkpoint, available_now)
+    return _start_change_feed(spark, [source_path], _apply, checkpoint,
+                              available_now)

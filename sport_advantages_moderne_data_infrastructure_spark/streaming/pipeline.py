@@ -15,6 +15,9 @@ file/Delta sinks (T3, SaveDelta.scala:161).
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -106,6 +109,51 @@ def _start_foreach_batch(df: DataFrame, fn, checkpoint: str,
     w = (df.writeStream.foreachBatch(_nonempty)
          .option("checkpointLocation", checkpoint))
     return _trigger(w, available_now, processing_time).start()
+
+
+def _start_change_feed(spark: SparkSession, paths: list[str], fn,
+                       checkpoint: str, available_now: bool):
+    """Start the checkpointed query of a change-feed sink over the
+    transactional tables at ``paths``. The stream carries only log
+    versions (``sources/txnstream.TxnVersionFeed``: one ``(table, lo,
+    hi)`` row per table that moved, so ``numInputRows`` counts version
+    ranges); each trigger reads every range with
+    ``TxnTable.read_changes`` — Spark's parquet reader — and calls
+    ``fn(changes, batch_id)``, ``changes`` mapping each moved path to
+    its change rows. Returns the StreamingQuery."""
+    from ..sources.txnlog import TxnTable
+    from ..sources.txnstream import TxnVersionFeed
+
+    _refuse_row_feed_checkpoint(checkpoint)
+    spark.dataSource.register(TxnVersionFeed)
+    feed = (spark.readStream.format("txnversions")
+            .option("paths", json.dumps(list(dict.fromkeys(paths))))
+            .load())
+
+    def _read(batch_df: DataFrame, batch_id: int) -> None:
+        fn({r.table: TxnTable(r.table).read_changes(spark, r.lo, r.hi)
+            for r in batch_df.collect()}, batch_id)
+
+    return _start_foreach_batch(feed, _read, checkpoint, available_now)
+
+
+def _refuse_row_feed_checkpoint(checkpoint: str) -> None:
+    """Raise when ``checkpoint`` was written by the row-level
+    ``format("txnlog")`` feed (one ``{"version": N}`` offset per source
+    table), before Spark fails on it with a source-count assertion."""
+    d = os.path.join(checkpoint.removeprefix("file:"), "offsets")
+    batches = ([int(f) for f in os.listdir(d) if f.isdigit()]
+               if os.path.isdir(d) else [])
+    if not batches:
+        return
+    with open(os.path.join(d, str(max(batches)))) as fh:
+        offsets = fh.read().splitlines()[2:]  # after version + metadata
+    if len(offsets) != 1 or "versions" not in json.loads(offsets[0]):
+        raise ValueError(
+            f"checkpoint {checkpoint} was written by the row-level "
+            "format('txnlog') change feed, which this sink no longer "
+            "reads: do a batch refresh of its views, then restart the "
+            "stream on a fresh checkpoint")
 
 
 def write_stream_parquet(df: DataFrame, path: str, checkpoint: str,

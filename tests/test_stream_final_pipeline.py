@@ -8,6 +8,9 @@ require the maintained prime output to equal the wholesale rebuild."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import functions as F
 
 from sport_advantages_moderne_data_infrastructure_spark.operators import (
@@ -132,24 +135,38 @@ def test_single_stream_full_history_with_restarts(spark, tmp_path):
             (jmv1.view, aggv.view, jmv2.view, prime.view)] == versions
 
 
-def test_single_stream_crash_between_layers_recovers(spark, tmp_path):
+def _logged_versions(ckpt: str, batch_id: int) -> dict:
+    """The per-table log versions the checkpoint's offset log recorded
+    as the end of ``batch_id``."""
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as fh:
+        return json.loads(fh.read().splitlines()[2])["versions"]
+
+
+def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
+                                                     monkeypatch):
     """Crash INSIDE a trigger, after the jmv1/agg legs committed but
-    before the final/prime refreshes ran: the checkpoint has not
-    advanced, so the restart replays the same batch — layers 1-2 skip
-    via the (app_id, batch_id) ledger, layers 3-4 catch up via their
-    high-water refresh — and the chain converges with no double
-    application."""
+    before the final/prime refreshes ran, and an activity commit lands
+    before the restart: the checkpoint has not advanced, so the restart
+    replays the same batch — re-reading exactly its logged version
+    ranges, layers 1-2 skipping via the (app_id, batch_id) ledger,
+    layers 3-4 catching up via their high-water refresh — and the late
+    commit arrives in the next batch. The chain converges with no
+    double application, and a second restart commits nothing."""
     root = str(tmp_path / "pipe")
     emp0, raises, val0, revoked, parsed = _sources(spark)
     emp, val, act, jmv1, aggv, jmv2, prime = _chain(root)
     ckpt = f"{root}/ckpt"
 
+    def start(available_now=True):
+        return write_stream_final_pipeline(
+            spark, emp.path, val.path, act.path,
+            jmv1, aggv, jmv2, prime, ckpt, app_id="fp2",
+            available_now=available_now)
+
     emp.overwrite(emp0)
     val.overwrite(val0)
     act.overwrite(parsed.filter("id % 3 <> 2"))
-    q = write_stream_final_pipeline(
-        spark, emp.path, val.path, act.path,
-        jmv1, aggv, jmv2, prime, ckpt, app_id="fp2")
+    q = start()
     q.awaitTermination(180)
     q.stop()
 
@@ -164,9 +181,7 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path):
         raise boom
 
     jmv2.refresh = _crash
-    q = write_stream_final_pipeline(
-        spark, emp.path, val.path, act.path,
-        jmv1, aggv, jmv2, prime, ckpt, app_id="fp2")
+    q = start()
     try:
         q.awaitTermination(180)
     except Exception:
@@ -175,17 +190,45 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path):
         q.stop()
     jmv1_v = jmv1.view.latest_version()
     assert jmv1_v is not None  # layer 1 DID commit before the crash
+    # the late input: an activity commit between crash and restart
+    act.append(parsed.filter("id % 3 = 2"))
 
     # restart: same batch replays; guarded legs skip, 3-4 catch up
     jmv2.refresh = real_refresh
-    q = write_stream_final_pipeline(
-        spark, emp.path, val.path, act.path,
-        jmv1, aggv, jmv2, prime, ckpt, app_id="fp2")
-    q.awaitTermination(180)
+    sources = (emp.path, val.path, act.path)
+    reads = []
+    real_read = TxnTable.read_changes
+
+    def _read(self, spark, since_version, upto=None):
+        if self.path in sources:
+            reads.append((self.path, since_version, upto))
+        return real_read(self, spark, since_version, upto)
+
+    monkeypatch.setattr(TxnTable, "read_changes", _read)
+    # a running query, not availableNow: for a Python source Spark
+    # falls back to one batch per run, which would stop at the replay
+    q = start(available_now=False)
+    q.processAllAvailable()
     q.stop()
+    before, crashed = _logged_versions(ckpt, 0), _logged_versions(ckpt, 1)
+    replayed = [(p, before[p], crashed[p]) for p in sources
+                if crashed[p] > before[p]]
+    assert [p for p, _, _ in replayed] == [emp.path, val.path]
+    assert reads == replayed + [(act.path, crashed[act.path],
+                                 act.latest_version())]
+    assert len([p for p in q.recentProgress if p.numInputRows]) == 2
     assert jmv1.view.latest_version() == jmv1_v  # no double apply
     assert _got_prime(spark, prime) == _expected_prime(spark, emp,
                                                        val, act)
+
+    # second restart: nothing new — no layer may commit
+    versions = [t.latest_version() for t in
+                (jmv1.view, aggv.view, jmv2.view, prime.view)]
+    q = start()
+    q.awaitTermination(180)
+    q.stop()
+    assert [t.latest_version() for t in
+            (jmv1.view, aggv.view, jmv2.view, prime.view)] == versions
 
 
 def test_empty_activity_feed_still_materializes_final(spark, tmp_path):

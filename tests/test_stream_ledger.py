@@ -8,8 +8,9 @@ append leg goes through ``TxnTable.append``, so neither a racing
 replica nor a lost version race leaves an unreferenced data dir.
 Structural checks keep the ledger lookups and hand-built stream metas
 inside ``sources/txnlog.py``, append-shaped commits inside
-``sources/``, ``writeStream.foreachBatch`` inside the one starter, and
-the single-source view high-water fold inside ``operators/mv.py``, so
+``sources/``, ``writeStream.foreachBatch`` inside the one starter, the
+row-level ``format("txnlog")`` feed out of ``streaming/``, and the
+single-source view high-water fold inside ``operators/mv.py``, so
 per-sink copies cannot come back."""
 
 from __future__ import annotations
@@ -298,13 +299,21 @@ def _calls(tree, attr: str):
 def test_one_append_path_and_one_starter():
     """Outside ``sources/`` no code makes an append-shaped
     ``commit(adds, [], ...)`` or calls ``_commit_blind`` (append legs
-    call ``TxnTable.append``), no ``_guarded_commit`` leg appends, and
-    only
-    ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``.
+    call ``TxnTable.append``), no ``_guarded_commit`` leg appends, only
+    ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``,
+    and no ``streaming/`` module reads ``readStream.format("txnlog")``
+    (change-feed sinks start from ``pipeline._start_change_feed``).
     Parsed, so docstring usage examples do not count."""
     hits = []
     for rel, src in _package_modules():
         tree = ast.parse(src)
+        if rel.startswith("streaming" + os.sep):
+            hits += [f"{rel}:{c.lineno}: readStream.format('txnlog')"
+                     for c in _calls(tree, "format")
+                     if isinstance(c.func.value, ast.Attribute)
+                     and c.func.value.attr == "readStream"
+                     and [getattr(a, "value", None) for a in c.args]
+                     == ["txnlog"]]
         starter = {id(c) for f in ast.walk(tree)
                    if isinstance(f, ast.FunctionDef)
                    and f.name == "_start_foreach_batch"
