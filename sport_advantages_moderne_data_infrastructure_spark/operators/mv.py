@@ -33,7 +33,7 @@ fold (:meth:`_SingleSourceView.fold`), which the streaming index legs
 from __future__ import annotations
 
 import os
-from functools import reduce
+from functools import cache, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -157,11 +157,17 @@ def apply_delta(spark: SparkSession, view: TxnTable, delta: DataFrame,
     """Current partials of ``view`` + a signed delta frame
     (d_count/d_sum) → the new partials."""
     if view.latest_version() is None:
-        return (delta.select(
-            *group_cols,
-            F.col("d_count").alias("cnt"), F.col("d_sum").alias("sm"))
-            .filter(F.col("cnt") != 0))
+        return _as_partials(delta, group_cols)
     return _merge_partials(view.read(spark), delta, group_cols)
+
+
+def _as_partials(delta: DataFrame, group_cols: list[str]) -> DataFrame:
+    """A signed delta applied to NO partials: its groups with a nonzero
+    net count are the new partials (deletes cancel inserts)."""
+    return (delta.select(
+        *group_cols,
+        F.col("d_count").alias("cnt"), F.col("d_sum").alias("sm"))
+        .filter(F.col("cnt") != 0))
 
 
 def _merge_partials(cur: DataFrame, delta: DataFrame,
@@ -219,7 +225,14 @@ class _BucketedView:
     ``capture_changes`` every bucket replace of the view also writes
     change files, so the view is itself a CDF source and further
     incremental views stack on it. ``keys``: one column name or a
-    list of them."""
+    list of them.
+
+    A table with no commit yet is not built bucket by bucket: the first
+    batch's NET rows become the whole table in one ``_replace_all``
+    commit, with no affected-bucket collect, no join against empty
+    state and no change files. A first commit without removes reads as
+    a plain append (every row an ``insert``) in the table's change
+    feed, so views stacked on it see the same rows either way."""
 
     def __init__(self, view_root: str, keys, n_buckets: int,
                  capture_changes: bool):
@@ -235,12 +248,24 @@ class _BucketedView:
         return F.pmod(F.hash(*[F.col(k) for k in self.keys]),
                       F.lit(self.n_buckets)).cast("int")
 
-    def _affected(self, df: DataFrame) -> list[int]:
-        """Sorted ids of the buckets ``df``'s keys hash to — a bounded
-        collect: at most n_buckets ints (the scd2.py discipline)."""
-        return sorted(r["__kb"] for r in
-                      df.select(self._bucket().alias("__kb"))
-                      .distinct().collect())
+    def _affected(self, df: DataFrame):
+        """A memoized callable: the sorted ids of the buckets ``df``'s
+        keys hash to — a bounded collect, at most n_buckets ints (the
+        scd2.py discipline), run only when a bucket replace needs it."""
+        return cache(lambda: sorted(
+            r["__kb"] for r in df.select(self._bucket().alias("__kb"))
+            .distinct().collect()))
+
+    def _counted_rows(self, df: DataFrame, cols: list[str],
+                      n: str) -> DataFrame:
+        """``cols`` repeated by count column ``n`` (rows with ``n <= 0``
+        vanish), bucketed."""
+        return (df.filter(F.col(n) > 0).select(
+            *cols,
+            F.explode(F.sequence(F.lit(1),
+                                 F.col(n).cast("int"))).alias("__i"))
+            .drop("__i")
+            .withColumn("__kb", self._bucket()))
 
     @staticmethod
     def _read_buckets(spark, state: TxnTable,
@@ -264,7 +289,9 @@ class _BucketedView:
         delivered yet), so fall back to ONE 0-row plain file that
         carries the schema; later partition-granular commits coexist
         with it (mixed plain/partitioned reads are the normal txnlog
-        read path)."""
+        read path). The commit is based on the version read first, -1
+        for an empty table, so a racing first commit conflicts instead
+        of being built over."""
         base = tbl.latest_version()
         adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
         if adds:
@@ -272,12 +299,14 @@ class _BucketedView:
         else:
             adds = [tbl._write_data(df.repartition(1))]  # noqa: SLF001
         removes = tbl.snapshot_dirs(base) if base is not None else []
-        tbl.commit(adds, removes, meta, expected_version=base)
+        tbl.commit(adds, removes, meta,
+                   expected_version=-1 if base is None else base)
 
     def _apply_side(self, spark, state: TxnTable, changes: DataFrame,
-                    affected: list[int], meta: dict) -> None:
+                    affected, meta: dict) -> None:
         """Apply change rows to ``state`` by net row count, replacing
-        the affected buckets."""
+        the buckets ``affected()`` names — or, while ``state`` has no
+        commit, building it whole from the net rows."""
         cols = [c for c in changes.columns
                 if c not in ("_change_type", "_commit_version")]
         net = (changes
@@ -286,30 +315,22 @@ class _BucketedView:
                                               "update_postimage"),
                    F.lit(1)).otherwise(F.lit(-1)))
                .groupBy(*cols).agg(F.sum("__w").alias("__net")))
-        if state.latest_version() is None:  # first batch: empty state
-            from pyspark.sql.types import LongType, StructType
-            schema = StructType(
-                [changes.schema[c] for c in cols]).add("__cur", LongType())
-            old = spark.createDataFrame([], schema)
-        else:
-            old = (self._read_buckets(spark, state, affected)
-                   .drop("__kb")
-                   .groupBy(*cols).agg(F.count(F.lit(1)).alias("__cur")))
+        if state.latest_version() is None:
+            self._replace_all(state,
+                              self._counted_rows(net, cols, "__net"), meta)
+            return
+        old = (self._read_buckets(spark, state, affected())
+               .drop("__kb")
+               .groupBy(*cols).agg(F.count(F.lit(1)).alias("__cur")))
         o, n = old.alias("o"), net.alias("n")
         total = (o.join(n, _nullsafe_on(o, n, cols), "full_outer")
                  .select(*[F.coalesce(o[c], n[c]).alias(c)
                            for c in cols],
                          (F.coalesce(o["__cur"], F.lit(0))
                           + F.coalesce(n["__net"], F.lit(0)))
-                         .alias("__n"))
-                 .filter(F.col("__n") > 0))
-        rows = (total.select(
-            *cols,
-            F.explode(F.sequence(F.lit(1),
-                                 F.col("__n").cast("int"))).alias("__i"))
-            .drop("__i")
-            .withColumn("__kb", self._bucket()))
-        self._replace_buckets(state, rows, affected, meta)
+                         .alias("__n")))
+        self._replace_buckets(state, self._counted_rows(total, cols, "__n"),
+                              affected(), meta)
 
     def _replace_buckets(self, table: TxnTable, df: DataFrame,
                          affected: list[int], meta: dict) -> None:
@@ -324,9 +345,11 @@ class _BucketedView:
         maintained view is itself a row-wise CDF source and FURTHER
         incremental views stack on top of it (an agg MV over the join
         MV — see tests/test_mv.py stacked test). Change volume is
-        O(replaced buckets), the same order as the write itself."""
+        O(replaced buckets), the same order as the write itself.
+        ``table`` has a commit: an empty one is built by
+        :meth:`_replace_all`."""
         base = table.latest_version()
-        live = table.snapshot_dirs(base) if base is not None else []
+        live = table.snapshot_dirs(base)
         aff = {f"__kb={v}" for v in affected}
         adds = table._write_data_partitioned(df, "__kb")  # noqa: SLF001
         stray = [a for a in adds if os.path.basename(a) not in aff]
@@ -336,9 +359,7 @@ class _BucketedView:
         changes_rel = None
         if self.capture_changes and table is self.view:
             spark = df.sparkSession
-            old = (self._read_buckets(spark, table, affected)
-                   if base is not None
-                   else df.limit(0))
+            old = self._read_buckets(spark, table, affected)
             changes_rel = table._write_changes(  # noqa: SLF001
                 old.withColumn("_change_type", F.lit("delete"))
                 .unionByName(
@@ -468,7 +489,10 @@ class JoinMaterializedView(_BucketedView):
                            rch_state: DataFrame = None) -> list[int]:
         """Apply one batch of change rows (read_changes shape: data
         columns + ``_change_type``) from each side and re-join the
-        affected buckets; returns the affected bucket ids. The shared
+        affected buckets; returns the affected bucket ids (every bucket
+        when all three tables were still empty: each is then built
+        whole, one commit per table, the view as the join of the
+        states). The shared
         core of the batch ``refresh`` and the streaming maintenance
         (streaming/joinmv.py): ``guard`` — a
         ``callable(table, leg_fn)`` — wraps each of the three commits
@@ -495,8 +519,10 @@ class JoinMaterializedView(_BucketedView):
         affected = self._affected(
             lch.select(*self.keys)
             .unionByName(rch.select(*self.keys)).distinct())
-        if not affected:
-            return affected
+        fresh = all(t.latest_version() is None for t in
+                    (self.left_state, self.right_state, self.view))
+        if not fresh and not affected():
+            return []
         lapply = lch if lch_state is None else lch_state
         rapply = rch if rch_state is None else rch_state
         run(self.left_state,
@@ -507,13 +533,18 @@ class JoinMaterializedView(_BucketedView):
                                      affected, meta))
 
         def _view_leg():
+            if self.view.latest_version() is None:
+                self._replace_all(self.view, self._join_of(
+                    self.left_state.read(spark),
+                    self.right_state.read(spark)), meta)
+                return
             joined = self._join_of(
-                self._read_buckets(spark, self.left_state, affected),
-                self._read_buckets(spark, self.right_state, affected))
-            self._replace_buckets(self.view, joined, affected, meta)
+                self._read_buckets(spark, self.left_state, affected()),
+                self._read_buckets(spark, self.right_state, affected()))
+            self._replace_buckets(self.view, joined, affected(), meta)
 
         run(self.view, _view_leg)
-        return affected
+        return list(range(self.n_buckets)) if fresh else affected()
 
     # -- internals ---------------------------------------------------
 
@@ -625,7 +656,8 @@ class MapMaterializedView(_SingleSourceView):
     def apply_change_batch(self, spark: SparkSession, ch: DataFrame,
                            meta: dict, guard=None) -> list[int]:
         """Apply one batch of change rows (read_changes shape) through
-        the projection; returns the affected bucket ids. The shared
+        the projection; returns the affected bucket ids (every bucket
+        when it built the empty view whole). The shared
         core of the batch ``refresh`` and the streaming maintenance
         (``streaming/mv.write_stream_bucketed_view``); ``guard`` wraps
         the single view commit the same way the join MV's legs are
@@ -645,12 +677,13 @@ class MapMaterializedView(_SingleSourceView):
             .withColumn("_change_type", F.lit("delete")))
         projected = pos.unionByName(neg)
         affected = self._affected(projected)
-        if not affected:
-            return affected  # nothing changed: no empty commit
+        fresh = self.view.latest_version() is None
+        if not fresh and not affected():
+            return []  # nothing changed: no empty commit
         run(self.view,
             lambda: self._apply_side(spark, self.view, projected,
                                      affected, meta))
-        return affected
+        return list(range(self.n_buckets)) if fresh else affected()
 
     def _from_snapshot(self, snap: DataFrame) -> DataFrame:
         return self.map_fn(snap)
@@ -682,41 +715,33 @@ class AggMaterializedView(_SingleSourceView):
     def apply_change_batch(self, spark: SparkSession, ch: DataFrame,
                            meta: dict, guard=None) -> list[int]:
         """Apply one batch of source change rows; returns the affected
-        bucket ids. ``guard`` wraps the single commit for streaming
-        replay protection (same contract as the join MV's legs)."""
+        bucket ids (every bucket when it built the empty view whole).
+        ``guard`` wraps the single commit for streaming replay
+        protection (same contract as the join MV's legs)."""
         run = guard if guard is not None else (lambda table, fn: fn())
         delta = agg_delta_from_changes(ch.drop("__kb"), self.keys,
                                        self.value_col)
         changed = delta.filter((F.col("d_count") != 0)
                                | (F.col("d_sum") != 0))
         affected = self._affected(changed)
-        if not affected:
-            return affected
+        fresh = self.view.latest_version() is None
+        if not fresh and not affected():
+            return []
 
         def _leg():
             if self.view.latest_version() is None:
-                # first batch ever (streaming path): empty partials —
-                # built from scratch, NOT derived from `changed` (a
-                # limit(0) of it would make the merge an ambiguous
-                # self-join), typed like the merge's later inputs
-                from pyspark.sql.types import StructField, StructType
-
-                sch = StructType(
-                    [changed.schema[c] for c in self.keys]
-                    + [StructField("cnt",
-                                   changed.schema["d_count"].dataType),
-                       StructField("sm",
-                                   changed.schema["d_sum"].dataType)])
-                old = spark.createDataFrame([], sch)
-            else:
-                old = (self._read_buckets(spark, self.view, affected)
-                       .drop("__kb"))
+                self._replace_all(self.view, _as_partials(
+                    changed, self.keys).withColumn("__kb", self._bucket()),
+                    meta)
+                return
+            old = (self._read_buckets(spark, self.view, affected())
+                   .drop("__kb"))
             new = (_merge_partials(old, changed, self.keys)
                    .withColumn("__kb", self._bucket()))
-            self._replace_buckets(self.view, new, affected, meta)
+            self._replace_buckets(self.view, new, affected(), meta)
 
         run(self.view, _leg)
-        return affected
+        return list(range(self.n_buckets)) if fresh else affected()
 
     def initialize_empty(self, spark: SparkSession, source: TxnTable,
                          meta: dict | None = None) -> None:

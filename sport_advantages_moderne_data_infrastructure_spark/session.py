@@ -14,7 +14,26 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    n = os.environ.get("SPARK_GRAFT_CPUS")
+    if n:
+        return int(n)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+#: share of physical memory the local driver heap defaults to
+DRIVER_MEM_SHARE = 0.3
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a share of physical memory (at
+    least 1 GB): in local mode the driver heap is the only memory knob,
+    and Spark's 1g default would spill or thrash every shuffle."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or f"{max(1024, int(phys * DRIVER_MEM_SHARE) >> 20)}m")
 
 
 def get_spark(app_name: str = "samdis-engine", shuffle_partitions: int | None = None,
@@ -42,11 +61,8 @@ def get_spark(app_name: str = "samdis-engine", shuffle_partitions: int | None = 
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        # local mode = driver-only: driver memory is the ONLY memory knob
-        # (default 1g would spill/GC-thrash every shuffle at bench scale)
-        b = b.master(f"local[{n}]").config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        b = b.master(f"local[{n}]").config("spark.driver.memory",
+                                           driver_memory())
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -22,22 +22,15 @@ Kafka-partition ≙ file mapping the rest of the streaming layer assumes.
 ``format("txnlog")`` stays the public source for outside readers.
 
 The package's own change-feed sinks (``streaming/``) do not read rows
-through it. They stream ``format("txnversions")`` (:class:`TxnVersionFeed`),
-a driver-only ``SimpleDataSourceStreamReader`` over all of a sink's
-source tables. Its offsets are log versions too, checkpointed the same
-way, but a trigger's rows are only one ``(table, lo, hi)`` per table
-that moved, so ``numInputRows`` on those queries counts version ranges,
-not change rows. The sink reads each range inside ``foreachBatch``
-with ``TxnTable.read_changes`` — Spark's parquet reader — the way a
-Delta streaming reader follows the log and scans the files it names,
-with no Python worker on the data path. Both sources classify each
-commit with ``TxnTable._change_dirs``.
+through it: ``streaming/pipeline._start_change_feed`` wakes them with a
+native Spark file stream over each table's commit docs and reads each
+batch's pinned version range with ``TxnTable.read_changes``. Both
+paths classify each commit with ``TxnTable._change_dirs``.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 from dataclasses import dataclass
 
@@ -48,7 +41,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -354,49 +346,6 @@ class _TxnStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # the log is immutable; nothing to clean up
-
-
-def _latest(path: str) -> int:
-    v = TxnTable(path).latest_version()
-    return -1 if v is None else v
-
-
-class _VersionFeedReader(SimpleDataSourceStreamReader):
-    """The version feed: offsets are ``{"versions": {path: version}}``
-    over every source table of one sink, and a trigger's rows are one
-    ``(table, lo, hi)`` per table whose log moved past ``lo`` — the
-    commits ``(lo, hi]`` the sink reads with ``read_changes``. Runs on
-    the driver; a replayed batch re-reads its logged offsets."""
-
-    def __init__(self, paths: list[str]):
-        self.paths = paths
-
-    def initialOffset(self) -> dict:
-        return {"versions": {p: -1 for p in self.paths}}
-
-    def read(self, start: dict):
-        end = {"versions": {p: _latest(p) for p in self.paths}}
-        return self.readBetweenOffsets(start, end), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo, hi = start["versions"], end["versions"]
-        return iter([(p, lo[p], hi[p]) for p in self.paths if hi[p] > lo[p]])
-
-
-class TxnVersionFeed(DataSource):
-    """``format("txnversions")`` with option ``paths`` (a JSON list of
-    table roots): the change-feed signal every CDF sink in
-    ``streaming/`` starts from (``pipeline._start_change_feed``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "txnversions"
-
-    def schema(self) -> str:
-        return "table string, lo long, hi long"
-
-    def simpleStreamReader(self, schema) -> _VersionFeedReader:
-        return _VersionFeedReader(json.loads(self.options["paths"]))
 
 
 def _typed(v: str | None):

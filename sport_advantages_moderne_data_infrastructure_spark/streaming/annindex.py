@@ -427,9 +427,11 @@ def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
                          meta_cols: tuple = (),
                          available_now: bool = True):
     """Maintain the index FROM a governed embeddings TxnTable's
-    change feed (``pipeline._start_change_feed``: exactly-once version
-    offsets, each range read with ``TxnTable.read_changes``): each
-    trigger is one :func:`apply_cdf_batch`. ``codebooks=None``
+    change feed (``pipeline._start_change_feed``: a native file stream
+    over the table's commit docs wakes the sink, each batch's version
+    range is pinned in the checkpoint and read with
+    ``TxnTable.read_changes``): each trigger is one
+    :func:`apply_cdf_batch`. ``codebooks=None``
     maintains the raw IVF lists; with codebooks, the compressed
     (IVF-PQ) code table, ``meta_cols`` carrying filterable attributes
     as in the append-only sink. Returns the StreamingQuery; read the

@@ -94,8 +94,8 @@ class ChunkPostingsView(MapMaterializedView):
         projected.persist()
         try:
             affected = self._affected(projected)
-            if not affected:
-                return affected
+            if not affected():
+                return []
             # signed scalar deltas, ONE chunks-per-row-copy job: an
             # updated doc contributes (+post chunks, -pre chunks); an
             # unchanged chunk appears on both sides and cancels
@@ -122,7 +122,7 @@ class ChunkPostingsView(MapMaterializedView):
                                  affected, m)
 
             run(self.view, _leg)
-            return affected
+            return affected()
         finally:
             projected.unpersist()
 
@@ -175,10 +175,12 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
                                   n_buckets: int = 32,
                                   available_now: bool = True):
     """Start the maintenance stream over the documents table's change
-    feed (``pipeline._start_change_feed``, exactly-once version
-    offsets) — each trigger is one :func:`refresh_chunk_index` guarded
-    by the (app_id, batch_id) ledger. Returns the StreamingQuery; read
-    the index back with :func:`read_chunk_bm25_index`."""
+    feed (``pipeline._start_change_feed``: a native file stream over
+    the table's commit docs wakes it) — each trigger is one
+    :func:`refresh_chunk_index` guarded by the (app_id, batch_id)
+    ledger, which folds from the index's own recorded version. Returns
+    the StreamingQuery; read the index back with
+    :func:`read_chunk_bm25_index`."""
     docs = TxnTable(docs_path)
 
     def _apply(changes: dict, batch_id: int) -> None:

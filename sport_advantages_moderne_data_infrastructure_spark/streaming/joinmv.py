@@ -4,23 +4,24 @@ Streaming job over BOTH sources' change feeds.
 
 The reference rebuilds its ``final`` JOIN table wholesale every DAG run
 (airflow/config/read_delta.py:280-285); the streaming form keeps it
-never more than one trigger behind either source. The query streams
-one version feed over both tables (``pipeline._start_change_feed``;
-each source keeps its own log-version offset in the one checkpoint): a
-micro-batch carries a ``(table, lo, hi)`` range per side that moved —
-``numInputRows`` counts ranges, not change rows. The foreachBatch
-reads each range with ``TxnTable.read_changes`` (Spark's parquet
-reader), tags, schema-conforms and unions the two sides' change rows,
-and applies them through the exact batch core
+never more than one trigger behind either source. The query starts
+from ``pipeline._start_change_feed``: a native file stream over both
+tables' commit docs wakes it (``numInputRows`` counts new commit docs,
+not change rows) and each batch pins a log-version range per side in
+the one checkpoint. The foreachBatch reads each moved side's range
+with ``TxnTable.read_changes`` (Spark's parquet reader), tags,
+schema-conforms and unions the two sides' change rows, and applies
+them through the exact batch core
 (``JoinMaterializedView.apply_change_batch``): net-row-count delta to
 each side's keyed replica, then a re-join of ONLY the affected
 ``__kb=`` buckets. Per trigger cost is O(batch + changed buckets),
-never O(join).
+never O(join). The first batch builds the empty replicas and view in
+one commit each, from the batch's net rows.
 
 Exactly-once: each of the three commits a batch makes (left state,
 right state, view) is individually guarded by the (app_id, batch_id)
 ledger — a crash between legs replays only the unapplied legs over the
-same logged version ranges, and the legs recompute from current state
+same pinned version ranges, and the legs recompute from current state
 so replay is idempotent. A full overwrite on either source has no
 row-level delta; ``read_changes`` fails the stream there by design
 (Delta's rule) — restart from a batch ``JoinMaterializedView.refresh``

@@ -8,19 +8,20 @@ table's change feed. Two starters: one for the plain agg view
 streaming/joinmv.py.
 
 The composition is the point: both start from
-``pipeline._start_change_feed``, whose stream carries only the
-source's log-version range per trigger (``numInputRows`` counts
-ranges, not change rows) with exactly-once version offsets; the
-foreachBatch reads the range's row-level changes (inserts, update
-pre/postimages, deletes with ``_commit_version``) with
-``TxnTable.read_changes`` — Spark's parquet reader — each micro-batch
-becomes a signed delta, and the view txn table absorbs it as one
-guarded atomic commit per batch. The view is never more than one
-trigger behind the source, each trigger costs O(changed rows) +
-O(touched view), and a crash replays only unapplied batches over the
-same logged version ranges (the (app_id, batch_id) guard skips applied
-ones — the same exactly-once contract as every other sink in this
-package).
+``pipeline._start_change_feed``, whose native file stream over the
+source's commit docs only wakes the sink (``numInputRows`` counts new
+commit docs, not change rows) and which pins each batch's log-version
+range in the checkpoint; the foreachBatch reads the range's row-level
+changes (inserts, update pre/postimages, deletes with
+``_commit_version``) with ``TxnTable.read_changes`` — Spark's parquet
+reader — each micro-batch becomes a signed delta, and the view txn
+table absorbs it as one guarded atomic commit per batch (an empty
+bucketed view is built whole from the first batch's net rows). The
+view is never more than one trigger behind the source, each trigger
+costs O(changed rows) + O(touched view), and a crash replays only
+unapplied batches over the same pinned version ranges (the (app_id,
+batch_id) guard skips applied ones — the same exactly-once contract as
+every other sink in this package).
 
 A full overwrite on the source has no row-level delta;
 ``read_changes`` fails the stream there by design (Delta's rule) —

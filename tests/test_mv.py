@@ -647,3 +647,71 @@ def test_join_mv_batch_refresh_resumes_after_partial_crash(
     lrows = sorted(tuple(r) for r in
                    jmv.left_state.read(spark).drop("__kb").collect())
     assert lrows == sorted(tuple(r) for r in left.read(spark).collect())
+
+
+def test_first_batch_with_deletes_builds_the_per_bucket_view(spark,
+                                                             tmp_path):
+    """An empty view's first batch — inserts, cancelling deletes, an
+    update pair, a duplicate, an unmatched delete — is built in one
+    commit per table, without change files, and holds exactly what the
+    per-bucket path builds from the same batch once the tables exist
+    (here: after an empty first batch). The first commit reads back as
+    inserts of the built rows."""
+    from collections import Counter
+
+    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
+        AggMaterializedView,
+        JoinMaterializedView,
+        MapMaterializedView,
+    )
+
+    ch = spark.createDataFrame(
+        [(1, "a", 10, "insert"), (2, "b", 20, "insert"),
+         (2, "b", 20, "delete"), (3, "c", 30, "update_preimage"),
+         (3, "C", 31, "update_postimage"), (3, "c", 30, "insert"),
+         (4, "d", 40, "delete"), (5, "e", 50, "insert"),
+         (5, "e", 50, "insert")],
+        "id int, grp string, val int, _change_type string")
+    lch = ch.select("id", "grp", "_change_type")
+    rch = ch.select("id", "val", "_change_type")
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.drop("__kb").collect())
+
+    def built(name, make, apply, tables):
+        fresh, per_bucket = (make(str(tmp_path / f"{name}_{i}"))
+                             for i in (0, 1))
+        apply(fresh, lambda df: df)
+        apply(per_bucket, lambda df: df.limit(0))  # empty tables first
+        apply(per_bucket, lambda df: df)
+        for t in tables(fresh):
+            assert t.latest_version() == 0, (name, t.path)
+            assert not t._doc(0).get("changes"), (name, t.path)  # noqa: SLF001
+            feed = t.read_changes(spark, -1).drop("_commit_version")
+            assert rows(feed.filter("_change_type = 'insert'")
+                        .drop("_change_type")) == rows(t.read(spark))
+            assert feed.filter("_change_type <> 'insert'").count() == 0
+        for a, b in zip(tables(fresh), tables(per_bucket)):
+            assert rows(a.read(spark)) == rows(b.read(spark)), (name, a.path)
+        return fresh
+
+    meta = {"operation": "test"}
+    mv = built("map", lambda r: MapMaterializedView(
+        r, "id", lambda df: df.select("id", "grp", (df.val * 2).alias("v2")),
+        n_buckets=4, capture_changes=True),
+        lambda v, f: v.apply_change_batch(spark, f(ch), meta),
+        lambda v: [v.view])
+    assert rows(mv.read(spark)) == Counter(
+        [(1, "a", 20), (3, "C", 62), (5, "e", 100), (5, "e", 100)])
+    agg = built("agg", lambda r: AggMaterializedView(
+        r, "grp", "val", n_buckets=4, capture_changes=True),
+        lambda v, f: v.apply_change_batch(spark, f(ch), meta),
+        lambda v: [v.view])
+    assert {("a", 1, 10), ("C", 1, 31), ("e", 2, 100)} <= {
+        (r.grp, r.cnt, r.sm) for r in agg.read(spark).collect()}
+    jmv = built("join", lambda r: JoinMaterializedView(
+        r, "id", n_buckets=4, capture_changes=True),
+        lambda v, f: v.apply_change_batch(spark, f(lch), f(rch), meta),
+        lambda v: [v.left_state, v.right_state, v.view])
+    assert rows(jmv.read(spark)) == Counter(
+        [(1, "a", 10), (3, "C", 31)] + [(5, "e", 50)] * 4)

@@ -135,11 +135,11 @@ def test_single_stream_full_history_with_restarts(spark, tmp_path):
             (jmv1.view, aggv.view, jmv2.view, prime.view)] == versions
 
 
-def _logged_versions(ckpt: str, batch_id: int) -> dict:
-    """The per-table log versions the checkpoint's offset log recorded
-    as the end of ``batch_id``."""
-    with open(os.path.join(ckpt, "offsets", str(batch_id))) as fh:
-        return json.loads(fh.read().splitlines()[2])["versions"]
+def _pinned_versions(ckpt: str, batch_id: int) -> dict:
+    """The per-table log versions the change-feed starter pinned in the
+    checkpoint as the end of ``batch_id``."""
+    with open(os.path.join(ckpt, "versions", str(batch_id))) as fh:
+        return json.load(fh)
 
 
 def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
@@ -147,7 +147,7 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
     """Crash INSIDE a trigger, after the jmv1/agg legs committed but
     before the final/prime refreshes ran, and an activity commit lands
     before the restart: the checkpoint has not advanced, so the restart
-    replays the same batch — re-reading exactly its logged version
+    replays the same batch — re-reading exactly its pinned version
     ranges, layers 1-2 skipping via the (app_id, batch_id) ledger,
     layers 3-4 catching up via their high-water refresh — and the late
     commit arrives in the next batch. The chain converges with no
@@ -190,6 +190,7 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
         q.stop()
     jmv1_v = jmv1.view.latest_version()
     assert jmv1_v is not None  # layer 1 DID commit before the crash
+    before, crashed = _pinned_versions(ckpt, 0), _pinned_versions(ckpt, 1)
     # the late input: an activity commit between crash and restart
     act.append(parsed.filter("id % 3 = 2"))
 
@@ -205,12 +206,9 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
         return real_read(self, spark, since_version, upto)
 
     monkeypatch.setattr(TxnTable, "read_changes", _read)
-    # a running query, not availableNow: for a Python source Spark
-    # falls back to one batch per run, which would stop at the replay
     q = start(available_now=False)
     q.processAllAvailable()
     q.stop()
-    before, crashed = _logged_versions(ckpt, 0), _logged_versions(ckpt, 1)
     replayed = [(p, before[p], crashed[p]) for p in sources
                 if crashed[p] > before[p]]
     assert [p for p, _, _ in replayed] == [emp.path, val.path]
@@ -218,6 +216,8 @@ def test_single_stream_crash_between_layers_recovers(spark, tmp_path,
                                  act.latest_version())]
     assert len([p for p in q.recentProgress if p.numInputRows]) == 2
     assert jmv1.view.latest_version() == jmv1_v  # no double apply
+    # records older than the previous batch are purged
+    assert sorted(os.listdir(os.path.join(ckpt, "versions"))) == ["1", "2"]
     assert _got_prime(spark, prime) == _expected_prime(spark, emp,
                                                        val, act)
 

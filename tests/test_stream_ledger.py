@@ -301,12 +301,24 @@ def test_one_append_path_and_one_starter():
     ``commit(adds, [], ...)`` or calls ``_commit_blind`` (append legs
     call ``TxnTable.append``), no ``_guarded_commit`` leg appends, only
     ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``,
-    and no ``streaming/`` module reads ``readStream.format("txnlog")``
-    (change-feed sinks start from ``pipeline._start_change_feed``).
-    Parsed, so docstring usage examples do not count."""
+    no ``streaming/`` module reads ``readStream.format("txnlog")``
+    (change-feed sinks start from ``pipeline._start_change_feed``), and
+    no module streams ``format("txnversions")`` or defines a
+    ``SimpleDataSourceStreamReader`` (no Python data source on a
+    change-feed sink's path). Parsed, so docstring usage examples do
+    not count."""
     hits = []
     for rel, src in _package_modules():
         tree = ast.parse(src)
+        hits += [f"{rel}:{c.lineno}: format('txnversions')"
+                 for c in _calls(tree, "format")
+                 if [getattr(a, "value", None) for a in c.args]
+                 == ["txnversions"]]
+        hits += [f"{rel}:{k.lineno}: SimpleDataSourceStreamReader {k.name}"
+                 for k in ast.walk(tree) if isinstance(k, ast.ClassDef)
+                 and any(getattr(b, "id", getattr(b, "attr", None))
+                         == "SimpleDataSourceStreamReader"
+                         for b in k.bases)]
         if rel.startswith("streaming" + os.sep):
             hits += [f"{rel}:{c.lineno}: readStream.format('txnlog')"
                      for c in _calls(tree, "format")

@@ -1,13 +1,17 @@
-"""The change-feed sinks' version feed (``streaming/pipeline.
-_start_change_feed`` over ``sources/txnstream.TxnVersionFeed``): the
-stream carries only log-version ranges and each trigger reads its rows
-with ``TxnTable.read_changes``. These pin that it delivers what the
-public row-level ``format("txnlog")`` change feed delivers, and that a
-sink restarted on a checkpoint of that row-level feed fails with the
-remedy instead of a ``KeyError`` or Spark's source-count assertion."""
+"""The change-feed starter (``streaming/pipeline._start_change_feed``):
+a native Spark file stream over each source table's commit docs wakes
+the sink, each batch's version range is pinned in the checkpoint
+(``versions/<batch_id>``) and its rows are read with
+``TxnTable.read_changes``. These pin that it delivers what the public
+row-level ``format("txnlog")`` change feed delivers, that a replay
+reads exactly its pinned range, that a missing source fails the start,
+and that a sink restarted on a checkpoint of an earlier feed fails with
+a remedy that neither drops nor doubles rows."""
 
 from __future__ import annotations
 
+import json
+import os
 from collections import Counter
 
 import pytest
@@ -102,7 +106,7 @@ def test_row_feed_checkpoint_fails_loudly_single_source(spark, tmp_path):
     mv = MapMaterializedView(str(tmp_path / "view"), "id", lambda df: df,
                              n_buckets=2)
     with pytest.raises(ValueError,
-                       match="batch refresh.*fresh checkpoint"):
+                       match="new, empty view tables.*fresh checkpoint"):
         write_stream_bucketed_view(spark, src.path, mv, ckpt)
     assert mv.view.latest_version() is None
 
@@ -121,6 +125,111 @@ def test_row_feed_checkpoint_fails_loudly_multi_source(spark, tmp_path):
                                  allowMissingColumns=True), ckpt)
     jmv = JoinMaterializedView(str(tmp_path / "jmv"), "id", n_buckets=2)
     with pytest.raises(ValueError,
-                       match="batch refresh.*fresh checkpoint"):
+                       match="new, empty view tables.*fresh checkpoint"):
         write_stream_join_mv(spark, left.path, right.path, jmv, ckpt)
     assert jmv.view.latest_version() is None
+
+
+def _run(q) -> None:
+    q.awaitTermination(120)
+    q.stop()
+
+
+def test_old_feed_checkpoint_refused_and_remedy_converges(spark, tmp_path):
+    """A sink restarted on a checkpoint of the Python version feed
+    (``{"versions": …}`` offsets) fails with the remedy, and following
+    it — new view tables on a fresh checkpoint, same app id — yields
+    the batch recompute through later batches too."""
+    src = TxnTable(str(tmp_path / "src"))
+    schema = "id int, v int"
+    src.append(spark.createDataFrame([(1, 10), (2, 20)], schema))
+    src.append(spark.createDataFrame([(3, 30)], schema))
+
+    def double(df):
+        return df.select("id", (df.v * 2).alias("v2"))
+
+    old = MapMaterializedView(str(tmp_path / "old"), "id", double,
+                              n_buckets=2)
+    old.refresh(spark, src)
+    ckpt = tmp_path / "ck_old"
+    for d in ("offsets", "commits"):
+        (ckpt / d).mkdir(parents=True)
+    (ckpt / "offsets" / "0").write_text(
+        'v1\n{"batchWatermarkMs":0,"batchTimestampMs":0,"conf":{}}\n'
+        + json.dumps({"versions": {src.path: 1}}) + "\n")
+    (ckpt / "commits" / "0").write_text('v1\n{"nextBatchWatermarkMs":0}\n')
+    before = old.view.latest_version()
+    with pytest.raises(ValueError,
+                       match="new, empty view tables.*fresh checkpoint"):
+        write_stream_bucketed_view(spark, src.path, old, str(ckpt),
+                                   app_id="app")
+    assert old.view.latest_version() == before
+
+    new = MapMaterializedView(str(tmp_path / "new"), "id", double,
+                              n_buckets=2)
+    fresh = str(tmp_path / "ck_fresh")
+    for rows in ([], [(4, 40)], [(5, 50), (6, 60)]):
+        if rows:
+            src.append(spark.createDataFrame(rows, schema))
+        _run(write_stream_bucketed_view(spark, src.path, new, fresh,
+                                        app_id="app"))
+        assert _rows(new.read(spark)) == _rows(double(src.read(spark)))
+
+
+def test_replay_reads_its_pinned_range(spark, tmp_path, crash_at_commit,
+                                       monkeypatch):
+    """Crash after the batch's range record is written but before the
+    sink's commit, land a new commit, restart: the replay reads exactly
+    the recorded range, the new commit arrives in the next batch, and
+    records older than the previous batch are gone."""
+    src = TxnTable(str(tmp_path / "src"))
+    schema = "id int, v int"
+    mv = MapMaterializedView(str(tmp_path / "view"), "id", lambda df: df,
+                             n_buckets=2)
+    ckpt = str(tmp_path / "ckpt")
+    records = os.path.join(ckpt, "versions")
+
+    def start():
+        return write_stream_bucketed_view(spark, src.path, mv, ckpt,
+                                          app_id="replay")
+
+    src.append(spark.createDataFrame([(1, 10)], schema))
+    _run(start())                                     # batch 0
+    src.append(spark.createDataFrame([(2, 20)], schema))
+    with crash_at_commit(mv.view.path, 1) as crash:  # batch 1 dies
+        q = start()
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+        q.stop()
+    assert crash.hits == 1
+    with open(os.path.join(records, "1")) as fh:
+        assert json.load(fh) == {src.path: 1}
+    src.append(spark.createDataFrame([(3, 30)], schema))   # version 2
+
+    reads, real = [], TxnTable.read_changes
+
+    def _read(self, spark_, since_version, upto=None):
+        reads.append((since_version, upto))
+        return real(self, spark_, since_version, upto)
+
+    monkeypatch.setattr(TxnTable, "read_changes", _read)
+    _run(start())
+    assert reads == [(0, 1), (1, 2)]
+    assert sorted(os.listdir(records)) == ["1", "2"]
+    assert _rows(mv.read(spark)) == _rows(src.read(spark))
+
+
+def test_missing_source_fails_loudly(spark, tmp_path):
+    """A source table that does not exist yet fails the start with a
+    ``ValueError`` naming it; nothing is created for it, for the other
+    sources or for the checkpoint."""
+    src = TxnTable(str(tmp_path / "src"))
+    src.append(spark.createDataFrame([(1, 10)], "id int, v int"))
+    missing = str(tmp_path / "later")
+    ckpt = tmp_path / "ckpt"
+    listing = sorted(os.listdir(src.log_dir))
+    with pytest.raises(ValueError, match="later.*not a transactional"):
+        _start_change_feed(spark, [src.path, missing],
+                           lambda changes, _: None, str(ckpt), True)
+    assert not os.path.exists(missing) and not ckpt.exists()
+    assert sorted(os.listdir(src.log_dir)) == listing
