@@ -25,9 +25,18 @@ partials, overwritten per refresh — right while the group count stays
 tiny (per-BU rollups). The bucketed views (join, agg, map) share
 :class:`_BucketedView`: ``__kb`` partition-granular bucket replace and
 net-count application, so a refresh rewrites only the buckets its
-changed keys hash to. The single-source ones also share one high-water
-fold (:meth:`_SingleSourceView.fold`), which the streaming index legs
-(streaming/bm25.py, streaming/chunkbm25.py) call as well.
+changed keys hash to.
+
+Every single-source derived state keeps the same bookkeeping: the
+source version it last absorbed, in its own commit meta, read back with
+``TxnTable.meta_with``. :func:`fold_changes` is the one fold over that
+high-water — ``maintain_agg_view``, the single-source bucketed views
+(and through them the streaming BM25 legs, streaming/bm25.py and
+streaming/chunkbm25.py) and the sketch legs (streaming/distinct.py,
+streaming/sketches.py, streaming/quantiles.py) differ only in the
+combine step they pass it and their meta key. :func:`pinned` is the one
+serve-side pin of such a state to the source version it records. The
+two-source join view keeps its own per-leg bookkeeping.
 """
 
 from __future__ import annotations
@@ -41,32 +50,64 @@ from pyspark.sql import functions as F
 from ..sources.txnlog import TxnTable, agg_delta_from_changes
 
 
-def _last_meta_with(table: TxnTable, key: str) -> dict:
-    """The most recent commit meta carrying ``key`` — NOT simply the
-    last commit's meta: a layout-only commit interleaved between
-    refreshes (OPTIMIZE/compaction on the view) must not clobber the
-    refresher's high-water bookkeeping, or the next refresh silently
-    degrades to a full rebuild (and, for a capture_changes view, hands
-    every downstream consumer a needless resync). The backward walk is
-    bounded by how many non-refresh commits landed since the last
-    refresh — ~one compaction, in practice."""
-    return _last_meta_version_with(table, key)[0]
+def fold_changes(spark: SparkSession, source: TxnTable, state: TxnTable,
+                 key: str, apply, rebuild=None,
+                 replay_first: bool = False) -> int:
+    """The single-source high-water fold every derived-state leg shares:
+    read ``source``'s change rows since the version ``state`` last
+    recorded under ``key`` (its newest commit meta carrying it), up to
+    the source's version now, and hand them to ``apply(changes,
+    version)``, which commits ``state`` with ``key: version`` in its
+    meta. Returns the source version now reflected; nothing is applied
+    when the source has not moved. Bounded to the captured version: a
+    commit landing mid-fold is left to the next fold, whose
+    since_version is this one's target. A crash between a leg that
+    feeds ``source`` and this fold is healed by the next fold, whose
+    window covers both.
+
+    ``rebuild`` — ``callable(version, resync)`` — builds ``state`` from
+    the source snapshot at ``version``: for the first fold (``resync``
+    False; unless ``replay_first``, which replays the whole feed
+    instead) and over history the feed cannot express row-wise
+    (``resync`` True — flag the commit ``mv_resync``). Without it (the
+    streaming legs) the first fold replays the whole feed and
+    non-row-wise history raises ``ValueError``: a rebuild there would
+    skip the leg's ledger guard and the running totals it folds into
+    its commit meta."""
+    sv = source.latest_version()
+    if sv is None:
+        raise ValueError(f"source has no commits: {source.path}")
+    last = state.meta_with(key)[0].get(key, -1)
+    if sv <= last:
+        return last
+    if last < 0 and rebuild is not None and not replay_first:
+        rebuild(sv, False)
+        return sv
+    try:
+        changes = source.read_changes(spark, since_version=last, upto=sv)
+    except ValueError:
+        if rebuild is None:
+            raise
+        rebuild(sv, True)
+        return sv
+    apply(changes, sv)
+    return sv
 
 
-def _last_meta_version_with(table: TxnTable, key: str
-                            ) -> tuple[dict, int | None]:
-    """(meta, version) — like :func:`_last_meta_with` but also returns
-    the commit VERSION that carried the meta, so a serve can pin its
-    data read at exactly that commit: reading the meta at one version
-    and the data unpinned leaves a window where a refresh landing
-    between the two reads pairs fresh data with stale bookkeeping."""
-    v = table.latest_version()
-    while v is not None and v >= 0:
-        meta = table._doc(v).get("meta", {})  # noqa: SLF001
-        if key in meta:
-            return meta, v
-        v -= 1
-    return {}, None
+def pinned(spark: SparkSession, state: TxnTable,
+           key: str) -> tuple[DataFrame, int]:
+    """(state read at its newest commit carrying ``key``, the source
+    version ``key`` records there) — the serve-side pin of a maintained
+    state and its source. Serving reads the source AT the returned
+    version, and the state at the commit the bookkeeping came from: a
+    fold landing between the serve's reads can then never pair fresher
+    state with a staler source, or the reverse. Requires the source
+    version's files to still be retained (vacuum with it as the
+    retention floor — the time-travel contract)."""
+    meta, v = state.meta_with(key)
+    if v is None:
+        raise ValueError(f"no commit of {state.path} records {key}")
+    return state.read(spark, version=v), int(meta[key])
 
 
 def maintain_agg_view(spark: SparkSession, source: TxnTable,
@@ -76,8 +117,9 @@ def maintain_agg_view(spark: SparkSession, source: TxnTable,
     """Bring ``view`` (per-group ``cnt``/``sm`` partials over
     ``source``) up to the source's latest version. Returns the source
     version now reflected. Idempotent: re-running with no new source
-    commits is a no-op (no empty commit). Non-row-wise history
-    degrades to a flagged rescan from the snapshot.
+    commits is a no-op (no empty commit). The first refresh replays the
+    whole feed; non-row-wise history degrades to a flagged rescan from
+    the snapshot.
 
     ``capture_changes``: write row-level change files (CHANGED GROUPS
     only — old partial rows as ``delete``, new as ``insert``, volume
@@ -88,33 +130,25 @@ def maintain_agg_view(spark: SparkSession, source: TxnTable,
     JOINs the activity aggregate, read_delta.py:280-285). Rescan
     refreshes carry no row-level delta and commit without change
     files; downstream consumers resync there, Delta's rule."""
-    src_v = source.latest_version()
-    if src_v is None:
-        raise ValueError(f"source has no commits: {source.path}")
-    last = (_last_meta_with(view, "mv_source_version")
-            .get("mv_source_version", -1))
-    if src_v <= last:
-        return last
-    meta = {"operation": "mv_refresh", "mv_source_version": src_v}
-    try:
-        # bounded to src_v: a commit landing mid-refresh must NOT be
-        # applied now (it would be replayed next refresh, whose
-        # since_version is this src_v — double-applying its delta)
-        changes = source.read_changes(spark, since_version=last,
-                                      upto=src_v)
-    except ValueError:  # non-row-level history: full resync
-        snap = source.read(spark, version=src_v)
+    def _meta(sv: int) -> dict:
+        return {"operation": "mv_refresh", "mv_source_version": sv}
+
+    def _apply(changes: DataFrame, sv: int) -> None:
+        delta = agg_delta_from_changes(changes, group_cols, value_col)
+        new = apply_delta(spark, view, delta, group_cols)
+        ch_df = (agg_view_changes(spark, view, delta, group_cols, new)
+                 if capture_changes else None)
+        # the view is O(groups) — tiny next to the source — so an
+        # atomic overwrite is the right write shape at any scale
+        view.overwrite(new, _meta(sv), changes=ch_df)
+
+    def _rescan(sv: int, _resync: bool) -> None:
+        snap = source.read(spark, version=sv)
         view.overwrite(_partials(snap, group_cols, value_col),
-                       {**meta, "mv_resync": True})
-        return src_v
-    delta = agg_delta_from_changes(changes, group_cols, value_col)
-    new = apply_delta(spark, view, delta, group_cols)
-    ch_df = (agg_view_changes(spark, view, delta, group_cols, new)
-             if capture_changes else None)
-    # the view is O(groups) — tiny next to the source — so an atomic
-    # overwrite is the right write shape at any scale
-    view.overwrite(new, meta, changes=ch_df)
-    return src_v
+                       {**_meta(sv), "mv_resync": True})
+
+    return fold_changes(spark, source, view, "mv_source_version", _apply,
+                        _rescan, replay_first=True)
 
 
 def agg_view_changes(spark: SparkSession, view: TxnTable,
@@ -426,7 +460,7 @@ class JoinMaterializedView(_BucketedView):
         lv, rv = left.latest_version(), right.latest_version()
         if lv is None or rv is None:
             raise ValueError("both sources need at least one commit")
-        last = _last_meta_with(self.view, "mv_left_version")
+        last = self.view.meta_with("mv_left_version")[0]
         llast = last.get("mv_left_version", -1)
         rlast = last.get("mv_right_version", -1)
         if lv <= llast and rv <= rlast:
@@ -474,7 +508,7 @@ class JoinMaterializedView(_BucketedView):
             return view_feed
         own_key = ("mv_left_version" if state is self.left_state
                    else "mv_right_version")
-        m = _last_meta_with(state, own_key)
+        m = state.meta_with(own_key)[0]
         own = m.get(own_key, view_last)
         if own <= view_last:
             return view_feed          # state in lockstep with view
@@ -588,41 +622,24 @@ class _SingleSourceView(_BucketedView):
 
     def fold(self, spark: SparkSession, source: TxnTable, meta: dict,
              guard=None, rebuild=None) -> int:
-        """The single-source high-water fold: apply ``source``'s change
-        rows since the version this view last recorded, up to the
-        source's version now, as ONE ``apply_change_batch`` (``guard``
-        passed through) whose commit meta is ``meta`` plus the new
-        ``mv_source_version``. Returns the source version now
-        reflected; no commit when the source has not moved. Bounded to
-        the captured version: a commit landing mid-fold is left to the
-        next fold, whose since_version is this one's target.
+        """:func:`fold_changes` over this view under
+        ``mv_source_version``: the change rows since the view's record
+        go through ONE ``apply_change_batch`` (``guard`` passed
+        through) whose commit meta is ``meta`` plus the new
+        ``mv_source_version``. ``rebuild`` — ``callable(spark, source,
+        version, meta)`` — is how :meth:`refresh` builds the first view
+        and resyncs from the snapshot; the streaming index legs pass
+        none."""
+        def _meta(sv: int, resync: bool = False) -> dict:
+            return {**meta, "mv_source_version": sv,
+                    **({"mv_resync": True} if resync else {})}
 
-        ``rebuild`` — ``callable(spark, source, version, meta)`` — is
-        how :meth:`refresh` builds the first view and resyncs from the
-        snapshot. Without it (the streaming index legs) the first fold
-        replays the whole feed and non-row-wise history raises
-        ``ValueError``: a rebuild there would skip the leg's ledger
-        guard and the running totals it folds into its commit meta."""
-        sv = source.latest_version()
-        if sv is None:
-            raise ValueError(f"source has no commits: {source.path}")
-        last = (_last_meta_with(self.view, "mv_source_version")
-                .get("mv_source_version", -1))
-        if sv <= last:
-            return last
-        meta = {**meta, "mv_source_version": sv}
-        if last < 0 and rebuild is not None:
-            rebuild(spark, source, sv, meta)
-            return sv
-        try:
-            ch = source.read_changes(spark, since_version=last, upto=sv)
-        except ValueError:
-            if rebuild is None:
-                raise
-            rebuild(spark, source, sv, {**meta, "mv_resync": True})
-            return sv
-        self.apply_change_batch(spark, ch, meta, guard=guard)
-        return sv
+        return fold_changes(
+            spark, source, self.view, "mv_source_version",
+            lambda ch, sv: self.apply_change_batch(spark, ch, _meta(sv),
+                                                   guard=guard),
+            rebuild and (lambda sv, resync: rebuild(
+                spark, source, sv, _meta(sv, resync))))
 
     def _rebuild_from(self, spark, source: TxnTable, sv: int,
                       meta: dict) -> None:

@@ -1,7 +1,8 @@
 """Batch source/sink adapters — the reference's I/O edges re-expressed.
 
 Sources: S4 JDBC scan (read_delta.py:59-111), S5 Excel scan
-(commute_validation.py:187), S3 lakehouse scan (read_delta.py:47-53).
+(commute_validation.py:187); the S3 lakehouse scan (read_delta.py:47-53)
+is ``sources/tables.load_table``.
 Sinks: K2 batch overwrite (read_delta.py:219-222), K3 JDBC bulk insert
 (sql_scripts.py:104-148), K6 console.
 
@@ -21,11 +22,6 @@ Scale fixes over the reference, by design:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_lakehouse(spark: SparkSession, path: str) -> DataFrame:
-    """S3: lakehouse table scan (format-agnostic parquet/Delta)."""
-    return spark.read.parquet(path)
 
 
 def read_jdbc_partitioned(spark: SparkSession, url: str, table: str,
@@ -140,14 +136,6 @@ def write_overwrite(df: DataFrame, path: str,
     """K2: full-refresh batch sink (read_delta.py:219-222 semantics —
     overwriteSchema ≡ parquet overwrite). Partitioned layout opt-in."""
     w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_append(df: DataFrame, path: str,
-                 partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)

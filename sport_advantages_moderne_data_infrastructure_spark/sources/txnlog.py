@@ -886,6 +886,26 @@ class TxnTable:
         v = self.latest_version()
         return {} if v is None else self._doc(v).get("meta", {})
 
+    def meta_with(self, key: str, version: int | None = None
+                  ) -> tuple[dict, int | None]:
+        """(meta, version) of the newest commit at or before ``version``
+        (default latest) whose meta carries ``key``; ``({}, None)`` when
+        no commit does. This is how a maintainer reads its high-water
+        bookkeeping: NOT simply the last commit's meta, because a
+        layout-only commit (a compaction) landing between refreshes
+        must not hide it, or the next refresh silently degrades to a
+        full rebuild. The version lets a serve pin its data read at
+        exactly the commit the bookkeeping came from. The backward walk
+        is bounded by how many commits without ``key`` landed since —
+        ~one compaction, in practice."""
+        v = self.latest_version() if version is None else version
+        while v is not None and v >= 0:
+            meta = self._doc(v).get("meta", {})
+            if key in meta:
+                return meta, v
+            v -= 1
+        return {}, None
+
     def max_stream_batch_id(self, app_id: str | None = None) -> int | None:
         """Highest ``stream_batch_id`` recorded by ANY commit (optionally
         restricted to commits whose ``stream_app_id`` matches ``app_id``).

@@ -161,29 +161,21 @@ def index_drift_report(idx: TxnTable, n_centroids: int,
                        min_balance: float = DRIFT_MIN_BALANCE,
                        k_factor: float = DRIFT_K_FACTOR) -> dict:
     """Metadata-only drift check over a maintained (IVF or IVF-PQ)
-    index table: per-list row counts are summed from the commit log's
-    per-dir footers (``centroid_id=`` partition subdirs), so the check
-    costs O(commits) metadata reads — run it per batch or per N
-    batches without touching data. Returns the metrics plus
-    ``drifted`` and the reasons that fired."""
+    index table: per-list row counts are summed from the log's live
+    per-dir row counts (``centroid_id=`` partition subdirs; net of
+    deletion vectors, replayed from the newest checkpoint), so the
+    check touches no data — run it per batch or per N batches. Returns
+    the metrics plus ``drifted`` and the reasons that fired."""
     import math
 
     from ..operators.ivf import k_for_corpus
 
     sizes: dict[int, int] = {}
-    live = set(idx.snapshot_dirs())
-    v = idx.latest_version()
-    seen: set[str] = set()
-    while v is not None and v >= 0:
-        doc = idx._doc(v)  # noqa: SLF001
-        for rel, n in (doc.get("rows") or {}).items():
-            if rel in live and rel not in seen:
-                seen.add(rel)
-                part = os.path.basename(rel)
-                if "=" in part:
-                    cid = int(part.split("=", 1)[1])
-                    sizes[cid] = sizes.get(cid, 0) + int(n)
-        v -= 1
+    for rel, n in idx._live_rows().items():  # noqa: SLF001
+        part = os.path.basename(rel)
+        if n is not None and "=" in part:
+            cid = int(part.split("=", 1)[1])
+            sizes[cid] = sizes.get(cid, 0) + n
     n_total = sum(sizes.values())
     k_target = k_for_corpus(n_total)
     mean = n_total / n_centroids if n_centroids else 0.0

@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.mv import (AggMaterializedView, _last_meta_version_with,
-                            _last_meta_with)
+from ..operators.mv import AggMaterializedView, pinned
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .pipeline import _start_foreach_batch
 
@@ -60,7 +59,7 @@ def ingest_batch(postings: TxnTable, df_view: AggMaterializedView,
                .agg(F.count(F.lit(1)), F.sum("dl")).first())
         b_docs, b_len = int(row[0]), int(row[1] or 0)
 
-        prev = _last_meta_with(postings, "bm25_n_docs")
+        prev = postings.meta_with("bm25_n_docs")[0]
         meta = _stream_meta(batch_id, app_id, "bm25_postings_append")
         meta["bm25_n_docs"] = prev.get("bm25_n_docs", 0) + b_docs
         meta["bm25_total_len"] = prev.get("bm25_total_len", 0) + b_len
@@ -120,38 +119,24 @@ def read_bm25_index(spark: SparkSession, index_root: str,
     """(postings, df, n_docs, avgdl) from a maintained index — the same
     quadruple ``plans/textops.bm25_index`` returns for the batch build,
     so ``operators/retrieval.bm25_topk`` serves from either. The
-    quadruple is a CONSISTENT snapshot (the r10 serve-pinning
-    discipline shared with streaming/sketches.py): postings are read
-    AT the df view's recorded fold version, and the corpus scalars
+    quadruple is a CONSISTENT snapshot (operators/mv.pinned): the df
+    view is read at the commit carrying its fold record, postings
+    AT the fold version it records, and the corpus scalars
     come from the postings commit meta at/before it — an ingest
     landing between the serve's reads can never pair fresher postings
     (whose new tokens would be unscored and whose n_docs/avgdl would
     be ahead) with a stale df view. Scalars stay O(1), no corpus
     scan."""
     postings = TxnTable(index_root + "/postings")
-    dfv_t = make_df_view(index_root, n_buckets)
-    if dfv_t.view.latest_version() is None:
-        raise ValueError(f"no maintained df view under {index_root}")
-    # the df view's own version is captured WITH the fold meta and the
-    # df read pinned at it below — same one-snapshot discipline as the
-    # chunk serve (a refresh between the meta read and the df read
-    # must not pair fresher df counts with postings pinned at sv)
-    dfv_meta, dfv_version = _last_meta_version_with(
-        dfv_t.view, "mv_source_version")
-    sv = int(dfv_meta["mv_source_version"])
-    v = sv
-    while v >= 0:  # newest postings commit at/before the fold version
-        meta = postings._doc(v).get("meta", {})  # noqa: SLF001
-        if "bm25_n_docs" in meta:
-            break
-        v -= 1
-    else:
+    dfv, sv = pinned(spark, make_df_view(index_root, n_buckets).view,
+                     "mv_source_version")
+    meta, _ = postings.meta_with("bm25_n_docs", version=sv)
+    if not meta:
         raise ValueError(f"no bm25 scalars at/before version {sv}")
     n_docs = meta["bm25_n_docs"]
     # same guard as the chunk serve: an empty accumulated corpus is a
     # legal state (the sink skips empty batches, but a caller may read
     # before the first non-empty one lands via the batch-twin path)
     avgdl = (meta["bm25_total_len"] / n_docs) if n_docs else 0.0
-    dfv = (dfv_t.read(spark, version=dfv_version)
-           .select("tok", F.col("cnt").alias("df")))
-    return postings.read(spark, version=sv), dfv, n_docs, avgdl
+    return (postings.read(spark, version=sv),
+            dfv.select("tok", F.col("cnt").alias("df")), n_docs, avgdl)

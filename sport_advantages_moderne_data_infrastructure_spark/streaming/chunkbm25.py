@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import (AggMaterializedView, MapMaterializedView,
-                            _last_meta_version_with, _last_meta_with)
+                            pinned)
 from ..operators.retrieval import chunk_postings_frame
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .pipeline import _start_change_feed
@@ -112,7 +112,7 @@ class ChunkPostingsView(MapMaterializedView):
             applied = projected.drop("__rid")
 
             def _leg():
-                prev = _last_meta_with(self.view, "cbm25_n_chunks")
+                prev = self.view.meta_with("cbm25_n_chunks")[0]
                 m = {**meta,
                      "cbm25_n_chunks":
                          prev.get("cbm25_n_chunks", 0) + d_chunks,
@@ -204,22 +204,9 @@ def read_chunk_bm25_index(spark: SparkSession, index_root: str,
     are read AT the cdf view's recorded fold version; scalars are O(1)
     commit-meta reads at/before that version, never a corpus scan."""
     cpost, cdfv = make_chunk_views(index_root, n_buckets)
-    if cdfv.view.latest_version() is None:
-        raise ValueError(f"no maintained chunk index under {index_root}")
-    # capture the cdf view's OWN version together with the fold meta,
-    # and pin the cdf read at it below — a refresh committing between
-    # this meta read and the cdf read must not pair fresher document
-    # frequencies with the stale postings pinned at sv
-    cdf_meta, cdf_version = _last_meta_version_with(
-        cdfv.view, "mv_source_version")
-    sv = int(cdf_meta["mv_source_version"])
-    v = sv
-    while v >= 0:  # newest cpost commit meta at/before the fold version
-        meta = cpost.view._doc(v).get("meta", {})  # noqa: SLF001
-        if "cbm25_n_chunks" in meta:
-            break
-        v -= 1
-    else:
+    cdf, sv = pinned(spark, cdfv.view, "mv_source_version")
+    meta, _ = cpost.view.meta_with("cbm25_n_chunks", version=sv)
+    if not meta:
         raise ValueError(f"no chunk scalars at/before version {sv}")
     n_chunks = meta["cbm25_n_chunks"]
     # a fully-retracted corpus is a legal maintained state (every doc
@@ -227,10 +214,9 @@ def read_chunk_bm25_index(spark: SparkSession, index_root: str,
     avgdl = (meta["cbm25_total_len"] / n_chunks) if n_chunks else 0.0
     ctf = (cpost.view.read(spark, version=sv).drop("__kb"))
     cdl = ctf.select("doc_id", "pos", "dl").distinct()
-    cdf = (cdfv.read(spark, version=cdf_version)
-           .select("tok", F.col("cnt").alias("df")))
-    return (ctf.select("doc_id", "pos", "tok", "tf", "dl"),
-            cdl, cdf, int(n_chunks), float(avgdl))
+    return (ctf.select("doc_id", "pos", "tok", "tf", "dl"), cdl,
+            cdf.select("tok", F.col("cnt").alias("df")),
+            int(n_chunks), float(avgdl))
 
 
 def checkpoint_if_needed(index_root: str,

@@ -13,11 +13,12 @@ Per micro-batch (the foreachBatch sink and the driver-gated batch
 twin ``stream_approx_distinct_equiv`` run the SAME ``ingest_batch``):
 
 - events leg: append the batch's (group, value) rows, replay-guarded.
-- sketch leg: fold the events CHANGE FEED since the sketch's recorded
-  high-water through ``hll_sketch_agg`` partials + ``hll_union_agg``
-  with the stored rows, and atomically overwrite the <= n_groups-row
-  sketch table (the bm25 df-leg crash discipline: a crash between
-  legs leaves events ahead, and the next batch's fold covers both).
+- sketch leg: the shared high-water fold (operators/mv.fold_changes,
+  meta key ``hll_source_version``) hands it the events CHANGE FEED
+  since the sketch's record; it combines ``hll_sketch_agg`` partials
+  with the stored rows through ``hll_union_agg`` and atomically
+  overwrites the <= n_groups-row sketch table (a crash between legs
+  leaves events ahead, and the next batch's fold covers both).
 
 Serving:
 
@@ -26,9 +27,9 @@ Serving:
 - :func:`distinct_contract_served` — the gate's contract shape
   (group, n_exact, within_tol): exact COUNT(DISTINCT) over the
   accumulated events READ AT the sketch's recorded source version
-  (the :mod:`.sketches` pinned-pair discipline — a consistent
-  snapshot under concurrent ingest), estimate from the maintained
-  sketch, tolerance flag literal-TRUE-able by a relational oracle.
+  (operators/mv.pinned — a consistent snapshot under concurrent
+  ingest), estimate from the maintained sketch, tolerance flag
+  literal-TRUE-able by a relational oracle.
 
 NULL contract: NULL values never enter the sketch (hll_sketch_agg
 skips them) and never count in COUNT(DISTINCT) — the two arms agree
@@ -47,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.mv import _last_meta_version_with, _last_meta_with
+from ..operators.mv import fold_changes, pinned
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .pipeline import _start_foreach_batch
 
@@ -77,12 +78,8 @@ def ingest_batch(events: TxnTable, sketch: TxnTable,
                   _stream_meta(batch_id, app_id, "hll_events_append"))
     events.checkpoint_if_needed()
 
-    sv = events.latest_version()
-    last = (_last_meta_with(sketch, "hll_source_version")
-            .get("hll_source_version", -1))
-    if sv > last:
-        ch = (events.read_changes(spark, since_version=last, upto=sv)
-              .filter(F.col("_change_type") == "insert")
+    def _union(ch: DataFrame, sv: int) -> None:
+        ch = (ch.filter(F.col("_change_type") == "insert")
               .filter(F.col(col).isNotNull()))
         fresh = ch.groupBy(*gcols).agg(
             F.expr(f"hll_sketch_agg({col}, {lg_k})").alias("hll"))
@@ -98,6 +95,8 @@ def ingest_batch(events: TxnTable, sketch: TxnTable,
             sketch.overwrite(merged, meta)
 
         _guarded_commit(sketch, batch_id, app_id, _sketch_leg)
+
+    fold_changes(spark, events, sketch, "hll_source_version", _union)
 
 
 def write_stream_approx_distinct(df: DataFrame, root: str,
@@ -134,30 +133,11 @@ def compact_if_needed(spark: SparkSession, root: str,
     return events.compact_if_needed(spark, max_live_dirs=max_live_dirs)
 
 
-def _pinned_pair(spark: SparkSession, root: str):
-    """(events_df, sketch_df) as a CONSISTENT snapshot: events read AT
-    the version the stored sketch was folded from — the serve-path
-    pinning discipline shared with streaming/sketches.py (an ingest
-    landing between the two serve reads must not pair a stale sketch
-    with fresher events)."""
-    events, sketch = _tables(root)
-    if sketch.latest_version() is None:
-        raise ValueError(f"no maintained sketch under {root}")
-    meta, hv = _last_meta_version_with(sketch, "hll_source_version")
-    if "hll_source_version" not in meta:
-        raise ValueError(f"sketch under {root} records no source version")
-    sv = int(meta["hll_source_version"])
-    # the sketch read pins at the SAME commit the meta came from — a
-    # fold landing between the meta read and this read must not pair a
-    # fresher sketch with events pinned at the stale source version
-    return events.read(spark, version=sv), sketch.read(spark, version=hv)
-
-
 def approx_distinct_served(spark: SparkSession, root: str,
                            group_col: str | None = None) -> DataFrame:
     """(group?, n_approx) from the maintained binaries — O(1) data
     touched, never a scan of the accumulated events."""
-    _, sketch_df = _pinned_pair(spark, root)
+    sketch_df, _ = pinned(spark, _tables(root)[1], "hll_source_version")
     gcols = [group_col] if group_col else []
     return sketch_df.select(
         *gcols,
@@ -175,7 +155,9 @@ def distinct_contract_served(spark: SparkSession, root: str, col: str,
     landed within ``tol`` of it (0-exact groups require a 0 estimate).
     Groups come from the exact arm (left join), so a group whose
     values were all NULL still appears with n_exact = 0."""
-    events_df, sketch_df = _pinned_pair(spark, root)
+    events, sketch = _tables(root)
+    sketch_df, sv = pinned(spark, sketch, "hll_source_version")
+    events_df = events.read(spark, version=sv)
     gcols = [group_col] if group_col else []
     exact = events_df.groupBy(*gcols).agg(
         F.countDistinct(col).cast("bigint").alias("n_exact"))

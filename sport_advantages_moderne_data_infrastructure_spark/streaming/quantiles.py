@@ -16,8 +16,9 @@ bracket index itself —
   pure function of its value and appends never touch old buckets).
 - ``hist``: per-bucket EXACT counts (<= n_vb + 2 rows), folded per
   micro-batch from the vals CHANGE FEED since the hist's recorded
-  high-water (the bm25 df-leg crash discipline: a crash between legs
-  leaves vals ahead, and the next batch's fold covers both batches).
+  high-water by the shared fold (operators/mv.fold_changes, meta key
+  ``q_source_version``): a crash between legs leaves vals ahead, and
+  the next batch's fold covers both batches.
   Histogram counts are exact deltas of an append-only stream, so —
   unlike the batch operator's sketch — NO verification round is ever
   needed.
@@ -48,7 +49,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.mv import _last_meta_version_with, _last_meta_with
+from ..operators.mv import fold_changes, pinned
 from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
 from .pipeline import _start_foreach_batch
 
@@ -101,13 +102,9 @@ def ingest_batch(vals: TxnTable, hist: TxnTable, batch_df: DataFrame,
     vals.append(rows.repartition(16, "__vb"), meta)
     vals.checkpoint_if_needed()
 
-    sv = vals.latest_version()
-    last = (_last_meta_with(hist, "q_source_version")
-            .get("q_source_version", -1))
-    if sv > last:
-        ch = (vals.read_changes(spark, since_version=last, upto=sv)
-              .filter(F.col("_change_type") == "insert"))
-        delta = (ch.groupBy(*gcols, "__vb")
+    def _count(ch: DataFrame, sv: int) -> None:
+        delta = (ch.filter(F.col("_change_type") == "insert")
+                 .groupBy(*gcols, "__vb")
                  .agg(F.count(F.lit(1)).alias("cnt")))
         if hist.latest_version() is not None:
             delta = (hist.read(spark).unionByName(delta)
@@ -122,6 +119,8 @@ def ingest_batch(vals: TxnTable, hist: TxnTable, batch_df: DataFrame,
                 F.col("cnt").cast("long").alias("cnt")), meta)
 
         _guarded_commit(hist, batch_id, app_id, _hist_leg)
+
+    fold_changes(spark, vals, hist, "q_source_version", _count)
 
 
 def write_stream_quantiles(df: DataFrame, root: str, checkpoint: str,
@@ -168,28 +167,6 @@ def compact_if_needed(spark: SparkSession, root: str,
 #: (heavy-tailed domains put most mass in one equi-width cell — the
 #: NORM for durations/token counts, not a corner).
 HOT_BUCKET_LIMIT = 100_000
-
-
-def _pinned_hist(spark: SparkSession, root: str):
-    """(vals, hist_df, src_version): the histogram at its latest
-    version plus the vals version it was folded from. Serving MUST
-    read vals AT that version (time travel) — hist and vals commit in
-    separate legs, so an ingest landing between the two serve reads
-    would otherwise pair a stale histogram's ranks with fresher bucket
-    rows and return silently WRONG quantiles (not merely stale ones).
-    The pinned pair is consistent under any concurrency; it requires
-    the source version's files to still be retained (no vacuum past
-    it — the standard time-travel contract)."""
-    vals, hist = _tables(root)
-    if hist.latest_version() is None:
-        raise ValueError(f"no maintained state under {root}")
-    meta, hv = _last_meta_version_with(hist, "q_source_version")
-    if "q_source_version" not in meta:
-        raise ValueError(f"hist under {root} records no source version")
-    # the histogram read pins at the commit its meta came from — a
-    # fold between the meta read and this read must not pair fresher
-    # histogram ranks with the stale source version returned here
-    return vals, hist.read(spark, version=hv), int(meta["q_source_version"])
 
 
 def _ranked_read(rows, targets: list[tuple], tag_cond) -> dict:
@@ -257,9 +234,13 @@ def quantiles_served(spark: SparkSession, root: str, qs: list[float],
     grid skew) fall back to the batch bracketing engine over the
     pruned bucket, so serve cost is bounded regardless of how the
     frozen grid splits the mass. Data is read at the vals version the
-    histogram recorded (see :func:`_pinned_hist`). Never scans or
-    sorts the corpus."""
-    vals, hist_df, src = _pinned_hist(spark, root)
+    histogram recorded (operators/mv.pinned). Never scans or sorts the
+    corpus."""
+    vals, hist = _tables(root)
+    # vals is read AT the version the histogram recorded: a stale
+    # histogram's ranks paired with fresher bucket rows would return
+    # silently WRONG quantiles, not merely stale ones
+    hist_df, src = pinned(spark, hist, "q_source_version")
     extra = set(hist_df.columns) - {"__vb", "cnt"}
     if extra:
         raise ValueError(
@@ -315,8 +296,9 @@ def grouped_quantiles_served(spark: SparkSession, root: str,
     matter how many groups' ranks land in it. Hot (group, bucket)
     cells (> ``hot_bucket_limit`` rows) fall back to the bracketing
     engine over the pruned, group-filtered bucket. Data is read at
-    the vals version the histogram recorded (:func:`_pinned_hist`)."""
-    vals, hist_df, src = _pinned_hist(spark, root)
+    the vals version the histogram recorded (operators/mv.pinned)."""
+    vals, hist = _tables(root)
+    hist_df, src = pinned(spark, hist, "q_source_version")
     if group_col not in hist_df.columns:
         raise ValueError(
             f"root {root} holds no group column {group_col!r} "

@@ -14,18 +14,20 @@ Per micro-batch (the foreachBatch sink and the driver-gated batch twin
 - events leg: append the batch's key column to the events table,
   replay-guarded; the running row count ACCUMULATES in commit meta
   (``mg_n_rows``), so the sketch-only serving path gets n in O(1).
-- sketch leg: fold the events CHANGE FEED since the sketch's recorded
-  high-water into the stored sketch (batch MG sketch -> pointwise sum
-  -> one truncation) and atomically overwrite the <= k-row sketch
-  table. Reading the feed (not the batch frame) gives the join-MV
-  crash discipline for free: a crash between legs leaves the events
-  table ahead, and the next batch's feed covers both batches.
+- sketch leg: the shared high-water fold (operators/mv.fold_changes,
+  meta key ``mg_source_version``) hands it the events CHANGE FEED
+  since the sketch's record; it merges that into the stored sketch
+  (batch MG sketch -> pointwise sum -> one truncation) and atomically
+  overwrites the <= k-row sketch table. Reading the feed (not the
+  batch frame) heals a crash between legs: the events table is left
+  ahead, and the next batch's feed covers both batches.
 
 Serving:
 
 - :func:`heavy_hitters_served` — EXACT: the stored sketch proposes
-  candidates, one bounded aggregation over the accumulated events
-  counts them exactly (operators/sketches.exact_pass). Row-identical
+  candidates, one bounded aggregation over the accumulated events —
+  read at the sketch's recorded source version (operators/mv.pinned)
+  — counts them exactly (operators/sketches.exact_pass). Row-identical
   to the batch two-pass at every point in time (the gate's contract).
 - :func:`sketch_estimates` — APPROXIMATE, O(1) data touched: the
   stored counters themselves, each within [true - n/(k+1), true]
@@ -44,7 +46,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.mv import _last_meta_with
+from ..operators.mv import fold_changes, pinned
 from ..operators.sketches import (exact_pass, grouped_exact_pass,
                                   grouped_mg_merge, grouped_mg_partial,
                                   mg_merge, mg_partial)
@@ -64,32 +66,39 @@ def ingest_batch(events: TxnTable, sketch: TxnTable,
     spark = batch_df.sparkSession
 
     meta = _stream_meta(batch_id, app_id, "mg_events_append")
-    meta["mg_n_rows"] = (_last_meta_with(events, "mg_n_rows")
+    meta["mg_n_rows"] = (events.meta_with("mg_n_rows")[0]
                          .get("mg_n_rows", 0) + batch_df.count())
     events.append(batch_df.select(col), meta)
     events.checkpoint_if_needed()
+    _fold_sketch(spark, events, sketch, batch_id, app_id,
+                 "mg_sketch_merge", k,
+                 lambda ch: mg_partial(ch.select(col), col, k),
+                 lambda df: mg_merge(df, col, k))
 
-    # sketch leg: fold the events feed since the sketch's high-water.
-    # On replay the guard skips; on crash-between-legs the next
-    # batch's feed covers the gap (the bm25 df-leg discipline).
-    sv = events.latest_version()
-    last = (_last_meta_with(sketch, "mg_source_version")
-            .get("mg_source_version", -1))
-    if sv > last:
-        ch = (events.read_changes(spark, since_version=last, upto=sv)
-              .filter(F.col("_change_type") == "insert"))
-        fresh = mg_partial(ch.select(col), col, k)
+
+def _fold_sketch(spark: SparkSession, events: TxnTable,
+                 sketch: TxnTable, batch_id: int, app_id: str | None,
+                 operation: str, k: int, partial, merge) -> None:
+    """The sketch leg of both MG sinks: fold the events feed since the
+    sketch's ``mg_source_version`` — ``partial`` sketches its inserts,
+    ``merge`` combines them with the stored counters — into one guarded
+    overwrite. On replay the guard skips; a crash between legs is
+    healed by the next batch's fold."""
+    def _merge(ch: DataFrame, sv: int) -> None:
+        fresh = partial(ch.filter(F.col("_change_type") == "insert"))
         if sketch.latest_version() is not None:
             fresh = fresh.unionByName(sketch.read(spark))
-        merged = mg_merge(fresh, col, k)
+        merged = merge(fresh)
 
         def _sketch_leg():
-            meta = _stream_meta(batch_id, app_id, "mg_sketch_merge")
+            meta = _stream_meta(batch_id, app_id, operation)
             meta["mg_source_version"] = sv
             meta["mg_k"] = k
             sketch.overwrite(merged, meta)
 
         _guarded_commit(sketch, batch_id, app_id, _sketch_leg)
+
+    fold_changes(spark, events, sketch, "mg_source_version", _merge)
 
 
 def ingest_batch_grouped(events: TxnTable, sketch: TxnTable,
@@ -109,26 +118,11 @@ def ingest_batch_grouped(events: TxnTable, sketch: TxnTable,
     events.append(batch_df.select(group_col, col),
                   _stream_meta(batch_id, app_id, "gmg_events_append"))
     events.checkpoint_if_needed()
-
-    sv = events.latest_version()
-    last = (_last_meta_with(sketch, "mg_source_version")
-            .get("mg_source_version", -1))
-    if sv > last:
-        ch = (events.read_changes(spark, since_version=last, upto=sv)
-              .filter(F.col("_change_type") == "insert"))
-        fresh = grouped_mg_partial(ch.select(group_col, col),
-                                   group_col, col, k)
-        if sketch.latest_version() is not None:
-            fresh = fresh.unionByName(sketch.read(spark))
-        merged = grouped_mg_merge(fresh, group_col, col, k)
-
-        def _sketch_leg():
-            meta = _stream_meta(batch_id, app_id, "gmg_sketch_merge")
-            meta["mg_source_version"] = sv
-            meta["mg_k"] = k
-            sketch.overwrite(merged, meta)
-
-        _guarded_commit(sketch, batch_id, app_id, _sketch_leg)
+    _fold_sketch(spark, events, sketch, batch_id, app_id,
+                 "gmg_sketch_merge", k,
+                 lambda ch: grouped_mg_partial(ch.select(group_col, col),
+                                               group_col, col, k),
+                 lambda df: grouped_mg_merge(df, group_col, col, k))
 
 
 def write_stream_grouped_mg_sketch(df: DataFrame, root: str,
@@ -166,41 +160,17 @@ def compact_if_needed(spark: SparkSession, root: str,
     return events.compact_if_needed(spark, max_live_dirs=max_live_dirs)
 
 
-def _pinned_pair(spark: SparkSession, root: str):
-    """(events_df, sketch_df) as a CONSISTENT snapshot: events read AT
-    the version the stored sketch was folded from (time travel). The
-    two tables commit in separate legs, so reading both at latest
-    would let an ingest land between the reads — a stale sketch
-    counted against fresher events can MISS a just-arrived heavy
-    hitter, breaking the candidate-superset guarantee the exact pass
-    rests on. Pinning trades freshness (answers as of the sketch's
-    high-water) for that guarantee; requires the pinned version's
-    files to be retained (the time-travel contract)."""
-    from ..operators.mv import _last_meta_version_with
-
-    events, sketch = _tables(root)
-    if sketch.latest_version() is None:
-        raise ValueError(f"no maintained sketch under {root}")
-    meta, kv = _last_meta_version_with(sketch, "mg_source_version")
-    if "mg_source_version" not in meta:
-        raise ValueError(f"sketch under {root} records no source version")
-    sv = int(meta["mg_source_version"])
-    # the sketch read pins at the commit its meta came from — a fold
-    # landing between the meta read and this read must not pair a
-    # fresher sketch with events pinned at the stale source version
-    return events.read(spark, version=sv), sketch.read(spark, version=kv)
-
-
 def grouped_heavy_hitters_served(spark: SparkSession, root: str,
                                  group_col: str, col: str,
                                  phi: float) -> DataFrame:
     """EXACT per-group heavy hitters from a maintained grouped-sketch
     root: the stored <= n_groups x k sketch proposes, one bounded
     grouped aggregation over the accumulated events — read at the
-    sketch's recorded source version (:func:`_pinned_pair`) — counts
+    sketch's recorded source version (operators/mv.pinned) — counts
     exactly. Returns (group_col, col, cnt, share)."""
-    events_df, sketch_df = _pinned_pair(spark, root)
-    return grouped_exact_pass(events_df, sketch_df,
+    events, sketch = _tables(root)
+    sketch_df, sv = pinned(spark, sketch, "mg_source_version")
+    return grouped_exact_pass(events.read(spark, version=sv), sketch_df,
                               group_col, col, phi)
 
 
@@ -226,10 +196,13 @@ def heavy_hitters_served(spark: SparkSession, root: str, col: str,
     """EXACT heavy hitters from a maintained sketch root: the stored
     <= k-row sketch proposes, one bounded aggregation over the
     accumulated events — read at the sketch's recorded source version
-    (:func:`_pinned_pair`) — counts exactly. Returns
-    (col, cnt, share)."""
-    events_df, sketch_df = _pinned_pair(spark, root)
-    return exact_pass(events_df, sketch_df, col, phi)
+    (operators/mv.pinned) — counts exactly. Returns (col, cnt, share).
+    Pinned, because a stale sketch counted against fresher events can
+    MISS a just-arrived heavy hitter, breaking the candidate-superset
+    guarantee the exact pass rests on."""
+    events, sketch = _tables(root)
+    sketch_df, sv = pinned(spark, sketch, "mg_source_version")
+    return exact_pass(events.read(spark, version=sv), sketch_df, col, phi)
 
 
 def sketch_estimates(spark: SparkSession, root: str) -> tuple[DataFrame, int]:
@@ -239,18 +212,8 @@ def sketch_estimates(spark: SparkSession, root: str) -> tuple[DataFrame, int]:
     version (not latest — the error bound pairs each counter with the
     n it was folded against), never a scan."""
     events, sketch = _tables(root)
-    if sketch.latest_version() is None:
-        raise ValueError(f"no maintained sketch under {root}")
-    from ..operators.mv import _last_meta_version_with
-
-    kmeta, kv = _last_meta_version_with(sketch, "mg_source_version")
-    sv = int(kmeta["mg_source_version"])
-    v = sv
-    while v >= 0:  # newest events commit at/before the fold version
-        meta = events._doc(v).get("meta", {})  # noqa: SLF001
-        if "mg_n_rows" in meta:
-            # pinned at the meta's own commit: a fold between the two
-            # reads must not pair a fresher sketch with the stale n
-            return sketch.read(spark, version=kv), int(meta["mg_n_rows"])
-        v -= 1
-    raise ValueError(f"no mg_n_rows recorded at/before version {sv}")
+    sketch_df, sv = pinned(spark, sketch, "mg_source_version")
+    meta, _ = events.meta_with("mg_n_rows", version=sv)
+    if not meta:
+        raise ValueError(f"no mg_n_rows recorded at/before version {sv}")
+    return sketch_df, int(meta["mg_n_rows"])

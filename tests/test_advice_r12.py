@@ -95,7 +95,7 @@ def test_protocol_floor_never_downgraded_by_stale_cache(spark, tmp_path):
     assert proto["min_writer_version"] >= 2
 
 
-def test_served_sketch_pins_at_meta_commit(spark, tmp_path):
+def test_served_sketch_pins_at_meta_commit(spark, tmp_path, monkeypatch):
     """A fold interleaving between the serve's meta read and its sketch
     read must NOT leak into the answer: the serve pins the sketch at
     the commit the meta came from, so the estimate reflects the state
@@ -109,10 +109,10 @@ def test_served_sketch_pins_at_meta_commit(spark, tmp_path):
     batch0 = spark.range(50).select(F.col("id").cast("long").alias("v"))
     D.ingest_batch(events, sketch, batch0, 0, "v", "pin")
 
-    real = D._last_meta_version_with
+    real = TxnTable.meta_with
 
-    def meta_then_interleave(table, key):
-        out = real(table, key)
+    def meta_then_interleave(self, key, version=None):
+        out = real(self, key, version)
         if "done" not in fired:
             fired["done"] = True
             later = spark.range(50, 500).select(
@@ -121,12 +121,9 @@ def test_served_sketch_pins_at_meta_commit(spark, tmp_path):
         return out
 
     fired = {}
-    orig = D._last_meta_version_with
-    D._last_meta_version_with = meta_then_interleave
-    try:
-        est = D.approx_distinct_served(spark, root).first()["n_approx"]
-    finally:
-        D._last_meta_version_with = orig
+    monkeypatch.setattr(TxnTable, "meta_with", meta_then_interleave)
+    est = D.approx_distinct_served(spark, root).first()["n_approx"]
+    monkeypatch.setattr(TxnTable, "meta_with", real)
     assert fired.get("done"), "interleave did not fire"
     # pinned serve answers as of the pre-interleave fold (~50), never
     # the post-interleave 500-distinct sketch

@@ -182,3 +182,27 @@ def test_check_and_rebuild_pipeline(spark, sf_dir, tmp_path):
     ingest_batch(idx, _shifted(e, 2), cents1, batch_id=1,
                  app_id="pipe")
     assert idx.latest_version() == v
+
+
+def test_drift_report_nets_out_dv_retractions(spark, sf_dir, tmp_path):
+    """A deletion-vector retraction commits a position file and no new
+    row counts: the drift report's vector count (and the list sizes
+    behind check_and_rebuild) must still drop by exactly the retracted
+    ids and agree with what the index serves."""
+    from sport_advantages_moderne_data_infrastructure_spark.streaming.annindex import (
+        retract_batch,
+    )
+
+    e = _base(spark, sf_dir).limit(200).cache()
+    cents = train_centroids(e, k=4, max_iter=4)
+    idx = TxnTable(str(tmp_path / "idx"))
+    ingest_batch(idx, e, cents, batch_id=0, app_id="dvc")
+    n0 = index_drift_report(idx, len(cents))["n_vectors"]
+    assert n0 == e.count()
+
+    gone = e.orderBy("vec_id").limit(5)
+    retract_batch(idx, gone, cents, 1, "dvc", use_dv=True)
+    assert idx.snapshot_dvs()  # the DV path, not a partition rewrite
+    rep = index_drift_report(idx, len(cents))
+    assert rep["n_vectors"] == n0 - 5
+    assert rep["n_vectors"] == read_index(spark, idx.path).count()

@@ -207,9 +207,6 @@ def test_maintenance_checkpoint_and_pinned_vacuum(spark, sf_dir,
     refreshes accrete LOG commits (live dirs stay <= n_buckets), so
     checkpointing bounds replay; vacuum with the retention floor at
     the cdf fold version keeps the pinned serve readable."""
-    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (
-        _last_meta_with,
-    )
     from sport_advantages_moderne_data_infrastructure_spark.streaming.chunkbm25 import (
         checkpoint_if_needed,
     )
@@ -224,7 +221,7 @@ def test_maintenance_checkpoint_and_pinned_vacuum(spark, sf_dir,
     assert cp_post is not None and cp_df is not None
 
     cpost, cdfv = make_chunk_views(root)
-    sv = int(_last_meta_with(cdfv.view, "mv_source_version")
+    sv = int(cdfv.view.meta_with("mv_source_version")[0]
              ["mv_source_version"])
     cpost.view.vacuum(retain_from_version=sv)
     _assert_matches_batch(spark, root, d)   # pinned serve survives

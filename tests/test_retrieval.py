@@ -238,7 +238,7 @@ def test_bm25_index_read_pinned_to_df_fold(spark, sf_dir, tmp_path):
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.concat(F.lit("zzznewtok "), F.col("text")).alias("text"))
     post = R.postings_frame(flood)
-    prev = B._last_meta_with(postings, "bm25_n_docs")
+    prev = postings.meta_with("bm25_n_docs")[0]
     row = (post.select("doc_id", "dl").distinct()
            .agg(F.count(F.lit(1)), F.sum("dl")).first())
     rel = postings._write_data(post)  # noqa: SLF001

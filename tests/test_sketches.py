@@ -653,9 +653,6 @@ def test_mg_compact_policy_and_pinned_vacuum(spark, sf_dir):
     import math
     import tempfile
 
-    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
-        _last_meta_with,
-    )
     from sport_advantages_moderne_data_infrastructure_spark.streaming import (
         sketches as S,
     )
@@ -676,7 +673,7 @@ def test_mg_compact_policy_and_pinned_vacuum(spark, sf_dir):
     assert S.compact_if_needed(spark, root,
                                max_live_dirs=10_000) is None
     assert S.compact_if_needed(spark, root, max_live_dirs=2) is not None
-    pin = int(_last_meta_with(sketch, "mg_source_version")
+    pin = int(sketch.meta_with("mg_source_version")[0]
               ["mg_source_version"])
     events.vacuum(keep_versions=False, older_than_seconds=0,
                   retain_from_version=pin)

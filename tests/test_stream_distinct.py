@@ -84,10 +84,10 @@ def test_stream_restart_exactly_once(spark, sf_dir, tmp_path_factory):
         group_col="event_type").collect()) == served1
 
 
-def test_crash_between_legs_recovers(spark, sf_dir, monkeypatch):
-    """Crash AFTER the events append but BEFORE the sketch union: the
-    next batch's change-feed fold covers the gap, and a replayed batch
-    id is a no-op on both legs."""
+def test_crash_between_legs_recovers(spark, sf_dir, crash_at_commit):
+    """Crash AFTER the events append but BEFORE the sketch union
+    commits: the next batch's change-feed fold covers the gap, and a
+    replayed batch id is a no-op on both legs."""
     e = _events(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="hll_crash_")
     events, sketch = X._tables(root)
@@ -95,24 +95,15 @@ def test_crash_between_legs_recovers(spark, sf_dir, monkeypatch):
                    e.filter(F.col("event_id") % 3 == 0),
                    0, "user_id", app_id="cr", group_col="event_type")
 
-    boom = RuntimeError("injected crash before sketch union")
-    real = X._last_meta_with
-
-    def _raise(table, key):
-        if table.path == sketch.path and key == "hll_source_version":
-            raise boom
-        return real(table, key)
-
-    monkeypatch.setattr(X, "_last_meta_with", _raise)
-    try:
-        X.ingest_batch(events, sketch,
-                       e.filter(F.col("event_id") % 3 == 1),
-                       1, "user_id", app_id="cr",
-                       group_col="event_type")
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as ex:
-        assert ex is boom
-    monkeypatch.setattr(X, "_last_meta_with", real)
+    with crash_at_commit(sketch.path, 1) as crash:
+        try:
+            X.ingest_batch(events, sketch,
+                           e.filter(F.col("event_id") % 3 == 1),
+                           1, "user_id", app_id="cr",
+                           group_col="event_type")
+            raise AssertionError("injected crash did not fire")
+        except RuntimeError as ex:
+            assert ex is crash.error
     assert events.latest_version() > sketch.latest_version()  # torn
 
     # redelivery of batch 1: events leg skips (guard), sketch leg
@@ -163,10 +154,6 @@ def test_compact_policy_and_pinned_vacuum(spark, sf_dir):
     ingest continues across it), and a full vacuum with the sketch's
     recorded version as the retention floor keeps the pinned serve
     readable."""
-    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
-        _last_meta_with,
-    )
-
     e = _events(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="hll_pol_")
     events, sketch = X._tables(root)
@@ -181,7 +168,7 @@ def test_compact_policy_and_pinned_vacuum(spark, sf_dir):
                                max_live_dirs=10_000) is None
     v = X.compact_if_needed(spark, root, max_live_dirs=2)
     assert v is not None
-    pin = int(_last_meta_with(sketch, "hll_source_version")
+    pin = int(sketch.meta_with("hll_source_version")[0]
               ["hll_source_version"])
     events.vacuum(keep_versions=False, older_than_seconds=0,
                   retain_from_version=pin)

@@ -416,3 +416,81 @@ def test_one_high_water_fold():
                          if isinstance(f, ast.FunctionDef)
                          and f.name == "refresh"]
     assert not hits, "\n".join(hits)
+
+
+def test_meta_with_finds_the_newest_carrying_commit(spark, tmp_path):
+    """``TxnTable.meta_with`` returns the newest commit at or before
+    the bound whose meta carries the key: a compaction between two
+    carrying commits is skipped, the ``version`` bound is honoured,
+    and an absent key (or an empty table) gives ``({}, None)``."""
+    t = TxnTable(str(tmp_path / "hw"))
+    assert t.meta_with("hw") == ({}, None)
+    df = spark.range(3)
+    t.append(df, {"operation": "fold", "hw": 10})   # v0
+    t.append(df, {"operation": "plain"})            # v1
+    t.append(df, {"operation": "fold", "hw": 20})   # v2
+    assert t.compact(spark) == 3                    # v3: layout only
+    t.append(df, {"operation": "fold", "hw": 40})   # v4
+
+    meta, v = t.meta_with("hw")
+    assert (meta["hw"], v) == (40, 4)
+    meta, v = t.meta_with("hw", version=3)          # skips the compaction
+    assert (meta["hw"], v) == (20, 2)
+    meta, v = t.meta_with("hw", version=1)          # skips the plain append
+    assert (meta["hw"], v) == (10, 0)
+    assert t.meta_with("hw", version=0)[1] == 0
+    assert t.meta_with("absent") == ({}, None)
+    assert t.meta_with("absent", version=2) == ({}, None)
+
+
+_FEED_READERS = {
+    # the shared single-source fold and the two-source join view's legs
+    os.path.join("operators", "mv.py"): {"fold_changes",
+                                         "JoinMaterializedView"},
+    # reads the ranges pinned in the checkpoint's version records
+    os.path.join("streaming", "pipeline.py"): {"_start_change_feed"},
+}
+
+
+def _enclosing(tree) -> dict:
+    """id(node) -> names of the defs and classes enclosing it."""
+    out: dict = {}
+
+    def _visit(node, names):
+        for child in ast.iter_child_nodes(node):
+            inner = names
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = names | {child.name}
+            out[id(child)] = inner
+            _visit(child, inner)
+
+    _visit(tree, frozenset())
+    return out
+
+
+def test_commit_meta_lookups_go_through_txntable():
+    """No module under ``streaming/`` or ``operators/`` walks commit
+    docs itself (``._doc(`` inside a ``for``/``while`` loop): the
+    newest-commit-carrying-a-key lookup is ``TxnTable.meta_with`` and
+    live row counts are ``TxnTable._live_rows``. And there, only the
+    shared fold (``operators/mv.fold_changes``), the two-source
+    ``JoinMaterializedView`` and the change-feed starter call
+    ``read_changes``: every other derived-state leg folds through the
+    one high-water fold."""
+    hits = []
+    for rel, src in _package_modules():
+        if not rel.startswith(("streaming" + os.sep,
+                               "operators" + os.sep)):
+            continue
+        tree = ast.parse(src)
+        loops = [n for n in ast.walk(tree)
+                 if isinstance(n, (ast.For, ast.While))]
+        lines = sorted({c.lineno for loop in loops
+                        for c in _calls(loop, "_doc")})
+        hits += [f"{rel}:{n}: _doc() inside a loop" for n in lines]
+        scope = _enclosing(tree)
+        allowed = _FEED_READERS.get(rel, set())
+        hits += [f"{rel}:{c.lineno}: read_changes outside the shared fold"
+                 for c in _calls(tree, "read_changes")
+                 if not scope[id(c)] & allowed]
+    assert not hits, "\n".join(hits)

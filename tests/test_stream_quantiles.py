@@ -91,33 +91,24 @@ def test_stream_restart_exactly_once(spark, sf_dir, tmp_path_factory):
     assert Q.quantiles_served(spark, root, QS) == served1
 
 
-def test_crash_between_legs_recovers(spark, sf_dir, monkeypatch):
-    """Crash AFTER the vals append but BEFORE the hist fold: the next
-    batch's change-feed fold covers the gap (the bm25 df-leg
-    discipline), and a replayed batch id is a no-op."""
+def test_crash_between_legs_recovers(spark, sf_dir, crash_at_commit):
+    """Crash AFTER the vals append but BEFORE the hist fold commits:
+    the next batch's change-feed fold covers the gap, and a replayed
+    batch id is a no-op."""
     e = _events(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="sq_crash_")
     vals, hist = Q._tables(root)
     Q.ingest_batch(vals, hist, e.filter(F.col("event_id") % 3 == 0),
                    0, "value", LO, HI, app_id="cr")
 
-    boom = RuntimeError("injected crash before hist fold")
-    real = Q._last_meta_with
-
-    def _raise(table, key):
-        if table.path == hist.path and key == "q_source_version":
-            raise boom
-        return real(table, key)
-
-    monkeypatch.setattr(Q, "_last_meta_with", _raise)
-    try:
-        Q.ingest_batch(vals, hist,
-                       e.filter(F.col("event_id") % 3 == 1),
-                       1, "value", LO, HI, app_id="cr")
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as ex:
-        assert ex is boom
-    monkeypatch.setattr(Q, "_last_meta_with", real)
+    with crash_at_commit(hist.path, 1) as crash:
+        try:
+            Q.ingest_batch(vals, hist,
+                           e.filter(F.col("event_id") % 3 == 1),
+                           1, "value", LO, HI, app_id="cr")
+            raise AssertionError("injected crash did not fire")
+        except RuntimeError as ex:
+            assert ex is crash.error
     assert vals.latest_version() > hist.latest_version()  # torn
 
     # redelivery of batch 1: vals leg skips (guard), hist leg folds
@@ -408,10 +399,6 @@ def test_vacuum_retention_floor_keeps_pinned_serve(spark, sf_dir):
     as the retention floor (vacuum(retain_from_version=...)) so the
     pinned snapshot stays readable; without the floor the pinned files
     are gone and serving fails instead of answering wrong."""
-    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
-        _last_meta_with,
-    )
-
     e = _events(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="sq_vac_")
     vals, hist = Q._tables(root)
@@ -421,7 +408,7 @@ def test_vacuum_retention_floor_keeps_pinned_serve(spark, sf_dir):
                        i, "value", LO, HI, app_id="vac")
     served1 = Q.quantiles_served(spark, root, QS)
     assert Q.compact_if_needed(spark, root, max_live_dirs=2) is not None
-    pin = int(_last_meta_with(hist, "q_source_version")
+    pin = int(hist.meta_with("q_source_version")[0]
               ["q_source_version"])
     assert pin < vals.latest_version()  # the pin lags the compaction
 
@@ -434,7 +421,7 @@ def test_vacuum_retention_floor_keeps_pinned_serve(spark, sf_dir):
     # full vacuum with the NEW floor is safe too
     more = e.filter(F.col("event_id") % 4 == 0)  # replay-safe new batch
     Q.ingest_batch(vals, hist, more, 4, "value", LO, HI, app_id="vac")
-    pin2 = int(_last_meta_with(hist, "q_source_version")
+    pin2 = int(hist.meta_with("q_source_version")[0]
                ["q_source_version"])
     assert pin2 > pin
     vals.vacuum(keep_versions=False, older_than_seconds=0,
