@@ -47,7 +47,7 @@ from functools import cache, reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txnlog import TxnTable, agg_delta_from_changes
+from ..sources.txnlog import TxnTable, _Txn, agg_delta_from_changes
 
 
 def fold_changes(spark: SparkSession, source: TxnTable, state: TxnTable,
@@ -326,15 +326,17 @@ class _BucketedView:
         read path). The commit is based on the version read first, -1
         for an empty table, so a racing first commit conflicts instead
         of being built over."""
-        base = tbl.latest_version()
-        adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
-        if adds:
-            meta = {**meta, "partition_by": "__kb"}
-        else:
-            adds = [tbl._write_data(df.repartition(1))]  # noqa: SLF001
-        removes = tbl.snapshot_dirs(base) if base is not None else []
-        tbl.commit(adds, removes, meta,
-                   expected_version=-1 if base is None else base)
+        def attempt(base: int) -> _Txn:
+            adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
+            m = meta
+            if adds:
+                m = {**meta, "partition_by": "__kb"}
+            else:
+                adds = [tbl._write_data(df.repartition(1))]  # noqa: SLF001
+            return _Txn(adds, tbl.snapshot_dirs(base) if base >= 0 else [],
+                        m)
+
+        tbl._transact(attempt)  # noqa: SLF001
 
     def _apply_side(self, spark, state: TxnTable, changes: DataFrame,
                     affected, meta: dict) -> None:
@@ -382,24 +384,28 @@ class _BucketedView:
         O(replaced buckets), the same order as the write itself.
         ``table`` has a commit: an empty one is built by
         :meth:`_replace_all`."""
-        base = table.latest_version()
-        live = table.snapshot_dirs(base)
         aff = {f"__kb={v}" for v in affected}
-        adds = table._write_data_partitioned(df, "__kb")  # noqa: SLF001
-        stray = [a for a in adds if os.path.basename(a) not in aff]
-        if stray:  # delta rows must land in affected buckets only
-            raise AssertionError(f"rows outside affected buckets: {stray}")
-        removes = [d for d in live if os.path.basename(d) in aff]
-        changes_rel = None
-        if self.capture_changes and table is self.view:
-            spark = df.sparkSession
-            old = self._read_buckets(spark, table, affected)
-            changes_rel = table._write_changes(  # noqa: SLF001
-                old.withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    df.withColumn("_change_type", F.lit("insert"))))
-        table.commit(adds, removes, {**meta, "partition_by": "__kb"},
-                     expected_version=base, changes=changes_rel)
+
+        def attempt(base: int) -> _Txn:
+            live = table.snapshot_dirs(base)
+            adds = table._write_data_partitioned(df, "__kb")  # noqa: SLF001
+            stray = [a for a in adds if os.path.basename(a) not in aff]
+            if stray:  # delta rows must land in affected buckets only
+                raise AssertionError(
+                    f"rows outside affected buckets: {stray}")
+            changes_rel = None
+            if self.capture_changes and table is self.view:
+                old = self._read_buckets(df.sparkSession, table, affected)
+                changes_rel = table._write_changes(  # noqa: SLF001
+                    old.withColumn("_change_type", F.lit("delete"))
+                    .unionByName(
+                        df.withColumn("_change_type", F.lit("insert"))))
+            return _Txn(adds, [d for d in live
+                               if os.path.basename(d) in aff],
+                        {**meta, "partition_by": "__kb"},
+                        changes=changes_rel)
+
+        table._transact(attempt)  # noqa: SLF001
 
 
 class JoinMaterializedView(_BucketedView):

@@ -26,7 +26,9 @@ exists, so a crash anywhere leaves either the old latest version (plus
 unreferenced orphan data, reclaimable via :meth:`TxnTable.vacuum`) or the
 complete new one — never a torn table. The link-fails-if-exists property
 doubles as optimistic concurrency control: two writers racing to commit
-version N+1 produce one winner and one :class:`TxnConflictError`.
+version N+1 produce one winner and one :class:`TxnConflictError`, which
+every write resolves in one loop, :meth:`TxnTable._transact` (rebase,
+redo or raise; bounded, backed off, its files reclaimed).
 
 Scale notes (100 TB): the protocol is exactly the one lakehouse formats
 use on object stores — metadata is O(commits), data I/O is only the
@@ -118,6 +120,38 @@ _DV_DIR = "dv"  # deletion-vector files (Delta's DV sidecars): parquet of
 _INHERIT = object()  # commit() sentinel: "no column-mapping override —
 # propagate the base version's" (distinct from an explicit None, which
 # CLEARS the mapping, e.g. restore to a pre-mapping version)
+
+_COMMIT_ATTEMPTS = 20  # rounds TxnTable._transact tries, rebase and
+# redo alike. Every lost round means ANOTHER writer's commit landed
+# (global progress), so this bounds how many competing commits one
+# write tolerates — not a luck budget.
+
+
+class _Txn:
+    """One attempt of a write: the commit that publishes it
+    (``adds``, ``removes``, ``meta`` and the keyword arguments of
+    :meth:`TxnTable.commit` in ``kw``) — and so every dir the attempt
+    wrote: the commit roots of ``adds``, the ``changes`` dir and the
+    ``dvs`` position files, which :meth:`TxnTable._transact` reclaims
+    when the attempt does not commit."""
+
+    def __init__(self, adds: list[str], removes: list[str],
+                 meta: dict | None = None, **kw):
+        self.adds, self.removes, self.meta, self.kw = \
+            adds, removes, meta, kw
+
+
+def _rebase_same(txn: _Txn, base: int, latest: int) -> _Txn:
+    """Conflict rule of a write that touched no existing file (a blind
+    append): a lost race is never a semantic conflict, so the same
+    files re-publish on top of the winner."""
+    return txn
+
+
+def _redo(txn: _Txn | None, base: int, latest: int) -> None:
+    """Conflict rule of a write whose files embody the snapshot it
+    read: scrap them and run the attempt again on the winner's."""
+    return None
 
 
 def _widens_to(a, b) -> bool:
@@ -1414,7 +1448,8 @@ class TxnTable:
 
         Like :meth:`compact`, this is a maintenance rewrite: it runs
         single-attempt against the version it read (a racing commit
-        raises :class:`TxnConflictError` — re-run on the new base), and
+        reclaims its files and raises :class:`TxnConflictError` —
+        re-run on the new base), and
         downstream change-feed streams should read with
         ``skipChangeCommits`` across it. The declaration lands AFTER
         the layout commit: a crash between the two leaves a
@@ -1459,12 +1494,12 @@ class TxnTable:
                 f"column(s) {missing} — declare a generated key with "
                 "set_generated_column() first, or name a data column")
         adds = self._write_data_partitioned(df, cols)
-        v = self.commit(adds, live,
-                        {**(meta or {}),
-                         "operation": "repartition_table",
-                         "partition_by":
-                             cols[0] if len(cols) == 1 else cols},
-                        expected_version=base)
+        v = self._transact(_Txn(adds, live,
+                                {**(meta or {}),
+                                 "operation": "repartition_table",
+                                 "partition_by":
+                                     cols[0] if len(cols) == 1 else cols}),
+                           base=base)
         self.set_partition_column(cols)
         return v
 
@@ -1635,84 +1670,103 @@ class TxnTable:
             v -= 1
         return False
 
+    def _base(self) -> int:
+        """The latest version as a commit base: -1 for an empty table,
+        :meth:`commit`'s explicit expect-EMPTY base, so a racing first
+        commit conflicts instead of being absorbed."""
+        v = self.latest_version()
+        return -1 if v is None else v
+
     @staticmethod
     def _conflict_backoff(attempt: int) -> None:
-        """Jittered exponential backoff between identity commit
-        retries: an allocating retry rewrites its data (seconds), so
-        without desynchronization N concurrent allocators re-collide
-        every round and a writer can starve past any retry budget —
-        the same reason Delta's commit loop backs off."""
+        """Jittered exponential backoff between lost commit rounds:
+        without desynchronization N concurrent writers re-collide every
+        round (a redo rewrites its data, which takes seconds) and one
+        can starve past any attempt budget — the same reason Delta's
+        commit loop backs off."""
         import random
         import time as _time
 
         _time.sleep(min(1.0, random.uniform(0, 0.05 * (2 ** attempt))))
 
-    def _append_identity(self, df: DataFrame, meta: dict | None,
-                         ident: dict, retries: int = 5) -> int | None:
-        """Identity-allocating append: unlike a blind append, losing the
-        commit race here IS a semantic conflict ONLY when a racing
-        commit also allocated (the loser's ids came from a stale high
-        water) — then the retry re-reads the high water, RE-ASSIGNS,
-        rewrites the data, and re-commits against the version it
-        allocated at. Races with non-allocating commits just rebase
-        the same files (no rewrite). Jittered backoff desynchronizes
-        concurrent allocators between rounds."""
-        import shutil
+    def _transact(self, attempt, rebase=None, base: int | None = None):
+        """The one optimistic commit (Delta's ``OptimisticTransaction``
+        loop): every write that publishes dirs it has just written
+        commits here.
 
-        last_err = None
-        # attempt floor 20: every lost round means ANOTHER writer's
-        # commit landed (global progress), so attempts bound how many
-        # competing commits this writer tolerates — not a luck budget.
-        # The caller's retries can only raise it.
-        for attempt in range(max(1, retries, 20)):
-            v0 = self.latest_version()
-            if v0 is None:
-                v0 = -1  # commit's explicit expect-EMPTY base: a racing
-                # first commit must conflict, never absorb (bare None
-                # would resolve at commit time and double-issue ids)
-            out, hw_meta, handle = self._assign_identity(df, ident)
-            try:
-                self._check_append_schema(out)
-                mapping, cm_o, used_o = self._extend_mapping(out.columns)
-                rel = self._write_data(out, mapping=mapping)
-                # rebase retries are BOUNDED against the same budget as
-                # allocating attempts (ADVICE r13: an unbounded inner
-                # loop let a steady stream of non-allocating racers —
-                # plain appends/deletes — spin this writer forever,
-                # bypassing the attempt bound that only governed
-                # allocation conflicts), and each rebase backs off like
-                # an allocating retry so N rebasing writers desync.
-                for rebase in range(max(1, retries, 20)):
-                    try:
-                        return self.commit(
-                            [rel], [], {**(meta or {}), **hw_meta},
-                            expected_version=v0, column_mapping=cm_o,
-                            physical_used=used_o)
-                    except TxnReplayError:
-                        shutil.rmtree(os.path.join(self.path, rel),
-                                      ignore_errors=True)
-                        return None
-                    except TxnConflictError as e:
-                        last_err = e
-                        if self._interleaved_allocation(v0):
-                            # stale allocation: scrap files, redo
-                            shutil.rmtree(os.path.join(self.path, rel),
-                                          ignore_errors=True)
-                            break
-                        v0 = self.latest_version()  # rebase, keep files
-                        self._conflict_backoff(rebase)
-                else:
-                    # rebase budget exhausted on non-allocating
-                    # conflicts: surface the conflict rather than
-                    # retrying forever (the files are orphaned adds a
-                    # vacuum sweeps; a re-run re-attempts cleanly)
-                    shutil.rmtree(os.path.join(self.path, rel),
-                                  ignore_errors=True)
-                    raise last_err
-            finally:
-                handle.unpersist()
-            self._conflict_backoff(attempt)
-        raise last_err
+        ``attempt`` is a :class:`_Txn` already written against ``base``,
+        or ``attempt(base)``, which writes one attempt against the
+        snapshot at ``base`` and returns its ``_Txn`` — or any other
+        value, returned as is, when there is nothing to publish (or a
+        stream leg's op committed by itself). ``base`` defaults to the
+        latest version, read once, -1 for an empty table.
+
+        On a lost race ``rebase(txn, base, latest)`` decides: it returns
+        the ``_Txn`` to re-publish on top of ``latest`` (a REBASE that
+        keeps the files), None to scrap the files and run ``attempt``
+        again on ``latest`` (a REDO), or raises on a genuine conflict.
+        Without ``rebase`` the first lost race raises. Every round,
+        rebase or redo, counts against ``_COMMIT_ATTEMPTS``, with
+        :meth:`_conflict_backoff` between rounds. A
+        :class:`TxnReplayError` is terminal: no retry, no backoff. Any
+        exit without a commit reclaims what the attempt wrote."""
+        if base is None:
+            base = self._base()
+        txn = attempt if isinstance(attempt, _Txn) else None
+        try:
+            for n in range(_COMMIT_ATTEMPTS):
+                if n:
+                    self._conflict_backoff(n - 1)
+                try:
+                    if txn is None:
+                        txn = attempt(base)
+                        if not isinstance(txn, _Txn):
+                            return txn
+                    return self.commit(txn.adds, txn.removes, txn.meta,
+                                       expected_version=base, **txn.kw)
+                except TxnReplayError:
+                    raise
+                except TxnConflictError:
+                    if rebase is None or n + 1 == _COMMIT_ATTEMPTS:
+                        raise
+                    latest = self._base()
+                    nxt = rebase(txn, base, latest)
+                    if nxt is None:
+                        self._reclaim(txn)
+                    txn, base = nxt, latest
+        except BaseException:
+            self._reclaim(txn)
+            raise
+
+    def _reclaim(self, txn: _Txn | None) -> None:
+        """Delete every dir ``txn`` wrote — no commit references them.
+        A 0-row partitioned write has no adds and left no root."""
+        if txn is None:
+            return
+        dirs = {_commit_root(a) for a in txn.adds}
+        dirs.add(txn.kw.get("changes"))
+        dirs.update(ref["path"] for ref in
+                    (txn.kw.get("dvs") or {}).values() if ref)
+        for rel in dirs - {None}:
+            self._drop(rel)
+
+    def _rebase_rewrite(self, txn: _Txn, base: int, latest: int) -> _Txn:
+        """Conflict rule of the row-level rewrites (DELETE/UPDATE/DV,
+        WriteSerializable — Delta's resolution for exactly this class):
+        a racer that touched none of the dirs this rewrite replaces —
+        removed, or DV-remapped — e.g. a streaming append landing
+        mid-DELETE, does not invalidate it, so the same files rebase on
+        top; a racer that rewrote or DV'd one of them is a genuine
+        conflict. Rows appended concurrently are NOT visited by the op
+        (Delta documents the same): it rewrites the snapshot it read."""
+        ours = set(txn.removes) | set(txn.kw.get("dvs") or {})
+        for v in range(base + 1, latest + 1):
+            doc = self._doc(v)
+            if ours & (set(doc["removes"]) | set(doc.get("dvs") or {})):
+                raise TxnConflictError(
+                    f"v{v} at {self.path} rewrote dirs this row-level "
+                    "op replaces")
+        return txn
 
     def _merge_identity(self, spark: SparkSession, updates: DataFrame,
                         target: DataFrame, key, ident: dict
@@ -2460,12 +2514,14 @@ class TxnTable:
                 "overwrite() for schema evolution")
 
     def append(self, df: DataFrame, meta: dict | None = None,
-               retries: int = 5, merge_schema: bool = False) -> int | None:
+               merge_schema: bool = False) -> int | None:
         """Blind appends touch no existing files, so losing a commit race
-        is never a semantic conflict — re-reading the latest version and
-        re-publishing is always safe (the optimistic-retry rule real log
-        stores apply to AddFile-only transactions). Data is written once;
-        only the metadata publish retries.
+        is never a semantic conflict — the same files rebase onto the
+        winner (the optimistic-retry rule real log stores apply to
+        AddFile-only transactions); the data is written once. An
+        identity append is the exception: when the racer allocated ids
+        too, this append's ids are stale and the attempt is redone.
+        Both commit through :meth:`_transact`.
 
         Exactly-once stream appends: a ``meta`` built by
         :func:`_stream_meta` carries the micro-batch's
@@ -2503,74 +2559,16 @@ class TxnTable:
                     "table is not supported — additive evolution on "
                     "partition-granular layouts rides overwrite() of "
                     "the evolved shape")
-            pb = gcfg.get("partition_by") or meta["partition_by"]
-            if ident is not None:
-                # identity × partitioned layout (r13, lifting the r12
-                # exclusion): allocation makes a lost commit race a
-                # SEMANTIC conflict (the loser's ids came from a stale
-                # high water) — mirror _append_identity: each retry
-                # re-reads the high water, re-assigns, rewrites the
-                # layout, and re-commits against the version it
-                # allocated at. The high-water meta rides the SAME
-                # commit doc as the partition-granular adds.
-                last: TxnConflictError | None = None
-                # attempt floor 20 — see _append_identity: attempts
-                # bound tolerated competing commits, not luck
-                for attempt in range(max(1, retries, 20)):
-                    v0 = self.latest_version()
-                    if v0 is None:
-                        v0 = -1  # expect-EMPTY base (see
-                        # _append_identity): first-commit races
-                        # conflict, never absorb
-                    out, hw_meta, handle = self._assign_identity(
-                        df, ident)
-                    try:
-                        self._check_append_schema(out)
-                        adds = self._write_data_partitioned(
-                            out, part_keys)
-                        while True:
-                            try:
-                                return self.commit(
-                                    adds, [],
-                                    {**(meta or {}), **hw_meta,
-                                     "partition_by": pb},
-                                    expected_version=v0)
-                            except TxnReplayError:
-                                self._reclaim(adds)
-                                return None
-                            except TxnConflictError as e:
-                                if self._interleaved_allocation(v0):
-                                    last = e  # stale ids: scrap, redo
-                                    self._reclaim(adds)
-                                    break
-                                # non-allocating racer (delete,
-                                # compaction, plain append): the ids
-                                # are still valid — rebase the same
-                                # partition-granular adds, no rewrite
-                                v0 = self.latest_version()
-                    finally:
-                        handle.unpersist()
-                    self._conflict_backoff(attempt)
-                raise last
-            # partition-declared table (r12): the append's unit of add
-            # is the col=value subdir — blind appends still never touch
-            # existing files, so the commit race stays retry-safe
-            self._check_append_schema(df)
-            adds = self._write_data_partitioned(df, part_keys)
-            return self._commit_blind(
-                adds, {**(meta or {}), "partition_by": pb}, retries)
-        if ident is not None:
+            meta = {**(meta or {}), "partition_by":
+                    gcfg.get("partition_by") or meta["partition_by"]}
+        elif ident is not None:
             if merge_schema:
                 raise ValueError(
                     "append(merge_schema=True) on an identity table is "
                     "not supported — evolve the schema with a plain "
                     "append/overwrite of the new shape first, then "
                     "append")
-            return self._append_identity(df, meta, ident,
-                                         retries=retries)
-        if not merge_schema:
-            self._check_append_schema(df)
-        else:
+        elif merge_schema:
             cur = self.table_schema(None)
             # safe type WIDENING (r11, VERDICT r10 #4) is admitted only
             # when the log records the schema — the widened logical type
@@ -2640,45 +2638,46 @@ class TxnTable:
                 # under one wide logical schema: raise the reader floor
                 # so pre-widening readers refuse instead of misreading
                 self._bump_protocol_cm(TW_READER_VERSION)
-        mapping, cm_override, used_override = \
-            self._extend_mapping(df.columns)
-        rel = self._write_data(df, mapping=mapping)
-        return self._commit_blind([rel], meta, retries,
-                                  column_mapping=cm_override,
-                                  physical_used=used_override)
 
-    def _commit_blind(self, adds: list[str], meta: dict | None,
-                      retries: int, **commit_kw) -> int | None:
-        """Publish a blind append's ``adds`` (one commit root): a lost
-        version race re-reads the latest version and re-publishes, up
-        to ``retries + 1`` attempts. A ledger refusal (a replayed
-        stream batch) returns None at once; it and running out of
-        attempts both reclaim the written commit root instead of
-        leaking it until vacuum (ADVICE r12)."""
-        last = None
-        for _ in range(max(1, retries + 1)):
-            try:
-                return self.commit(adds, [], meta,
-                                   expected_version=self.latest_version(),
-                                   **commit_kw)
-            except TxnReplayError:
-                last = None  # the batch is committed: nothing to raise
-                break
-            except TxnConflictError as e:
-                last = e
-        self._reclaim(adds)
-        if last is not None:
-            raise last
-        return None
+        def write(out: DataFrame) -> _Txn:
+            # the layout step: col=value subdirs of one commit root on a
+            # partitioned table (r12), one plain dir otherwise
+            if part_keys:
+                return _Txn(self._write_data_partitioned(out, part_keys),
+                            [], meta)
+            mapping, cm_override, used_override = \
+                self._extend_mapping(out.columns)
+            return _Txn([self._write_data(out, mapping=mapping)], [], meta,
+                         column_mapping=cm_override,
+                         physical_used=used_override)
 
-    def _reclaim(self, adds: list[str]) -> None:
-        """Delete the commit root of ``adds`` that no commit published.
-        A 0-row partitioned write has no adds and left no root."""
-        if adds:
-            import shutil
+        if ident is None:
+            if not merge_schema:
+                self._check_append_schema(df)
+            attempt, rebase = write(df), _rebase_same
+        else:
+            def attempt(base: int) -> _Txn:
+                # identity (r11; x partitioned layout r13): ids come
+                # from the high water at base and ride the same commit
+                # doc as the data
+                out, hw_meta, handle = self._assign_identity(df, ident)
+                try:
+                    self._check_append_schema(out)
+                    txn = write(out)
+                finally:
+                    handle.unpersist()
+                txn.meta = {**(meta or {}), **hw_meta}
+                return txn
 
-            shutil.rmtree(os.path.join(self.path, _commit_root(adds[0])),
-                          ignore_errors=True)
+            def rebase(txn: _Txn, base: int, latest: int) -> _Txn | None:
+                # a racer that ALSO allocated made these ids stale:
+                # redo from its high water; a non-allocating one
+                # (delete, compaction, plain append) leaves them valid
+                return None if self._interleaved_allocation(base) else txn
+        try:
+            return self._transact(attempt, rebase)
+        except TxnReplayError:
+            return None  # the batch is committed; its files reclaimed
 
     def overwrite(self, df: DataFrame, meta: dict | None = None,
                   changes: DataFrame | None = None) -> int:
@@ -2695,38 +2694,35 @@ class TxnTable:
         if gcfg.get("generated"):
             df = self._apply_generated(df)
         ident = gcfg.get("identity")
-        handle = None
-        # base is captured BEFORE the identity high-water read: an
-        # identity-allocating commit interleaving between the two reads
-        # must surface as TxnConflictError, not be absorbed into a base
-        # read afterwards (which would commit a STALE high water and let
-        # later appends re-issue ids the interleaved append handed out)
-        base = self.latest_version()
-        if base is None and ident is not None:
-            base = -1  # expect-EMPTY base (see _append_identity): a
-            # racing first commit must conflict, not be absorbed with
-            # a stale high water
-        if ident is not None:
-            # overwrite KEEPS the high water (Delta's rule: identity
-            # never re-issues values a previous snapshot handed out)
-            df, hw_meta, handle = self._assign_identity(df, ident)
-            meta = {**(meta or {}), **hw_meta}
-        try:
-            live = self.snapshot_dirs(base)
-            rel_changes = (self._write_changes(changes)
-                           if changes is not None else None)
-            part_keys = self._part_keys(gcfg)
-            adds = (self._write_data_partitioned(df, part_keys)
-                    if part_keys else [self._write_data(df)])
-            m = ({**(meta or {}),
-                  "partition_by": gcfg.get("partition_by")}
-                 if part_keys else meta)
-            return self.commit(adds, live, m,
-                               expected_version=base,
-                               changes=rel_changes)
-        finally:
-            if handle is not None:
-                handle.unpersist()
+        part_keys = self._part_keys(gcfg)
+        if part_keys:
+            meta = {**(meta or {}), "partition_by": gcfg["partition_by"]}
+
+        def attempt(base: int) -> _Txn:
+            # base is read BEFORE the identity high water: an identity-
+            # allocating commit interleaving between the two reads must
+            # surface as TxnConflictError, not be absorbed into a base
+            # read afterwards (which would commit a STALE high water and
+            # let later appends re-issue ids the interleaved append
+            # handed out)
+            out, m, handle = df, meta, None
+            if ident is not None:
+                # overwrite KEEPS the high water (Delta's rule: identity
+                # never re-issues values a previous snapshot handed out)
+                out, hw_meta, handle = self._assign_identity(df, ident)
+                m = {**(meta or {}), **hw_meta}
+            try:
+                live = self.snapshot_dirs(base)
+                rel_changes = (self._write_changes(changes)
+                               if changes is not None else None)
+                adds = (self._write_data_partitioned(out, part_keys)
+                        if part_keys else [self._write_data(out)])
+            finally:
+                if handle is not None:
+                    handle.unpersist()
+            return _Txn(adds, live, m, changes=rel_changes)
+
+        return self._transact(attempt)
 
     def clone(self, dest: str, version: int | None = None) -> "TxnTable":
         """CLONE (Delta's ``CREATE TABLE ... CLONE``, optionally
@@ -2842,7 +2838,7 @@ class TxnTable:
         (replaced rows' ids retire — identity never reuses values)."""
         given = [part_col] if isinstance(part_col, str) \
             else list(part_col)
-        base = self.latest_version()
+        base = self._base()
         if self.column_mapping(base):
             raise ValueError(
                 "column mapping is not supported on partitioned tables")
@@ -2888,20 +2884,19 @@ class TxnTable:
                 d for d in live
                 if tuple(v for _, v in _partition_segs(d)[:k])
                 in new_keys]
-            return self.commit(adds, removes,
-                               {**(meta or {}), **hw_meta,
-                                "operation": "overwrite_partitions",
-                                "partition_by":
-                                    gcfg.get("partition_by", part_col)},
-                               expected_version=base)
         finally:
             if handle is not None:
                 handle.unpersist()
+        return self._transact(_Txn(
+            adds, removes,
+            {**(meta or {}), **hw_meta,
+             "operation": "overwrite_partitions",
+             "partition_by": gcfg.get("partition_by", part_col)}),
+            base=base)
 
     def replace_where(self, spark: SparkSession, df: DataFrame,
                       condition: str, meta: dict | None = None,
-                      allow_row_predicates: bool = False,
-                      retries: int = 5) -> int:
+                      allow_row_predicates: bool = False) -> int:
         """Atomic predicate-scoped replace — Delta's ``replaceWhere``
         over partition keys (r14, VERDICT r13 #2): ONE commit removes
         exactly the live partitions whose TYPED key values satisfy
@@ -2948,9 +2943,7 @@ class TxnTable:
         - partition-key predicates rebase METADATA-ONLY: the written
           add files are reused untouched (the add content depends only
           on ``df``), the remove set re-resolves over the new typed
-          partition values, bounded by the same attempt budget as
-          identity appends, with jittered backoff so concurrent
-          writers desynchronize;
+          partition values;
         - row-predicate mode and interleaved identity ALLOCATION redo
           the attempt from the new base (survivors / baked ids came
           from the stale snapshot; the stale files are scrapped like
@@ -2958,9 +2951,10 @@ class TxnTable:
         - a concurrent SCHEMA change or partition-LAYOUT change is a
           genuine :class:`TxnConflictError` (Delta's metadata-changed
           class — the written files embody the old shape, no rebase
-          can absorb that)."""
+          can absorb that).
+
+        The rounds commit through :meth:`_transact`."""
         import re
-        import shutil
 
         from pyspark.errors import AnalysisException
         from pyspark.sql import functions as F
@@ -2983,7 +2977,7 @@ class TxnTable:
         if gcfg0.get("generated"):
             df = self._apply_generated(df)
 
-        def _resolve(base: int | None):
+        def _resolve(base: int):
             """(keys, removes, survivors, gcfg) against the snapshot at
             ``base`` — a pure function of (predicate, snapshot), so a
             conflict rebase re-runs it against the winner's version."""
@@ -3062,15 +3056,13 @@ class TxnTable:
                 "every incoming row must satisfy the replace "
                 "predicate; nothing was committed")
 
-        def _schema_at(v: int | None):
+        def _schema_at(v: int):
             """Comparable schema signature at ``v``: the log-recorded
             schema when present, else ONE live file's footer names +
             the path's partition keys (partition-granular commits may
             not record a merged schema — name-set drift still catches
             the add/drop-column racers that would strand the written
             files on a stale shape)."""
-            if v is None:
-                return None
             s = self.table_schema(v)
             if s is not None:
                 return ("json", s.jsonValue())
@@ -3086,15 +3078,9 @@ class TxnTable:
                     return ("names", tuple(sorted(names)))
             return None
 
-        def _scrap(rels: list[str] | None) -> None:
-            for rel in rels or []:
-                shutil.rmtree(os.path.join(self.path, rel),
-                              ignore_errors=True)
+        cur: dict = {}  # the attempt's resolved keys and survivors
 
-        budget = max(1, retries, 20)
-        last_err: Exception | None = None
-        for attempt in range(budget):
-            base = self.latest_version()
+        def attempt(base: int) -> _Txn:
             keys, removes, survivors, gcfg = _resolve(base)
             hw_meta: dict = {}
             handle = None
@@ -3111,68 +3097,41 @@ class TxnTable:
             finally:
                 if handle is not None:
                     handle.unpersist()
-            cmeta = {**(meta or {}), **hw_meta,
-                     "operation": "replace_where",
-                     "predicate": condition,
-                     "partition_by": gcfg.get("partition_by", keys)}
-            redo = False
-            for rebase in range(budget):
-                try:
-                    # -1 pins "I based this on an EMPTY table": a
-                    # racing first commit must CONFLICT here (and be
-                    # re-resolved below), never be absorbed by
-                    # commit()'s resolve-at-commit-time None path —
-                    # its dirs may match the predicate
-                    return self.commit(rel_adds, removes, cmeta,
-                                       expected_version=(
-                                           -1 if base is None
-                                           else base))
-                except TxnConflictError as e:
-                    last_err = e
-                    newbase = self.latest_version()
-                    if base is None:
-                        # no baseline to rebase against — redo the
-                        # whole attempt from the racer's snapshot
-                        redo = True
-                        break
-                    if _schema_at(base) != _schema_at(newbase):
-                        _scrap(rel_adds)
-                        raise TxnConflictError(
-                            f"concurrent schema change under "
-                            f"replace_where at {self.path} (v{base} "
-                            f"-> v{newbase}) — the written files "
-                            "embody the old schema; re-run against "
-                            "the evolved table") from e
-                    if survivors is not None or (
-                            ident is not None
-                            and self._interleaved_allocation(base)):
-                        # stale snapshot baked into the files: redo
-                        # the whole attempt from the winner's version
-                        redo = True
-                        break
-                    try:
-                        keys2, removes2, _s, gcfg = _resolve(newbase)
-                    except ValueError:
-                        _scrap(rel_adds)
-                        raise
-                    if keys2 != keys:
-                        _scrap(rel_adds)
-                        raise TxnConflictError(
-                            f"concurrent partition-layout change "
-                            f"under replace_where at {self.path} "
-                            f"({keys!r} -> {keys2!r})") from e
-                    removes, base = removes2, newbase
-                    self._conflict_backoff(rebase)
-            else:
-                # rebase budget exhausted on non-absorbing conflicts:
-                # surface the conflict (the files are orphaned adds a
-                # vacuum sweeps; a re-run re-attempts cleanly)
-                _scrap(rel_adds)
-                raise last_err
-            if redo:
-                _scrap(rel_adds)
-                self._conflict_backoff(attempt)
-        raise last_err
+            cur.update(keys=keys, survivors=survivors)
+            return _Txn(rel_adds, removes,
+                        {**(meta or {}), **hw_meta,
+                         "operation": "replace_where",
+                         "predicate": condition,
+                         "partition_by": gcfg.get("partition_by", keys)})
+
+        def rebase(txn: _Txn, base: int, latest: int) -> _Txn | None:
+            if base == -1:
+                # no baseline to rebase against (a first commit raced
+                # in — its dirs may match the predicate): redo the
+                # whole attempt from the racer's snapshot
+                return None
+            if _schema_at(base) != _schema_at(latest):
+                raise TxnConflictError(
+                    f"concurrent schema change under replace_where at "
+                    f"{self.path} (v{base} -> v{latest}) — the written "
+                    "files embody the old schema; re-run against the "
+                    "evolved table")
+            if cur["survivors"] is not None or (
+                    ident is not None
+                    and self._interleaved_allocation(base)):
+                # stale snapshot baked into the files: redo the whole
+                # attempt from the winner's version
+                return None
+            keys2, removes2, _, _ = _resolve(latest)
+            if keys2 != cur["keys"]:
+                raise TxnConflictError(
+                    f"concurrent partition-layout change under "
+                    f"replace_where at {self.path} "
+                    f"({cur['keys']!r} -> {keys2!r})")
+            txn.removes = removes2  # the same files, re-resolved removes
+            return txn
+
+        return self._transact(attempt, rebase)
 
     def merge(self, spark: SparkSession, updates: DataFrame,
               key: str | list[str],
@@ -3333,10 +3292,10 @@ class TxnTable:
             # data (and change) files are on disk: the identity
             # assignment can no longer be recomputed, release the pin
             _ident_handle.unpersist()
-        return self.commit(adds, live, meta, expected_version=base,
-                           changes=changes_rel,
-                           column_mapping=cm_override,
-                           physical_used=used_override)
+        return self._transact(_Txn(adds, live, meta, changes=changes_rel,
+                                   column_mapping=cm_override,
+                                   physical_used=used_override),
+                              base=base)
 
     @staticmethod
     def _align_to_schema(df: DataFrame, schema) -> DataFrame:
@@ -3454,50 +3413,12 @@ class TxnTable:
         return {d: (vals[f"n_{i}"], vals[f"m_{i}"])
                 for i, d in enumerate(candidates)}
 
-    def _drop_changes(self, rel: str) -> None:
-        """Remove a change file written by a probe that found no matches
-        (the commit it would have belonged to never happens)."""
+    def _drop(self, rel: str) -> None:
+        """Remove a dir this table wrote that no commit will reference
+        (a probe that found no matches, a reclaimed attempt)."""
         import shutil
 
         shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-
-    def _commit_rebased(self, adds: list[str], removes: list[str],
-                        meta: dict, base: int,
-                        changes: str | None = None,
-                        retries: int = 5,
-                        dvs: dict | None = None) -> int:
-        """WriteSerializable rebase for row-level rewrites (Delta's
-        conflict resolution for exactly this class): a concurrent commit
-        that did not touch any of OUR removed dirs — e.g. a streaming
-        append landing mid-DELETE — does not invalidate the rewrite, so
-        retry on top of it; a concurrent rewrite of an overlapping dir
-        is a genuine conflict and raises. Note the semantics this
-        implies (and Delta documents): rows appended concurrently are
-        NOT visited by this op — it deletes/updates the snapshot it
-        read."""
-        expected = base
-        # dirs whose state we are replacing: removed dirs AND dirs whose
-        # DV mapping we rewrite — a concurrent rewrite/DV of either is a
-        # genuine conflict (our positions/rewrite would clobber theirs)
-        ours = set(removes) | set(dvs or {})
-        for _ in range(retries):
-            try:
-                return self.commit(adds, removes, meta,
-                                   expected_version=expected,
-                                   changes=changes, dvs=dvs)
-            except TxnReplayError:
-                raise  # the batch is already committed: no rebase
-            except TxnConflictError:
-                latest = self.latest_version()
-                for v in range(expected + 1, latest + 1):
-                    doc = self._doc(v)
-                    theirs = set(doc["removes"]) | set(doc.get("dvs") or {})
-                    if ours & theirs:
-                        raise  # overlapping rewrite: real conflict
-                expected = latest
-        raise TxnConflictError(
-            f"row-level op lost {retries} straight commit races at "
-            f"{self.path}")
 
     def _typed_partition_values(self, spark: SparkSession,
                                 live: list[str],
@@ -3771,8 +3692,9 @@ class TxnTable:
                                     self._dvs_for(candidates, base),
                                     version=base)
                     .withColumn("_change_type", F.lit("delete")))
-            return self._commit_rebased([], candidates, m, base,
-                                        changes=changes_rel)
+            return self._transact(
+                _Txn([], candidates, m, changes=changes_rel),
+                self._rebase_rewrite, base)
         cond = F.expr(condition)
         sub = self._read_dirs(spark, candidates,
                               self._dvs_for(candidates, base),
@@ -3783,8 +3705,9 @@ class TxnTable:
             if capture_changes else None)
         adds = self._write_data_partitioned(sub.filter(~cond),
                                             part_cols)
-        return self._commit_rebased(adds, candidates, m, base,
-                                    changes=changes_rel)
+        return self._transact(
+            _Txn(adds, candidates, m, changes=changes_rel),
+            self._rebase_rewrite, base)
 
     def _update_where_partitioned(self, spark: SparkSession,
                                   condition: str, set_exprs: dict,
@@ -3839,11 +3762,12 @@ class TxnTable:
                 .otherwise(F.col(c)).alias(c) if c in set_exprs
                 else F.col(c) for c in cols]),
             part_cols)
-        return self._commit_rebased(
-            adds, candidates,
-            {**(meta or {}), "operation": "update",
-             "condition": condition, "set": sorted(set_exprs)},
-            base, changes=changes_rel)
+        return self._transact(
+            _Txn(adds, candidates,
+                 {**(meta or {}), "operation": "update",
+                  "condition": condition, "set": sorted(set_exprs)},
+                 changes=changes_rel),
+            self._rebase_rewrite, base)
 
     def delete_where(self, spark: SparkSession, condition: str,
                      prune: tuple | None = None,
@@ -3908,6 +3832,7 @@ class TxnTable:
         if tagged is None:
             return base  # pruning left no candidates: no commit
         cond = F.expr(condition)
+        cmeta = {**(meta or {}), "operation": "delete", "condition": condition}
         many = len(candidates) > self._OBS_RIDER_MAX
         if not capture_changes and many:
             # sizing pre-pass, then rewrite ONLY the partially-matched
@@ -3923,10 +3848,8 @@ class TxnTable:
                 adds.append(self._write_data(
                     tagged.filter(F.col("_src_dir").isin(rewrite))
                     .filter(~cond).drop("_src_dir")))
-            return self._commit_rebased(
-                adds, removes,
-                {**(meta or {}), "operation": "delete",
-                 "condition": condition}, base)
+            return self._transact(_Txn(adds, removes, cmeta),
+                                  self._rebase_rewrite, base)
         obs, metrics = self._candidate_obs(candidates, cond)
         if not capture_changes:
             # ONE job: write kept rows of every candidate, sized by the
@@ -3937,24 +3860,16 @@ class TxnTable:
             per_dir = self._obs_counts(obs, candidates)
             n_match = sum(m for _, m in per_dir.values())
             if n_match == 0:
-                import shutil as _shutil
-
-                _shutil.rmtree(os.path.join(self.path, rel),
-                               ignore_errors=True)
+                self._drop(rel)
                 return base  # nothing matched: no empty commit
             n_kept = sum(n - m for n, m in per_dir.values())
             if n_kept == 0:
-                import shutil as _shutil
-
-                _shutil.rmtree(os.path.join(self.path, rel),
-                               ignore_errors=True)
+                self._drop(rel)
                 adds = []
             else:
                 adds = [rel]
-            return self._commit_rebased(
-                adds, candidates,
-                {**(meta or {}), "operation": "delete",
-                 "condition": condition}, base)
+            return self._transact(_Txn(adds, candidates, cmeta),
+                                  self._rebase_rewrite, base)
         # the change-frame write doubles as the sizing pass: an
         # Observation on the pre-filter node counts rows + matches per
         # candidate dir during that SAME job, so DELETE costs exactly two
@@ -3976,7 +3891,7 @@ class TxnTable:
             per_dir = self._obs_counts(obs, candidates)
         removes = [d for d in candidates if per_dir[d][1] > 0]
         if not removes:
-            self._drop_changes(changes_rel)  # empty file from the probe
+            self._drop(changes_rel)  # empty file from the probe
             return base  # nothing matched: no empty commit
         # dirs where every row matches are dropped outright; survivors'
         # kept rows rewrite into ONE new dir (Delta rewrites file-merge
@@ -3987,10 +3902,8 @@ class TxnTable:
             adds.append(self._write_data(
                 tagged.filter(F.col("_src_dir").isin(rewrite))
                 .filter(~cond).drop("_src_dir")))
-        return self._commit_rebased(
-            adds, removes,
-            {**(meta or {}), "operation": "delete",
-             "condition": condition}, base, changes=changes_rel)
+        return self._transact(_Txn(adds, removes, cmeta, changes=changes_rel),
+                              self._rebase_rewrite, base)
 
     def _delete_where_dv(self, spark: SparkSession, condition: str,
                          prune: tuple | None, meta: dict | None,
@@ -4000,8 +3913,6 @@ class TxnTable:
         rows of every candidate dir (plus the carried-forward positions
         of dirs already DV'd — per-dir DVs are CUMULATIVE, one live file
         per dir) and commit the remapping. No data file is touched."""
-        import shutil as _shutil
-
         from pyspark.sql import functions as F
 
         if prune is not None:
@@ -4089,7 +4000,7 @@ class TxnTable:
                    .collect()}  # bounded: <= |candidates| rows
         prev = sum(ref["rows"] for ref in existing.values())
         if sum(per_dir.values()) == prev:  # no NEW matches
-            _shutil.rmtree(dv_abs, ignore_errors=True)
+            self._drop(dv_rel)
             return base
         changes_rel = None
         if capture_changes:
@@ -4098,14 +4009,11 @@ class TxnTable:
                 .withColumn("_change_type", F.lit("delete")))
         dvs = {d: {"path": dv_rel, "rows": int(n)}
                for d, n in sorted(per_dir.items())}
-        try:
-            return self._commit_rebased(
-                [], [], {**(meta or {}), "operation": "delete_dv",
-                         "condition": condition}, base,
-                changes=changes_rel, dvs=dvs)
-        except TxnConflictError:
-            _shutil.rmtree(dv_abs, ignore_errors=True)
-            raise
+        return self._transact(
+            _Txn([], [], {**(meta or {}), "operation": "delete_dv",
+                          "condition": condition},
+                 changes=changes_rel, dvs=dvs),
+            self._rebase_rewrite, base)
 
     def update_where(self, spark: SparkSession, condition: str,
                      set_exprs: dict, prune: tuple | None = None,
@@ -4250,6 +4158,8 @@ class TxnTable:
             spark, live, prune, base, snap_schema)
         if tagged is None:
             return base  # pruning left no candidates: no commit
+        cmeta = {**(meta or {}), "operation": "update",
+             "condition": condition, "set": sorted(set_exprs)}
         cols = [f.name for f in snap_schema.fields]
         many = len(candidates) > self._OBS_RIDER_MAX
         case_cols = [
@@ -4266,11 +4176,8 @@ class TxnTable:
             rel = self._write_data(
                 tagged.filter(F.col("_src_dir").isin(removes))
                 .select(*case_cols))
-            return self._commit_rebased(
-                [rel], removes,
-                {**(meta or {}), "operation": "update",
-                 "condition": condition,
-                 "set": sorted(set_exprs)}, base)
+            return self._transact(_Txn([rel], removes, cmeta),
+                                  self._rebase_rewrite, base)
         if not capture_changes:
             # ONE CASE-rewrite job over every candidate, match-probed by
             # the riding Observation; undo on global no-op
@@ -4283,16 +4190,10 @@ class TxnTable:
                     else F.col(c) for c in cols]))
             per_dir = self._obs_counts(obs, candidates)
             if sum(m for _, m in per_dir.values()) == 0:
-                import shutil as _shutil
-
-                _shutil.rmtree(os.path.join(self.path, rel),
-                               ignore_errors=True)
+                self._drop(rel)
                 return base  # nothing matched: no empty commit
-            return self._commit_rebased(
-                [rel], candidates,
-                {**(meta or {}), "operation": "update",
-                 "condition": condition,
-                 "set": sorted(set_exprs)}, base)
+            return self._transact(_Txn([rel], candidates, cmeta),
+                                  self._rebase_rewrite, base)
         # the change-frame write doubles as the match probe (Observation
         # on the pre-filter node, exactly as in delete_where): UPDATE
         # costs two scan jobs — changes, then the CASE-rewrite of the
@@ -4326,18 +4227,15 @@ class TxnTable:
             per_dir = self._obs_counts(obs, candidates)
         removes = [d for d in candidates if per_dir[d][1] > 0]
         if not removes:
-            self._drop_changes(changes_rel)  # empty file from the probe
+            self._drop(changes_rel)  # empty file from the probe
             return base  # nothing matched: no empty commit
         sub = tagged.filter(F.col("_src_dir").isin(removes))
         adds = [self._write_data(sub.select(*[
             F.when(cond, F.expr(set_exprs[c]).cast(snap_schema[c].dataType))
              .otherwise(F.col(c)).alias(c) if c in set_exprs
             else F.col(c) for c in cols]))]
-        return self._commit_rebased(
-            adds, removes,
-            {**(meta or {}), "operation": "update",
-             "condition": condition,
-             "set": sorted(set_exprs)}, base, changes=changes_rel)
+        return self._transact(_Txn(adds, removes, cmeta, changes=changes_rel),
+                              self._rebase_rewrite, base)
 
     # -- maintenance ------------------------------------------------------
 
@@ -4364,9 +4262,9 @@ class TxnTable:
         df = self.read(spark, base).coalesce(target_files)
         adds = (self._write_data_partitioned(df, part_keys)
                 if part_keys else [self._write_data(df)])
-        return self.commit(adds, live,
-                           {**(meta or {}), "operation": "compact"},
-                           expected_version=base)
+        return self._transact(
+            _Txn(adds, live, {**(meta or {}), "operation": "compact"}),
+            base=base)
 
     def compact_clustered(self, spark: SparkSession, cluster_by: str,
                           target_dirs: int = 8,
@@ -4405,10 +4303,10 @@ class TxnTable:
             adds = self._zorder_rewrite(spark, df, [cluster_by],
                                         target_dirs, 6,
                                         part_cols=part_keys)
-            return self.commit(adds, live,
-                               {**(meta or {}), "operation": "compact",
-                                "cluster_by": cluster_by},
-                               expected_version=base)
+            return self._transact(
+                _Txn(adds, live, {**(meta or {}), "operation": "compact",
+                                  "cluster_by": cluster_by}),
+                base=base)
         probs = [i / target_dirs for i in range(1, target_dirs)]
         bounds = df.approxQuantile(cluster_by, probs, 0.001)
         bounds = sorted(set(bounds))  # dedup collapsed quantiles
@@ -4437,10 +4335,10 @@ class TxnTable:
             adds.append(rel)
         import shutil
         shutil.rmtree(tmp_abs, ignore_errors=True)
-        return self.commit(adds, live,
-                           {**(meta or {}), "operation": "compact",
-                            "cluster_by": cluster_by},
-                           expected_version=base)
+        return self._transact(
+            _Txn(adds, live, {**(meta or {}), "operation": "compact",
+                              "cluster_by": cluster_by}),
+            base=base)
 
     def compact_zorder(self, spark: SparkSession, cluster_by: list[str],
                        target_dirs: int = 8, bits: int = 6,
@@ -4485,10 +4383,10 @@ class TxnTable:
         adds = self._zorder_rewrite(
             spark, self.read(spark, base), cluster_by, target_dirs,
             bits, part_cols=part_keys)
-        return self.commit(adds, live,
-                           {**(meta or {}), "operation": "compact",
-                            "zorder_by": list(cluster_by)},
-                           expected_version=base)
+        return self._transact(
+            _Txn(adds, live, {**(meta or {}), "operation": "compact",
+                              "zorder_by": list(cluster_by)}),
+            base=base)
 
     def _zorder_rewrite(self, spark: SparkSession, df: DataFrame,
                         cluster_by: list[str], target_dirs: int,
@@ -4648,11 +4546,11 @@ class TxnTable:
                     "equals a partition key — cluster by data columns")
         adds = self._zorder_rewrite(spark, df, cluster_by, target_dirs,
                                     bits, part_cols=part_keys)
-        return self.commit(adds, tail,
-                           {**(meta or {}), "operation": "compact",
-                            "zorder_by": list(cluster_by),
-                            "incremental": True},
-                           expected_version=base)
+        return self._transact(
+            _Txn(adds, tail, {**(meta or {}), "operation": "compact",
+                              "zorder_by": list(cluster_by),
+                              "incremental": True}),
+            base=base)
 
     def compact_if_needed(self, spark: SparkSession,
                           max_live_dirs: int = 32,
@@ -4734,12 +4632,11 @@ class TxnTable:
                                *cols, "_slice")
                   .drop("_slice"))
         adds = self._write_data_partitioned(df, cols)
-        return self.commit(
-            adds, removes,
-            {**(meta or {}), "operation": "compact",
-             "compact_scope": "partitions",
-             "compacted_values": len(hot)},
-            expected_version=base)
+        return self._transact(
+            _Txn(adds, removes, {**(meta or {}), "operation": "compact",
+                                 "compact_scope": "partitions",
+                                 "compacted_values": len(hot)}),
+            base=base)
 
     def restore(self, version: int, meta: dict | None = None) -> int:
         """RESTORE TABLE TO VERSION (Delta's RESTORE): publish a NEW
@@ -4965,20 +4862,17 @@ def _guarded_commit(table: TxnTable, batch_id: int, app_id: str | None,
     files on a lost race rather than re-running the write. A batch
     the ledger already covers skips the leg before any work; a replica
     that commits the batch first surfaces as the commit's
-    :class:`TxnReplayError`, which ends the leg. A plain lost version
-    race re-runs ``attempt()``, up to 6 attempts. A committed leg then
-    runs the log's checkpoint maintenance."""
+    :class:`TxnReplayError`, which ends the leg. A lost version race is
+    a REDO round of :meth:`TxnTable._transact`: the leg's op has
+    reclaimed its files, and ``attempt()`` runs again on the winner's
+    snapshot. A committed leg then runs the log's checkpoint
+    maintenance."""
     if table._replays(_stream_meta(batch_id, app_id, "")):
         return
-    for n in range(6):
-        try:
-            attempt()
-            break
-        except TxnReplayError:
-            return
-        except TxnConflictError:
-            if n == 5:
-                raise
+    try:
+        table._transact(lambda base: attempt(), _redo)
+    except TxnReplayError:
+        return
     table.checkpoint_if_needed()
 
 

@@ -44,7 +44,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .txnlog import TxnConflictError, TxnReplayError, TxnTable, _stream_meta
+from .txnlog import (TxnReplayError, TxnTable, _rebase_same, _stream_meta,
+                     _Txn)
 
 
 @dataclass
@@ -514,18 +515,13 @@ class _TxnStreamWriter(_TxnWriterBase, DataSourceStreamArrowWriter):
         if not adds:
             return
         table = TxnTable(self.path)
-        meta = _stream_meta(batchId, self.app_id, "stream_append")
-        stats = self._stats(messages)
-        for n in range(6):  # blind append: version races are retryable
-            try:
-                table.commit(adds, [], meta, stats=stats)
-                break
-            except TxnReplayError:
-                self._drop(messages)  # replayed batch: already committed
-                return
-            except TxnConflictError:
-                if n == 5:
-                    raise
+        txn = _Txn(adds, [], _stream_meta(batchId, self.app_id,
+                                          "stream_append"),
+                   stats=self._stats(messages))
+        try:  # blind append: a lost version race rebases
+            table._transact(txn, _rebase_same)
+        except TxnReplayError:
+            return  # replayed batch: already committed, files reclaimed
         # Delta-style maintenance from the writer: one commit per
         # micro-batch makes the log the fastest-growing metadata in the
         # system, so the sink checkpoints it every 10 commits — snapshot
@@ -544,6 +540,7 @@ class _TxnBatchWriter(_TxnWriterBase, DataSourceArrowWriter):
     def commit(self, messages) -> None:
         table = TxnTable(self.path)
         adds = self._adds(messages)
+        stats = self._stats(messages)
         if self.overwrite:
             # Base version captured ONCE: removes and expected_version come
             # from the same snapshot, so a commit landing in between makes
@@ -552,22 +549,17 @@ class _TxnBatchWriter(_TxnWriterBase, DataSourceArrowWriter):
             # empty-input overwrite commits removes-only — a legal empty
             # snapshot (TxnTable.read returns 0 rows with the prior
             # schema).
-            base = table.latest_version()
-            removes = table.snapshot_dirs(base)
-            if adds or removes:
-                table.commit(adds, removes, {"operation": "overwrite"},
-                             expected_version=base,
-                             stats=self._stats(messages))
-        elif adds:
-            stats = self._stats(messages)
-            for _ in range(5):  # blind append: races are retryable
-                try:
-                    table.commit(adds, [], {"operation": "append"},
-                                 stats=stats)
-                    return
-                except TxnConflictError:
-                    continue
-            table.commit(adds, [], {"operation": "append"}, stats=stats)
+            def attempt(base: int) -> _Txn | None:
+                removes = table.snapshot_dirs(base)
+                if adds or removes:
+                    return _Txn(adds, removes, {"operation": "overwrite"},
+                                stats=stats)
+                return None
+
+            table._transact(attempt)
+        elif adds:  # blind append: a lost version race rebases
+            table._transact(_Txn(adds, [], {"operation": "append"},
+                                 stats=stats), _rebase_same)
 
     def abort(self, messages) -> None:
         self._drop(messages)

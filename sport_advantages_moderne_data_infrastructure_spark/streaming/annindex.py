@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
-from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta
+from ..sources.txnlog import TxnTable, _guarded_commit, _stream_meta, _Txn
 from .pipeline import _start_change_feed, _start_foreach_batch
 
 
@@ -252,10 +252,13 @@ def rebuild_ivfpq_index(spark: SparkSession, index_path: str,
 
 
 def _swap(idx: TxnTable, frame: DataFrame, meta: dict) -> None:
-    base = idx.latest_version()
-    adds = idx._write_data_partitioned(frame, "centroid_id")  # noqa: SLF001
-    removes = idx.snapshot_dirs(base) if base is not None else []
-    idx.commit(adds, removes, meta, expected_version=base)
+    def attempt(base: int) -> _Txn:
+        adds = idx._write_data_partitioned(  # noqa: SLF001
+            frame, "centroid_id")
+        return _Txn(adds, idx.snapshot_dirs(base) if base >= 0 else [],
+                    meta)
+
+    idx._transact(attempt)  # noqa: SLF001
 
 
 # --- CDF-driven maintenance: retraction + the embeddings-table feed -------
@@ -285,9 +288,6 @@ def retract_batch(idx: TxnTable, gone: DataFrame,
     is a no-op (the anti-join finds nothing) — which is what makes
     retract-then-ingest the safe order when an insert and its
     tombstone fold into one batch window."""
-    import os
-    import shutil
-
     from ..operators.ivf import assign_centroids
 
     if idx.latest_version() is None:
@@ -333,13 +333,13 @@ def retract_batch(idx: TxnTable, gone: DataFrame,
             return
         ids = assigned.select("vec_id").distinct()
 
-        def _leg():
-            base = idx.latest_version()
-            live = idx.snapshot_dirs(base)
-            aff = {f"centroid_id={v}" for v in affected}
-            removes = [d for d in live if os.path.basename(d) in aff]
+        aff = {f"centroid_id={v}" for v in affected}
+
+        def _attempt(base: int) -> _Txn | None:
+            removes = [d for d in idx.snapshot_dirs(base)
+                       if os.path.basename(d) in aff]
             if not removes:
-                return  # none of the touched lists exist in the index
+                return None  # none of the touched lists are indexed
             have = sorted(int(os.path.basename(d).split("=", 1)[1])
                           for d in removes)
             cur = idx.read_partitions(spark, have)
@@ -350,18 +350,11 @@ def retract_batch(idx: TxnTable, gone: DataFrame,
             if stray:
                 raise AssertionError(
                     f"retraction rows outside affected lists: {stray}")
-            try:
-                idx.commit(adds, removes,
-                           _stream_meta(batch_id, app_id,
-                                        "ann_index_retract"),
-                           expected_version=base)
-            except Exception:
-                for rel in {os.path.dirname(a) for a in adds}:
-                    shutil.rmtree(os.path.join(idx.path, rel),
-                                  ignore_errors=True)
-                raise
+            return _Txn(adds, removes,
+                        _stream_meta(batch_id, app_id, "ann_index_retract"))
 
-        _guarded_commit(idx, batch_id, app_id, _leg)
+        _guarded_commit(idx, batch_id, app_id,
+                        lambda: idx._transact(_attempt))  # noqa: SLF001
     finally:
         assigned.unpersist()
 

@@ -75,7 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_two_phase
-from ..sources.txnlog import TxnTable, _stream_meta
+from ..sources.txnlog import TxnTable, _stream_meta, _Txn
 from .pipeline import _start_foreach_batch
 
 N_BUCKETS = 32
@@ -293,15 +293,15 @@ def compact(spark: SparkSession, root: str) -> None:
     folded = (current_labels(spark, root)
               .withColumn("__kb", _bucket(F.col("doc_id")))
               .repartition(N_BUCKETS, "__kb"))
-    adds = assign._write_data_partitioned(folded, "__kb")  # noqa: SLF001
-    assign.commit(adds, assign.snapshot_dirs(assign.latest_version()),
-                  {"operation": "cc_compact", "partition_by": "__kb"},
-                  expected_version=assign.latest_version())
+    v = assign._transact(lambda base: _Txn(  # noqa: SLF001
+        assign._write_data_partitioned(folded, "__kb"),  # noqa: SLF001
+        assign.snapshot_dirs(base),
+        {"operation": "cc_compact", "partition_by": "__kb"}))
     # the truncate records the POST-fold assign version: the pinned
     # serve pairs the (now empty) remap with the folded assign
     remap.overwrite(remap.read(spark).limit(0),
                     {"operation": "cc_compact_truncate",
-                     "cc_assign_version": assign.latest_version()})
+                     "cc_assign_version": v})
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -93,11 +93,12 @@ def test_append_reclaims_orphan_on_exhausted_retries(
         raise TxnConflictError("forced")
 
     monkeypatch.setattr(t, "commit", always_conflict)
+    monkeypatch.setattr(TxnTable, "_conflict_backoff",
+                        staticmethod(lambda attempt: None))
     data_root = os.path.join(t.path, "data")
     before = set(os.listdir(data_root))
     with pytest.raises(TxnConflictError):
-        t.append(spark.createDataFrame([(2, 1)], "id int, day int"),
-                 retries=2)
+        t.append(spark.createDataFrame([(2, 1)], "id int, day int"))
     after = set(os.listdir(data_root))
     assert after == before, (
         f"orphaned commit root leaked: {sorted(after - before)}")

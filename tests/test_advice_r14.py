@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+    _COMMIT_ATTEMPTS,
     TxnConflictError,
     TxnTable,
 )
@@ -98,20 +99,31 @@ def test_scan_uri_normalization_matches_manifest_key(spark):
 # --- (3) bounded identity rebase under injected conflicts -----------------
 
 
+@pytest.mark.parametrize("partitioned", [False, True],
+                         ids=["plain", "partitioned"])
 def test_identity_rebase_budget_is_bounded(spark, tmp_path,
-                                           monkeypatch):
+                                           monkeypatch, partitioned):
     """Fault injection: every commit attempt loses to a NON-allocating
     racer (TxnConflictError, no interleaved allocation). The rebase
     path must exhaust a bounded budget and surface the conflict — the
-    pre-r14 inner `while True` spun forever here."""
+    pre-r14 inner `while True` spun forever here — on a plain identity
+    table and on a partition-declared one alike. Past 200 attempts the
+    fake commit raises a different error, so a spinning writer fails
+    the test instead of hanging it."""
     t = TxnTable(str(tmp_path / "spin"))
     t.set_identity_column("rid")
-    t.append(_orders(spark, 10).select("o_orderkey"))
+    cols = ["o_orderkey"]
+    if partitioned:
+        t.set_partition_column("day")
+        cols.append((F.col("o_orderkey") % 2).alias("day"))
+    t.append(_orders(spark, 10).select(*cols))
 
     attempts = {"n": 0}
 
     def always_conflict(self, *a, **k):
         attempts["n"] += 1
+        if attempts["n"] > 200:
+            raise RuntimeError("still retrying after 200 commit attempts")
         raise TxnConflictError("injected non-allocating racer")
 
     monkeypatch.setattr(TxnTable, "commit", always_conflict)
@@ -120,11 +132,11 @@ def test_identity_rebase_budget_is_bounded(spark, tmp_path,
     monkeypatch.setattr(TxnTable, "_conflict_backoff",
                         staticmethod(lambda attempt: None))
     with pytest.raises(TxnConflictError, match="injected"):
-        t.append(_orders(spark, 5).select("o_orderkey"))
-    # bounded: rebase budget (20) within one outer attempt — the
-    # rebase exhaustion raises rather than consuming all 20 outer
-    # attempts x unbounded rebases
+        t.append(_orders(spark, 5).select(*cols))
+    # bounded: one budget (20) counts every lost round, rebase or
+    # redo — never 20 redo rounds x unbounded rebases
     assert attempts["n"] <= 20, attempts["n"]
+    assert attempts["n"] <= _COMMIT_ATTEMPTS, attempts["n"]
     # and the orphaned commit dir was reclaimed
     data_dir = os.path.join(t.path, "data")
     live = {os.path.basename(d) for d in

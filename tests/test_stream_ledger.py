@@ -10,8 +10,9 @@ Structural checks keep the ledger lookups and hand-built stream metas
 inside ``sources/txnlog.py``, append-shaped commits inside
 ``sources/``, ``writeStream.foreachBatch`` inside the one starter, the
 row-level ``format("txnlog")`` feed out of ``streaming/``, and the
-single-source view high-water fold inside ``operators/mv.py``, so
-per-sink copies cannot come back."""
+single-source view high-water fold inside ``operators/mv.py``, and
+every lost-race retry inside ``TxnTable._transact``, so per-sink
+copies cannot come back."""
 
 from __future__ import annotations
 
@@ -298,8 +299,9 @@ def _calls(tree, attr: str):
 
 def test_one_append_path_and_one_starter():
     """Outside ``sources/`` no code makes an append-shaped
-    ``commit(adds, [], ...)`` or calls ``_commit_blind`` (append legs
-    call ``TxnTable.append``), no ``_guarded_commit`` leg appends, only
+    ``commit(adds, [], ...)`` or ``_Txn(adds, [], ...)`` or calls
+    ``_commit_blind`` (append legs call ``TxnTable.append``), no
+    ``_guarded_commit`` leg appends, only
     ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``,
     no ``streaming/`` module reads ``readStream.format("txnlog")``
     (change-feed sinks start from ``pipeline._start_change_feed``), and
@@ -339,7 +341,9 @@ def test_one_append_path_and_one_starter():
                             "outside _start_foreach_batch")
         if rel.startswith("sources" + os.sep):
             continue
-        for c in _calls(tree, "commit"):
+        txns = [c for c in ast.walk(tree) if isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Name) and c.func.id == "_Txn"]
+        for c in _calls(tree, "commit") + txns:
             if (len(c.args) >= 2 and isinstance(c.args[1], ast.List)
                     and not c.args[1].elts):
                 hits.append(f"{rel}:{c.lineno}: append-shaped commit")
@@ -493,4 +497,44 @@ def test_commit_meta_lookups_go_through_txntable():
         hits += [f"{rel}:{c.lineno}: read_changes outside the shared fold"
                  for c in _calls(tree, "read_changes")
                  if not scope[id(c)] & allowed]
+    assert not hits, "\n".join(hits)
+
+
+_COMMIT_LOOP = (os.path.join("sources", "txnlog.py"), "_transact")
+
+
+def _exc_names(node) -> set:
+    """Names an ``except`` clause catches (``except (A, m.B)``)."""
+    return {n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node) if isinstance(n, (ast.Name,
+                                                      ast.Attribute))}
+
+
+def test_one_optimistic_commit_loop():
+    """Every lost commit race is handled by ``TxnTable._transact``:
+    nowhere else in the package does an ``except TxnConflictError``
+    sit inside a ``for``/``while`` loop (a hand-written retry loop
+    with its own budget, backoff and cleanup), and no module under
+    ``streaming/`` or ``operators/`` calls ``.commit(`` with
+    ``expected_version=`` (a write-then-commit copy that leaks its
+    files on a lost race)."""
+    hits = []
+    for rel, src in _package_modules():
+        tree = ast.parse(src)
+        scope = _enclosing(tree)
+        loops = [n for n in ast.walk(tree)
+                 if isinstance(n, (ast.For, ast.While))]
+        lines = sorted({
+            h.lineno for loop in loops for h in ast.walk(loop)
+            if isinstance(h, ast.ExceptHandler) and h.type is not None
+            and "TxnConflictError" in _exc_names(h.type)
+            and not (rel == _COMMIT_LOOP[0]
+                     and _COMMIT_LOOP[1] in scope[id(h)])})
+        hits += [f"{rel}:{n}: except TxnConflictError in a loop"
+                 for n in lines]
+        if rel.startswith(("streaming" + os.sep, "operators" + os.sep)):
+            hits += [f"{rel}:{c.lineno}: commit(expected_version=...)"
+                     for c in _calls(tree, "commit")
+                     if any(k.arg == "expected_version"
+                            for k in c.keywords)]
     assert not hits, "\n".join(hits)
