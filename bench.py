@@ -34,9 +34,8 @@ CORE_QUERIES = frozenset({
 # Floors sit ~25% under steady-state bests to absorb box noise.
 FLOORS = {
     "stream_rows_per_sec": 50000,       # plain parquet sink (best ~69k)
-    "txn_sink_rows_per_sec": 28000,     # Python DataSource sink (best ~39k)
     "txn_fb_sink_rows_per_sec": 45000,  # JVM foreachBatch sink
-    "txn_feed_rows_per_sec": 40000,     # change-feed source (r5 steady
+    "txn_feed_rows_per_sec": 40000,     # change-feed read (r5 steady
     # state 62-70k across four full-bench runs; raised 35k->45k to stay
     # ~25-30% under best like the other floors). RE-PINNED 45k->40k
     # 2026-08-16 (r11): steady state measured 50-54k across 8 isolated
@@ -385,14 +384,11 @@ def main() -> None:
     # a one-time micro-batch-scheduler/JIT cost (~3x observed), so an
     # UNTIMED warm-up run precedes the timed passes.
     _ = bench_streaming(spark, sf_dir)  # warm-up, discarded
-    # the txn legs ride the PYTHON DataSource (source + sink): their
-    # Arrow workers cold-start per pool, and sibling legs' worker
-    # churn can evict them between attempts — a fixed ~1.3 s spin-up
-    # on a ~2 s drain reads as a 40% throughput loss (the r10/r11
-    # feed-floor misses). One discarded warm-up run primes both pools
-    # the same way bench_streaming's warm-up primes the micro-batch
-    # scheduler; timed attempts then measure steady state, which is
-    # what the floors pin (a production drain amortizes spin-up away)
+    # the txn legs' first drain pays their own one-time plan/codegen
+    # cost (a fixed spin-up on a ~2 s drain reads as throughput loss);
+    # one discarded warm-up run primes them the same way
+    # bench_streaming's warm-up primes the micro-batch scheduler; timed
+    # attempts then measure steady state, which is what the floors pin
     _ = bench_txn_stream(spark, sf_dir)  # warm-up, discarded
     stream_runs, txn_runs, dedup_runs, jdbc_runs = [], [], [], []
     fp_runs = []
@@ -403,8 +399,7 @@ def main() -> None:
         jdbc_runs.append(bench_jdbc_publish(spark))
         fp_runs.append(bench_final_pipeline(spark, sf_dir))
         print(f"# stream pass{pass_i}: {stream_runs[-1]['rows_per_sec']} "
-              f"txn: {txn_runs[-1]['sink_rows_per_sec']}/"
-              f"{txn_runs[-1]['fb_sink_rows_per_sec']}/"
+              f"txn: {txn_runs[-1]['fb_sink_rows_per_sec']}/"
               f"{txn_runs[-1]['feed_rows_per_sec']} "
               f"dedup: {dedup_runs[-1]['docs_per_sec']} "
               f"final_pipe: {fp_runs[-1]['rows_per_sec']}",
@@ -418,11 +413,7 @@ def main() -> None:
         # independent fresh-dir runs, each independently exposed to
         # interference windows
         return {
-            **_best(runs, "sink_rows_per_sec"),
-            "fb_sink_rows_per_sec": _best(
-                runs, "fb_sink_rows_per_sec")["fb_sink_rows_per_sec"],
-            "fb_sink_wall_sec": _best(
-                runs, "fb_sink_rows_per_sec")["fb_sink_wall_sec"],
+            **_best(runs, "fb_sink_rows_per_sec"),
             "feed_rows_per_sec": _best(
                 runs, "feed_rows_per_sec")["feed_rows_per_sec"],
             "feed_wall_sec": _best(
@@ -459,7 +450,6 @@ def main() -> None:
     def _floor_vals():
         return {
             "stream_rows_per_sec": stream["rows_per_sec"],
-            "txn_sink_rows_per_sec": txn_stream["sink_rows_per_sec"],
             "txn_fb_sink_rows_per_sec": txn_stream["fb_sink_rows_per_sec"],
             "txn_feed_rows_per_sec": txn_stream["feed_rows_per_sec"],
             "stream_dedup_docs_per_sec": stream_dedup["docs_per_sec"],
@@ -602,7 +592,7 @@ def main() -> None:
         "delta_replay": delta_replay,
         "passed_on_retry": passed_on_retry,
         "stream_runs_raw": [r["rows_per_sec"] for r in stream_runs],
-        "txn_runs_raw": [[r["sink_rows_per_sec"], r["fb_sink_rows_per_sec"],
+        "txn_runs_raw": [[r["fb_sink_rows_per_sec"],
                           r["feed_rows_per_sec"]] for r in txn_runs],
         "dedup_runs_raw": [r["docs_per_sec"] for r in dedup_runs],
         "jdbc_runs_raw": [[r["upsert_rows_per_sec"],
@@ -743,9 +733,10 @@ def bench_streaming(spark, sf_dir: str) -> dict:
 def bench_txn_stream(spark, sf_dir: str) -> dict:
     """Transactional-table streaming throughput (the r3 flagship feature,
     VERDICT r3 #5): leg 1 drains the CDC parse pipeline through the
-    EXACTLY-ONCE txnlog streaming sink (one atomic commit per
-    micro-batch, log-scan replay guard); leg 2 streams the committed
-    change feed back out of the table into a parquet sink. Both legs
+    EXACTLY-ONCE txn append sink (``write_stream_txn_append``: one
+    atomic commit per micro-batch, ledger replay guard); leg 2 streams
+    the committed change feed back out of the table into a parquet sink
+    (``_start_change_feed`` + ``TxnTable.read_changes``). Both legs
     report end-to-end rows/sec."""
     import shutil
     import tempfile
@@ -754,53 +745,36 @@ def bench_txn_stream(spark, sf_dir: str) -> dict:
     from sport_advantages_moderne_data_infrastructure_spark.sources import (
         domain as D,
     )
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (
-        register_txn_source,
-    )
     from sport_advantages_moderne_data_infrastructure_spark.streaming import (
         pipeline as P,
     )
 
-    register_txn_source(spark)
     root = tempfile.mkdtemp(prefix="samdis_bench_txn_")
-    src, table = f"{root}/src", f"{root}/table"
+    src, table, out = f"{root}/src", f"{root}/table", f"{root}/out"
     D.cdc_events(spark, sf_dir).repartition(16).write.parquet(src)
     n_rows = spark.read.parquet(src).count()
 
     t0 = time.perf_counter()
-    q = (P.stream_cdc_from_files(spark, src, max_files_per_trigger=4)
-         .writeStream.format("txnlog").option("path", table)
-         .option("checkpointLocation", f"{root}/ck_sink")
-         .trigger(availableNow=True).start())
+    q = P.write_stream_txn_append(
+        P.stream_cdc_from_files(spark, src, max_files_per_trigger=4),
+        table, f"{root}/ck_fb")
     q.awaitTermination(600)
-    sink_wall = time.perf_counter() - t0
-    sink_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    fb_wall = time.perf_counter() - t0
+
+    def _sink(changes, _batch_id):
+        (changes[table].drop("_change_type", "_commit_version")
+         .write.mode("append").parquet(out))
 
     t0 = time.perf_counter()
-    q2 = (spark.readStream.format("txnlog").load(table)
-          .writeStream.format("parquet").option("path", f"{root}/out")
-          .option("checkpointLocation", f"{root}/ck_feed")
-          .trigger(availableNow=True).start())
+    q2 = P._start_change_feed(spark, [table], _sink, f"{root}/ck_feed",
+                              True)
     q2.awaitTermination(600)
     feed_wall = time.perf_counter() - t0
-    out_rows = spark.read.parquet(f"{root}/out").count()
-
-    # leg 3: the JVM-write foreachBatch txn append sink — same
-    # exactly-once contract as leg 1 without the Arrow->Python hop
-    # (VERDICT r4 #1: close the txn-sink gap to the plain sink)
-    t0 = time.perf_counter()
-    q3 = P.write_stream_txn_append(
-        P.stream_cdc_from_files(spark, src, max_files_per_trigger=4),
-        f"{root}/table_fb", f"{root}/ck_fb")
-    q3.awaitTermination(600)
-    fb_wall = time.perf_counter() - t0
+    out_rows = spark.read.parquet(out).count()
 
     res = {
         "input_rows": n_rows,
         "table_rows": out_rows,
-        "sink_rows_per_sec": round(n_rows / sink_wall, 1),
-        "sink_micro_batches": len(sink_batches),
-        "sink_wall_sec": round(sink_wall, 3),
         "fb_sink_rows_per_sec": round(n_rows / fb_wall, 1),
         "fb_sink_wall_sec": round(fb_wall, 3),
         "feed_rows_per_sec": round(out_rows / feed_wall, 1),

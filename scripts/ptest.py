@@ -40,7 +40,6 @@ COSTS = {
     "test_retrieval.py": 90,
     "test_delta_interop.py": 310,  # r14 s5: compaction/ICT/v2 legs
     "test_replace_where.py": 290,  # r14 s5: race suite
-    "test_delta_stream_source.py": 60,
     "test_advice_r14.py": 50,
     "test_partition_generated.py": 110,  # r12 partition-by-generated
     "test_advice_r12.py": 20,            # r12 advisor regressions

@@ -4,4 +4,3 @@ from .domain import (  # noqa: F401
     register_domain_views, domain_cte_sql,
 )
 from .txnlog import TxnTable, TxnConflictError, TxnReplayError  # noqa: F401
-from .txnstream import register_txn_source  # noqa: F401

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,6 +126,8 @@ _COMMIT_ATTEMPTS = 20  # rounds TxnTable._transact tries, rebase and
 # redo alike. Every lost round means ANOTHER writer's commit landed
 # (global progress), so this bounds how many competing commits one
 # write tolerates — not a luck budget.
+_TRANSACTING = threading.local()  # .paths: tables with a _transact
+# running on this thread; a nested one is single-shot (one budget)
 
 
 class _Txn:
@@ -156,8 +159,8 @@ def _redo(txn: _Txn | None, base: int, latest: int) -> None:
 
 def _widens_to(a, b) -> bool:
     """True when Spark type ``a`` safely widens to ``b`` (the Delta
-    type-widening lattice, mirrored by txnstream._cast_ok on the arrow
-    side): int8 -> .. -> int64, float -> double, any int -> double.
+    type-widening lattice): int8 -> .. -> int64, float -> double, any
+    int -> double.
     Lossless by construction — files keep their narrow physical type
     and readers upcast at the scan, never a rewrite."""
     from pyspark.sql.types import (ByteType, DoubleType, FloatType,
@@ -1065,11 +1068,10 @@ class TxnTable:
         return out
 
     def _change_dirs(self, v: int) -> tuple[list[str], str | None]:
-        """The change-feed rule for commit ``v``, shared by
-        :meth:`read_changes` and the ``format("txnlog")`` streaming
-        source: ``(dirs, change_type)`` — the commit's change files as
-        recorded (``change_type`` None: they carry ``_change_type``), a
-        plain append's adds as ``"insert"``, or no dirs for a layout-only
+        """The change-feed rule for commit ``v`` (:meth:`read_changes`):
+        ``(dirs, change_type)`` — the commit's change files as recorded
+        (``change_type`` None: they carry ``_change_type``), a plain
+        append's adds as ``"insert"``, or no dirs for a layout-only
         compaction or a metadata-only commit. A deletion-vector commit
         without change files and a full rewrite have no row-level delta
         and raise."""
@@ -1709,12 +1711,22 @@ class TxnTable:
         rebase or redo, counts against ``_COMMIT_ATTEMPTS``, with
         :meth:`_conflict_backoff` between rounds. A
         :class:`TxnReplayError` is terminal: no retry, no backoff. Any
-        exit without a commit reclaims what the attempt wrote."""
+        exit without a commit reclaims what the attempt wrote.
+
+        Budgets never nest: a ``_transact`` on a table that already has
+        one running on this thread (a ``_guarded_commit`` over a
+        rebasing op) makes one attempt and raises its lost race to the
+        outer loop, whose round it is."""
         if base is None:
             base = self._base()
         txn = attempt if isinstance(attempt, _Txn) else None
+        held = _TRANSACTING.__dict__.setdefault("paths", set())
+        key = os.path.abspath(self.path)
+        outer = key not in held
+        rounds = _COMMIT_ATTEMPTS if outer else 1
+        held.add(key)
         try:
-            for n in range(_COMMIT_ATTEMPTS):
+            for n in range(rounds):
                 if n:
                     self._conflict_backoff(n - 1)
                 try:
@@ -1727,7 +1739,7 @@ class TxnTable:
                 except TxnReplayError:
                     raise
                 except TxnConflictError:
-                    if rebase is None or n + 1 == _COMMIT_ATTEMPTS:
+                    if rebase is None or n + 1 == rounds:
                         raise
                     latest = self._base()
                     nxt = rebase(txn, base, latest)
@@ -1737,6 +1749,9 @@ class TxnTable:
         except BaseException:
             self._reclaim(txn)
             raise
+        finally:
+            if outer:
+                held.discard(key)
 
     def _reclaim(self, txn: _Txn | None) -> None:
         """Delete every dir ``txn`` wrote — no commit references them.
@@ -2365,11 +2380,10 @@ class TxnTable:
         """Publish a commit doc atomically. ``expected_version`` is the
         version this writer based its work on (None for a fresh table);
         losing the race to version+1 raises :class:`TxnConflictError`.
-        ``stats`` carries EXECUTOR-computed per-dir column min/max (the
-        DataSource Arrow writers compute them in the write tasks and ship
-        them via commit messages — Delta's AddFile-stats flow); dirs not
-        covered fall back to a driver-side footer harvest, which is fine
-        for single-digit-file commits and avoided at scale."""
+        ``stats`` carries per-dir column min/max the caller already
+        knows (a clone carries its source's — Delta's AddFile-stats
+        flow); dirs not covered fall back to a driver-side footer
+        harvest, which is fine for single-digit-file commits."""
         os.makedirs(self.log_dir, exist_ok=True)
         self._check_protocol(writer=True)
         if adds and self.generation_config().get("partition_by"):
@@ -4249,9 +4263,8 @@ class TxnTable:
         (the commit is metadata+layout only). The small-files problem is
         the #1 operational cost of log-structured tables at scale; on a
         real deployment this runs on a schedule, keyed off
-        ``len(snapshot_dirs())``. NOTE: a compaction is a rewrite commit —
-        downstream change-feed streams fail on it by default; they should
-        read with ``option("skipChangeCommits", "true")`` (txnstream) to
+        ``len(snapshot_dirs())``. The change feed (:meth:`read_changes`)
+        skips a compaction commit as layout-only, so change-feed sinks
         keep streaming across maintenance."""
         base = self.latest_version()
         if base is None:

@@ -75,7 +75,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_two_phase
-from ..sources.txnlog import TxnTable, _stream_meta, _Txn
+from ..sources.txnlog import (TxnConflictError, TxnTable, _stream_meta,
+                              _Txn)
 from .pipeline import _start_foreach_batch
 
 N_BUCKETS = 32
@@ -258,6 +259,29 @@ def write_stream_cc(df: DataFrame, root: str, checkpoint: str,
     return _start_foreach_batch(df, _ingest, checkpoint, available_now)
 
 
+def _pinned_labels(spark: SparkSession, assign: TxnTable, remap: TxnTable
+                   ) -> tuple[DataFrame, int | None, int | None]:
+    """:func:`current_labels`' frame and the (assign, remap) versions
+    it reads: the latest remap commit and the assign version it
+    recorded — the latest assign when there is no remap commit yet (no
+    merges ever) or on pre-r10 history."""
+    rv = remap.latest_version()
+    av = None if rv is None else remap._doc(rv).get(  # noqa: SLF001
+        "meta", {}).get("cc_assign_version")
+    if av is None:
+        av = assign.latest_version()
+    rows = (assign.read(spark, version=av)
+            .select("doc_id", "cluster_id"))
+    if rv is None:
+        return rows, av, rv
+    res = resolve_remap(remap.read(spark, version=rv))
+    return (rows.join(F.broadcast(res),
+                      rows.cluster_id == res.src, "left")
+            .select("doc_id",
+                    F.coalesce("dst", "cluster_id").alias("cluster_id")),
+            av, rv)
+
+
 def current_labels(spark: SparkSession, root: str) -> DataFrame:
     """(doc_id, cluster_id) — assign ⟕ broadcast(collapsed remap):
     one map-side join, no shuffle, at any corpus size. The PAIR is a
@@ -267,41 +291,50 @@ def current_labels(spark: SparkSession, root: str) -> DataFrame:
     fresh docs whose merges are missing — a cluster-splitting view
     the leakage-safe splits must never see. With no remap commit yet
     (no merges ever), any assign snapshot is consistent by itself."""
-    assign, remap = _tables(root)
-    rv = remap.latest_version()
-    if rv is None:
-        return assign.read(spark).select("doc_id", "cluster_id")
-    av = remap._doc(rv).get("meta", {}).get(  # noqa: SLF001
-        "cc_assign_version")  # None on pre-r10 history: legacy latest
-    rows = (assign.read(spark, version=av)
-            .select("doc_id", "cluster_id"))
-    res = resolve_remap(remap.read(spark, version=rv))
-    return (rows.join(F.broadcast(res),
-                      rows.cluster_id == res.src, "left")
-            .select("doc_id",
-                    F.coalesce("dst", "cluster_id").alias("cluster_id")))
+    return _pinned_labels(spark, *_tables(root))[0]
 
 
 def compact(spark: SparkSession, root: str) -> None:
     """OPTIMIZE-style maintenance: fold the resolved forest into
     ``assign`` (full rewrite, bucket-partitioned) and truncate
     ``remap`` — run on a schedule to keep resolution chains short;
-    correctness never depends on it."""
+    correctness never depends on it.
+
+    Both commits are based on the versions the fold read (the serve
+    pair): assign rows newer than the pair — a batch torn between its
+    assign and remap legs, or an ingest racing the fold — are not in
+    the folded frame, so removing them would lose their labels for
+    good. If either table moved past the pair, :class:`TxnConflictError`
+    is raised before anything is written; run it again once the
+    batch's remap leg has landed. A remap commit landing between the
+    fold and the truncate fails only the truncate: the folded assign
+    under the whole remap history still resolves every label."""
     assign, remap = _tables(root)
-    if remap.latest_version() is None:
+    labels, av, rv = _pinned_labels(spark, assign, remap)
+    if rv is None:
         return
-    folded = (current_labels(spark, root)
-              .withColumn("__kb", _bucket(F.col("doc_id")))
+    folded = (labels.withColumn("__kb", _bucket(F.col("doc_id")))
               .repartition(N_BUCKETS, "__kb"))
-    v = assign._transact(lambda base: _Txn(  # noqa: SLF001
-        assign._write_data_partitioned(folded, "__kb"),  # noqa: SLF001
-        assign.snapshot_dirs(base),
-        {"operation": "cc_compact", "partition_by": "__kb"}))
+
+    def fold(base: int) -> _Txn:
+        if (assign.latest_version(), remap.latest_version()) != (base, rv):
+            raise TxnConflictError(
+                f"{root}: assign or remap moved past the pair "
+                f"(v{base}, v{rv}) compact folds")
+        return _Txn(
+            assign._write_data_partitioned(folded, "__kb"),  # noqa: SLF001
+            assign.snapshot_dirs(base),
+            {"operation": "cc_compact", "partition_by": "__kb"})
+
+    v = assign._transact(fold, base=av)  # noqa: SLF001
     # the truncate records the POST-fold assign version: the pinned
     # serve pairs the (now empty) remap with the folded assign
-    remap.overwrite(remap.read(spark).limit(0),
-                    {"operation": "cc_compact_truncate",
-                     "cc_assign_version": v})
+    remap._transact(lambda base: _Txn(  # noqa: SLF001
+        [remap._write_data(  # noqa: SLF001
+            remap.read(spark, version=rv).limit(0))],
+        remap.snapshot_dirs(base),
+        {"operation": "cc_compact_truncate", "cc_assign_version": v}),
+        base=rv)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

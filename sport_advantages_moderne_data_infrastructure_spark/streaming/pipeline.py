@@ -208,9 +208,9 @@ def _pin_versions(records: str, batch_id: int,
 
 def _refuse_old_feed_checkpoint(checkpoint: str) -> None:
     """Raise when ``checkpoint`` was written by an earlier change feed —
-    the row-level ``format("txnlog")`` source (``{"version": N}``
-    offsets) or the Python version feed (``{"versions": …}``) — before
-    Spark fails on it. Restarting on a fresh checkpoint alone is not a
+    a row-level Python source (``{"version": N}`` offsets) or the
+    Python version feed (``{"versions": …}``) — before Spark fails on
+    it; such checkpoints outlive the code that wrote them. Restarting on a fresh checkpoint alone is not a
     remedy: Spark batch ids restart at 0, which the views' (app_id,
     batch_id) ledger silently skips, and under a new app_id batch 0
     re-applies the whole history onto views that already hold it."""
@@ -349,20 +349,14 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     native writer (whole-stage codegen straight into the commit dir, no
     Arrow hop into Python workers), then one atomic log commit. The
     commit meta carries ``(app_id, batch_id)`` into the table's ledger
-    (Delta's ``txnAppId``/``txnVersion``), the same exactly-once
-    contract as ``format("txnlog")``: ``append`` writes nothing for a
-    batch the ledger already covers, and drops its data when a racing
-    replica commits the batch first. Generated, identity and
+    (Delta's ``txnAppId``/``txnVersion``): ``append`` writes nothing
+    for a batch the ledger already covers, and drops its data when a
+    racing replica commits the batch first. Generated, identity and
     partition-declared targets are laid out by ``append`` inside the
     same commit. An unreferenced dir from a crash between write and
-    commit is invisible and falls to ``vacuum()``. Use this when sink
-    throughput matters — the Python DataSource sink pays the
-    JVM→Arrow→Python→parquet round trip per batch (~1.8x slower on the
-    CDC bench); this one matches the plain parquet sink minus one
-    footer-stats harvest per commit (footer metadata only,
-    O(files-per-batch), fine at micro-batch file counts —
-    executor-computed stats stay the DataSource path's advantage).
-    Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
+    commit is invisible and falls to ``vacuum()``. Its cost is the
+    plain parquet sink's plus one footer-stats harvest per commit
+    (footer metadata only, O(files-per-batch)). Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
     sink). A given ``processing_time`` (T1: "30 seconds") keeps the
     query running on that interval, whatever ``available_now`` says
     (:func:`_trigger`).

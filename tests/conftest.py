@@ -107,3 +107,32 @@ def crash_at_commit(monkeypatch):
             yield crash
 
     return _arm
+
+
+@pytest.fixture
+def feed_to_parquet(spark):
+    """``feed_to_parquet(path, out, checkpoint, cdf=False)`` runs the
+    change-feed starter (``pipeline._start_change_feed``) over the
+    transactional table at ``path`` to the end of its log on
+    ``checkpoint``, appending each batch's change rows to the parquet
+    dir ``out``: the data columns only, or with ``_change_type`` and
+    ``_commit_version`` when ``cdf``. A failing batch raises from
+    ``awaitTermination``."""
+    from sport_advantages_moderne_data_infrastructure_spark.streaming.pipeline import (  # noqa: E501
+        _start_change_feed,
+    )
+
+    def _run(path: str, out: str, checkpoint: str, cdf: bool = False):
+        def _sink(changes, _batch_id):
+            df = changes[path]
+            if not cdf:
+                df = df.drop("_change_type", "_commit_version")
+            df.write.mode("append").parquet(out)
+
+        q = _start_change_feed(spark, [path], _sink, checkpoint, True)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    return _run

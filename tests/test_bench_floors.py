@@ -9,7 +9,7 @@ def test_floor_keys_cover_streaming_metrics():
     import bench
 
     assert set(bench.FLOORS) == {
-        "stream_rows_per_sec", "txn_sink_rows_per_sec",
+        "stream_rows_per_sec",
         "txn_fb_sink_rows_per_sec", "txn_feed_rows_per_sec",
         "stream_dedup_docs_per_sec", "jdbc_upsert_rows_per_sec",
         "jdbc_full_frame_rows_per_sec",

@@ -141,10 +141,10 @@ def test_crash_between_legs_heals_and_serve_stays_pinned(
 
 
 def test_stream_chunk_index_live_cdf_restart(spark, sf_dir, tmp_path):
-    """Real writeStream over the documents table's format("txnlog")
-    change feed: the maintained index converges to the batch build;
-    a restart on the same checkpoint with no new versions changes
-    nothing (replay-guarded legs + version offsets)."""
+    """Real writeStream over the documents table's change feed: the
+    maintained index converges to the batch build; a restart on the
+    same checkpoint with no new versions changes nothing
+    (replay-guarded legs + pinned version ranges)."""
     d = _docs(spark, sf_dir, n=20)
     docs = TxnTable(str(tmp_path / "docs"))
     root, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")

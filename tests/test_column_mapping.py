@@ -194,64 +194,38 @@ def test_zorder_compaction_on_mapped_table(spark, tmp_path):
     assert "value" not in pq.read_schema(f).names
 
 
-def test_datasource_reads_mapped_table(spark, tmp_path):
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
+def test_reads_mapped_table(spark, tmp_path, feed_to_parquet):
     t = _t(spark, tmp_path)
     t.rename_column("val", "name")
     t.drop_column("score")
     t.append(spark.createDataFrame([(3, "c")], "id int, name string"))
-    df = spark.read.format("txnlog").load(t.path)
+    df = t.read(spark)
     assert df.columns == ["id", "name"]
     assert {(r["id"], r["name"]) for r in df.collect()} == {
         (1, "a"), (2, "b"), (3, "c")}
-    # time travel through the DataSource shows era names
-    old = (spark.read.format("txnlog").option("version", 0)
-           .load(t.path))
+    # time travel shows era names
+    old = t.read(spark, version=0)
     assert old.columns == ["id", "val", "score"]
-    # streaming read surfaces logical names
+    # the change feed surfaces logical names
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (spark.readStream.format("txnlog").load(t.path)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    feed_to_parquet(t.path, out, ck)
     got = spark.read.parquet(out)
     assert sorted(got.columns) == ["id", "name"]
     assert got.count() == 3
-    # DataSource WRITES to a mapped table refuse clearly
-    with pytest.raises(Exception, match="column-mapped"):
-        (spark.createDataFrame([(9, "z")], "id int, name string")
-         .write.format("txnlog").mode("append").save(t.path))
 
 
-def test_streaming_cdf_across_rename(spark, tmp_path):
-    """readChangeFeed through the DataSource across a rename boundary:
-    pre- and post-rename commits stream under the CURRENT logical
-    names (the physical names are the stable era join key), with
+def test_streaming_cdf_across_rename(spark, tmp_path, feed_to_parquet):
+    """The streaming change feed across a rename boundary: pre- and
+    post-rename commits stream under the CURRENT logical names (the
+    physical names are the stable era join key), with
     _change_type/_commit_version attached."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
     t = _t(spark, tmp_path)
     t.rename_column("val", "name")
     t.merge(spark, spark.createDataFrame(
         [(2, "B", 20.0), (3, "c", 3.0)],
         "id int, name string, score double"), "id")
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (spark.readStream.format("txnlog")
-         .option("readChangeFeed", "true").load(t.path)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    feed_to_parquet(t.path, out, ck, cdf=True)
     got = spark.read.parquet(out)
     assert sorted(got.columns) == ["_change_type", "_commit_version",
                                    "id", "name", "score"]

@@ -195,54 +195,37 @@ def test_dv_protocol_gates_old_readers(spark, tmp_path):
         TL._READER_CAPABILITY = old
 
 
-def test_dv_datasource_batch_read_applies_positions(spark, tmp_path):
-    """format('txnlog') batch reads mask DV'd positions executor-side
-    (row_idx == file-order position, Spark's _metadata.row_index
-    contract) — the DataSource path equals the Python-API read, incl.
-    time travel to the pre-DV snapshot."""
+def test_dv_batch_read_applies_positions(spark, tmp_path):
+    """Snapshot reads mask DV'd positions (row_idx == file-order
+    position, Spark's _metadata.row_index contract) — equal to the
+    model of the deletes, incl. time travel to the pre-DV snapshot."""
     t = _dv_table(spark, tmp_path)
     t.delete_where(spark, "id % 10 = 0", use_dv=True)
     t.delete_where(spark, "id % 7 = 0", use_dv=True)
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        TxnLogDataSource,
-    )
-    spark.dataSource.register(TxnLogDataSource)
-    got = {r.id for r in
-           spark.read.format("txnlog").load(t.path).collect()}
-    assert got == _ids(spark, t)
-    pre = {r.id for r in spark.read.format("txnlog")
-           .option("version", "1").load(t.path).collect()}
-    assert pre == set(range(200))
+    assert _ids(spark, t) == {i for i in range(200) if i % 10 and i % 7}
+    assert _ids(spark, t, version=1) == set(range(200))
 
 
-def test_dv_datasource_stream_guard(spark, tmp_path):
-    """The version-offset streaming feed refuses a DV commit like any
-    rewrite (its adds are not row-level changes) unless
-    skipChangeCommits skips it."""
-    t = _dv_table(spark, tmp_path)
-    t.delete_where(spark, "id = 1", use_dv=True)
+def test_dv_change_feed_stream_guard(spark, tmp_path, feed_to_parquet):
+    """The streaming change feed refuses a DV commit without change
+    files like any rewrite (its row-level delta exists only as
+    bitmaps), and delivers the delete rows of one that captured them."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        TxnLogDataSource,
-    )
-    spark.dataSource.register(TxnLogDataSource)
+    bare = _dv_table(spark, tmp_path, "bare")
+    bare.delete_where(spark, "id = 1", use_dv=True, capture_changes=False)
+    with pytest.raises(StreamingQueryException, match="deletion-vector"):
+        feed_to_parquet(bare.path, str(tmp_path / "out0"),
+                        str(tmp_path / "ck0"))
 
-    def drain(**opts):
-        out = str(tmp_path / f"out{len(opts)}")
-        r = spark.readStream.format("txnlog")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        q = (r.load(t.path).writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", str(tmp_path / f"ck{len(opts)}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return spark.read.parquet(out).count()
-
-    with pytest.raises(StreamingQueryException, match="rewrite"):
-        drain()
-    assert drain(skipChangeCommits="true") == 200
+    t = _dv_table(spark, tmp_path)
+    t.delete_where(spark, "id = 1", use_dv=True)
+    out = str(tmp_path / "out1")
+    feed_to_parquet(t.path, out, str(tmp_path / "ck1"), cdf=True)
+    got = spark.read.parquet(out)
+    assert got.filter("_change_type = 'insert'").count() == 200
+    assert [r.id for r in got.filter("_change_type = 'delete'")
+            .collect()] == [1]
 
 
 def test_dv_uncaptured_delete_fails_change_feed(spark, tmp_path):
@@ -279,17 +262,13 @@ def _part_table(spark, tmp_path, n=1000):
     return t
 
 
-def test_partitioned_dv_delete_all_read_paths(spark, tmp_path):
+def test_partitioned_dv_delete_all_read_paths(spark, tmp_path,
+                                              feed_to_parquet):
     """use_dv=True on a partition-granular layout: the commit is a
     position file (no partition rewrite — the live dirs are untouched),
     the condition may reference the PARTITION column (parsed from the
     path at the declared type), and every read path masks: snapshot,
-    partition-pruned, the Python DataSource, and the streaming source."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
+    partition-pruned, and the change feed."""
     t = _part_table(spark, tmp_path)
     live0 = set(t.snapshot_dirs())
     t.delete_where(spark, "vec_id % 100 = 7 AND centroid_id = 7",
@@ -301,25 +280,16 @@ def test_partitioned_dv_delete_all_read_paths(spark, tmp_path):
             .filter("vec_id % 100 = 7 AND centroid_id = 7").count() == 0)
     rp = t.read_partitions(spark, [7])
     assert rp.count() == 120 and rp.filter("vec_id % 100 = 7").count() == 0
-    ds = spark.read.format("txnlog").load(t.path)
-    assert ds.count() == 995
-    # the append-only stream replays rows AS APPENDED — a later DV
-    # delete is a rewrite to that feed, refused with the remedy named
-    # (Delta's rule; churned tables stream via readChangeFeed, whose
-    # delete rows the DV commit writes — asserted in the change-feed
-    # test below)
-    from pyspark.errors.exceptions.captured import (
-        StreamingQueryException,
-    )
-
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    with pytest.raises(StreamingQueryException, match="rewrite"):
-        q = (spark.readStream.format("txnlog").load(t.path)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        q.processAllAvailable()
+    # the change feed carries the DV delete's captured rows: the
+    # seed's inserts net of them are the masked snapshot
+    out = str(tmp_path / "out")
+    feed_to_parquet(t.path, out, str(tmp_path / "ck"), cdf=True)
+    feed = spark.read.parquet(out)
+    gone = feed.filter("_change_type = 'delete'")
+    assert gone.count() == 5
+    assert gone.filter("centroid_id != 7").count() == 0
+    assert (feed.filter("_change_type = 'insert'").count() - 5
+            == t.read(spark).count())
 
 
 def test_partitioned_dv_cumulative_count_travel_compact(spark,

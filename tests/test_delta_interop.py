@@ -2452,14 +2452,11 @@ def test_unknown_reader_features_refuse(spark, tmp_path):
     """PROTOCOL.md reader contract: a table declaring reader features
     this reader does not implement must REFUSE (reading anyway
     returns silently wrong rows); known features still read, and the
-    stream source enforces the same gate."""
+    change reader enforces the same gate."""
     import uuid as _u
 
     from sport_advantages_moderne_data_infrastructure_spark.sources.deltainterop import (
         read_delta_changes,
-    )
-    from sport_advantages_moderne_data_infrastructure_spark.streaming.deltasource import (
-        stream_delta_dir,
     )
 
     root = str(tmp_path / "f")
@@ -2499,8 +2496,6 @@ def test_unknown_reader_features_refuse(spark, tmp_path):
         read_delta_dir(spark, root)
     with pytest.raises(ValueError, match="futureMagicFeature"):
         read_delta_changes(spark, root, -1)
-    with pytest.raises(Exception, match="futureMagicFeature"):
-        stream_delta_dir(spark, root, startingVersion="earliest")
     # a reader protocol version above 3 is equally unknown
     with open(os.path.join(log, f"{0:020d}.json")) as fh:
         lines = fh.read().splitlines()

@@ -6,7 +6,9 @@ and reclaims every dir the write left behind — data commit roots,
 
 Fault-injected: ``TxnTable.commit`` always loses the version race and
 the backoff only counts, so each op exhausts its rule (a single-shot
-rewrite raises at once; row-level ops rebase; a stream leg redoes)."""
+rewrite raises at once; row-level ops rebase; a stream leg redoes).
+A write that removes what it read commits against the version it
+read."""
 
 from __future__ import annotations
 
@@ -25,6 +27,7 @@ from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
     _guarded_commit,
     _stream_meta,
 )
+from sport_advantages_moderne_data_infrastructure_spark.streaming import cc
 
 _WRITTEN = ("data", "changes", "dv")
 
@@ -68,6 +71,13 @@ _OPS = {
     "guarded_overwrite": lambda spark, t: _guarded_commit(
         t, 7, "leak", lambda: t.overwrite(
             _rows(spark, [1, 2]), _stream_meta(7, "leak", "fold"))),
+    # a guarded leg over a rebasing op (the annindex DV retraction):
+    # the inner op is single-shot inside the leg's budget, never a
+    # budget of its own per round
+    "guarded_delete_dv": lambda spark, t: _guarded_commit(
+        t, 7, "leak", lambda: t.delete_where(
+            spark, "id = 1", use_dv=True,
+            meta=_stream_meta(7, "leak", "ann_index_retract"))),
 }
 
 
@@ -110,3 +120,42 @@ def test_lost_races_are_bounded_backed_off_and_reclaimed(
     leaked = {d: sorted(after[d] - before[d]) for d in _WRITTEN
               if after[d] - before[d]}
     assert not leaked, f"lost races leaked written dirs: {leaked}"
+
+
+def test_cc_compact_keeps_the_labels_of_a_torn_batch(spark, tmp_path,
+                                                     crash_at_commit):
+    """``streaming/cc.compact`` folds assign at the version the latest
+    remap commit recorded, so it commits against that version: with a
+    batch torn between its assign and remap legs it raises and changes
+    nothing, instead of removing the batch's assign rows (which the
+    redelivery would then skip, its assign leg being in the ledger)."""
+    root = str(tmp_path / "cc")
+    a, r = cc._tables(root)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "doc_id long, nbr long")
+
+    def labels():
+        return sorted((x["doc_id"], x["cluster_id"])
+                      for x in cc.current_labels(spark, root).collect())
+
+    cc.ingest_batch(a, r, batch([(5, None), (9, None)]), 0, "t")
+    cc.ingest_batch(a, r, batch([(3, None), (3, 5)]), 1, "t")
+    torn = batch([(7, None), (11, None)])
+    with crash_at_commit(r.path, 2) as crash:
+        with pytest.raises(RuntimeError):
+            cc.ingest_batch(a, r, torn, 2, "t")
+    assert crash.hits == 1
+    versions = (a.latest_version(), r.latest_version())
+    before = (_entries(a.path), _entries(r.path))
+    with pytest.raises(TxnConflictError):
+        cc.compact(spark, root)
+    assert (a.latest_version(), r.latest_version()) == versions
+    assert (_entries(a.path), _entries(r.path)) == before
+
+    cc.ingest_batch(a, r, torn, 2, "t")  # redelivery: the remap leg lands
+    want = [(3, 3), (5, 3), (7, 7), (9, 9), (11, 11)]
+    assert labels() == want
+    cc.compact(spark, root)
+    assert labels() == want
+    assert r.read(spark).count() == 0

@@ -1301,25 +1301,20 @@ def test_multikey_dv_merge_compact_time_travel(spark, tmp_path):
     assert t.read(spark, version=v0).count() == 200
 
 
-def test_multikey_python_datasource_read(spark, tmp_path):
-    """The txnlog Python DataSource reconstructs BOTH nested partition
-    keys (recorded types, DV mask applied) — the r13 multi-key carry in
-    sources/txnstream.py."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        txnstream,
-    )
-
-    spark.dataSource.register(txnstream.TxnLogDataSource)
+def test_multikey_read_keeps_recorded_types_under_dv(spark, tmp_path):
+    """A snapshot read reconstructs BOTH nested partition keys at their
+    recorded types with the DV mask applied: the table's rows are the
+    loaded orders minus the DV-deleted keys."""
     t, o = _mtable(spark, tmp_path, "ds")
     t.delete_where(spark, "o_orderkey % 11 = 0", use_dv=True)
-    df = spark.read.format("txnlog").load(t.path)
-    want = t.read(spark)
+    df = t.read(spark)
+    want = o.filter("o_orderkey % 11 != 0")
     assert df.count() == want.count()
     assert dict(df.dtypes)["order_year"] == "string"  # recorded type
     assert dict(df.dtypes)["bucket"] == "string"
     a = {(r["o_orderkey"], str(r["order_year"]), str(r["bucket"]))
          for r in df.collect()}
-    b = {(r["o_orderkey"], str(r["order_year"]), str(r["bucket"]))
+    b = {(r["o_orderkey"], str(r["o_orderdate"])[:4], str(r["bucket"]))
          for r in want.collect()}
     assert a == b
 
@@ -1564,23 +1559,14 @@ def test_streaming_sink_into_identity_multikey_target(spark, tmp_path):
         "order_year >= '1997' AND bucket = '1'").count() > 0
 
 
-def test_streaming_change_feed_from_multikey_table(spark, tmp_path):
-    """readChangeFeed through the Python DataSource on a NESTED layout:
-    both partition keys reconstruct per change row and the generated
-    value holds."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        txnstream,
-    )
-
-    spark.dataSource.register(txnstream.TxnLogDataSource)
+def test_streaming_change_feed_from_multikey_table(spark, tmp_path,
+                                                   feed_to_parquet):
+    """The change feed on a NESTED layout: both partition keys
+    reconstruct per change row and the generated value holds."""
     t, o = _mtable(spark, tmp_path, "cdf")
-    src = (spark.readStream.format("txnlog")
-           .option("readChangeFeed", "true").load(t.path))
-    q = (src.writeStream.format("memory").queryName("mk_cdf")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    q.stop()
-    mem = spark.sql("select * from mk_cdf")
+    out = str(tmp_path / "out")
+    feed_to_parquet(t.path, out, str(tmp_path / "ck"), cdf=True)
+    mem = spark.read.parquet(out)
     assert mem.count() == 200
     assert {"order_year", "bucket", "_change_type"} <= set(mem.columns)
     assert mem.filter(

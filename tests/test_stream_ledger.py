@@ -8,9 +8,9 @@ append leg goes through ``TxnTable.append``, so neither a racing
 replica nor a lost version race leaves an unreferenced data dir.
 Structural checks keep the ledger lookups and hand-built stream metas
 inside ``sources/txnlog.py``, append-shaped commits inside
-``sources/``, ``writeStream.foreachBatch`` inside the one starter, the
-row-level ``format("txnlog")`` feed out of ``streaming/``, and the
-single-source view high-water fold inside ``operators/mv.py``, and
+``sources/``, ``writeStream.foreachBatch`` inside the one starter, no
+Python data source anywhere, and the single-source view high-water
+fold inside ``operators/mv.py``, and
 every lost-race retry inside ``TxnTable._transact``, so per-sink
 copies cannot come back."""
 
@@ -297,37 +297,51 @@ def _calls(tree, attr: str):
             and isinstance(n.func, ast.Attribute) and n.func.attr == attr]
 
 
+#: the formats the package's retired Python data sources registered
+_PYTHON_FORMATS = {"txnlog", "delta_dir", "txnversions"}
+
+
+def _python_source_hits(rel: str, tree) -> list[str]:
+    """Where ``tree`` imports ``pyspark.sql.datasource``, subclasses a
+    ``DataSource*`` class or reads/writes a Python data source format."""
+    hits = []
+    for n in ast.walk(tree):
+        mods = ([f"{n.module}.{a.name}" for a in n.names]
+                if isinstance(n, ast.ImportFrom)
+                else [a.name for a in n.names]
+                if isinstance(n, ast.Import) else [])
+        if any(m.startswith("pyspark.sql.datasource") for m in mods):
+            hits.append(f"{rel}:{n.lineno}: imports pyspark.sql.datasource")
+        elif isinstance(n, ast.ClassDef) and any(
+                "DataSource" in str(getattr(b, "id", getattr(b, "attr", "")))
+                for b in n.bases):
+            hits.append(f"{rel}:{n.lineno}: DataSource subclass {n.name}")
+    hits += [f"{rel}:{c.lineno}: format({c.args[0].value!r})"
+             for c in _calls(tree, "format")
+             if c.args and getattr(c.args[0], "value", None)
+             in _PYTHON_FORMATS]
+    return hits
+
+
 def test_one_append_path_and_one_starter():
     """Outside ``sources/`` no code makes an append-shaped
     ``commit(adds, [], ...)`` or ``_Txn(adds, [], ...)`` or calls
     ``_commit_blind`` (append legs call ``TxnTable.append``), no
     ``_guarded_commit`` leg appends, only
     ``pipeline._start_foreach_batch`` calls ``writeStream.foreachBatch``,
-    no ``streaming/`` module reads ``readStream.format("txnlog")``
-    (change-feed sinks start from ``pipeline._start_change_feed``), and
-    no module streams ``format("txnversions")`` or defines a
-    ``SimpleDataSourceStreamReader`` (no Python data source on a
-    change-feed sink's path). Parsed, so docstring usage examples do
-    not count."""
-    hits = []
+    and no module of the package, nor ``bench.py``, imports
+    ``pyspark.sql.datasource``, subclasses a ``DataSource`` or calls
+    ``.format("txnlog")``/``.format("delta_dir")``: every
+    transactional-table stream reads and writes through Spark's own
+    sources (``TxnTable.append``/``read_changes``,
+    ``pipeline._start_change_feed``). Parsed, so docstring usage
+    examples do not count."""
+    bench = os.path.join(os.path.dirname(_PKG_ROOT), "bench.py")
+    with open(bench) as fh:
+        hits = _python_source_hits("bench.py", ast.parse(fh.read()))
     for rel, src in _package_modules():
         tree = ast.parse(src)
-        hits += [f"{rel}:{c.lineno}: format('txnversions')"
-                 for c in _calls(tree, "format")
-                 if [getattr(a, "value", None) for a in c.args]
-                 == ["txnversions"]]
-        hits += [f"{rel}:{k.lineno}: SimpleDataSourceStreamReader {k.name}"
-                 for k in ast.walk(tree) if isinstance(k, ast.ClassDef)
-                 and any(getattr(b, "id", getattr(b, "attr", None))
-                         == "SimpleDataSourceStreamReader"
-                         for b in k.bases)]
-        if rel.startswith("streaming" + os.sep):
-            hits += [f"{rel}:{c.lineno}: readStream.format('txnlog')"
-                     for c in _calls(tree, "format")
-                     if isinstance(c.func.value, ast.Attribute)
-                     and c.func.value.attr == "readStream"
-                     and [getattr(a, "value", None) for a in c.args]
-                     == ["txnlog"]]
+        hits += _python_source_hits(rel, tree)
         starter = {id(c) for f in ast.walk(tree)
                    if isinstance(f, ast.FunctionDef)
                    and f.name == "_start_foreach_batch"

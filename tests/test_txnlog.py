@@ -293,113 +293,47 @@ def test_read_increment_change_feed(spark, tmp_path):
         t.read_increment(spark, since_version=v0)
 
 
-def test_txnlog_python_datasource(spark, tmp_path):
-    """format("txnlog") via the Spark 4 Python DataSource API: batch
-    snapshot + time travel, and the streaming change feed with
+def test_snapshot_time_travel_and_change_feed_restart(spark, tmp_path,
+                                                      feed_to_parquet):
+    """Batch snapshot + time travel through ``TxnTable.read``, and the
+    change feed (``_start_change_feed`` + ``read_changes``) with
     checkpointed exactly-once incremental restart."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        txnstream,
-    )
-    txnstream.register_txn_source(spark)
     t = TxnTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a")]))
     t.append(_df(spark, [(2, "b")]))
 
-    batch = spark.read.format("txnlog").load(t.path)
-    assert _rows(batch) == {(1, "a"), (2, "b")}
-    assert _rows(spark.read.format("txnlog")
-                 .option("version", 0).load(t.path)) == {(1, "a")}
+    assert _rows(t.read(spark)) == {(1, "a"), (2, "b")}
+    assert _rows(t.read(spark, version=0)) == {(1, "a")}
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def drain():
-        q = (spark.readStream.format("txnlog").load(t.path)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    drain()
+    feed_to_parquet(t.path, out, ckpt)
     assert _rows(spark.read.parquet(out)) == {(1, "a"), (2, "b")}
     t.append(_df(spark, [(3, "c")]))
-    drain()  # same checkpoint: only the new commit is read
+    feed_to_parquet(t.path, out, ckpt)  # same checkpoint: new commit only
     assert _rows(spark.read.parquet(out)) == {(1, "a"), (2, "b"), (3, "c")}
 
 
-def test_txnlog_datasource_partitioned_batch(spark, tmp_path):
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        txnstream,
-    )
-    txnstream.register_txn_source(spark)
+def test_partitioned_batch_read(spark, tmp_path):
     t = TxnTable(str(tmp_path / "t"))
     t.overwrite_partitions(_pdf(spark, [(1, "a", 1), (2, "b", 2)]), "day")
-    got = spark.read.format("txnlog").load(t.path)
+    got = t.read(spark)
     assert {(r["id"], r["val"], r["day"]) for r in got.collect()} == {
         (1, "a", 1), (2, "b", 2)}
 
 
-def test_txnlog_stream_composes_with_windowed_agg(spark, sf_dir, tmp_path):
-    """The txnlog streaming source plugs into the event-time layer: a
-    micro-batch of events appended to a txn table flows through the
-    watermarked tumbling-window aggregation and matches the batch twin
-    over the same snapshot."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        TxnTable,
-        register_txn_source,
-    )
-    from sport_advantages_moderne_data_infrastructure_spark.sources.tables import (
-        load_table,
-    )
-    from sport_advantages_moderne_data_infrastructure_spark.streaming.windows import (
-        tumbling_counts,
+def test_txn_append_stream_exactly_once(spark, tmp_path):
+    from sport_advantages_moderne_data_infrastructure_spark.streaming import (
+        pipeline as P,
     )
 
-    register_txn_source(spark)
-    t = TxnTable(str(tmp_path / "t"))
-    ev = load_table(spark, sf_dir, "events").limit(2000)
-    t.append(ev)
-
-    out = (tumbling_counts(spark.readStream.format("txnlog").load(t.path))
-           .writeStream.format("memory").queryName("txn_windows")
-           .outputMode("complete").trigger(availableNow=True).start())
-    out.awaitTermination(120)
-    got = {tuple(r) for r in spark.table("txn_windows").collect()}
-    want = {tuple(r) for r in tumbling_counts(t.read(spark)).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_txnlog_datasource_batch_writer(spark, tmp_path):
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    register_txn_source(spark)
-    tp = str(tmp_path / "t")
-    _df(spark, [(1, "a"), (2, "b")]).write.format("txnlog") \
-        .mode("append").save(tp)
-    _df(spark, [(3, "c")]).write.format("txnlog").mode("append").save(tp)
-    t = TxnTable(tp)
-    assert _rows(t.read(spark)) == {(1, "a"), (2, "b"), (3, "c")}
-    _df(spark, [(9, "z")]).write.format("txnlog").mode("overwrite").save(tp)
-    assert _rows(t.read(spark)) == {(9, "z")}
-    # previous state still time-travel readable through the format reader
-    assert _rows(spark.read.format("txnlog").option("version", 1)
-                 .load(tp)) == {(1, "a"), (2, "b"), (3, "c")}
-
-
-def test_txnlog_datasource_stream_writer_exactly_once(spark, tmp_path):
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    register_txn_source(spark)
     src, tp, ckpt = (str(tmp_path / d) for d in ("src", "t", "ckpt"))
     _df(spark, [(i, f"v{i}") for i in range(20)]) \
         .repartition(4).write.parquet(src)
 
     def drain():
-        q = (spark.readStream.schema("id int, val string").parquet(src)
-             .writeStream.format("txnlog").option("path", tp)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
+        q = P.write_stream_txn_append(
+            spark.readStream.schema("id int, val string").parquet(src),
+            tp, ckpt)
         q.awaitTermination(120)
 
     drain()
@@ -460,22 +394,21 @@ def test_replay_guard_survives_interleaved_compact(spark, sf_dir, tmp_path):
     assert t.read(spark).count() == n1
 
 
-def test_datasource_stream_writer_replay_after_compact(spark, tmp_path):
-    """Same scan-based guard on the format('txnlog') streaming sink."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
+def test_txn_append_stream_replay_after_compact(spark, tmp_path):
+    """Same scan-based guard on the txn append stream sink."""
+    from sport_advantages_moderne_data_infrastructure_spark.streaming import (
+        pipeline as P,
     )
-    register_txn_source(spark)
+
     src, tp, ck1, ck2 = (str(tmp_path / d)
                          for d in ("src", "t", "ck1", "ck2"))
     _df(spark, [(i, f"v{i}") for i in range(10)]) \
         .repartition(2).write.parquet(src)
 
     def drain(ck):
-        q = (spark.readStream.schema("id int, val string").parquet(src)
-             .writeStream.format("txnlog").option("path", tp)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
+        q = P.write_stream_txn_append(
+            spark.readStream.schema("id int, val string").parquet(src),
+            tp, ck)
         q.awaitTermination(120)
 
     drain(ck1)
@@ -487,20 +420,15 @@ def test_datasource_stream_writer_replay_after_compact(spark, tmp_path):
     assert t.read(spark).count() == 10
 
 
-def test_datasource_reads_string_partitions(spark, tmp_path):
-    """ADVICE r3: the DataSource read path hardcoded int32 partition
-    values; a date-string-partitioned table must read back correctly with
-    a string-typed partition column."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    register_txn_source(spark)
+def test_reads_string_partitions(spark, tmp_path):
+    """ADVICE r3: a date-string-partitioned table must read back with a
+    string-typed partition column, not an inferred int."""
     t = TxnTable(str(tmp_path / "t"))
     df = spark.createDataFrame(
         [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")],
         "id int, val string, day string")
     t.overwrite_partitions(df, "day")
-    got = spark.read.format("txnlog").load(t.path)
+    got = t.read(spark)
     assert dict(got.dtypes)["day"] == "string"
     assert {(r["id"], r["val"], r["day"]) for r in got.collect()} == {
         (1, "a", "2024-01-01"), (2, "b", "2024-01-02")}
@@ -517,43 +445,29 @@ def test_vacuum_retention_spares_young_dirs(spark, tmp_path):
     assert t.vacuum(older_than_seconds=0) == [orphan]
 
 
-def test_datasource_empty_overwrite_yields_empty_snapshot(spark, tmp_path):
+def test_empty_overwrite_yields_empty_snapshot(spark, tmp_path):
     """ADVICE r3: overwriting with an empty frame is a legal removes-only
     commit; the table then reads as 0 rows with the prior schema instead
     of raising."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    register_txn_source(spark)
-    tp = str(tmp_path / "t")
-    _df(spark, [(1, "a")]).write.format("txnlog").mode("append").save(tp)
-    _df(spark, []).write.format("txnlog").mode("overwrite").save(tp)
-    t = TxnTable(tp)
+    t = TxnTable(str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a")]))
+    t.overwrite(_df(spark, []))
     empty = t.read(spark)
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["id", "val"]
-    got = spark.read.format("txnlog").load(tp)
-    assert got.count() == 0
     # previous state still time travels
     assert _rows(t.read(spark, version=0)) == {(1, "a")}
 
 
 def test_overwrite_toctou_conflict_detected(spark, tmp_path):
-    """The format('txnlog') overwrite captures its base version once: a
-    commit landing between planning and publish makes it CONFLICT (and
-    Spark surfaces the error) instead of silently keeping the
-    interloper's files."""
+    """An overwrite captures its base version once: a commit landing
+    between planning and publish makes it CONFLICT instead of silently
+    keeping the interloper's files."""
     from unittest import mock
-
-    from sport_advantages_moderne_data_infrastructure_spark.sources import txnstream
 
     tp = str(tmp_path / "t")
     t = TxnTable(tp)
     t.overwrite(_df(spark, [(1, "a")]))
-
-    w = txnstream._TxnBatchWriter(tp, _df(spark, [(9, "z")]).schema, True)
-    rel = t._write_data(_df(spark, [(9, "z")]))
-    msgs = [txnstream._DirCommit(rel)]
     real_snapshot_dirs = TxnTable.snapshot_dirs
 
     def interloper(self, version=None):
@@ -566,45 +480,33 @@ def test_overwrite_toctou_conflict_detected(spark, tmp_path):
 
     with mock.patch.object(TxnTable, "snapshot_dirs", interloper):
         with pytest.raises(TxnConflictError):
-            w.commit(msgs)
+            t.overwrite(_df(spark, [(9, "z")]))
     # interloper's row survives; no silent half-overwrite
     assert (5, "race") in _rows(t.read(spark))
 
 
-def test_stream_skip_change_commits(spark, tmp_path):
-    """A compacted table stays streamable with skipChangeCommits=true
-    (Delta's option); without it the change feed fails on the rewrite."""
+def test_stream_skip_change_commits(spark, tmp_path, feed_to_parquet):
+    """A compacted table stays streamable: the change feed skips a
+    compaction as layout-only (what Delta's skipChangeCommits gives a
+    stream), and fails loudly on a full rewrite, which has no row-level
+    delta."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    register_txn_source(spark)
     t = TxnTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a")]))
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
 
-    def drain(**opts):
-        r = spark.readStream.format("txnlog")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        q = (r.load(t.path)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    drain(skipChangeCommits="true")
+    feed_to_parquet(t.path, out, ck)
     assert _rows(spark.read.parquet(out)) == {(1, "a")}
     t.compact(spark)  # rewrite commit in the next offset range
     t.append(_df(spark, [(2, "b")]))
-    drain(skipChangeCommits="true")  # skips the compact, takes the append
+    feed_to_parquet(t.path, out, ck)  # skips the compact, takes the append
     assert _rows(spark.read.parquet(out)) == {(1, "a"), (2, "b")}
 
-    # default behavior still fails loudly on rewrites
-    t.compact(spark)
+    # a full rewrite still fails loudly
+    t.overwrite(_df(spark, [(3, "c")]))
     with pytest.raises(StreamingQueryException, match="rewrite"):
-        drain()
+        feed_to_parquet(t.path, out, ck)
 
 
 def test_n_racing_commits_one_winner_per_version(spark, tmp_path):
@@ -752,28 +654,18 @@ def test_compact_if_needed_policy(spark, tmp_path):
     assert _rows(t.read(spark)) == {(i, f"v{i}") for i in range(5)}
 
 
-def test_datasource_prune_options_skip_files(spark, tmp_path):
-    """format('txnlog') file skipping: pruneCol/Min/Max plan only the
-    overlapping commit dirs; with the residual filter the result equals
-    the unpruned read."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-        txnstream,
-    )
-    register_txn_source(spark)
+def test_prune_read_skips_files(spark, tmp_path):
+    """Stats file skipping: a range read plans only the overlapping
+    commit dirs, and with the residual filter equals the unpruned
+    read."""
     t = TxnTable(str(tmp_path / "t"))
     for lo in (0, 100, 200):
         t.append(spark.createDataFrame(
             [(lo + i, f"v{lo + i}") for i in range(50)],
             "id int, val string"))
-    # planning-level: the reader plans 1 of 3 dirs
-    r = txnstream._TxnBatchReader(t.path, None, ("id", 120, 140))
-    assert len({p.path.rsplit("/", 2)[1] for p in r.partitions()}) == 1
-    from pyspark.sql import functions as F
-    got = (spark.read.format("txnlog")
-           .option("pruneCol", "id").option("pruneMin", "120")
-           .option("pruneMax", "140").load(t.path)
-           .filter((F.col("id") >= 120) & (F.col("id") <= 140)))
+    # planning-level: 1 of 3 dirs
+    assert len(t.pruned_dirs("id", 120, 140)) == 1
+    got = t.read_range(spark, "id", 120, 140)
     assert _rows(got) == {(i, f"v{i}") for i in range(120, 141)}
 
 
@@ -797,13 +689,9 @@ def test_max_stream_batch_id_scan(spark, tmp_path):
 
 def test_timestamp_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF: commits record wall clock; read_at resolves the
-    snapshot at-or-before a timestamp, and format('txnlog') accepts
-    option('timestampAsOf', epoch_seconds)."""
+    snapshot at-or-before a timestamp, and ``version_at`` feeds a
+    versioned read the same snapshot."""
     import time
-
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
 
     t = TxnTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a")]))
@@ -817,36 +705,8 @@ def test_timestamp_time_travel(spark, tmp_path):
     with pytest.raises(ValueError, match="no commit"):
         t.version_at(t_mid - 3600)
 
-    register_txn_source(spark)
-    got = (spark.read.format("txnlog")
-           .option("timestampAsOf", str(t_mid)).load(t.path))
+    got = t.read(spark, version=t.version_at(t_mid))
     assert _rows(got) == {(1, "a")}
-
-
-def test_datasource_writer_ships_executor_stats(spark, tmp_path):
-    """The Arrow writers compute column min/max IN THE WRITE TASKS and
-    ship them via commit messages — the commit doc carries them without
-    any driver-side footer read, and pruning works off them."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
-    from unittest import mock
-
-    register_txn_source(spark)
-    tp = str(tmp_path / "t")
-    with mock.patch.object(TxnTable, "_dir_stats",
-                           side_effect=AssertionError(
-                               "driver-side footer harvest must not run "
-                               "for DataSource writes")):
-        spark.createDataFrame([(i, f"v{i}") for i in range(100)],
-                              "id int, val string") \
-            .coalesce(1).write.format("txnlog").mode("append").save(tp)
-    t = TxnTable(tp)
-    doc = t._doc(0)
-    (d,) = doc["adds"]
-    assert doc["stats"][d]["id"] == [0, 99]
-    assert doc["stats"][d]["val"] == ["v0", "v99"]
-    assert t.pruned_dirs("id", 200, 300) == []
 
 
 def test_append_schema_mismatch_rejected_at_write(spark, tmp_path):
@@ -1018,20 +878,21 @@ def test_checkpoint_incremental_build_from_previous(spark, tmp_path):
 
 
 def test_stream_sink_auto_checkpoints_every_10_commits(spark, tmp_path):
-    """The exactly-once txnlog sink checkpoints the log as it streams:
-    after >10 micro-batch commits a checkpoint exists and the table reads
-    back every batch exactly once."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import register_txn_source
-    register_txn_source(spark)
+    """The exactly-once txn append sink checkpoints the log as it
+    streams: after >10 micro-batch commits a checkpoint exists and the
+    table reads back every batch exactly once."""
+    from sport_advantages_moderne_data_infrastructure_spark.streaming import (
+        pipeline as P,
+    )
+
     target = str(tmp_path / "t")
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ck")
     for i in range(12):
         _df(spark, [(i, f"v{i}")]).write.mode("append").json(src)
-    q = (spark.readStream.schema("id int, val string").option(
-            "maxFilesPerTrigger", "1").json(src)
-         .writeStream.format("txnlog").option("checkpointLocation", ckpt)
-         .option("path", target).trigger(availableNow=True).start())
+    q = P.write_stream_txn_append(
+        spark.readStream.schema("id int, val string").option(
+            "maxFilesPerTrigger", "1").json(src), target, ckpt)
     q.awaitTermination(120)
     t = TxnTable(target)
     assert len(t.versions()) >= 11
@@ -1286,24 +1147,18 @@ def test_read_changes_matches_snapshot_replay(spark, tmp_path):
     assert set(state.items()) == _rows(t.read(spark))
 
 
-def test_stream_read_change_feed_follows_merge_and_delete(spark, tmp_path):
-    """readChangeFeed streaming: a stream over an upserted table delivers
+def test_stream_read_change_feed_follows_merge_and_delete(
+        spark, tmp_path, feed_to_parquet):
+    """The change feed: a stream over an upserted table delivers
     row-level changes through MERGE/DELETE/compact instead of failing on
     the first rewrite commit."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import register_txn_source
-    register_txn_source(spark)
     t = TxnTable(str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a"), (2, "b")]))                # v0
     t.merge(spark, _df(spark, [(2, "B!"), (3, "c")]), "id")   # v1
     t.compact(spark)                                          # v2
     t.delete_where(spark, "id = 1")                           # v3
-    out = str(tmp_path / "out")
-    q = (spark.readStream.format("txnlog")
-         .option("readChangeFeed", "true").load(t.path)
-         .writeStream.format("parquet")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .option("path", out).trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    feed_to_parquet(t.path, out, ck, cdf=True)
     got = {(r["id"], r["val"], r["_change_type"], r["_commit_version"])
            for r in spark.read.parquet(out).collect()}
     assert got == {
@@ -1314,12 +1169,7 @@ def test_stream_read_change_feed_follows_merge_and_delete(spark, tmp_path):
     }
     # incremental restart: new delete commit -> exactly the new rows
     t.delete_where(spark, "id = 3")                           # v4
-    q2 = (spark.readStream.format("txnlog")
-          .option("readChangeFeed", "true").load(t.path)
-          .writeStream.format("parquet")
-          .option("checkpointLocation", str(tmp_path / "ck"))
-          .option("path", out).trigger(availableNow=True).start())
-    q2.awaitTermination(120)
+    feed_to_parquet(t.path, out, ck, cdf=True)
     got2 = {(r["id"], r["val"], r["_change_type"], r["_commit_version"])
             for r in spark.read.parquet(out).collect()}
     assert got2 == got | {(3, "c", "delete", 4)}
@@ -1927,20 +1777,17 @@ def test_compact_zorder_incremental_clusters_only_tail(spark, tmp_path):
     assert len(t.pruned_dirs("y", 100, 120)) < n
 
 
-def test_stream_sink_incremental_zorder_lifecycle(spark, tmp_path):
+def test_stream_sink_incremental_zorder_lifecycle(spark, tmp_path,
+                                                  feed_to_parquet):
     """The realistic table lifecycle end-to-end: a streaming sink
     appends micro-batches -> incremental ZORDER clusters the tail on a
     maintenance schedule -> a downstream change-feed stream rides
-    through the rewrite with skipChangeCommits -> range reads prune on
-    both z columns across generations."""
-    from sport_advantages_moderne_data_infrastructure_spark.sources import (
-        register_txn_source,
-    )
+    through the rewrite (a compaction is layout-only) -> range reads
+    prune on both z columns across generations."""
     from sport_advantages_moderne_data_infrastructure_spark.streaming import (
         pipeline as P,
     )
 
-    register_txn_source(spark)
     src = str(tmp_path / "src")
     table = str(tmp_path / "table")
     rows = [(i, (i * 37) % 100, (i * 61) % 100) for i in range(3000)]
@@ -1948,11 +1795,10 @@ def test_stream_sink_incremental_zorder_lifecycle(spark, tmp_path):
         .repartition(6).write.parquet(src)
 
     # streaming appends (6 files, 2 per trigger -> 3 commits)
-    q = (spark.readStream.schema("id int, x int, y int").parquet(src)
-         .writeStream.format("txnlog").option("path", table)
-         .option("checkpointLocation", str(tmp_path / "ck_sink"))
-         .option("maxFilesPerTrigger", "2")
-         .trigger(availableNow=True).start())
+    q = P.write_stream_txn_append(
+        spark.readStream.schema("id int, x int, y int")
+        .option("maxFilesPerTrigger", "2").parquet(src),
+        table, str(tmp_path / "ck_sink"))
     q.awaitTermination(120)
     t = TxnTable(table)
     assert t.read(spark).count() == 3000
@@ -1972,14 +1818,9 @@ def test_stream_sink_incremental_zorder_lifecycle(spark, tmp_path):
     more = [(i, (i * 37) % 100, (i * 61) % 100) for i in range(3000, 3200)]
     t.append(spark.createDataFrame(more, "id int, x int, y int"))
 
-    q2 = (spark.readStream.format("txnlog")
-          .option("skipChangeCommits", "true").load(table)
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ck)
-          .trigger(availableNow=True).start())
-    q2.awaitTermination(120)
+    feed_to_parquet(table, out, ck)
     got = spark.read.parquet(out)
-    # feed = post-zorder snapshot (as inserts) + the tail append;
+    # feed = the streamed appends (as inserts) + the tail append;
     # the zorder rewrite itself was skipped, so no row duplicates
     assert got.count() == 3200
     assert {r["id"] for r in got.select("id").distinct().collect()} == {
@@ -2428,19 +2269,14 @@ def test_evolution_dv_interaction(spark, tmp_path):
     assert snap.filter("k = 3").first()["score"] == 2.5
 
 
-def test_datasource_reads_evolved_table(spark, tmp_path):
-    """format("txnlog") on an additively-evolved table: the plan
-    declares the LOG-RECORDED union schema (not the newest file's),
-    executors null-fill columns a pre-evolution file lacks, and a
-    frame that legitimately omits an evolved column (mergeSchema
-    append) reads back null-filled too."""
+def test_reads_evolved_table(spark, tmp_path):
+    """A snapshot read of an additively-evolved table declares the
+    LOG-RECORDED union schema (not the newest file's), null-fills
+    columns a pre-evolution file lacks, and a frame that legitimately
+    omits an evolved column (mergeSchema append) reads back
+    null-filled too."""
     from pyspark.sql import functions as F
 
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
     t = _evo_table(spark, tmp_path, "ds_evo")
     # newest append legitimately OMITS the evolved column — a
     # newest-file schema would under-declare and make older files'
@@ -2449,146 +2285,62 @@ def test_datasource_reads_evolved_table(spark, tmp_path):
         F.col("id").cast("int").alias("k"),
         (F.col("id") * 10).cast("long").alias("v")),
         merge_schema=True)
-    df = spark.read.format("txnlog").load(t.path)
+    df = t.read(spark)
     assert sorted(df.columns) == ["k", "lang", "v"]
     assert df.count() == 35
     assert df.filter("k < 20 AND lang IS NULL").count() == 20
     assert df.filter("k >= 30 AND lang IS NULL").count() == 5
     assert df.filter("lang IS NOT NULL").count() == 10
-    # time travel through the DataSource stays pre-evolution
-    v0 = (spark.read.format("txnlog").option("version", "0")
-          .load(t.path))
+    # time travel stays pre-evolution
+    v0 = t.read(spark, version=0)
     assert sorted(v0.columns) == ["k", "v"]
 
 
-def test_stream_evolution_guard_and_restart(spark, tmp_path):
-    """An IN-FLIGHT stream's plan (its `want` schema) predates an
-    evolution: the executor read of a post-evolution file must fail
-    with the restart message (Delta's behavior), never silently drop
-    or misbind the new column. A RESTART re-plans the schema at
-    load(), so the same checkpoint continues with the evolved schema,
-    and a fresh checkpoint reads the whole history with typed-NULL
-    backfill."""
-    import glob as _glob
-    import os as _os
-
-    import pytest
+def test_stream_evolution_and_restart(spark, tmp_path, feed_to_parquet):
+    """An evolution landing between two batches of the change feed:
+    each batch plans its read when it runs, so the same checkpoint
+    continues with the evolved schema (only the delta — the pinned
+    version already covers v0), and a fresh checkpoint reads the whole
+    history with typed-NULL backfill."""
     from pyspark.sql import functions as F
 
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        _FilePartition, _read_file, register_txn_source,
-    )
-
-    register_txn_source(spark)
     t = TxnTable(str(tmp_path / "s_evo"))
     t.overwrite(spark.range(0, 10).select(
         F.col("id").cast("int").alias("k"),
         (F.col("id") * 10).cast("long").alias("v")))
     out1, ck = str(tmp_path / "out1"), str(tmp_path / "ck")
-    pre_schema = spark.read.format("txnlog").load(t.path).schema
-    q = (spark.readStream.format("txnlog").load(t.path)
-         .writeStream.format("parquet").option("path", out1)
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    feed_to_parquet(t.path, out1, ck)
     assert spark.read.parquet(out1).count() == 10
 
-    # evolution lands AFTER the in-flight plan was made
+    # evolution lands after the first batch
     t.append(spark.range(10, 15).select(
         F.col("id").cast("int").alias("k"),
         (F.col("id") * 10).cast("long").alias("v"),
         F.lit("fr").alias("lang")), merge_schema=True)
 
-    # the in-flight guard, exercised at the executor read site: the
-    # running stream's want schema predates the evolution
-    from pyspark.sql.pandas.types import to_arrow_schema
+    out_next = str(tmp_path / "out_next")
+    feed_to_parquet(t.path, out_next, ck)
+    nxt = spark.read.parquet(out_next)
+    assert sorted(nxt.columns) == ["k", "lang", "v"]
+    assert nxt.count() == 5
 
-    new_dir = t._doc(1)["adds"][0]  # noqa: SLF001
-    f = sorted(_glob.glob(
-        _os.path.join(t.path, new_dir, "*.parquet")))[0]
-    part = _FilePartition(f, want=to_arrow_schema(pre_schema))
-    with pytest.raises(ValueError, match="schema evolved"):
-        list(_read_file(part))
-
-    # RESTART on the same checkpoint: load() re-plans with the evolved
-    # schema, the new commit streams through (only the delta — the
-    # checkpointed offset already covers v0)
     out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    q3 = (spark.readStream.format("txnlog").load(t.path)
-          .writeStream.format("parquet").option("path", out2)
-          .option("checkpointLocation", ck2)
-          .trigger(availableNow=True).start())
-    q3.awaitTermination(120)
-    q3.stop()
+    feed_to_parquet(t.path, out2, ck2)
     got = spark.read.parquet(out2)
     assert sorted(got.columns) == ["k", "lang", "v"]
     assert got.count() == 15
     assert got.filter("k < 10 AND lang IS NULL").count() == 10
 
 
-def test_read_file_cast_guard(tmp_path):
-    """r11 (ADVICE r10): the executor read's plan-alignment cast is
-    restricted to lossless normalizations (timestamp unit/tz, string
-    width) plus the safe-widening lattice; a genuine type change —
-    including narrowing — raises the descriptive evolved-after-plan
-    error naming the file, never a lossy coercion or an opaque arrow
-    executor failure."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest
-
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        _FilePartition, _read_file,
-    )
-
-    f = str(tmp_path / "one.parquet")
-    pq.write_table(pa.table({
-        "k": pa.array([1, 2], pa.int32()),
-        "v": pa.array([10, 20], pa.int64()),
-        "s": pa.array(["a", "b"], pa.string())}), f)
-
-    # safe widening + string-width normalization cast silently
-    # (k: int32 -> float64 is ON the lattice; v: int64 stays int64 —
-    # int64 -> float64 is lossy past 2^53 and excluded)
-    want = pa.schema([("k", pa.float64()), ("v", pa.int64()),
-                      ("s", pa.large_string())])
-    got = pa.Table.from_batches(list(_read_file(
-        _FilePartition(f, want=want))))
-    assert got.schema == want
-    assert got["k"].to_pylist() == [1.0, 2.0]
-    # int64 -> float64: off-lattice, surfaces the descriptive error
-    lossy = pa.schema([("k", pa.int32()), ("v", pa.float64()),
-                       ("s", pa.string())])
-    with pytest.raises(ValueError, match="schema evolved"):
-        list(_read_file(_FilePartition(f, want=lossy)))
-
-    # a genuine type change (int64 -> string) raises, naming the file
-    bad = pa.schema([("k", pa.int32()), ("v", pa.string()),
-                     ("s", pa.string())])
-    with pytest.raises(ValueError, match="schema evolved"):
-        list(_read_file(_FilePartition(f, want=bad)))
-
-    # narrowing (int64 -> int32) is NOT in the lattice
-    narrow = pa.schema([("k", pa.int32()), ("v", pa.int32()),
-                        ("s", pa.string())])
-    with pytest.raises(ValueError, match="schema evolved"):
-        list(_read_file(_FilePartition(f, want=narrow)))
-
-
-def test_cdf_stream_across_evolution_boundary(spark, tmp_path):
-    """readChangeFeed through format("txnlog") spanning an additive
-    evolution: a stream planned AFTER the evolution reads the whole
-    feed — pre-boundary insert commits null-fill the evolved column
-    executor-side, post-boundary MERGE change files carry it — and
-    every row keeps its _change_type/_commit_version tags."""
+def test_cdf_stream_across_evolution_boundary(spark, tmp_path,
+                                              feed_to_parquet):
+    """The change feed spanning an additive evolution: a stream started
+    AFTER the evolution reads the whole feed — pre-boundary insert
+    commits null-fill the evolved column, post-boundary MERGE change
+    files carry it — and every row keeps its
+    _change_type/_commit_version tags."""
     from pyspark.sql import functions as F
 
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
     t = TxnTable(str(tmp_path / "cdf_evo"))
     t.overwrite(spark.range(0, 10).select(
         F.col("id").cast("int").alias("k"),
@@ -2603,13 +2355,7 @@ def test_cdf_stream_across_evolution_boundary(spark, tmp_path):
         F.lit("en").alias("lang")), "k", auto_merge=False)  # v2
 
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (spark.readStream.format("txnlog")
-         .option("readChangeFeed", "true").load(t.path)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    feed_to_parquet(t.path, out, ck, cdf=True)
     got = spark.read.parquet(out)
     assert sorted(got.columns) == ["_change_type", "_commit_version",
                                    "k", "lang", "v"]

@@ -79,27 +79,17 @@ def test_lossy_and_incompatible_changes_rejected(spark, tmp_path):
                   merge_schema=True)
 
 
-def test_datasource_reads_widened_table(spark, tmp_path):
-    from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-        register_txn_source,
-    )
-
-    register_txn_source(spark)
+def test_reads_widened_table(spark, tmp_path, feed_to_parquet):
     t = TxnTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, 1.5)], "k int, amt float"))
     t.append(spark.createDataFrame([(2, 2.5)], "k long, amt double"),
              merge_schema=True)
-    df = spark.read.format("txnlog").load(t.path)
+    df = t.read(spark)
     assert dict(df.dtypes) == {"k": "bigint", "amt": "double"}
     assert {(r["k"], r["amt"]) for r in df.collect()} == {(1, 1.5),
                                                           (2, 2.5)}
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (spark.readStream.format("txnlog").load(t.path)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    feed_to_parquet(t.path, out, ck)
     got = spark.read.parquet(out)
     assert got.count() == 2 and dict(got.dtypes)["k"] == "bigint"
 

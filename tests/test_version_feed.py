@@ -2,8 +2,8 @@
 a native Spark file stream over each source table's commit docs wakes
 the sink, each batch's version range is pinned in the checkpoint
 (``versions/<batch_id>``) and its rows are read with
-``TxnTable.read_changes``. These pin that it delivers what the public
-row-level ``format("txnlog")`` change feed delivers, that a replay
+``TxnTable.read_changes``. These pin that each batch's signed change
+rows net to the difference of the snapshots it spans, that a replay
 reads exactly its pinned range, that a missing source fails the start,
 and that a sink restarted on a checkpoint of an earlier feed fails with
 a remedy that neither drops nor doubles rows."""
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections import Counter
 
 import pytest
@@ -23,9 +24,6 @@ from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (
 from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
     TxnTable,
 )
-from sport_advantages_moderne_data_infrastructure_spark.sources.txnstream import (  # noqa: E501
-    register_txn_source,
-)
 from sport_advantages_moderne_data_infrastructure_spark.streaming.joinmv import (  # noqa: E501
     write_stream_join_mv,
 )
@@ -36,35 +34,34 @@ from sport_advantages_moderne_data_infrastructure_spark.streaming.pipeline impor
     _start_change_feed,
 )
 
+#: checkpoints the row-level ``format("txnlog")`` Python source left: its
+#: offsets are ``{"version": N}``, one line per source
+_ROW_FEED_CHECKPOINTS = os.path.join(os.path.dirname(__file__), "fixtures",
+                                     "row_feed_checkpoint")
+_SIGN = {"insert": 1, "update_postimage": 1,
+         "delete": -1, "update_preimage": -1}
+
 
 def _rows(df) -> Counter:
     return Counter(tuple(sorted(r.asDict().items())) for r in df.collect())
 
 
-def _row_feed(spark, path: str):
-    register_txn_source(spark)
-    return (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(path))
-
-
-def _drain_row_feed(spark, feed, checkpoint: str) -> list[Counter]:
-    """Run the row-level feed to the end on ``checkpoint``; one change-row
-    multiset per batch."""
-    got = []
-    q = (feed.writeStream
-         .foreachBatch(lambda df, _: got.append(_rows(df)))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
-    return got
+def _snapshot(spark, t: TxnTable, v: int, cols: list[str]) -> Counter:
+    """The rows of ``t`` at version ``v`` (none before the first
+    commit), positionally renamed to ``cols``."""
+    if v < 0:
+        return Counter()
+    return Counter(tuple(r) for r in
+                   t.read(spark, version=v).toDF(*cols).collect())
 
 
 def test_version_feed_delivers_the_row_feed(spark, tmp_path):
     """Over an append, a MERGE, a DV delete with change capture, a
-    compaction and a column rename, each step's batch carries the same
-    multiset of change rows through the starter as through
-    ``readStream.format("txnlog").option("readChangeFeed", "true")``."""
+    compaction and a column rename + append, each step is one batch of
+    the starter, and its change rows, signed (inserts and post-images
+    +1, deletes and pre-images -1), net to the step's snapshot
+    difference ``read(v) - read(v_before)`` as multisets, projected to
+    the current column names."""
     t = TxnTable(str(tmp_path / "t"))
     steps = [
         lambda: t.append(spark.createDataFrame(
@@ -80,20 +77,35 @@ def test_version_feed_delivers_the_row_feed(spark, tmp_path):
                  t.append(spark.createDataFrame(
                      [(5, "e", 5.0)], "id int, name string, score double"))),
     ]
+    before = -1
     for n, step in enumerate(steps):
         step()
-        rows = _drain_row_feed(spark, _row_feed(spark, t.path),
-                               str(tmp_path / "ck_rows"))
+        v = t.latest_version()
+        cols = t.read(spark).columns
         got = []
         q = _start_change_feed(
             spark, [t.path],
-            lambda changes, _: got.append(_rows(changes[t.path])),
+            lambda changes, _: got.append(
+                changes[t.path].select(*cols, "_change_type").collect()),
             str(tmp_path / "ck_versions"), True)
         q.awaitTermination(120)
         q.stop()
         assert len(got) == 1, f"step {n}: {len(got)} batches"
-        assert got[0] == sum(rows, Counter()), f"step {n}"
-    assert sum(got[0].values()) == 1  # the last step: one insert
+        net = Counter()
+        for r in got[0]:
+            net[tuple(r)[:-1]] += _SIGN[r["_change_type"]]
+        want = _snapshot(spark, t, v, cols)
+        want.subtract(_snapshot(spark, t, before, cols))
+        assert +net == +want and -net == -want, f"step {n}"
+        before = v
+    assert len(got[0]) == 1  # the last step: one insert
+
+
+def _row_feed_checkpoint(kind: str, dest) -> str:
+    """A copy of the ``kind`` (single/multi source) row-feed checkpoint
+    fixture at ``dest``."""
+    shutil.copytree(os.path.join(_ROW_FEED_CHECKPOINTS, kind), dest)
+    return str(dest)
 
 
 def test_row_feed_checkpoint_fails_loudly_single_source(spark, tmp_path):
@@ -101,8 +113,7 @@ def test_row_feed_checkpoint_fails_loudly_single_source(spark, tmp_path):
     ``ValueError`` naming the remedy, and no view commit."""
     src = TxnTable(str(tmp_path / "src"))
     src.append(spark.createDataFrame([(1, 10), (2, 20)], "id int, v int"))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_row_feed(spark, _row_feed(spark, src.path), ckpt)
+    ckpt = _row_feed_checkpoint("single", tmp_path / "ckpt")
     mv = MapMaterializedView(str(tmp_path / "view"), "id", lambda df: df,
                              n_buckets=2)
     with pytest.raises(ValueError,
@@ -119,10 +130,7 @@ def test_row_feed_checkpoint_fails_loudly_multi_source(spark, tmp_path):
                    TxnTable(str(tmp_path / "r")))
     left.append(spark.createDataFrame([(1, 10)], "id int, lv int"))
     right.append(spark.createDataFrame([(1, "x")], "id int, rv string"))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_row_feed(spark, _row_feed(spark, left.path)
-                    .unionByName(_row_feed(spark, right.path),
-                                 allowMissingColumns=True), ckpt)
+    ckpt = _row_feed_checkpoint("multi", tmp_path / "ckpt")
     jmv = JoinMaterializedView(str(tmp_path / "jmv"), "id", n_buckets=2)
     with pytest.raises(ValueError,
                        match="new, empty view tables.*fresh checkpoint"):
