@@ -592,11 +592,9 @@ class TxnTable:
             return df
         from pyspark.sql import functions as F
 
-        paths = sorted({ref["path"] for ref in dvs.values()})
-        dv = (spark.read.parquet(
-            *[os.path.join(self.path, p) for p in paths])
-            .select(F.col("src_file").alias("__dv_f"),
-                    F.col("row_idx").alias("__dv_r")))
+        dv = self._dv_rows(spark, dvs).select(
+            F.col("src_file").alias("__dv_f"),
+            F.col("row_idx").alias("__dv_r"))
         keyed = df.withColumn("__dv_f", F.expr(self._DV_FILE_KEY)) \
                   .withColumn("__dv_r", F.col("_metadata.row_index"))
         return (keyed.join(F.broadcast(dv), ["__dv_f", "__dv_r"],
@@ -2937,11 +2935,11 @@ class TxnTable:
         replaceWhere): a predicate over data columns deletes exactly
         the matching ROWS and inserts ``df`` in the same atomic
         commit — the partitions actually holding matches are found by
-        one column-pruned sizing scan (:meth:`_hot_partitions`), their
-        NON-matching rows rewrite as survivors alongside the new data,
-        and untouched partitions keep their files. Without the flag a
-        data-column predicate refuses (metadata-only pruning is the
-        default contract; the flag is the explicit opt-in to a
+        one column-pruned sizing scan (:meth:`_hot_partition_dirs`),
+        their NON-matching rows rewrite as survivors alongside the new
+        data, and untouched partitions keep their files. Without the
+        flag a data-column predicate refuses (metadata-only pruning is
+        the default contract; the flag is the explicit opt-in to a
         rewriting scan, mirroring Delta's own
         partition-vs-arbitrary distinction).
 
@@ -3045,9 +3043,10 @@ class TxnTable:
                     # metadata-only ("year = '1997' AND price > x"
                     # scans one year, not the table)
                     pp = self._metadata_conjuncts(vf, condition)
-                    _, _, cands = self._hot_partitions(
-                        spark, condition, base, part_dirs, keys,
-                        partition_prune=pp)
+                    cands = self._hot_partition_dirs(
+                        spark, condition, base,
+                        vf if pp is None else vf.filter(F.expr(pp)),
+                        segs, keys)
                     removes = cands
                     if cands:
                         snap = self._read_dirs(
@@ -3311,84 +3310,102 @@ class TxnTable:
                                    physical_used=used_override),
                               base=base)
 
-    @staticmethod
-    def _align_to_schema(df: DataFrame, schema) -> DataFrame:
-        """Project ``df`` to the merged snapshot ``schema``: missing
-        columns null-fill, present columns cast to the snapshot type.
-        Row-level DELETE/UPDATE read candidate dirs one at a time, so a
-        dir that predates a schema evolution would otherwise lack the SET
-        column (silently skipping its matching rows) and its change
-        frames would fail the union with post-evolution dirs — Delta
-        resolves both against the table schema, and so do we."""
-        from pyspark.sql import functions as F
+    def _tagged_candidates(self, spark: SparkSession, cands: list[str],
+                           base: int, schema, positions: bool = False):
+        """One explicit-``schema`` scan over the candidate dirs of a
+        row-level op, each row tagged with its dir in ``_src_dir``:
+        plain dirs in one scan, partition leaves in one scan per commit
+        root with ``basePath`` (the keys parse from the path at the
+        schema's type), so sizing, change capture and the rewrite cost
+        a CONSTANT number of Spark jobs however many dirs they visit.
+        Column-mapped tables scan PHYSICAL names and alias to the
+        logical schema; live deletion vectors anti-join out at the
+        scan. ``positions`` keeps each row's file key and row index
+        (``__dv_file``, ``__dv_row``) for the DV position write."""
+        from functools import reduce
 
-        return df.select(*[
-            (F.col(f.name).cast(f.dataType) if f.name in df.columns
-             else F.lit(None).cast(f.dataType)).alias(f.name)
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructField, StructType
+
+        mapping = self.column_mapping(base) or {}
+        plan = StructType([
+            StructField(mapping.get(f.name, f.name), f.dataType,
+                        f.nullable, f.metadata)
             for f in schema.fields])
+        groups: dict[str, list[str]] = {}
+        for d in cands:
+            groups.setdefault(_commit_root(d) if _partition_segs(d) else "",
+                              []).append(d)
+        dvs = self._dvs_for(cands, base)
+        keyed = positions or bool(dvs)
+        frames = []
+        for root, dirs in sorted(groups.items()):
+            reader = spark.read.schema(plan)
+            if root:
+                reader = reader.option("basePath",
+                                       os.path.join(self.path, root))
+            tags = {"_src_dir": self._src_dir_col(spark, root, dirs)}
+            if keyed:  # _metadata resolves on the bare scan only
+                tags["__dv_file"] = F.expr(self._DV_FILE_KEY)
+                tags["__dv_row"] = F.col("_metadata.row_index")
+            frames.append(reader.parquet(
+                *[os.path.join(self.path, d) for d in dirs])
+                .withColumns(tags))
+        df = reduce(lambda a, b: a.unionByName(b), frames)
+        if dvs:  # already-deleted rows are invisible to the op
+            df = df.join(F.broadcast(self._dv_rows(spark, dvs).select(
+                F.col("src_file").alias("__dv_file"),
+                F.col("row_idx").alias("__dv_row"))),
+                ["__dv_file", "__dv_row"], "left_anti")
+        extra = ["_src_dir"] + (["__dv_file", "__dv_row"]
+                                if positions else [])
+        return df.select(
+            *[F.col(mapping.get(f.name, f.name)).alias(f.name)
+              for f in schema.fields], *extra)
 
-    def _tagged_candidates(self, spark: SparkSession, live: list[str],
-                           prune: tuple | None, base: int, snap_schema):
-        """One DataFrame over every candidate dir (stats-pruned when
-        ``prune`` is given), each dir's rows schema-aligned to the merged
-        snapshot and tagged with their source dir in ``_src_dir`` — so
-        DELETE/UPDATE can size, rewrite, and change-capture every
-        candidate in a CONSTANT number of Spark jobs instead of 2-3 per
-        dir. Returns (None, []) when pruning leaves no candidates."""
+    @staticmethod
+    def _src_dir_col(spark: SparkSession, root: str, dirs: list[str]):
+        """``_src_dir`` of a candidate-scan row: the recorded dir of
+        the file it came from (``root`` '' for plain dirs). Spark
+        reports file paths URL-encoded, so an escaped partition segment
+        (``ts=1999-06-01 00%3A00%3A00``) maps back to its recorded
+        name."""
+        import re
+
         from pyspark.sql import functions as F
 
-        if prune is not None:
-            col, lo, hi = prune
-            keep = set(self.pruned_dirs(col, lo, hi, base))
-            candidates = [d for d in live if d in keep]
-        else:
-            candidates = list(live)
-        if not candidates:
-            return None, []
-        sch = self.table_schema(base) or snap_schema
-        if sch is not None and all(
-                _partition_of(d) is None for d in candidates):
-            # log schema: ONE explicit-schema scan over every candidate
-            # (no per-dir mergeSchema inference job), source dir derived
-            # from the file path. Mapped tables scan under PHYSICAL
-            # names, then alias to the logical view (keeping _src_dir).
-            mapping = self.column_mapping(base)
-            plan_sch = sch
-            if mapping:
-                from pyspark.sql.types import StructField, StructType
+        path = F.col("_metadata.file_path")
+        if not root:
+            return F.concat(F.lit(_DATA_DIR + "/"), F.substring_index(
+                F.substring_index(path, "/", -2), "/", 1))
+        depth = len(_partition_segs(dirs[0]))
+        seen = F.concat(F.lit(root + "/"), F.substring_index(
+            F.substring_index(path, "/", -(depth + 1)), "/", depth))
+        out = seen
+        for d in dirs:
+            if re.fullmatch(r"[A-Za-z0-9_.=/-]+", d):
+                continue  # URL-safe: reported as recorded
+            url = spark._jvm.org.apache.hadoop.fs.Path(d).toUri().toString()
+            out = F.when(seen == url, F.lit(d)).otherwise(out)
+        return out
 
-                plan_sch = StructType([
-                    StructField(mapping.get(f.name, f.name), f.dataType,
-                                f.nullable, f.metadata)
-                    for f in sch.fields])
-            tagged = (spark.read.schema(plan_sch).parquet(
-                *[os.path.join(self.path, d) for d in candidates])
-                .withColumn("_src_dir", F.concat(
-                    F.lit(_DATA_DIR + "/"),
-                    F.substring_index(F.substring_index(
-                        F.input_file_name(), "/", -2), "/", 1))))
-            tagged = self._apply_dvs(
-                spark, tagged, self._dvs_for(candidates, base))
-            if mapping:
-                tagged = tagged.select(
-                    *[F.col(mapping.get(f.name, f.name)).alias(f.name)
-                      for f in sch.fields], "_src_dir")
-            return tagged, candidates
-        tagged = None
-        for d in candidates:
-            part = (self._align_to_schema(
-                self._read_dirs(spark, [d], self._dvs_for([d], base),
-                                version=base),
-                snap_schema)
-                .withColumn("_src_dir", F.lit(d)))
-            tagged = part if tagged is None else tagged.unionByName(part)
-        return tagged, candidates
+    def _dv_rows(self, spark: SparkSession, dvs: dict[str, dict]):
+        """The positions (``src_dir``, ``src_file``, ``row_idx``) that
+        the DV mapping ``dvs`` records for its dirs."""
+        from pyspark.sql import functions as F
+
+        paths = sorted({ref["path"] for ref in dvs.values()})
+        return (spark.read.parquet(
+            *[os.path.join(self.path, p) for p in paths])
+            .filter(F.col("src_dir").isin(list(dvs)))
+            .select("src_dir", "src_file", "row_idx"))
 
     @staticmethod
     def _candidate_obs(candidates: list[str], cond):
         """Observation + per-candidate-dir metrics (total rows ``n_i``,
-        matching rows ``m_i``) to attach to the change-frame write, so
-        the sizing pass rides the job DELETE/UPDATE already runs."""
+        matching rows ``m_i``) to attach to the first write of a
+        row-level op, so the sizing pass rides a job the op runs
+        anyway."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -3406,19 +3423,22 @@ class TxnTable:
     # the predicate columns) is strictly cheaper — measured 19.1 s ->
     # ~2 s for the 128-candidate scatter delete (PLANS.md r6)
 
-    def _sizes_prepass(self, tagged, cond,
-                       candidates: list[str]) -> dict[str, tuple]:
-        """Per-candidate-dir (total rows, matching rows) via one
-        column-pruned aggregation job — the many-candidates alternative
-        to the Observation rider."""
-        from pyspark.sql import functions as F
-
-        rows = (tagged.groupBy("_src_dir")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.when(cond, 1).otherwise(0)).alias("m"))
-                .collect())  # bounded: one row per candidate dir
-        got = {r["_src_dir"]: (r["n"], int(r["m"] or 0)) for r in rows}
-        return {d: got.get(d, (0, 0)) for d in candidates}
+    def _sizes_prepass(self, tagged, cond, candidates: list[str],
+                       base: int) -> dict[str, tuple]:
+        """Per-candidate-dir (rows, matches) — the many-candidates
+        alternative to the Observation rider: matches from one
+        column-pruned aggregation over the MATCHING rows (the scan
+        pushes the condition down to row-group stats), rows from the
+        log's net per-dir counts. A dir committed before row counts
+        were recorded counts as partial: its rewrite keeps whatever
+        does not match."""
+        got = {r["_src_dir"]: r["count"] for r in
+               tagged.filter(cond).groupBy("_src_dir").count()
+               .collect()}  # bounded: one row per candidate dir
+        rows = self._live_rows(base)
+        return {d: (rows.get(d) if rows.get(d) is not None
+                    else got.get(d, 0) + 1, got.get(d, 0))
+                for d in candidates}
 
     @staticmethod
     def _obs_counts(obs, candidates: list[str]) -> dict[str, tuple]:
@@ -3481,16 +3501,23 @@ class TxnTable:
                 for c in missing:
                     dtypes[c] = "string"
 
+        # an inline VALUES table is a LocalRelation: collecting it, or
+        # a predicate over it, runs no Spark job
+        args: dict[str, str] = {}
+        tuples = []
+        for r, s in enumerate(sorted(segs)):
+            cells = [s] + [_unescape_partition(v) for v in vals[s]]
+            args.update({f"p{r}_{i}": c for i, c in enumerate(cells)})
+            tuples.append("(" + ", ".join(
+                f":p{r}_{i}" for i in range(len(cells))) + ")")
+        names = ", ".join(["__seg"] + [f"__v{i}" for i in range(len(cols))])
+
         def _frame(types: dict[str, str]) -> DataFrame:
-            return (spark.createDataFrame(
-                [tuple([s] + [_unescape_partition(v) for v in vals[s]])
-                 for s in sorted(segs)],
-                ", ".join(["__seg string"]
-                          + [f"`__v{i}` string"
-                             for i in range(len(cols))]))
-                .select("__seg", *[
-                    F.col(f"__v{i}").try_cast(types[c]).alias(c)
-                    for i, c in enumerate(cols)]))
+            return (spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} "
+                              f"AS t({names})", args=args)
+                    .select("__seg", *[
+                        F.col(f"__v{i}").try_cast(types[c]).alias(c)
+                        for i, c in enumerate(cols)]))
 
         vf = _frame(dtypes)
         rows = vf.collect()
@@ -3505,11 +3532,12 @@ class TxnTable:
             vf = _frame({**dtypes, **{c: "string" for c in bad}})
         return vf, segs
 
-    #: nondeterministic SQL functions rejected in partition-key
-    #: predicates: a rand()-carrying condition that RESOLVES over the
-    #: values frame would get whole-partition (rather than per-row)
-    #: delete semantics — Delta rejects nondeterministic DELETE/UPDATE
-    #: conditions outright, and so do the partitioned legs here
+    #: nondeterministic SQL functions rejected in row-level op and
+    #: replace_where conditions: each op evaluates its condition more
+    #: than once (sizing, change capture, rewrite, whole-partition
+    #: matching), so a rand()-carrying condition would delete one set
+    #: of rows and record another — Delta rejects nondeterministic
+    #: DELETE/UPDATE conditions outright, and so does every layout here
     _NONDET_PAT = (r"\b(?:rand|randn|random|uuid|shuffle|"
                    r"monotonically_increasing_id)\s*\(")
 
@@ -3586,202 +3614,203 @@ class TxnTable:
             return None
         return " AND ".join(f"({c})" for c in keep)
 
-    def _hot_partitions(self, spark: SparkSession, condition: str,
-                        base: int, live: list[str],
-                        part_cols: list[str],
-                        partition_prune: str | None = None,
-                        prune: tuple | None = None
-                        ) -> tuple[list[str], bool, list[str]]:
-        """(hot partition suffix strings, meta_only, candidate dirs)
-        for a row-level op
-        on a partition-granular layout. A predicate that RESOLVES over
-        the partition keys alone evaluates against the live partition
-        VALUES — metadata-only, bounded by the live partition count,
-        zero storage I/O, and constant per partition (every row of a
-        hot partition matches) — the retention/backfill shape on a
-        partition-by-generated date key. Any other predicate falls
-        back to ONE column-pruned sizing scan to find the partitions
-        actually holding matches; ``partition_prune`` (an explicit
-        partition-key predicate, the partitioned analog of the flat
-        path's footer-stats ``prune``) bounds that scan to its
-        surviving partitions — at 100 TB the difference between
-        scanning one date partition and the table. Evaluation runs
-        over the TYPED values frame (:meth:`_typed_partition_values`),
-        so key predicates carry data-path semantics. The
-        metadata-only downgrade happens ONLY on AnalysisException
-        (ADVICE r12 — a transient executor failure must propagate, not
-        silently demote a purge to a full sizing scan), and
-        nondeterministic conditions are rejected outright."""
+    def _hot_partition_dirs(self, spark: SparkSession, condition: str,
+                            base: int, vf, segs: dict[str, list[str]],
+                            keys: list[str]) -> list[str]:
+        """The dirs of the partitions in the typed values frame ``vf``
+        that hold rows matching ``condition`` (a predicate over data
+        columns), found by one column-pruned scan of those partitions —
+        :meth:`replace_where`'s arbitrary-predicate form. The scan
+        yields the keys' PARSED values; the semi-join against ``vf``
+        recovers their raw path suffixes (never a str() re-render,
+        which would miss Hive-escaped segments)."""
+        from pyspark.sql import functions as F
+
+        live = [d for r in vf.collect() for d in segs[r["__seg"]]]
+        if not live:
+            return []
+        hot_vals = (self._read_dirs(spark, live,
+                                    self._dvs_for(live, base),
+                                    version=base)
+                    .filter(F.expr(condition)).select(*keys).distinct())
+        hot = sorted(r["__seg"] for r in
+                     vf.join(hot_vals, keys, "left_semi").collect())
+        return [d for s in hot for d in segs[s]]
+
+    def _row_candidates(self, spark: SparkSession, condition: str,
+                        base: int, prune: tuple | None,
+                        partition_prune: str | None
+                        ) -> tuple[list[str], list[str] | None, bool]:
+        """Step 1 of :meth:`_rewrite_rows`: (candidate dirs, partition
+        keys or None, whole). The live dirs narrow by footer stats
+        (``prune=(col, lo, hi)``: rows matching the condition satisfy
+        lo <= col <= hi), then, on a partitioned layout, by the TYPED
+        partition values (:meth:`_typed_partition_values` — ``day > 2``
+        on an int key is numeric, escaped segments round-trip):
+        ``partition_prune`` keeps its partitions, and a ``condition``
+        that resolves over the keys alone matches whole partitions
+        metadata-only (``whole``: every row of every candidate matches,
+        no job sizes them) — the retention purge on a partition-by-date
+        layout. Only an AnalysisException (a data-column reference)
+        makes the condition a per-row one: a transient failure
+        propagates (ADVICE r12)."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import functions as F
+
+        live = self.snapshot_dirs(base)
+        if prune is not None:
+            col, lo, hi = prune
+            keep = set(self.pruned_dirs(col, lo, hi, base))
+            live = [d for d in live if d in keep]
+        keys = self._live_partition_cols(live)
+        if keys is None:
+            return live, None, False
+        vf, segs = self._typed_partition_values(spark, live, keys)
+        if partition_prune is not None:
+            vf = vf.filter(F.expr(partition_prune))
+        try:
+            hot, whole = vf.filter(F.expr(condition)), True
+        except AnalysisException:
+            hot, whole = vf, False  # the condition reads data columns
+        return ([d for s in sorted(r["__seg"] for r in hot.collect())
+                 for d in segs[s]], keys, whole)
+
+    def _rewrite_rows(self, spark: SparkSession, condition: str,
+                      base: int, meta: dict, capture: bool, changes,
+                      rewrite=None, prune: tuple | None = None,
+                      partition_prune: str | None = None,
+                      schema=None) -> int:
+        """The one row-level rewrite behind :meth:`delete_where`,
+        :meth:`update_where` and the DV delete — Delta's copy-on-write
+        DELETE/UPDATE on every layout: find the dirs holding matches,
+        write the change rows, rewrite those dirs, commit the adds and
+        removes once.
+
+        1. Candidates (:meth:`_row_candidates`): stats- and
+           partition-pruned live dirs; a key-only condition matches
+           whole partitions with no data job.
+        2. Scan (:meth:`_tagged_candidates`): one explicit-schema scan
+           per commit root, rows tagged with ``_src_dir``, column
+           mapping and live DVs applied. ``schema`` is the caller's
+           snapshot schema when the log records none.
+        3. Sizing: rows and matches per dir from an Observation riding
+           the op's first write, or — above ``_OBS_RIDER_MAX``
+           candidates, and on a partitioned layout without capture —
+           one column-pruned prepass.
+        4. Change capture (``capture``): ``changes(matched rows)``.
+        5. Rewrite and commit: dirs without matches stay; ``rewrite``
+           projects the rows a matched dir keeps (``meta["operation"]``
+           ``delete``: a dir with no kept row drops unrewritten);
+           ``rewrite=None`` is the DV delete, which writes positions
+           (:meth:`_write_positions`) instead. One commit through
+           :meth:`_transact` with :meth:`_rebase_rewrite`.
+
+        Returns the new version, or ``base`` when nothing matched (no
+        commit). A nondeterministic condition is refused: sizing,
+        capture and the rewrite each evaluate it."""
         import re
 
-        from pyspark.errors import AnalysisException
         from pyspark.sql import functions as F
 
         if re.search(self._NONDET_PAT, condition, re.IGNORECASE):
             raise ValueError(
                 f"nondeterministic condition {condition!r} in a "
-                "row-level op on a partitioned table — partition-"
-                "granular semantics (whole-partition drops, sizing "
-                "scans) would evaluate it more than once with "
-                "different outcomes; materialize the random choice "
-                "into a column first")
-        vf, segs = self._typed_partition_values(spark, live, part_cols)
-        if vf is None:
-            return [], True, []
+                "row-level op — sizing, change capture and the rewrite "
+                "each evaluate it and would disagree; materialize the "
+                "random choice into a column first")
+        cands, keys, whole = self._row_candidates(
+            spark, condition, base, prune, partition_prune)
+        if not cands:
+            return base
+        drop_full = meta["operation"] == "delete"
+        if whole and drop_full and not capture:
+            # a key-only purge with the feed off is pure metadata
+            return self._transact(_Txn([], cands, meta),
+                                  self._rebase_rewrite, base)
+        schema = (self.table_schema(base) or schema
+                  or self._read_dirs(spark, cands, version=base).schema)
+        tagged = self._tagged_candidates(spark, cands, base, schema,
+                                         positions=rewrite is None)
+        cond = F.expr(condition)
+        per_dir = obs = None
+        first = tagged  # what the op's first write scans
+        if whole:
+            per_dir = dict.fromkeys(cands, (1, 1))
+        elif rewrite is not None:
+            if len(cands) > self._OBS_RIDER_MAX or (keys and not capture):
+                per_dir = self._sizes_prepass(tagged, cond, cands, base)
+            else:
+                obs, metrics = self._candidate_obs(cands, cond)
+                first = tagged.observe(obs, *metrics)
+        matched = first if whole else first.filter(cond)
+        txn = _Txn([], [], meta)
+        if rewrite is None:
+            dvs = self._write_positions(spark, matched, cands, base)
+            if dvs is None:
+                return base  # no new matches: no commit
+            txn.kw["dvs"] = dvs
+        if capture:
+            txn.kw["changes"] = self._write_changes(changes(
+                matched.drop("_src_dir", "__dv_file", "__dv_row")))
+            if obs is not None:
+                per_dir = self._obs_counts(obs, cands)
+        if rewrite is not None:
+            write = ((lambda df: self._write_data_partitioned(df, keys))
+                     if keys else (lambda df: [self._write_data(df)]))
+            if per_dir is None:
+                # feed off over few plain dirs: the rewrite of EVERY
+                # candidate is the one job, sized by the riding
+                # Observation
+                txn.adds = write(rewrite(first.drop("_src_dir")))
+                per_dir = self._obs_counts(obs, cands)
+                txn.removes = cands
+                if drop_full and all(n == m for n, m in per_dir.values()):
+                    self._reclaim(txn)
+                    txn.adds = []
+            else:
+                txn.removes = [d for d in cands if per_dir[d][1]]
+                redo = [d for d in txn.removes
+                        if not drop_full or per_dir[d][1] < per_dir[d][0]]
+                if redo:  # a scan of its own: plans only redo's files
+                    txn.adds = write(rewrite(self._tagged_candidates(
+                        spark, redo, base, schema).drop("_src_dir")))
+            if not any(m for _, m in per_dir.values()):
+                self._reclaim(txn)
+                return base  # nothing matched: no commit
+        return self._transact(txn, self._rebase_rewrite, base)
 
-        def dirs_of(seg_values: set[str]) -> list[str]:
-            return [d for s in sorted(seg_values) for d in segs[s]]
-
-        if partition_prune is not None:
-            keep = {r["__seg"] for r in
-                    vf.filter(F.expr(partition_prune)).collect()}
-            if not keep:
-                return [], True, []
-            segs = {s: ds for s, ds in segs.items() if s in keep}
-            live = dirs_of(keep)
-            vf = vf.filter(F.col("__seg").isin(sorted(keep)))
-        try:
-            hot = sorted(r["__seg"] for r in
-                         vf.filter(F.expr(condition)).collect())
-            return hot, True, dirs_of(set(hot))
-        except AnalysisException:
-            pass  # condition reads data columns: size by scanning
-        if prune is not None:
-            # footer-stats file skipping composes with the partition
-            # layout (partition subdirs record per-dir min/max like any
-            # add): same caller contract as the flat path — rows
-            # matching `condition` also satisfy col in [lo, hi]
-            col, lo, hi = prune
-            live = [d for d in live
-                    if d in set(self.pruned_dirs(col, lo, hi, base))]
-            if not live:
-                return [], False, []
-        snap = self._read_dirs(spark, live, self._dvs_for(live, base),
-                               version=base)
-        # typed match-back: the scan yields the partition columns'
-        # PARSED values; the semi-join against the typed values frame
-        # recovers their raw path suffixes (never a str() re-render,
-        # which would miss Hive-escaped segments)
-        hot_vals = snap.filter(F.expr(condition)) \
-            .select(*part_cols).distinct()
-        hot = sorted(r["__seg"] for r in
-                     vf.join(hot_vals, part_cols, "left_semi")
-                     .collect())
-        live_set = set(live)
-        cands = [d for d in dirs_of(set(hot)) if d in live_set]
-        return hot, False, cands
-
-    def _delete_where_partitioned(self, spark: SparkSession,
-                                  condition: str, meta: dict | None,
-                                  capture_changes: bool, base: int,
-                                  live: list[str],
-                                  part_cols: list[str],
-                                  partition_prune: str | None = None,
-                                  prune: tuple | None = None) -> int:
-        """DELETE on a partition-granular layout: candidates are whole
-        partitions, optionally narrowed further to the candidate DIRS
-        whose footer stats overlap the ``prune`` bound (a hot value can
-        span many commit subdirs; stats-excluded ones keep their
-        files). When the predicate is partition-key-only the hot
-        partitions match WHOLLY — their dirs drop with NO rewrite (and
-        with the change feed off, no data job at all: a retention
-        purge on a date-partitioned table is pure metadata); otherwise
-        the candidate dirs rewrite their kept rows, cold partitions
-        keep their files. DVs on dropped/rewritten dirs materialize
-        away with them."""
+    def _write_positions(self, spark: SparkSession, matched,
+                         cands: list[str], base: int) -> dict | None:
+        """The DV step of :meth:`_rewrite_rows`: write ONE position
+        file holding the matched rows' positions plus the carried-
+        forward positions of candidate dirs already DV'd (per-dir DVs
+        are CUMULATIVE, one live file per dir), and return the commit's
+        ``dir -> {"path", "rows"}`` mapping — None, with the file
+        dropped, when nothing new matched. No data file is touched."""
         from pyspark.sql import functions as F
 
-        hot, meta_only, candidates = self._hot_partitions(
-            spark, condition, base, live, part_cols, partition_prune,
-            prune)
-        if not hot:
-            return base
-        m = {**(meta or {}), "operation": "delete",
-             "condition": condition}
-        if meta_only:
-            changes_rel = None
-            if capture_changes:
-                changes_rel = self._write_changes(
-                    self._read_dirs(spark, candidates,
-                                    self._dvs_for(candidates, base),
-                                    version=base)
-                    .withColumn("_change_type", F.lit("delete")))
-            return self._transact(
-                _Txn([], candidates, m, changes=changes_rel),
-                self._rebase_rewrite, base)
-        cond = F.expr(condition)
-        sub = self._read_dirs(spark, candidates,
-                              self._dvs_for(candidates, base),
-                              version=base)
-        changes_rel = (self._write_changes(
-            sub.filter(cond)
-            .withColumn("_change_type", F.lit("delete")))
-            if capture_changes else None)
-        adds = self._write_data_partitioned(sub.filter(~cond),
-                                            part_cols)
-        return self._transact(
-            _Txn(adds, candidates, m, changes=changes_rel),
-            self._rebase_rewrite, base)
-
-    def _update_where_partitioned(self, spark: SparkSession,
-                                  condition: str, set_exprs: dict,
-                                  meta: dict | None,
-                                  capture_changes: bool, base: int,
-                                  live: list[str],
-                                  part_cols: list[str],
-                                  partition_prune: str | None = None,
-                                  prune: tuple | None = None) -> int:
-        """UPDATE on a partition-granular layout: rewrite exactly the
-        candidate dirs holding matches (cold partitions — and
-        stats-``prune``-excluded subdirs of hot values — keep their
-        files).
-        ``set_exprs`` arrives with generated-column recomputes already
-        merged (the caller's substitution step), so a SET that moves a
-        row's generated partition key lands the row in its NEW
-        ``col=value`` subdir within the same atomic commit — the
-        partitioned write derives each row's dir from the recomputed
-        value, and `adds` may introduce partitions `removes` never
-        held."""
-        from pyspark.sql import functions as F
-
-        hot, _, candidates = self._hot_partitions(
-            spark, condition, base, live, part_cols, partition_prune,
-            prune)
-        if not hot:
-            return base
-        cond = F.expr(condition)
-        sub = self._read_dirs(spark, candidates,
-                              self._dvs_for(candidates, base),
-                              version=base)
-        snap_schema = sub.schema
-        cols = [f.name for f in snap_schema.fields]
-        changes_rel = None
-        if capture_changes:
-            pre_struct = F.struct(
-                *[F.col(c).alias(c) for c in cols],
-                F.lit("update_preimage").alias("_change_type"))
-            post_struct = F.struct(
-                *[(F.expr(set_exprs[c]).cast(snap_schema[c].dataType)
-                   .alias(c) if c in set_exprs else F.col(c).alias(c))
-                  for c in cols],
-                F.lit("update_postimage").alias("_change_type"))
-            changes_rel = self._write_changes(
-                sub.filter(cond)
-                .select(F.explode(F.array(pre_struct, post_struct))
-                        .alias("_c")).select("_c.*"))
-        adds = self._write_data_partitioned(
-            sub.select(*[
-                F.when(cond, F.expr(set_exprs[c])
-                       .cast(snap_schema[c].dataType))
-                .otherwise(F.col(c)).alias(c) if c in set_exprs
-                else F.col(c) for c in cols]),
-            part_cols)
-        return self._transact(
-            _Txn(adds, candidates,
-                 {**(meta or {}), "operation": "update",
-                  "condition": condition, "set": sorted(set_exprs)},
-                 changes=changes_rel),
-            self._rebase_rewrite, base)
+        existing = self._dvs_for(cands, base)
+        pos = matched.select(F.col("_src_dir").alias("src_dir"),
+                             F.col("__dv_file").alias("src_file"),
+                             F.col("__dv_row").alias("row_idx"))
+        if existing:
+            pos = pos.unionByName(self._dv_rows(spark, existing))
+        dv_rel = os.path.join(_DV_DIR, uuid.uuid4().hex)
+        dv_abs = os.path.join(self.path, dv_rel)
+        # repartition, NOT coalesce: coalesce(1) would collapse the
+        # whole upstream candidate scan into one task; the exchange
+        # carries only the (tiny) position rows
+        pos.repartition(1).write.parquet(dv_abs)
+        per_dir = {r["src_dir"]: r["n"] for r in
+                   spark.read.parquet(dv_abs)
+                   .groupBy("src_dir").agg(F.count("*").alias("n"))
+                   .collect()}  # bounded: <= |candidates| rows
+        if sum(per_dir.values()) == sum(r["rows"]
+                                        for r in existing.values()):
+            self._drop(dv_rel)
+            return None
+        return {d: {"path": dv_rel, "rows": int(n)}
+                for d, n in sorted(per_dir.items())}
 
     def delete_where(self, spark: SparkSession, condition: str,
                      prune: tuple | None = None,
@@ -3790,26 +3819,29 @@ class TxnTable:
                      use_dv: bool = False,
                      partition_prune: str | None = None) -> int:
         """Row-level DELETE (Delta's ``DELETE WHERE``): rewrite ONLY the
-        data dirs that can contain matching rows, atomically. With
-        ``prune=(col, lo, hi)`` the candidate set comes from the log's
-        footer stats — on an append-only table a time-range purge (the
-        GDPR/retention case) rewrites the few commits whose ranges
-        overlap, never the table; without it every live dir is a
-        candidate but dirs whose rewrite keeps every row are left in
-        place. Cost is O(matching data), not O(table). On a
-        partition-granular layout the candidates are whole partitions
-        (r12, see :meth:`_delete_where_partitioned`); ``prune``
-        composes there as a per-subdir footer-stats bound, and
-        ``partition_prune`` (a partition-key predicate) bounds the
-        sizing scan.
+        data dirs that hold matching rows, atomically, through
+        :meth:`_rewrite_rows`. With ``prune=(col, lo, hi)`` the
+        candidate set comes from the log's footer stats — on an
+        append-only table a time-range purge (the GDPR/retention case)
+        rewrites the few commits whose ranges overlap, never the table.
+        Dirs without matches keep their files, dirs where every row
+        matches drop without a rewrite, and the rest rewrite their kept
+        rows: cost is O(matching data), not O(table). A row whose
+        condition evaluates NULL is kept. On a partitioned layout
+        ``prune`` bounds each subdir, ``partition_prune`` (a
+        partition-key predicate) bounds the scan to its partitions, and
+        a condition over the partition keys alone drops whole
+        partitions metadata-only — with the change feed off, no data
+        job at all.
 
         ``capture_changes=False`` mirrors Delta's default (change data
-        feed DISABLED): no delete change frames are written and the op
-        collapses to a SINGLE scan+write job with the sizing Observation
-        riding it — at the cost that every candidate dir is rewritten
-        (stats pruning still bounds candidates; a no-match op is still a
-        no-op). The default keeps the feed, which downstream
-        :meth:`read_changes` consumers rely on.
+        feed DISABLED): no delete change frames are written, and over
+        at most ``_OBS_RIDER_MAX`` plain candidate dirs the op
+        collapses to a SINGLE scan+write job with the sizing
+        Observation riding it — at the cost that every candidate dir is
+        rewritten (a no-match op is still a no-op). The default keeps
+        the feed, which downstream :meth:`read_changes` consumers rely
+        on.
 
         ``use_dv=True`` deletes WITHOUT rewriting any data file
         (Delta's deletion vectors): the commit records per-dir position
@@ -3825,209 +3857,16 @@ class TxnTable:
         base = self.latest_version()
         if base is None:
             raise ValueError(f"not a txn table (no commits): {self.path}")
-        live = self.snapshot_dirs(base)
-        _pcols = self._live_partition_cols(live)
-        if _pcols is not None and not use_dv:
-            # partition-granular DELETE (r12): candidates are the
-            # partitions holding matches; a predicate over the
-            # partition KEY alone prunes them METADATA-only and (with
-            # the change feed off) drops whole partitions with zero
-            # data jobs — the retention-purge shape on a
-            # partition-by-generated date layout
-            return self._delete_where_partitioned(
-                spark, condition, meta, capture_changes, base, live,
-                _pcols, partition_prune, prune)
-        if use_dv:
-            return self._delete_where_dv(spark, condition, prune, meta,
-                                         capture_changes, base, live)
-        snap_schema = self.read(spark, base).schema
-        tagged, candidates = self._tagged_candidates(
-            spark, live, prune, base, snap_schema)
-        if tagged is None:
-            return base  # pruning left no candidates: no commit
-        cond = F.expr(condition)
-        cmeta = {**(meta or {}), "operation": "delete", "condition": condition}
-        many = len(candidates) > self._OBS_RIDER_MAX
-        if not capture_changes and many:
-            # sizing pre-pass, then rewrite ONLY the partially-matched
-            # dirs (full-match dirs drop; match-free dirs stay put)
-            per_dir = self._sizes_prepass(tagged, cond, candidates)
-            removes = [d for d in candidates if per_dir[d][1] > 0]
-            if not removes:
-                return base
-            rewrite = [d for d in removes
-                       if per_dir[d][1] < per_dir[d][0]]
-            adds = []
-            if rewrite:
-                adds.append(self._write_data(
-                    tagged.filter(F.col("_src_dir").isin(rewrite))
-                    .filter(~cond).drop("_src_dir")))
-            return self._transact(_Txn(adds, removes, cmeta),
-                                  self._rebase_rewrite, base)
-        obs, metrics = self._candidate_obs(candidates, cond)
-        if not capture_changes:
-            # ONE job: write kept rows of every candidate, sized by the
-            # riding Observation; undo on global no-op / full-match
-            rel = self._write_data(
-                tagged.observe(obs, *metrics).filter(~cond)
-                .drop("_src_dir"))
-            per_dir = self._obs_counts(obs, candidates)
-            n_match = sum(m for _, m in per_dir.values())
-            if n_match == 0:
-                self._drop(rel)
-                return base  # nothing matched: no empty commit
-            n_kept = sum(n - m for n, m in per_dir.values())
-            if n_kept == 0:
-                self._drop(rel)
-                adds = []
-            else:
-                adds = [rel]
-            return self._transact(_Txn(adds, candidates, cmeta),
-                                  self._rebase_rewrite, base)
-        # the change-frame write doubles as the sizing pass: an
-        # Observation on the pre-filter node counts rows + matches per
-        # candidate dir during that SAME job, so DELETE costs exactly two
-        # scan jobs (changes, kept-rewrite) regardless of candidate count
-        # — a separate sizing agg would pay a third full job barrier.
-        # Above _OBS_RIDER_MAX candidates the rider's O(rows x dirs)
-        # CASEs cost more than that barrier, so the sizing runs as its
-        # own column-pruned job instead.
-        if many:
-            per_dir = self._sizes_prepass(tagged, cond, candidates)
-            changes_rel = self._write_changes(
-                tagged.filter(cond).drop("_src_dir")
-                .withColumn("_change_type", F.lit("delete")))
-        else:
-            changes_rel = self._write_changes(
-                tagged.observe(obs, *metrics).filter(cond)
-                .drop("_src_dir")
-                .withColumn("_change_type", F.lit("delete")))
-            per_dir = self._obs_counts(obs, candidates)
-        removes = [d for d in candidates if per_dir[d][1] > 0]
-        if not removes:
-            self._drop(changes_rel)  # empty file from the probe
-            return base  # nothing matched: no empty commit
-        # dirs where every row matches are dropped outright; survivors'
-        # kept rows rewrite into ONE new dir (Delta rewrites file-merge
-        # the same way — the new dir's stats are the union range)
-        rewrite = [d for d in removes if per_dir[d][1] < per_dir[d][0]]
-        adds = []
-        if rewrite:
-            adds.append(self._write_data(
-                tagged.filter(F.col("_src_dir").isin(rewrite))
-                .filter(~cond).drop("_src_dir")))
-        return self._transact(_Txn(adds, removes, cmeta, changes=changes_rel),
-                              self._rebase_rewrite, base)
-
-    def _delete_where_dv(self, spark: SparkSession, condition: str,
-                         prune: tuple | None, meta: dict | None,
-                         capture_changes: bool, base: int,
-                         live: list[str]) -> int:
-        """DV-mode DELETE: write one position file covering the matching
-        rows of every candidate dir (plus the carried-forward positions
-        of dirs already DV'd — per-dir DVs are CUMULATIVE, one live file
-        per dir) and commit the remapping. No data file is touched."""
-        from pyspark.sql import functions as F
-
-        if prune is not None:
-            col, lo, hi = prune
-            keep = set(self.pruned_dirs(col, lo, hi, base))
-            candidates = [d for d in live if d in keep]
-        else:
-            candidates = list(live)
-        if not candidates:
-            return base
-        existing = self._dvs_for(candidates, base)
-        sch = self.table_schema(base)
-        if sch is None:  # pre-schema log: resolve the merged schema once
-            sch = self.read(spark, base).schema
-        mapping = self.column_mapping(base)
-        plan_sch = sch
-        if mapping:  # scan physical, alias to logical below
-            from pyspark.sql.types import StructField, StructType
-
-            plan_sch = StructType([
-                StructField(mapping.get(f.name, f.name), f.dataType,
-                            f.nullable, f.metadata)
-                for f in sch.fields])
-        plain = [d for d in candidates if not _partition_segs(d)]
-        part_roots: dict[str, list[str]] = {}
-        for d in candidates:
-            if _partition_segs(d):
-                part_roots.setdefault(_commit_root(d), []).append(d)
-        frames = []
-        if plain:
-            frames.append(
-                spark.read.schema(plan_sch).parquet(
-                    *[os.path.join(self.path, d) for d in plain])
-                .withColumn("__dv_file", F.expr(self._DV_FILE_KEY))
-                .withColumn("__dv_row", F.col("_metadata.row_index")))
-        for root, subs in sorted(part_roots.items()):
-            # basePath + explicit schema: data columns come from the
-            # files, the partition column parses from the path at the
-            # schema's declared type — the condition can reference it
-            frames.append(
-                spark.read.option("basePath",
-                                  os.path.join(self.path, root))
-                .schema(plan_sch)
-                .parquet(*[os.path.join(self.path, d) for d in subs])
-                .withColumn("__dv_file", F.expr(self._DV_FILE_KEY))
-                .withColumn("__dv_row", F.col("_metadata.row_index")))
-        from functools import reduce
-
-        df = reduce(lambda a, b: a.unionByName(b), frames)
-        if mapping:
-            df = df.select(
-                *[F.col(mapping.get(f.name, f.name)).alias(f.name)
-                  for f in sch.fields], "__dv_file", "__dv_row")
-        old = None
-        if existing:
-            opaths = sorted({ref["path"] for ref in existing.values()})
-            old = (spark.read.parquet(
-                *[os.path.join(self.path, p) for p in opaths])
-                .filter(F.col("src_dir").isin(list(existing))))
-            # already-deleted rows are invisible to the new predicate
-            df = df.join(
-                F.broadcast(old.select(
-                    F.col("src_file").alias("__dv_file"),
-                    F.col("row_idx").alias("__dv_row"))),
-                ["__dv_file", "__dv_row"], "left_anti")
-        matches = df.filter(F.expr(condition))
-        new_pos = matches.select(
-            # src_dir = the file key's dirname, at either layout depth
-            F.expr("regexp_replace(__dv_file, '/[^/]+$', '')")
-            .alias("src_dir"),
-            F.col("__dv_file").alias("src_file"),
-            F.col("__dv_row").alias("row_idx"))
-        if old is not None:
-            new_pos = new_pos.unionByName(
-                old.select("src_dir", "src_file", "row_idx"))
-        dv_rel = os.path.join(_DV_DIR, uuid.uuid4().hex)
-        dv_abs = os.path.join(self.path, dv_rel)
-        # repartition, NOT coalesce: coalesce(1) would collapse the
-        # whole upstream candidate scan into one task; the exchange
-        # carries only the (tiny) position rows
-        new_pos.repartition(1).write.parquet(dv_abs)
-        per_dir = {r["src_dir"]: r["n"] for r in
-                   spark.read.parquet(dv_abs)
-                   .groupBy("src_dir").agg(F.count("*").alias("n"))
-                   .collect()}  # bounded: <= |candidates| rows
-        prev = sum(ref["rows"] for ref in existing.values())
-        if sum(per_dir.values()) == prev:  # no NEW matches
-            self._drop(dv_rel)
-            return base
-        changes_rel = None
-        if capture_changes:
-            changes_rel = self._write_changes(
-                matches.drop("__dv_file", "__dv_row")
-                .withColumn("_change_type", F.lit("delete")))
-        dvs = {d: {"path": dv_rel, "rows": int(n)}
-               for d, n in sorted(per_dir.items())}
-        return self._transact(
-            _Txn([], [], {**(meta or {}), "operation": "delete_dv",
-                          "condition": condition},
-                 changes=changes_rel, dvs=dvs),
-            self._rebase_rewrite, base)
+        keep = ~F.coalesce(F.expr(condition), F.lit(False))
+        return self._rewrite_rows(
+            spark, condition, base,
+            {**(meta or {}),
+             "operation": "delete_dv" if use_dv else "delete",
+             "condition": condition},
+            capture_changes,
+            lambda rows: rows.withColumn("_change_type", F.lit("delete")),
+            None if use_dv else (lambda rows: rows.filter(keep)),
+            prune, partition_prune)
 
     def update_where(self, spark: SparkSession, condition: str,
                      set_exprs: dict, prune: tuple | None = None,
@@ -4044,27 +3883,30 @@ class TxnTable:
         matches are left in place (no rewrite, no commit entry). Emits
         ``update_preimage``/``update_postimage`` change rows so the
         change feed (:meth:`read_changes`) carries the delta — cost is
-        O(matching dirs), not O(table). On a partition-granular layout
-        the candidates are whole partitions (r12, see
-        :meth:`_update_where_partitioned`); ``prune`` composes there as
-        a per-subdir footer-stats bound, and ``partition_prune`` (a
-        partition-key predicate) bounds the sizing scan.
-        Reference anchor: the employees MERGE path
+        O(matching dirs), not O(table). It runs through
+        :meth:`_rewrite_rows`, the core :meth:`delete_where` shares: on
+        a partitioned layout ``prune`` composes as a per-subdir
+        footer-stats bound, ``partition_prune`` (a partition-key
+        predicate) bounds the scan, and a row whose SET moves its
+        (generated) partition key lands in its new subdir in the same
+        commit. Reference anchor: the employees MERGE path
         (spark/SaveDelta.scala:157-163) covers keyed upserts; this is
         the predicate-addressed complement.
 
         ``capture_changes=False`` mirrors Delta's default (change data
-        feed DISABLED): no pre/postimage frames are written and the op
-        collapses to a SINGLE CASE-rewrite job over the candidate dirs
-        with the match-probe Observation riding it (a no-match op is
-        still a no-op; candidates with zero matches are rewritten rather
-        than skipped)."""
+        feed DISABLED): no pre/postimage frames are written, and over
+        at most ``_OBS_RIDER_MAX`` plain candidate dirs the op
+        collapses to a SINGLE CASE-rewrite job with the match-probe
+        Observation riding it (a no-match op is still a no-op;
+        candidates with zero matches are rewritten rather than
+        skipped)."""
         from pyspark.sql import functions as F
 
         base = self.latest_version()
         if base is None:
             raise ValueError(f"not a txn table (no commits): {self.path}")
-        bad = set(set_exprs) - set(self.read(spark, base).columns)
+        snap = self.read(spark, base).schema
+        bad = set(set_exprs) - set(snap.names)
         if bad:
             raise ValueError(f"SET on unknown columns: {sorted(bad)}")
         # generated/identity interaction: SET of an engine-generated
@@ -4075,7 +3917,7 @@ class TxnTable:
         # SET expression (all SET RHS read the pre-image, so the
         # substituted expression evaluates the generation over exactly
         # the post-image values) — and joins set_exprs, riding the same
-        # single CASE projection at all four consumption sites below.
+        # CASE projection into the change and rewrite frames below.
         gcfg = self.generation_config()
         gens = gcfg.get("generated", {})
         ident = (gcfg.get("identity") or {}).get("col")
@@ -4153,103 +3995,35 @@ class TxnTable:
                         recompute[g] = new_e
                         lut[g.lower()] = f"({new_e})"
                 set_exprs = {**set_exprs, **recompute}
-        live = self.snapshot_dirs(base)
-        _pcols = self._live_partition_cols(live)
-        if _pcols is not None:
-            # partition-granular UPDATE (r12): rewrite ONLY the
-            # partitions holding matches; rows whose (possibly
-            # generated) partition key changes under SET migrate to
-            # their new col=value subdir in the same commit
-            return self._update_where_partitioned(
-                spark, condition, set_exprs, meta, capture_changes,
-                base, live, _pcols, partition_prune, prune)
         cond = F.expr(condition)
-        snap_schema = self.read(spark, base).schema
-        # merged-snapshot alignment inside _tagged_candidates: a
-        # pre-evolution dir null-fills the SET/condition columns instead
-        # of silently skipping its rows
-        tagged, candidates = self._tagged_candidates(
-            spark, live, prune, base, snap_schema)
-        if tagged is None:
-            return base  # pruning left no candidates: no commit
-        cmeta = {**(meta or {}), "operation": "update",
-             "condition": condition, "set": sorted(set_exprs)}
-        cols = [f.name for f in snap_schema.fields]
-        many = len(candidates) > self._OBS_RIDER_MAX
-        case_cols = [
-            F.when(cond, F.expr(set_exprs[c])
-                   .cast(snap_schema[c].dataType))
-            .otherwise(F.col(c)).alias(c) if c in set_exprs
-            else F.col(c) for c in cols]
-        if not capture_changes and many:
-            # sizing pre-pass, then CASE-rewrite ONLY the matched dirs
-            per_dir = self._sizes_prepass(tagged, cond, candidates)
-            removes = [d for d in candidates if per_dir[d][1] > 0]
-            if not removes:
-                return base
-            rel = self._write_data(
-                tagged.filter(F.col("_src_dir").isin(removes))
-                .select(*case_cols))
-            return self._transact(_Txn([rel], removes, cmeta),
-                                  self._rebase_rewrite, base)
-        if not capture_changes:
-            # ONE CASE-rewrite job over every candidate, match-probed by
-            # the riding Observation; undo on global no-op
-            obs, metrics = self._candidate_obs(candidates, cond)
-            rel = self._write_data(
-                tagged.observe(obs, *metrics).select(*[
-                    F.when(cond, F.expr(set_exprs[c])
-                           .cast(snap_schema[c].dataType))
-                     .otherwise(F.col(c)).alias(c) if c in set_exprs
-                    else F.col(c) for c in cols]))
-            per_dir = self._obs_counts(obs, candidates)
-            if sum(m for _, m in per_dir.values()) == 0:
-                self._drop(rel)
-                return base  # nothing matched: no empty commit
-            return self._transact(_Txn([rel], candidates, cmeta),
-                                  self._rebase_rewrite, base)
-        # the change-frame write doubles as the match probe (Observation
-        # on the pre-filter node, exactly as in delete_where): UPDATE
-        # costs two scan jobs — changes, then the CASE-rewrite of the
-        # matched dirs. postimage comes from the MATCHED rows, not a
-        # re-filter of the rewrite: when SET touches a condition column
-        # (mark-as-seen patterns), the condition no longer selects the
-        # updated rows. pre+post are exploded from ONE two-struct array
-        # so the change write scans the matched rows once, not once per
-        # image kind.
-        pre_struct = F.struct(
-            *[F.col(c).alias(c) for c in cols],
-            F.lit("update_preimage").alias("_change_type"))
-        post_struct = F.struct(
-            *[(F.expr(set_exprs[c]).cast(snap_schema[c].dataType).alias(c)
-               if c in set_exprs else F.col(c).alias(c))
-              for c in cols],
-            F.lit("update_postimage").alias("_change_type"))
-        if many:
-            per_dir = self._sizes_prepass(tagged, cond, candidates)
-            changes_rel = self._write_changes(
-                tagged.filter(cond).drop("_src_dir")
-                .select(F.explode(F.array(pre_struct, post_struct))
-                        .alias("_c")).select("_c.*"))
-        else:
-            obs, metrics = self._candidate_obs(candidates, cond)
-            changes_rel = self._write_changes(
-                tagged.observe(obs, *metrics).filter(cond)
-                .drop("_src_dir")
-                .select(F.explode(F.array(pre_struct, post_struct))
-                        .alias("_c")).select("_c.*"))
-            per_dir = self._obs_counts(obs, candidates)
-        removes = [d for d in candidates if per_dir[d][1] > 0]
-        if not removes:
-            self._drop(changes_rel)  # empty file from the probe
-            return base  # nothing matched: no empty commit
-        sub = tagged.filter(F.col("_src_dir").isin(removes))
-        adds = [self._write_data(sub.select(*[
-            F.when(cond, F.expr(set_exprs[c]).cast(snap_schema[c].dataType))
-             .otherwise(F.col(c)).alias(c) if c in set_exprs
-            else F.col(c) for c in cols]))]
-        return self._transact(_Txn(adds, removes, cmeta, changes=changes_rel),
-                              self._rebase_rewrite, base)
+
+        def post(rows, c: str):  # the SET value of c, at c's type
+            return F.expr(set_exprs[c]).cast(rows.schema[c].dataType)
+
+        def changes(rows):
+            # postimages come from the MATCHED rows, not a re-filter of
+            # the rewrite: a SET that touches a condition column
+            # (mark-as-seen) no longer selects the updated rows; both
+            # images explode from ONE array, so one scan writes them
+            postimage = [post(rows, c).alias(c) if c in set_exprs
+                         else F.col(c) for c in rows.columns]
+            images = [F.struct(*cols, F.lit(kind).alias("_change_type"))
+                      for cols, kind in ((rows.columns, "update_preimage"),
+                                         (postimage, "update_postimage"))]
+            return (rows.select(F.explode(F.array(*images)).alias("_c"))
+                    .select("_c.*"))
+
+        def rewrite(rows):
+            return rows.select(*[
+                F.when(cond, post(rows, c)).otherwise(F.col(c)).alias(c)
+                if c in set_exprs else F.col(c) for c in rows.columns])
+
+        return self._rewrite_rows(
+            spark, condition, base,
+            {**(meta or {}), "operation": "update",
+             "condition": condition, "set": sorted(set_exprs)},
+            capture_changes, changes, rewrite, prune, partition_prune,
+            schema=snap)
 
     # -- maintenance ------------------------------------------------------
 
@@ -4279,80 +4053,6 @@ class TxnTable:
             _Txn(adds, live, {**(meta or {}), "operation": "compact"}),
             base=base)
 
-    def compact_clustered(self, spark: SparkSession, cluster_by: str,
-                          target_dirs: int = 8,
-                          meta: dict | None = None) -> int:
-        """OPTIMIZE with clustering (Delta's ZORDER in one dimension):
-        rewrite the live snapshot into ``target_dirs`` commit dirs, each
-        covering a disjoint range of ``cluster_by``, so the per-dir
-        min/max stats become TIGHT and :meth:`read_range` prunes to
-        ~1/target_dirs of the data. Bucket boundaries come from a
-        sample-based approxQuantile (one scan, no global sort — the same
-        boundary mechanism as repartitionByRange); each bucket is then
-        one write inside a single atomic commit. Without clustering,
-        appends in arrival order leave every dir's range spanning the
-        whole domain and stats prune nothing — clustering is what makes
-        file skipping BITE on a compacted table."""
-        from pyspark.sql import functions as F
-
-        base = self.latest_version()
-        if base is None:
-            raise ValueError(f"nothing to compact: {self.path}")
-        live = self.snapshot_dirs(base)
-        df = self.read(spark, base)
-        part_keys = (self._live_partition_cols(live)
-                     or self._part_keys() or None)
-        if part_keys is not None:
-            # clustering WITHIN the partition layout (r12): a plain
-            # clustered rewrite would flatten col=value subdirs into
-            # plain dirs and strand the table's partition bookkeeping;
-            # the one-column z rewrite (interleave of one column = its
-            # ranked range code) preserves the layout per z-bucket
-            if cluster_by in part_keys:
-                raise ValueError(
-                    "compact_clustered: the cluster column IS a "
-                    "partition key — the layout already prunes it; "
-                    "cluster by a data column")
-            adds = self._zorder_rewrite(spark, df, [cluster_by],
-                                        target_dirs, 6,
-                                        part_cols=part_keys)
-            return self._transact(
-                _Txn(adds, live, {**(meta or {}), "operation": "compact",
-                                  "cluster_by": cluster_by}),
-                base=base)
-        probs = [i / target_dirs for i in range(1, target_dirs)]
-        bounds = df.approxQuantile(cluster_by, probs, 0.001)
-        bounds = sorted(set(bounds))  # dedup collapsed quantiles
-        if not bounds:  # constant column: clustering is a no-op
-            return self.compact(spark, meta=meta)
-        blit = F.array(*[F.lit(b) for b in bounds])
-        bucket = F.size(F.filter(blit, lambda b: F.col(cluster_by) > b))
-        staged = (df.withColumn("_bucket", bucket)
-                  .repartition(len(bounds) + 1, "_bucket")
-                  .sortWithinPartitions(cluster_by))
-        # mapped tables store physical names (this writer bypasses
-        # _write_data's chokepoint)
-        staged = self._to_physical(staged)
-        tmp_rel = os.path.join(_DATA_DIR, f".compact-{uuid.uuid4().hex}")
-        tmp_abs = os.path.join(self.path, tmp_rel)
-        # partitionBy drops _bucket from the parquet files themselves
-        # (it lives in the path), so each bucket subdir promotes to a
-        # plain commit dir with the original schema
-        staged.write.partitionBy("_bucket").parquet(tmp_abs)
-        adds = []
-        for d in sorted(os.listdir(tmp_abs)):
-            if not d.startswith("_bucket="):
-                continue
-            rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-            os.rename(os.path.join(tmp_abs, d), os.path.join(self.path, rel))
-            adds.append(rel)
-        import shutil
-        shutil.rmtree(tmp_abs, ignore_errors=True)
-        return self._transact(
-            _Txn(adds, live, {**(meta or {}), "operation": "compact",
-                              "cluster_by": cluster_by}),
-            base=base)
-
     def compact_zorder(self, spark: SparkSession, cluster_by: list[str],
                        target_dirs: int = 8, bits: int = 6,
                        meta: dict | None = None) -> int:
@@ -4360,8 +4060,8 @@ class TxnTable:
         into ``target_dirs`` dirs ordered by a Z-value — the bit
         interleave of each cluster column's quantile-rank code — so
         EVERY listed column's per-dir min/max range is tight enough to
-        prune. Linear clustering (:meth:`compact_clustered`) gives one
-        column perfect pruning and the others none; Z-ordering trades a
+        prune. One column is linear range clustering (its code IS its
+        quantile rank): perfect pruning on that column. Several trade a
         little per-column tightness for pruning on all of them (a point
         probe on any one column hits ~sqrt-fraction of dirs instead of
         all). Quantile-rank codes (``bits`` per column, from ONE
@@ -4390,9 +4090,6 @@ class TxnTable:
                     "compact_zorder: every cluster column equals a "
                     "partition key — the layout already prunes them; "
                     "cluster by data columns")
-        if len(cluster_by) == 1 and part_keys is None:
-            return self.compact_clustered(
-                spark, cluster_by[0], target_dirs, meta)
         adds = self._zorder_rewrite(
             spark, self.read(spark, base), cluster_by, target_dirs,
             bits, part_cols=part_keys)
@@ -4537,6 +4234,7 @@ class TxnTable:
             for d in doc["adds"]:
                 add_version[d] = v
             op_meta = doc.get("meta", {})
+            # cluster_by: the one-column clustering commits of older logs
             if "zorder_by" in op_meta or "cluster_by" in op_meta:
                 last_cluster = v
         tail = [d for d in self.snapshot_dirs(base)

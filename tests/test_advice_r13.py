@@ -7,7 +7,7 @@ path inference, so a generated 'yyyy' key reads back string, never int;
 reclaims its orphaned commit root instead of leaking the batch until
 vacuum; (4) generation expressions referencing a SET column through
 BACKQUOTED identifiers still substitute as whole tokens; (5)
-_hot_partitions downgrades to a sizing scan only on AnalysisException
+_row_candidates downgrades to a sizing scan only on AnalysisException
 and rejects nondeterministic row-level conditions outright."""
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ under a steady stream of non-allocating conflicts (fault-injected);
 (4) exported checkpoints are spec-shaped — explicit protocol row,
 map-typed partitionValues, _last_checkpoint bookkeeping; (5) the skew
 pair aggregates exact integer cents, immune to FP summation order;
-(6) a TRANSIENT (non-analysis) failure during _hot_partitions'
+(6) a TRANSIENT (non-analysis) failure during _row_candidates'
 metadata-only scoping surfaces as an error instead of silently
 degrading to a full sizing scan (VERDICT r13 #6); (7) the PIL escape
 hatch is wired — the codec adapter and the mapInPandas plumbing are

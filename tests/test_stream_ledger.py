@@ -552,3 +552,38 @@ def test_one_optimistic_commit_loop():
                      if any(k.arg == "expected_version"
                             for k in c.keywords)]
     assert not hits, "\n".join(hits)
+
+
+#: the one row-level rewrite and the helpers only it may call
+_REWRITE_CORE = (_LEDGER_HOME, "_rewrite_rows")
+_CORE_ONLY = ("_tagged_candidates", "_candidate_obs", "_sizes_prepass")
+_RETIRED_ROW_PATHS = ("_delete_where_partitioned",
+                      "_update_where_partitioned", "compact_clustered")
+
+
+def test_one_row_level_rewrite():
+    """DELETE, UPDATE and the DV delete run through one core,
+    ``TxnTable._rewrite_rows``: nothing else in the package calls the
+    candidate scan or the sizing helpers, ``delete_where`` and
+    ``update_where`` do not commit through ``_transact`` themselves,
+    and the partition-layout forks and ``compact_clustered`` (one
+    column of ``compact_zorder``) are gone. Parsed, so docstrings do
+    not count."""
+    hits = []
+    for rel, src in _package_modules():
+        tree = ast.parse(src)
+        scope = _enclosing(tree)
+        for name in _CORE_ONLY:
+            hits += [f"{rel}:{c.lineno}: {name} outside the core"
+                     for c in _calls(tree, name)
+                     if not (rel == _REWRITE_CORE[0]
+                             and _REWRITE_CORE[1] in scope[id(c)])]
+        for f in ast.walk(tree):
+            if not isinstance(f, ast.FunctionDef):
+                continue
+            if f.name in _RETIRED_ROW_PATHS:
+                hits.append(f"{rel}:{f.lineno}: def {f.name}")
+            if f.name in ("delete_where", "update_where"):
+                hits += [f"{rel}:{c.lineno}: {f.name} calls _transact"
+                         for c in _calls(f, "_transact")]
+    assert not hits, "\n".join(hits)

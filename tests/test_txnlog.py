@@ -900,11 +900,12 @@ def test_stream_sink_auto_checkpoints_every_10_commits(spark, tmp_path):
     assert _rows(t.read(spark)) == {(i, f"v{i}") for i in range(12)}
 
 
-def test_compact_clustered_makes_read_range_prune(spark, tmp_path):
-    """OPTIMIZE with clustering: interleaved appends leave every dir
-    spanning the whole id domain (stats prune nothing); compact_clustered
-    rewrites into range-disjoint dirs, after which read_range plans ~1/N
-    of them — and the data stays byte-identical."""
+def test_compact_zorder_one_column_makes_read_range_prune(spark, tmp_path):
+    """OPTIMIZE with one-column clustering: interleaved appends leave
+    every dir spanning the whole id domain (stats prune nothing);
+    compact_zorder over one column rewrites into range-disjoint dirs,
+    after which read_range plans ~1/N of them — and the data stays
+    byte-identical."""
     t = TxnTable(str(tmp_path / "t"))
     # 3 appends, each spanning the WHOLE domain -> no pruning possible
     for off in (0, 1, 2):
@@ -913,7 +914,7 @@ def test_compact_clustered_makes_read_range_prune(spark, tmp_path):
             "id int, val string"))
     assert len(t.pruned_dirs("id", 10, 40)) == 3  # every dir overlaps
     expect = _rows(t.read(spark))
-    v = t.compact_clustered(spark, "id", target_dirs=3)
+    v = t.compact_zorder(spark, ["id"], target_dirs=3)
     assert v == t.latest_version()
     assert _rows(t.read(spark)) == expect  # byte-identical data
     dirs = t.snapshot_dirs()
@@ -926,11 +927,11 @@ def test_compact_clustered_makes_read_range_prune(spark, tmp_path):
     assert _rows(t.read(spark, version=v - 1)) == expect
 
 
-def test_compact_clustered_constant_column_falls_back(spark, tmp_path):
+def test_compact_zorder_one_constant_column_compacts(spark, tmp_path):
     t = TxnTable(str(tmp_path / "t"))
     for _ in range(3):
         t.append(spark.createDataFrame([(7, "x")], "id int, val string"))
-    t.compact_clustered(spark, "id", target_dirs=4)
+    t.compact_zorder(spark, ["id"], target_dirs=4)
     assert len(t.snapshot_dirs()) == 1  # plain compaction
     assert _rows(t.read(spark)) == {(7, "x")}
 
