@@ -45,6 +45,7 @@ COSTS = {
     "test_advice_r12.py": 20,            # r12 advisor regressions
     "test_deletion_vectors.py": 75,  # r11 partitioned DVs
     "test_row_rewrite.py": 200,  # the row-level rewrite's model grid
+    "test_scan_plan.py": 140,  # every reader x layout, plan-job probe
     "test_scale_paths.py": 60,
     "test_streaming.py": 45,
     "test_multimodal.py": 40,

@@ -440,7 +440,6 @@ def export_delta_log(table: TxnTable, spark: SparkSession | None = None,
             and state["last_version"] <= latest:
         table_id = state["table_id"]
         carried = state["carried"]
-        last_schema = carried["schema"]
         last_meta_json = carried["meta_json"]
         part_cols = list(carried["part_cols"])
         cm_ids = {k: int(i) for k, i in carried["cm_ids"].items()}
@@ -455,7 +454,6 @@ def export_delta_log(table: TxnTable, spark: SparkSession | None = None,
         todo = [v for v in versions if v > state["last_version"]]
     else:
         table_id = str(_uuid.uuid4())
-        last_schema = None
         last_meta_json = None
         part_cols = []
         cm_ids = {}  # physical name -> stable field id
@@ -570,15 +568,7 @@ def export_delta_log(table: TxnTable, spark: SparkSession | None = None,
             if segs:
                 part_cols = [c for c, _ in segs]
                 break
-        schema = _export_schema(table, doc, part_cols, last_schema,
-                                mapped=bool(mapping_v))
-        if schema is None:
-            raise ValueError(
-                f"export_delta_log: commit {v} records no schema and "
-                "has no readable parquet footer — cannot author a "
-                "valid metaData action")
-        last_schema = schema
-        schema_out = _with_gen_metadata(schema, cfg)
+        schema_out = _with_gen_metadata(_export_schema(table, v), cfg)
         configuration: dict = {}
         if mapping_v:
             schema_out = _with_cm_metadata(schema_out, mapping_v,
@@ -728,8 +718,7 @@ def export_delta_log(table: TxnTable, spark: SparkSession | None = None,
                                    ict_ms=mat_ict)
     with open(sidecar, "w") as fh:
         json.dump({"table_id": table_id, "last_version": latest,
-                   "carried": {"schema": last_schema,
-                               "meta_json": last_meta_json,
+                   "carried": {"meta_json": last_meta_json,
                                "part_cols": part_cols,
                                "cm_ids": cm_ids,
                                "cm_active": cm_active,
@@ -769,8 +758,7 @@ def _export_dv_materialization(table: TxnTable, spark: SparkSession,
         pvals = {col: (None if raw == _HIVE_NULL
                        else _unescape_partition(raw))
                  for col, raw in segs}
-        df = table._read_dirs(  # noqa: SLF001 — package-internal
-            spark, [d], {d: ref})
+        df = table._scan(spark, [d], dvs={d: ref})  # noqa: SLF001
         if segs:  # partition cols live in the path, not the files
             df = df.drop(*[c for c, _ in segs])
         rel = os.path.join("_delta_export", _uuid.uuid4().hex)
@@ -800,62 +788,17 @@ def _export_dv_materialization(table: TxnTable, spark: SparkSession,
         fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
 
 
-def _export_schema(table: TxnTable, doc: dict, part_cols: list[str],
-                   carried: dict | None,
-                   mapped: bool = False) -> dict | None:
-    """The Delta schema json for one commit: the doc's recorded schema
-    (unpartitioned writes record it), else the carried previous one,
-    else a parquet-footer read of the commit's first file — in every
-    case with the partition key fields APPENDED (they live in the path,
-    not the files, so the txn log's recorded schema omits them; their
-    types come from the write-time partition_types record). Mapped
-    eras never fall back to footers: footers carry PHYSICAL names (the
-    doc schema is the logical truth and mapped commits always record
-    it)."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    sch = doc.get("schema")
-    if sch is None and mapped:
-        return carried
+def _export_schema(table: TxnTable, v: int) -> dict:
+    """The Delta schema json of commit ``v``: the table schema the txn
+    log records for it (:meth:`TxnTable.table_schema`, LOGICAL names,
+    partition keys included as the trailing fields — a legacy commit's
+    is derived there)."""
+    sch = table.table_schema(v)
     if sch is None:
-        # partitioned commits record no doc schema (the partition key
-        # lives in the path) — derive the adds' struct from a footer
-        # and MERGE over the carried schema, so a schema-EVOLVING
-        # partitioned append (merge_schema widening) still exports its
-        # new column instead of silently carrying the stale shape
-        footer = None
-        for rel in doc["adds"]:
-            for f in _files_of(table, rel):
-                st = TxnTable._footer_struct(  # noqa: SLF001
-                    os.path.join(table.path, f))
-                if st is not None:
-                    footer = st.jsonValue()
-                    break
-            if footer is not None:
-                break
-        if carried is None:
-            sch = footer
-        elif footer is None:
-            sch = carried
-        else:
-            have = {f["name"] for f in carried.get("fields", [])}
-            sch = {**carried,
-                   "fields": list(carried["fields"])
-                   + [f for f in footer["fields"]
-                      if f["name"] not in have]}
-    if sch is None:
-        return None
-    names = {f["name"] for f in sch.get("fields", [])}
-    missing = [c for c in part_cols if c not in names]
-    if not missing:
-        return sch
-    lut = table._partition_type_lut()  # noqa: SLF001
-    fields = list(sch["fields"])
-    for c in missing:
-        dt = _parse_datatype_string(lut.get(c, "string")).jsonValue()
-        fields.append({"name": c, "type": dt, "nullable": True,
-                       "metadata": {}})
-    return {**sch, "fields": fields}
+        raise ValueError(
+            f"export_delta_log: commit {v} has no schema (the table "
+            "never held data) — cannot author a valid metaData action")
+    return sch.jsonValue()
 
 
 def _with_gen_metadata(schema_json: dict, cfg: dict) -> dict:

@@ -116,6 +116,8 @@ _DV_DIR = "dv"  # deletion-vector files (Delta's DV sidecars): parquet of
 # from commit docs' "dvs" key ({data_dir: {"path": dv_rel, "rows": n}},
 # cumulative per dir, null value = mapping cleared). A DV delete commits
 # METADATA + a tiny position file — the data files are never rewritten.
+_DV_SCHEMA = "src_dir string, src_file string, row_idx long"  # the fixed
+# schema of a DV position file (row_idx is _metadata.row_index)
 
 
 _INHERIT = object()  # commit() sentinel: "no column-mapping override —
@@ -300,10 +302,11 @@ class TxnTable:
     def __init__(self, path: str):
         self.path = path
         self.log_dir = os.path.join(path, _LOG_DIR)
-        # exact Spark schema of dirs written through _write_data in THIS
-        # process, consumed by commit() when it records the table schema
-        # (externally placed dirs fall back to a footer harvest)
+        # exact Spark schema of the dirs and partition leaves this
+        # instance wrote, consumed by commit() when it logs the table
+        # schema (externally placed plain dirs fall back to a footer)
         self._pending_schemas: dict = {}
+        self._derived: dict = {}  # version -> derived legacy schema
 
     # -- log plumbing -----------------------------------------------------
 
@@ -582,25 +585,6 @@ class TxnTable:
         "regexp_extract(_metadata.file_path, "
         f"'/({_DATA_DIR}/[0-9a-f]{{32}}(?:/[^/]+=[^/]*)*/[^/]+)$', 1)")
 
-    def _apply_dvs(self, spark: SparkSession, df: DataFrame,
-                   dvs: dict[str, dict]) -> DataFrame:
-        """Anti-join the DV'd positions out of a plain-dir scan frame.
-        Must be applied directly on the scan (before joins/unions) so the
-        _metadata struct resolves; the DV side is tiny and broadcast, so
-        the data side neither shuffles nor widens."""
-        if not dvs:
-            return df
-        from pyspark.sql import functions as F
-
-        dv = self._dv_rows(spark, dvs).select(
-            F.col("src_file").alias("__dv_f"),
-            F.col("row_idx").alias("__dv_r"))
-        keyed = df.withColumn("__dv_f", F.expr(self._DV_FILE_KEY)) \
-                  .withColumn("__dv_r", F.col("_metadata.row_index"))
-        return (keyed.join(F.broadcast(dv), ["__dv_f", "__dv_r"],
-                           "left_anti")
-                .drop("__dv_f", "__dv_r"))
-
     def _dvs_for(self, dirs: list[str],
                  version: int | None = None) -> dict[str, dict]:
         """The snapshot DV mapping restricted to ``dirs``."""
@@ -613,41 +597,27 @@ class TxnTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot (or time-travel, with ``version=``) read. Planning is
         log-driven: no directory listing of ``data/``, so orphans from
-        crashed writers are invisible."""
+        crashed writers are invisible. The scan plans with the logged
+        table schema (:meth:`table_schema`, partition keys included)
+        through :meth:`_scan`, so building the frame runs no Spark job
+        on any layout."""
         if self.latest_version() is None:
             raise ValueError(f"not a txn table (no commits): {self.path}")
         dirs = self.snapshot_dirs(version)
-        if not dirs:
-            # A removes-only commit (e.g. overwrite with an empty frame)
-            # leaves a legal empty snapshot: return 0 rows with the schema
-            # of the most recent data the log ever referenced, mirroring
-            # how a lakehouse table stays queryable after DELETE-all.
-            schema_dirs = self._schema_dirs(version)
-            if not schema_dirs:
-                raise ValueError(f"empty snapshot at version {version}")
-            return self._read_dirs(spark, schema_dirs,
-                                   version=version).limit(0)
-        dvs = self._dvs_for(dirs, version)
-        sch = self.table_schema(version)
-        if sch is not None and all(_partition_of(d) is None for d in dirs):
-            # log-recorded schema: no mergeSchema footer job — files
-            # missing an evolved column null-fill it, exactly as the
-            # merge path would. On a column-mapped table the files are
-            # read under PHYSICAL names and aliased to the version's
-            # logical view.
-            mapping = self.column_mapping(version)
-            plan_sch = sch
-            if mapping:
-                from pyspark.sql.types import StructField, StructType
+        if dirs:
+            return self._scan(spark, dirs, version)
+        # A removes-only commit (e.g. overwrite with an empty frame)
+        # leaves a legal empty snapshot: 0 rows of the table schema,
+        # mirroring how a lakehouse table stays queryable after
+        # DELETE-all.
+        from pyspark.sql.types import StructField, StructType
 
-                plan_sch = StructType([
-                    StructField(mapping.get(f.name, f.name), f.dataType,
-                                f.nullable, f.metadata)
-                    for f in sch.fields])
-            df = self._apply_dvs(spark, spark.read.schema(plan_sch).parquet(
-                *[os.path.join(self.path, d) for d in dirs]), dvs)
-            return self._logical_view(df, version) if mapping else df
-        return self._read_dirs(spark, dirs, dvs, version=version)
+        sch = self.table_schema(version)
+        if sch is None:
+            raise ValueError(f"empty snapshot at version {version}")
+        return spark.createDataFrame([], StructType([
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in sch.fields]))
 
     def _schema_dirs(self, version: int | None = None) -> list[str]:
         """Adds of the newest commit at/before ``version`` that added data
@@ -679,8 +649,7 @@ class TxnTable:
                      or _unescape_partition(p[0][1]) in want)]
         if not dirs:
             raise ValueError(f"no live partitions match {values}")
-        return self._read_dirs(spark, dirs, self._dvs_for(dirs, version),
-                               version=version)
+        return self._scan(spark, dirs, version)
 
     def read_partitions_where(self, spark: SparkSession, condition: str,
                               version: int | None = None) -> DataFrame:
@@ -699,8 +668,8 @@ class TxnTable:
         daily partitions × regions = bounded candidate tuples, whatever
         the table's size). Values evaluate TYPED
         (:meth:`_typed_partition_values` — an int key's ``day > 2`` is
-        numeric, escaped timestamp segments round-trip, and recorded
-        write-time types override Hive path inference). An empty
+        numeric, escaped timestamp segments round-trip, and the keys'
+        logged types override Hive path inference). An empty
         survivor set — or a partition-declared table whose live set a
         purge emptied — returns an empty frame of the snapshot schema
         rather than raising (a range with no data is an answer)."""
@@ -718,15 +687,13 @@ class TxnTable:
             raise ValueError(
                 f"read_partitions_where on an unpartitioned table: "
                 f"{self.path}")
-        vf, segs = self._typed_partition_values(spark, dirs, cols)
+        vf, segs = self._typed_partition_values(spark, dirs, cols, version)
         keep = {r["__seg"] for r in
                 vf.filter(F.expr(condition)).collect()}
         if not keep:
             return self.read(spark, version).limit(0)
         keep_dirs = [d for s in sorted(keep) for d in segs[s]]
-        return self._read_dirs(spark, keep_dirs,
-                               self._dvs_for(keep_dirs, version),
-                               version=version)
+        return self._scan(spark, keep_dirs, version)
 
     #: generation shapes known MONOTONIC in their base column — the
     #: whitelist behind base-column partition-filter inference, the
@@ -838,63 +805,70 @@ class TxnTable:
         return residual(self.read_partitions_where(
             spark, " AND ".join(conds), version=version))
 
-    def _read_dirs(self, spark: SparkSession, rel_dirs: list[str],
-                   dvs: dict[str, dict] | None = None,
-                   mapped: bool = True,
-                   version: int | None = None) -> DataFrame:
-        """Plan a union over plain commit dirs and partition subdirs.
-        Partition subdirs are read with ``basePath`` = their commit dir so
-        Spark re-derives the partition column from the path. ``dvs``
-        (deletion-vector mapping, either layout) is anti-joined out
-        at the scan. On column-mapped tables the result is the LOGICAL
-        view at ``version`` (``mapped=False`` keeps raw physical names —
-        the CDF reader aliases once at its anchor instead)."""
+    def _scan(self, spark: SparkSession, dirs: list[str],
+              version: int | None = None, schema=None,
+              dvs: dict | None = None, logical: bool = True,
+              tagged: bool = False, positions: bool = False) -> DataFrame:
+        """The one scan every read, change feed, compaction and rewrite
+        plans: ``dirs`` (plain commit dirs, partition leaves, change
+        dirs) read with an explicit schema — ``schema``, default the
+        logged table schema at ``version`` — in one scan per commit
+        root, partition leaves with ``basePath`` so the keys parse from
+        the path at the schema's type. Building the frame runs no Spark
+        job. Column-mapped tables scan PHYSICAL names and alias to the
+        logical schema (``logical=False`` keeps the physical names —
+        the change feed aliases once at its anchor). Deletion vectors
+        (``dvs``, default the snapshot's for ``dirs``) anti-join out at
+        the scan. ``tagged`` adds each row's recorded dir as
+        ``_src_dir`` and ``positions`` its file key and row index
+        (``__dv_file``, ``__dv_row``) — the row-level rewrite's
+        sizing and DV position write."""
         from functools import reduce
 
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructField, StructType
 
-        plain = [d for d in rel_dirs if not _partition_segs(d)]
-        parts: dict[str, list[str]] = {}
-        for d in rel_dirs:
-            if _partition_segs(d):
-                # group by the COMMIT ROOT (data/<uuid>), not dirname:
-                # a nested multi-key subdir's basePath must sit above
-                # every col=value level so Spark re-derives ALL keys
-                parts.setdefault(_commit_root(d), []).append(d)
+        if schema is None:
+            schema = self.table_schema(version)
+        mapping = self.column_mapping(version) or {}
+        plan = StructType([
+            StructField(mapping.get(f.name, f.name), f.dataType,
+                        f.nullable, f.metadata)
+            for f in schema.fields])
+        # one scan per COMMIT ROOT (data/<uuid>): a nested multi-key
+        # leaf's basePath must sit above every col=value level
+        groups: dict[str, list[str]] = {}
+        for d in dirs:
+            groups.setdefault(_commit_root(d) if _partition_segs(d) else "",
+                              []).append(d)
+        if dvs is None:
+            dvs = self._dvs_for(dirs, version)
+        keyed = positions or bool(dvs)
         frames = []
-        type_lut = self._partition_type_lut() if parts else {}
-        if plain:
-            # mergeSchema: commits may carry evolved schemas (append with
-            # merge_schema=True); parquet schema merging unions the
-            # fields and null-fills the gaps, exactly Delta's behavior
-            frames.append(self._apply_dvs(
-                spark,
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(self.path, d) for d in plain]),
-                dvs or {}))
-        for root, subs in sorted(parts.items()):
-            df = self._apply_dvs(
-                spark,
-                spark.read
-                .option("basePath", os.path.join(self.path, root))
-                .parquet(*[os.path.join(self.path, d) for d in subs]),
-                dvs or {})
-            # cast path-inferred partition columns back to their
-            # RECORDED write-time types (ADVICE r12: a generated
-            # DATE_FORMAT(col,'yyyy') key writes string '1998' but Hive
-            # inference reads int — the schema would silently diverge
-            # from the unpartitioned twin). Tables written before type
-            # recording have no LUT entry and keep inference. Applied
-            # AFTER the DV anti-join: _metadata must resolve on the
-            # bare scan, a projection in between would break it.
-            for c in (x for x, _ in _partition_segs(subs[0])):
-                want = type_lut.get(c)
-                if want and df.schema[c].dataType.simpleString() != want:
-                    df = df.withColumn(c, F.col(c).cast(want))
-            frames.append(df)
-        out = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-        return self._logical_view(out, version) if mapped else out
+        for root, ds in sorted(groups.items()):
+            tags = {}
+            if tagged:
+                tags["_src_dir"] = self._src_dir_col(spark, root, ds)
+            if keyed:  # _metadata resolves on the bare scan only
+                tags["__dv_file"] = F.expr(self._DV_FILE_KEY)
+                tags["__dv_row"] = F.col("_metadata.row_index")
+            base_path = {"basePath": os.path.join(self.path, root)} \
+                if root else {}
+            frames.append(spark.read.schema(plan).options(**base_path)
+                          .parquet(*[os.path.join(self.path, d)
+                                     for d in ds])
+                          .withColumns(tags))
+        df = reduce(lambda a, b: a.unionByName(b), frames)
+        if dvs:  # already-deleted rows are invisible to every reader
+            df = df.join(F.broadcast(self._dv_rows(spark, dvs).select(
+                F.col("src_file").alias("__dv_file"),
+                F.col("row_idx").alias("__dv_row"))),
+                ["__dv_file", "__dv_row"], "left_anti")
+        extra = (["_src_dir"] if tagged else []) + (
+            ["__dv_file", "__dv_row"] if positions else [])
+        return df.select(
+            *[F.col(p.name).alias(f.name if logical else p.name)
+              for f, p in zip(schema.fields, plan.fields)], *extra)
 
     def version_at(self, timestamp: float) -> int:
         """Latest version committed at or before ``timestamp`` (epoch
@@ -1000,7 +974,7 @@ class TxnTable:
             adds.extend(doc["adds"])
         if not adds:
             return self.read(spark).limit(0)
-        return self._read_dirs(spark, adds)
+        return self._scan(spark, adds)
 
     def read_changes(self, spark: SparkSession,
                      since_version: int,
@@ -1024,16 +998,22 @@ class TxnTable:
         from functools import reduce
 
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StringType, StructField, StructType
 
         frames = []
         for v in self._versions_tail(since_version, upto):
             dirs, change_type = self._change_dirs(v)
             if not dirs:
                 continue
+            # each version plans with its own logged schema, in
+            # PHYSICAL names; change files carry _change_type too
+            sch = self.table_schema(v)
             if change_type is None:
-                df = spark.read.parquet(os.path.join(self.path, dirs[0]))
+                df = self._scan(spark, dirs, v, StructType(
+                    sch.fields + [StructField("_change_type", StringType())]),
+                    dvs={}, logical=False)
             else:
-                df = (self._read_dirs(spark, dirs, mapped=False)
+                df = (self._scan(spark, dirs, v, sch, dvs={}, logical=False)
                       .withColumn("_change_type", F.lit(change_type)))
             frames.append(df.withColumn("_commit_version", F.lit(v)))
         if not frames:
@@ -1254,8 +1234,7 @@ class TxnTable:
         dirs = self.pruned_dirs(col, lo, hi, version)
         if not dirs:
             return self.read(spark, version).filter(F.lit(False))
-        df = self._read_dirs(spark, dirs, self._dvs_for(dirs, version),
-                             version=version)
+        df = self._scan(spark, dirs, version)
         if lo is not None:
             df = df.filter(F.col(col) >= lo)
         if hi is not None:
@@ -1885,10 +1864,8 @@ class TxnTable:
         dirs = self.pruned_dirs_eq(col, value, version)
         if not dirs:
             return self.read(spark, version).filter(F.lit(False))
-        return (self._read_dirs(spark, dirs,
-                                self._dvs_for(dirs, version),
-                                version=version)
-                .filter(F.col(col) == value))
+        return self._scan(spark, dirs, version).filter(
+            F.col(col) == value)
 
     # -- writes -----------------------------------------------------------
 
@@ -1938,11 +1915,12 @@ class TxnTable:
         """Write one commit dir partitioned by ``part_cols`` (one key or
         an ordered list — nested ``c1=v1/c2=v2`` subdirs, r13) and
         return its LEAF partition subdirs — the log's unit of add/remove
-        for partition-granular commits. The keys' Spark types are
-        recorded in generation.json (ADVICE r12: Hive path inference
-        would otherwise read a string '1998' segment back as int,
-        silently diverging from the written schema — Delta records
-        typed partition values in its log for the same reason)."""
+        for partition-granular commits. Each leaf's schema is the
+        frame's, in the order a scan returns it (data columns, then the
+        keys), so the commit logs the keys' written types: Hive path
+        inference would read a string '1998' segment back as int
+        (ADVICE r12), and Delta logs typed partition columns for the
+        same reason."""
         cols = [part_cols] if isinstance(part_cols, str) \
             else list(part_cols)
         missing = [c for c in cols if c not in df.columns]
@@ -1953,7 +1931,6 @@ class TxnTable:
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         abs_dir = os.path.join(self.path, rel)
         df, verify = self._constrained(df)
-        self._record_partition_types(df, cols)
         df.write.partitionBy(*cols).parquet(abs_dir)
         verify(abs_dir)
         leaves: list[str] = []
@@ -1974,28 +1951,19 @@ class TxnTable:
             import shutil
 
             shutil.rmtree(abs_dir, ignore_errors=True)
+        self._pend_leaves(leaves, df.schema, cols)
         return sorted(leaves)
 
-    def _record_partition_types(self, df: DataFrame,
-                                cols: list[str]) -> None:
-        """Persist the partition keys' Spark types (simpleString) in
-        generation.json so reads cast Hive path inference back to the
-        written type (:meth:`_partition_type_lut`). Written only when
-        absent/changed — concurrent writers of the same layout write
-        the same value, so the config update is idempotent."""
-        cfg = self.generation_config()
-        cur = cfg.get("partition_types", {})
-        want = {c: df.schema[c].dataType.simpleString() for c in cols}
-        if all(cur.get(c) == t for c, t in want.items()):
-            return
-        cfg["partition_types"] = {**cur, **want}
-        self._write_config("generation.json", cfg)
+    def _pend_leaves(self, leaves: list[str], schema, cols: list[str]
+                     ) -> None:
+        """Record the schema of partition ``leaves`` written from a
+        frame of ``schema`` for :meth:`commit`: the data columns, then
+        the keys ``cols`` — the order a ``basePath`` scan returns."""
+        from pyspark.sql.types import StructType
 
-    def _partition_type_lut(self) -> dict[str, str]:
-        """{partition col -> recorded Spark type simpleString} — empty
-        for tables written before type recording (they keep the r12
-        inference behavior)."""
-        return self.generation_config().get("partition_types", {})
+        sch = StructType([f for f in schema.fields if f.name not in cols]
+                         + [schema[c] for c in cols])
+        self._pending_schemas.update(dict.fromkeys(leaves, sch))
 
     def _live_partition_col(self, dirs: list[str]) -> str | None:
         """LEADING live partition key (back-compat single-key view);
@@ -2029,29 +1997,36 @@ class TxnTable:
     # -- table schema in the log (Delta's metaData action) -----------------
     #
     # Each commit doc records the FULL merged table schema after that
-    # commit, so readers plan with an explicit schema instead of paying a
-    # distributed mergeSchema footer job over every live file — the term
-    # that grows with commit count on a streaming-fed table. Fallbacks
-    # (partitioned adds, cross-type evolution, pre-schema commits) simply
-    # omit the key and readers take the mergeSchema path.
+    # commit, partition keys included as the trailing fields, so every
+    # scan plans with an explicit schema instead of paying a Spark
+    # footer-inference job per commit root — the term that grows with
+    # commit count on a streaming-fed table. A commit whose files would
+    # change a column's type off the widening lattice is refused before
+    # it publishes. Only logs written before every commit recorded one
+    # lack the key; table_schema derives theirs.
 
     def _dir_struct(self, rel_dir: str):
         """Spark StructType of one data dir: the exact schema recorded at
-        write time when available, else a driver-side footer read
-        (tz-naive parquet timestamps map to TimestampNTZ, matching
-        Spark's parquet inference). None when unknowable."""
+        write time when available, else a driver-side footer read of a
+        plain dir (tz-naive parquet timestamps map to TimestampNTZ,
+        matching Spark's parquet inference). None when unknowable — a
+        partition leaf placed by another writer keeps its keys in the
+        path, not the files."""
         if rel_dir in self._pending_schemas:
             return self._pending_schemas[rel_dir]
         if _partition_of(rel_dir) is not None:
-            return None  # partition col lives in the path, not the files
+            return None
+        return self._files_struct(rel_dir)
+
+    def _files_struct(self, rel_dir: str):
+        """The footer schema of one file of ``rel_dir`` (its data
+        columns), or None (no file, or a footer that cannot name its
+        types)."""
         import glob as _glob
 
-        import pyarrow.parquet as pq
-
-        files = _glob.glob(os.path.join(self.path, rel_dir, "*.parquet"))
-        if not files:
-            return None
-        return self._footer_struct(files[0])
+        files = sorted(_glob.glob(os.path.join(self.path, rel_dir,
+                                               "*.parquet")))
+        return self._footer_struct(files[0]) if files else None
 
     @staticmethod
     def _footer_struct(path: str):
@@ -2088,8 +2063,7 @@ class TxnTable:
         same-name type conflict resolves to the WIDER type when the pair
         sits on the safe-widening lattice (r11: the logged schema of a
         widened table is the wide type; narrow files upcast at the
-        scan), else None (readers then fall back to Spark's mergeSchema
-        promotion rules rather than risking a wrong cast)."""
+        scan), else None: a genuine conflict."""
         from pyspark.sql.types import StructField, StructType
 
         if a is None:
@@ -2107,15 +2081,37 @@ class TxnTable:
                     fields[i] = StructField(f.name, f.dataType, True,
                                             fields[i].metadata)
                 elif not _widens_to(f.dataType, fields[i].dataType):
-                    return None  # genuine conflict: fall back
+                    return None
         return StructType(fields)
+
+    def _merged_or_refused(self, a, b):
+        """:meth:`_merge_struct` of the table schema ``a`` and the
+        written files' ``b``; a type change off the widening lattice
+        raises ``ValueError`` before anything commits — a commit
+        carrying it would make every later snapshot read fail."""
+        out = self._merge_struct(a, b)
+        if out is None:
+            bad = [f"{f.name}: table {a[f.name].dataType.simpleString()} "
+                   f"vs written {f.dataType.simpleString()}"
+                   for f in b.fields if f.name in a.names
+                   and a[f.name].dataType != f.dataType]
+            raise ValueError(
+                f"write to {self.path} changes column type(s) {bad}, "
+                "which no safe widening admits — cast the frame to the "
+                "table's types, or overwrite() the whole table for a "
+                "typed rewrite; nothing was committed")
+        return out
 
     def _commit_schema(self, adds: list[str], removes: list[str],
                        expected_version: int | None, mapping=None):
-        """Merged table schema after this commit, or None (omit key).
-        ``mapping``: the commit's {logical: physical} column mapping —
-        add dirs carry PHYSICAL names, the recorded schema is LOGICAL,
-        so the adds' struct is reverse-renamed before merging."""
+        """Table schema after this commit: the adds' schema merged over
+        the base's, or the adds' alone when they replace the whole
+        snapshot (overwrite/compact/merge); a commit without adds (a
+        DV delete, a purge, a rename) keeps the base's. ``mapping``:
+        the commit's {logical: physical} column mapping — add dirs
+        carry PHYSICAL names, the recorded schema is LOGICAL, so the
+        adds' struct is reverse-renamed before merging. None only when
+        an externally placed dir's footer cannot name its types."""
         from pyspark.sql.types import StructField, StructType
 
         adds_s = None
@@ -2123,9 +2119,8 @@ class TxnTable:
             s = self._dir_struct(rel)
             if s is None:
                 return None
-            adds_s = self._merge_struct(adds_s, s)
-            if adds_s is None:
-                return None
+            adds_s = s if adds_s is None \
+                else self._merged_or_refused(adds_s, s)
         if adds_s is not None and mapping:
             rev = {p: l for l, p in mapping.items()}
             adds_s = StructType([
@@ -2134,19 +2129,23 @@ class TxnTable:
                 for f in adds_s.fields])
         if expected_version is None:
             return adds_s
-        prev_live = set(self.snapshot_dirs(expected_version))
-        if prev_live and prev_live <= set(removes):
+        if adds_s is not None and not (
+                set(self.snapshot_dirs(expected_version)) - set(removes)):
             return adds_s  # full replacement: overwrite/compact/merge
         prev = self.table_schema(expected_version)
-        if prev is None:
-            return None  # pre-schema history: stay on the fallback path
-        return self._merge_struct(prev, adds_s)
+        if adds_s is None or prev is None:
+            return adds_s or prev
+        return self._merged_or_refused(prev, adds_s)
 
     def table_schema(self, version: int | None = None):
-        """Table schema at ``version`` from the log, or None when the
-        governing commit predates schema recording. Like Delta, DELETE /
-        UPDATE never shrink the schema even if the last file carrying a
-        column is rewritten away."""
+        """Table schema at ``version`` (default latest), partition keys
+        included as the trailing fields — what every scan plans with.
+        It is the schema the governing commit logged; only a legacy
+        commit that logged none derives it here
+        (:meth:`_derived_schema`), and the next commit logs it. Like
+        Delta, DELETE / UPDATE never shrink the schema even if the last
+        file carrying a column is rewritten away. None before the
+        first commit and for a table that never held data."""
         from pyspark.sql.types import StructType
 
         latest = self.latest_version()
@@ -2156,7 +2155,47 @@ class TxnTable:
         if v < 0:
             return None
         sch = self._doc(v).get("schema")
-        return StructType.fromJson(sch) if sch else None
+        return StructType.fromJson(sch) if sch else self._derived_schema(v)
+
+    def _derived_schema(self, v: int):
+        """The schema of legacy version ``v``: the footers of its live
+        dirs (or of the newest data an empty snapshot had) merged, and
+        the partition keys appended at the types generation.json's
+        ``partition_types`` recorded at write time. A Spark inference
+        names what neither can: a dir whose footer is INT96, or keys
+        written before types were recorded (one scan of one commit
+        root). None for a table that never held data."""
+        from pyspark.sql import SparkSession
+        from pyspark.sql.types import (StructField, StructType,
+                                       _parse_datatype_string)
+
+        if v in self._derived:
+            return self._derived[v]
+        dirs = self.snapshot_dirs(v) or self._schema_dirs(v)
+        if not dirs:
+            return None
+        spark = SparkSession.getActiveSession()
+        sch = None
+        for d in dirs:
+            st = (self._files_struct(d) or spark.read.parquet(
+                os.path.join(self.path, d)).schema)
+            sch = self._merge_struct(sch, st) or sch
+        leaves = [d for d in dirs if _partition_segs(d)]
+        keys = [c for c, _ in _partition_segs(leaves[0])
+                if c not in sch.names] if leaves else []
+        lut = self.generation_config().get("partition_types", {})
+        types = {c: _parse_datatype_string(lut[c]) for c in keys if c in lut}
+        if len(types) < len(keys):
+            root = _commit_root(leaves[0])
+            inferred = spark.read.option(
+                "basePath", os.path.join(self.path, root)).parquet(
+                *[os.path.join(self.path, d) for d in leaves
+                  if _commit_root(d) == root]).schema
+            types = {c: inferred[c].dataType for c in keys} | types
+        sch = StructType(sch.fields + [StructField(c, types[c])
+                                       for c in keys])
+        self._derived[v] = sch
+        return sch
 
     # -- column mapping (Delta's columnMapping, name mode; r11) ------------
     #
@@ -2189,31 +2228,6 @@ class TxnTable:
             return []
         v = latest if version is None else min(version, latest)
         return self._doc(v).get("physical_used", [])
-
-    def _logical_view(self, df: DataFrame, version: int | None) -> DataFrame:
-        """Project a physical-named scan frame to the logical column set
-        of ``version``: mapped physicals alias to their logical names,
-        orphaned physicals (dropped/renamed-away columns still present
-        in old files) are excluded, and physicals newer than the frame's
-        dirs null-fill at the logical type. No-op before activation."""
-        mapping = self.column_mapping(version)
-        if not mapping:
-            return df
-        sch = self.table_schema(version)
-        if sch is None:
-            raise ValueError(
-                f"column-mapped table {self.path} has no recorded schema "
-                f"at version {version} — the mapping cannot be applied")
-        from pyspark.sql import functions as F
-
-        cols = []
-        for f in sch.fields:
-            phys = mapping.get(f.name, f.name)
-            if phys in df.columns:
-                cols.append(F.col(phys).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(cols)
 
     def _to_physical(self, df: DataFrame,
                      mapping: dict | None = None) -> DataFrame:
@@ -2266,9 +2280,8 @@ class TxnTable:
         sch = self.table_schema(base)
         if sch is None:
             raise ValueError(
-                "rename/drop need the table's recorded schema; this "
-                f"table has none at version {base} (partitioned or "
-                "pre-schema history)")
+                "rename/drop need the table's schema; this table has "
+                f"none at version {base} (it never held data)")
         if self._live_partition_col(self.snapshot_dirs(base)) is not None:
             raise ValueError(
                 "column mapping is not supported on partitioned tables")
@@ -2581,58 +2594,19 @@ class TxnTable:
                     "append/overwrite of the new shape first, then "
                     "append")
         elif merge_schema:
+            # safe type WIDENING (r11, VERDICT r10 #4): the widened
+            # logical type lives in the log while files keep their
+            # narrow physical type and upcast at the scan
             cur = self.table_schema(None)
-            # safe type WIDENING (r11, VERDICT r10 #4) is admitted only
-            # when the log records the schema — the widened logical type
-            # lives in the log while files keep their narrow physical
-            # type; without a logged schema readers would take the
-            # mergeSchema fallback, which cannot promote across files
-            allow_widen = cur is not None
-            if cur is not None:
-                by = {f.name: f.dataType for f in cur.fields}
-            else:
-                # No logged schema (pre-schema history, partitioned
-                # roots, footer-fallback dirs): fall back to a footer
-                # read of the newest live dir — skipping the check here
-                # would let a type-changed shared column COMMIT and
-                # brick every later snapshot read at the parquet schema
-                # union, the exact fail-at-read corruption this guard
-                # rejects at write time (ADVICE r10). When even the
-                # footer can't name the types (INT96, no files), refuse
-                # merge_schema rather than guess.
-                dirs = self._schema_dirs()
-                if not dirs:
-                    by = {}  # empty table: nothing to conflict with
-                else:
-                    fb = self._dir_struct(dirs[-1])
-                    if fb is None and _partition_of(dirs[-1]) is not None:
-                        # partitioned dir: _dir_struct declines (the
-                        # partition col lives in the path) but the DATA
-                        # columns in the files are still comparable
-                        import glob as _glob
-
-                        files = _glob.glob(os.path.join(
-                            self.path, dirs[-1], "*.parquet"))
-                        if files:
-                            fb = self._footer_struct(files[0])
-                    if fb is None:
-                        raise ValueError(
-                            "append(merge_schema=True) needs the table's "
-                            "column types to reject type changes, but "
-                            "this table has no logged schema and its "
-                            "newest files don't carry a readable one "
-                            "(INT96/empty dir) — cast and append without "
-                            "merge_schema, or overwrite() to record a "
-                            "schema first")
-                    by = {f.name: f.dataType for f in fb.fields}
+            by = {f.name: f.dataType for f in cur.fields} if cur else {}
             bad, widens = [], []
             for c in df.columns:
                 if c not in by or by[c] == df.schema[c].dataType:
                     continue
                 ft = df.schema[c].dataType
-                if allow_widen and _widens_to(by[c], ft):
+                if _widens_to(by[c], ft):
                     widens.append(c)   # table type widens to the frame's
-                elif allow_widen and _widens_to(ft, by[c]):
+                elif _widens_to(ft, by[c]):
                     pass  # narrower frame: the logged (wide) type holds,
                     # the new narrow files upcast at the scan like any
                     # pre-widening dir
@@ -3023,7 +2997,7 @@ class TxnTable:
             survivors: DataFrame | None = None
             if part_dirs:
                 vf, segs = self._typed_partition_values(
-                    spark, part_dirs, keys)
+                    spark, part_dirs, keys, base)
                 try:
                     hot = {r["__seg"] for r in
                            vf.filter(F.expr(condition)).collect()}
@@ -3049,9 +3023,7 @@ class TxnTable:
                         segs, keys)
                     removes = cands
                     if cands:
-                        snap = self._read_dirs(
-                            spark, cands, self._dvs_for(cands, base),
-                            version=base)
+                        snap = self._scan(spark, cands, base)
                         # NULL-evaluating rows do NOT match -> survive
                         survivors = snap.filter(
                             ~F.coalesce(F.expr(condition),
@@ -3068,28 +3040,6 @@ class TxnTable:
                 f"replace_where: source rows violate {condition!r} — "
                 "every incoming row must satisfy the replace "
                 "predicate; nothing was committed")
-
-        def _schema_at(v: int):
-            """Comparable schema signature at ``v``: the log-recorded
-            schema when present, else ONE live file's footer names +
-            the path's partition keys (partition-granular commits may
-            not record a merged schema — name-set drift still catches
-            the add/drop-column racers that would strand the written
-            files on a stale shape)."""
-            s = self.table_schema(v)
-            if s is not None:
-                return ("json", s.jsonValue())
-            import glob as _glob
-
-            import pyarrow.parquet as pq
-            for d in reversed(self.snapshot_dirs(v)):
-                files = _glob.glob(
-                    os.path.join(self.path, d, "*.parquet"))
-                if files:
-                    names = set(pq.read_schema(files[0]).names)
-                    names.update(c for c, _ in _partition_segs(d))
-                    return ("names", tuple(sorted(names)))
-            return None
 
         cur: dict = {}  # the attempt's resolved keys and survivors
 
@@ -3123,7 +3073,11 @@ class TxnTable:
                 # in — its dirs may match the predicate): redo the
                 # whole attempt from the racer's snapshot
                 return None
-            if _schema_at(base) != _schema_at(latest):
+            # columns and types, not nullability: a racer's frame may
+            # differ there without stranding the written files
+            shape = [[(f.name, f.dataType) for f in self.table_schema(v)
+                      or []] for v in (base, latest)]
+            if shape[0] != shape[1]:
                 raise TxnConflictError(
                     f"concurrent schema change under replace_where at "
                     f"{self.path} (v{base} -> v{latest}) — the written "
@@ -3219,7 +3173,7 @@ class TxnTable:
             # evolve the target view additively; untouched rows carry
             # typed NULLs in the new columns (no data rewrite decides
             # this — the merge below rewrites anyway, and future appends
-            # null-fill via the mergeSchema read path)
+            # null-fill at the explicit-schema scan)
             target = target.select(
                 "*", *[_F.lit(None).cast(f.dataType).alias(f.name)
                        for f in new])
@@ -3310,59 +3264,6 @@ class TxnTable:
                                    physical_used=used_override),
                               base=base)
 
-    def _tagged_candidates(self, spark: SparkSession, cands: list[str],
-                           base: int, schema, positions: bool = False):
-        """One explicit-``schema`` scan over the candidate dirs of a
-        row-level op, each row tagged with its dir in ``_src_dir``:
-        plain dirs in one scan, partition leaves in one scan per commit
-        root with ``basePath`` (the keys parse from the path at the
-        schema's type), so sizing, change capture and the rewrite cost
-        a CONSTANT number of Spark jobs however many dirs they visit.
-        Column-mapped tables scan PHYSICAL names and alias to the
-        logical schema; live deletion vectors anti-join out at the
-        scan. ``positions`` keeps each row's file key and row index
-        (``__dv_file``, ``__dv_row``) for the DV position write."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
-
-        mapping = self.column_mapping(base) or {}
-        plan = StructType([
-            StructField(mapping.get(f.name, f.name), f.dataType,
-                        f.nullable, f.metadata)
-            for f in schema.fields])
-        groups: dict[str, list[str]] = {}
-        for d in cands:
-            groups.setdefault(_commit_root(d) if _partition_segs(d) else "",
-                              []).append(d)
-        dvs = self._dvs_for(cands, base)
-        keyed = positions or bool(dvs)
-        frames = []
-        for root, dirs in sorted(groups.items()):
-            reader = spark.read.schema(plan)
-            if root:
-                reader = reader.option("basePath",
-                                       os.path.join(self.path, root))
-            tags = {"_src_dir": self._src_dir_col(spark, root, dirs)}
-            if keyed:  # _metadata resolves on the bare scan only
-                tags["__dv_file"] = F.expr(self._DV_FILE_KEY)
-                tags["__dv_row"] = F.col("_metadata.row_index")
-            frames.append(reader.parquet(
-                *[os.path.join(self.path, d) for d in dirs])
-                .withColumns(tags))
-        df = reduce(lambda a, b: a.unionByName(b), frames)
-        if dvs:  # already-deleted rows are invisible to the op
-            df = df.join(F.broadcast(self._dv_rows(spark, dvs).select(
-                F.col("src_file").alias("__dv_file"),
-                F.col("row_idx").alias("__dv_row"))),
-                ["__dv_file", "__dv_row"], "left_anti")
-        extra = ["_src_dir"] + (["__dv_file", "__dv_row"]
-                                if positions else [])
-        return df.select(
-            *[F.col(mapping.get(f.name, f.name)).alias(f.name)
-              for f in schema.fields], *extra)
-
     @staticmethod
     def _src_dir_col(spark: SparkSession, root: str, dirs: list[str]):
         """``_src_dir`` of a candidate-scan row: the recorded dir of
@@ -3395,7 +3296,7 @@ class TxnTable:
         from pyspark.sql import functions as F
 
         paths = sorted({ref["path"] for ref in dvs.values()})
-        return (spark.read.parquet(
+        return (spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(self.path, p) for p in paths])
             .filter(F.col("src_dir").isin(list(dvs)))
             .select("src_dir", "src_file", "row_idx"))
@@ -3456,21 +3357,20 @@ class TxnTable:
 
     def _typed_partition_values(self, spark: SparkSession,
                                 live: list[str],
-                                part_cols: str | list[str]
+                                part_cols: str | list[str],
+                                version: int | None = None
                                 ) -> tuple[DataFrame | None,
                                            dict[str, list[str]]]:
         """(values frame, raw-suffix -> dirs map) for the live
-        partition subdirs. The frame carries ``__seg`` (the raw
-        Hive-escaped ``c1=v1[/c2=v2…]`` path suffix, the join-back key
-        to dirs) and one TYPED column per partition key: the type is
-        the RECORDED write-time type when generation.json carries one
-        (ADVICE r12 — inference would read a string '1998' segment back
-        as int), else the type Spark's partition inference gives the
-        column — resolved from ONE subdir's read plan, zero data I/O —
-        so partition-key predicates evaluate with the same typed
-        semantics the data path uses (``day > 2`` on an int key is
-        numeric, never the lexicographic '10' < '2' trap) and escaped
-        values (timestamps' ``%3A``) round-trip correctly."""
+        partition subdirs at ``version``. The frame carries ``__seg``
+        (the raw Hive-escaped ``c1=v1[/c2=v2…]`` path suffix, the
+        join-back key to dirs) and one TYPED column per partition key,
+        at the key's type in :meth:`table_schema` (the written type —
+        ADVICE r12: inference would read a string '1998' segment back
+        as int), so partition-key predicates evaluate with the same
+        typed semantics the data path uses (``day > 2`` on an int key
+        is numeric, never the lexicographic '10' < '2' trap) and
+        escaped values (timestamps' ``%3A``) round-trip correctly."""
         from pyspark.sql import functions as F
 
         cols = [part_cols] if isinstance(part_cols, str) \
@@ -3485,21 +3385,8 @@ class TxnTable:
                 vals[suf] = [v for _, v in p]
         if not segs:
             return None, {}
-        lut = self._partition_type_lut()
-        missing = [c for c in cols if c not in lut]
-        dtypes = dict(lut)
-        if missing:
-            one = segs[next(iter(segs))][0]
-            try:
-                sch = (spark.read.option(
-                    "basePath",
-                    os.path.join(self.path, _commit_root(one)))
-                    .parquet(os.path.join(self.path, one)).schema)
-                for c in missing:
-                    dtypes[c] = sch[c].dataType.simpleString()
-            except Exception:
-                for c in missing:
-                    dtypes[c] = "string"
+        dtypes = {f.name: f.dataType.simpleString()
+                  for f in self.table_schema(version).fields}
 
         # an inline VALUES table is a LocalRelation: collecting it, or
         # a predicate over it, runs no Spark job
@@ -3629,9 +3516,7 @@ class TxnTable:
         live = [d for r in vf.collect() for d in segs[r["__seg"]]]
         if not live:
             return []
-        hot_vals = (self._read_dirs(spark, live,
-                                    self._dvs_for(live, base),
-                                    version=base)
+        hot_vals = (self._scan(spark, live, base)
                     .filter(F.expr(condition)).select(*keys).distinct())
         hot = sorted(r["__seg"] for r in
                      vf.join(hot_vals, keys, "left_semi").collect())
@@ -3665,7 +3550,7 @@ class TxnTable:
         keys = self._live_partition_cols(live)
         if keys is None:
             return live, None, False
-        vf, segs = self._typed_partition_values(spark, live, keys)
+        vf, segs = self._typed_partition_values(spark, live, keys, base)
         if partition_prune is not None:
             vf = vf.filter(F.expr(partition_prune))
         try:
@@ -3678,8 +3563,7 @@ class TxnTable:
     def _rewrite_rows(self, spark: SparkSession, condition: str,
                       base: int, meta: dict, capture: bool, changes,
                       rewrite=None, prune: tuple | None = None,
-                      partition_prune: str | None = None,
-                      schema=None) -> int:
+                      partition_prune: str | None = None) -> int:
         """The one row-level rewrite behind :meth:`delete_where`,
         :meth:`update_where` and the DV delete — Delta's copy-on-write
         DELETE/UPDATE on every layout: find the dirs holding matches,
@@ -3689,10 +3573,9 @@ class TxnTable:
         1. Candidates (:meth:`_row_candidates`): stats- and
            partition-pruned live dirs; a key-only condition matches
            whole partitions with no data job.
-        2. Scan (:meth:`_tagged_candidates`): one explicit-schema scan
+        2. Scan (:meth:`_scan`, ``tagged``): one explicit-schema scan
            per commit root, rows tagged with ``_src_dir``, column
-           mapping and live DVs applied. ``schema`` is the caller's
-           snapshot schema when the log records none.
+           mapping and live DVs applied.
         3. Sizing: rows and matches per dir from an Observation riding
            the op's first write, or — above ``_OBS_RIDER_MAX``
            candidates, and on a partitioned layout without capture —
@@ -3727,10 +3610,8 @@ class TxnTable:
             # a key-only purge with the feed off is pure metadata
             return self._transact(_Txn([], cands, meta),
                                   self._rebase_rewrite, base)
-        schema = (self.table_schema(base) or schema
-                  or self._read_dirs(spark, cands, version=base).schema)
-        tagged = self._tagged_candidates(spark, cands, base, schema,
-                                         positions=rewrite is None)
+        tagged = self._scan(spark, cands, base, tagged=True,
+                            positions=rewrite is None)
         cond = F.expr(condition)
         per_dir = obs = None
         first = tagged  # what the op's first write scans
@@ -3772,8 +3653,7 @@ class TxnTable:
                 redo = [d for d in txn.removes
                         if not drop_full or per_dir[d][1] < per_dir[d][0]]
                 if redo:  # a scan of its own: plans only redo's files
-                    txn.adds = write(rewrite(self._tagged_candidates(
-                        spark, redo, base, schema).drop("_src_dir")))
+                    txn.adds = write(rewrite(self._scan(spark, redo, base)))
             if not any(m for _, m in per_dir.values()):
                 self._reclaim(txn)
                 return base  # nothing matched: no commit
@@ -3802,7 +3682,7 @@ class TxnTable:
         # carries only the (tiny) position rows
         pos.repartition(1).write.parquet(dv_abs)
         per_dir = {r["src_dir"]: r["n"] for r in
-                   spark.read.parquet(dv_abs)
+                   spark.read.schema(_DV_SCHEMA).parquet(dv_abs)
                    .groupBy("src_dir").agg(F.count("*").alias("n"))
                    .collect()}  # bounded: <= |candidates| rows
         if sum(per_dir.values()) == sum(r["rows"]
@@ -3905,8 +3785,7 @@ class TxnTable:
         base = self.latest_version()
         if base is None:
             raise ValueError(f"not a txn table (no commits): {self.path}")
-        snap = self.read(spark, base).schema
-        bad = set(set_exprs) - set(snap.names)
+        bad = set(set_exprs) - set(self.table_schema(base).names)
         if bad:
             raise ValueError(f"SET on unknown columns: {sorted(bad)}")
         # generated/identity interaction: SET of an engine-generated
@@ -4022,8 +3901,7 @@ class TxnTable:
             spark, condition, base,
             {**(meta or {}), "operation": "update",
              "condition": condition, "set": sorted(set_exprs)},
-            capture_changes, changes, rewrite, prune, partition_prune,
-            schema=snap)
+            capture_changes, changes, rewrite, prune, partition_prune)
 
     # -- maintenance ------------------------------------------------------
 
@@ -4205,6 +4083,8 @@ class TxnTable:
                 adds.append(rel)
         import shutil
         shutil.rmtree(tmp_abs, ignore_errors=True)
+        self._pend_leaves(adds, staged.drop("_bucket").schema,
+                          list(part_cols or []))
         return adds
 
     def compact_zorder_incremental(self, spark: SparkSession,
@@ -4241,12 +4121,7 @@ class TxnTable:
                 if add_version.get(d, -1) > last_cluster]
         if not tail:
             return None
-        sch = self.table_schema(base)
-        if sch is not None and all(_partition_of(d) is None for d in tail):
-            df = spark.read.schema(sch).parquet(
-                *[os.path.join(self.path, d) for d in tail])
-        else:
-            df = self._read_dirs(spark, tail)
+        df = self._scan(spark, tail, base)
         part_keys = (self._live_partition_cols(tail)
                      or self._part_keys() or None)
         if part_keys is not None:
@@ -4320,9 +4195,7 @@ class TxnTable:
         if not hot:
             return None
         removes = [d for s in hot for d in segs[s]]
-        df = self._read_dirs(spark, removes,
-                             self._dvs_for(removes, base),
-                             version=base)
+        df = self._scan(spark, removes, base)
         if files_per_value <= 1:
             # one task per hot value -> one output file per rewritten
             # dir (the tidiest layout — but write parallelism is capped

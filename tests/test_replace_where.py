@@ -291,13 +291,13 @@ def test_mixed_predicate_sizing_scan_is_partition_bounded(spark,
     stays row-exact."""
     t, o = _mk(spark, tmp_path)
     scanned: list[list[str]] = []
-    real = TxnTable._read_dirs
+    real = TxnTable._scan
 
     def spy(self, spark_, rel_dirs, *a, **k):
         scanned.append(list(rel_dirs))
         return real(self, spark_, rel_dirs, *a, **k)
 
-    monkeypatch.setattr(TxnTable, "_read_dirs", spy)
+    monkeypatch.setattr(TxnTable, "_scan", spy)
     cut = 100000.0
     pred = f"order_year = '1997' AND o_totalprice > {cut}"
     src = (o.filter(

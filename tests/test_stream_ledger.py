@@ -556,7 +556,8 @@ def test_one_optimistic_commit_loop():
 
 #: the one row-level rewrite and the helpers only it may call
 _REWRITE_CORE = (_LEDGER_HOME, "_rewrite_rows")
-_CORE_ONLY = ("_tagged_candidates", "_candidate_obs", "_sizes_prepass")
+_CORE_ONLY = ("_candidate_obs", "_sizes_prepass")
+_CORE_SCAN = ("_scan", ("tagged", "positions"))  # the tagged scan
 _RETIRED_ROW_PATHS = ("_delete_where_partitioned",
                       "_update_where_partitioned", "compact_clustered")
 
@@ -564,7 +565,8 @@ _RETIRED_ROW_PATHS = ("_delete_where_partitioned",
 def test_one_row_level_rewrite():
     """DELETE, UPDATE and the DV delete run through one core,
     ``TxnTable._rewrite_rows``: nothing else in the package calls the
-    candidate scan or the sizing helpers, ``delete_where`` and
+    tagged candidate scan (``_scan(tagged=…/positions=…)``) or the
+    sizing helpers, ``delete_where`` and
     ``update_where`` do not commit through ``_transact`` themselves,
     and the partition-layout forks and ``compact_clustered`` (one
     column of ``compact_zorder``) are gone. Parsed, so docstrings do
@@ -573,11 +575,14 @@ def test_one_row_level_rewrite():
     for rel, src in _package_modules():
         tree = ast.parse(src)
         scope = _enclosing(tree)
+        in_core = [c for c in _calls(tree, _CORE_SCAN[0])
+                   if any(k.arg in _CORE_SCAN[1] for k in c.keywords)]
         for name in _CORE_ONLY:
-            hits += [f"{rel}:{c.lineno}: {name} outside the core"
-                     for c in _calls(tree, name)
-                     if not (rel == _REWRITE_CORE[0]
-                             and _REWRITE_CORE[1] in scope[id(c)])]
+            in_core += _calls(tree, name)
+        hits += [f"{rel}:{c.lineno}: {c.func.attr} outside the core"
+                 for c in in_core
+                 if not (rel == _REWRITE_CORE[0]
+                         and _REWRITE_CORE[1] in scope[id(c)])]
         for f in ast.walk(tree):
             if not isinstance(f, ast.FunctionDef):
                 continue
@@ -586,4 +591,62 @@ def test_one_row_level_rewrite():
             if f.name in ("delete_where", "update_where"):
                 hits += [f"{rel}:{c.lineno}: {f.name} calls _transact"
                          for c in _calls(f, "_transact")]
+    assert not hits, "\n".join(hits)
+
+
+#: the legacy schema derivation, the one place a scan may infer
+_DERIVATION = (_LEDGER_HOME, "_derived_schema")
+_RETIRED_SCHEMA_PATHS = ("_read_dirs", "_record_partition_types")
+_EXPORTER = (os.path.join("sources", "deltainterop.py"),
+             ("_footer_struct", "_partition_type_lut"))
+
+
+def _chain(node) -> list[str]:
+    """The names along a method chain, outermost first:
+    ``spark.read.schema(s).parquet`` gives parquet, schema, read,
+    spark."""
+    out = []
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Call):
+            node = node.func
+        else:
+            out.append(node.attr)
+            node = node.value
+    if isinstance(node, ast.Name):
+        out.append(node.id)
+    return out
+
+
+def test_one_explicit_schema_scan():
+    """Every scan ``sources/txnlog.py`` plans names its schema: no
+    ``.parquet(`` on a reader without ``.schema(`` outside the legacy
+    derivation (``TxnTable._derived_schema``) and no ``mergeSchema``
+    option; ``_read_dirs`` and ``_record_partition_types`` are gone
+    from the package; and the Delta exporter
+    (``sources/deltainterop.py``) takes its schema from
+    ``TxnTable.table_schema``, calling neither ``_footer_struct`` nor
+    ``_partition_type_lut``. Parsed, so docstrings do not count."""
+    hits = []
+    for rel, src in _package_modules():
+        tree = ast.parse(src)
+        hits += [f"{rel}:{f.lineno}: def {f.name}" for f in ast.walk(tree)
+                 if isinstance(f, ast.FunctionDef)
+                 and f.name in _RETIRED_SCHEMA_PATHS]
+        for name in _RETIRED_SCHEMA_PATHS + (
+                _EXPORTER[1] if rel == _EXPORTER[0] else ()):
+            hits += [f"{rel}:{c.lineno}: {name}" for c in _calls(tree, name)]
+        if rel != _DERIVATION[0]:
+            continue
+        scope = _enclosing(tree)
+        for c in _calls(tree, "parquet"):
+            chain = _chain(c.func.value)
+            if not ({"write", "schema"} & set(chain)
+                    or _DERIVATION[1] in scope[id(c)]):
+                hits.append(f"{rel}:{c.lineno}: .parquet( on a reader "
+                            "without .schema(")
+        hits += [f"{rel}:{c.lineno}: mergeSchema" for c in ast.walk(tree)
+                 if isinstance(c, ast.Call) and (
+                     any(isinstance(a, ast.Constant)
+                         and a.value == "mergeSchema" for a in c.args)
+                     or any(k.arg == "mergeSchema" for k in c.keywords))]
     assert not hits, "\n".join(hits)

@@ -1221,17 +1221,18 @@ def test_append_merge_schema_evolution(spark, tmp_path):
 def test_merge_schema_type_change_rejected_without_logged_schema(
         spark, tmp_path):
     """r11 (ADVICE r10): the merge_schema type-change guard must hold
-    even when table_schema() is None (partitioned history — the log
-    records no schema for col=value dirs): the fallback compares
-    against the newest live dir's FOOTER, so a type-changed shared
-    column still fails at write time instead of committing and
-    bricking every later snapshot read at the parquet schema union."""
+    on a legacy partitioned log whose commit docs record no schema:
+    table_schema() derives it from the footers and the path keys, so a
+    type-changed shared column still fails at write time instead of
+    committing and bricking every later snapshot read."""
     t = TxnTable(str(tmp_path / "t"))
     t.overwrite_partitions(
         spark.createDataFrame([(1, "a", 1.5, 0), (2, "b", 2.5, 1)],
                               "id int, val string, score double, p int"),
         "p")
-    assert t.table_schema(None) is None  # the unguarded precondition
+    _strip_logged_schemas(t)
+    t = TxnTable(t.path)
+    assert "schema" not in t._doc(t.latest_version())  # the legacy precondition
     # type-changed shared column: rejected via the footer fallback
     with pytest.raises(ValueError, match="not these changes"):
         t.append(spark.createDataFrame(
@@ -1722,28 +1723,49 @@ def test_check_constraint_blocks_violating_writes(spark, tmp_path):
     assert (-9, "now ok") in _rows(t.read(spark))
 
 
-def test_row_ops_on_pre_schema_log(spark, tmp_path):
-    """Tables written before schema-in-log (commit docs without a
-    "schema" key) must keep working: delete/update fall back to the
-    per-dir mergeSchema path and produce identical results."""
+def _strip_logged_schemas(t: TxnTable) -> None:
+    """Make ``t`` a legacy log: no commit doc records a schema."""
     import json as _json
 
-    t = TxnTable(str(tmp_path / "t"))
-    t.append(_df(spark, [(1, "a"), (2, "b")]))
-    t.append(spark.createDataFrame(
-        [(3, "c", "x3")], "id int, val string, extra string"),
-        merge_schema=True)
-    # simulate a legacy log: strip the schema key from every commit doc
     for v in t.versions():
         p = t.log_dir + f"/{v:011d}.json"
         doc = _json.load(open(p))
         doc.pop("schema", None)
         _json.dump(doc, open(p, "w"))
+
+
+@pytest.mark.parametrize("layout", ["plain", "partitioned"])
+def test_row_ops_on_pre_schema_log(spark, tmp_path, layout):
+    """Tables written before schema-in-log (commit docs without a
+    "schema" key) must keep working: table_schema() derives the schema
+    (footers, plus the path keys of a partitioned layout),
+    delete/update produce identical results, and the first new commit
+    logs the schema, healing the log."""
+    from pyspark.sql import functions as F
+
+    t = TxnTable(str(tmp_path / "t"))
+    if layout == "plain":
+        t.append(_df(spark, [(1, "a"), (2, "b")]))
+        t.append(spark.createDataFrame(
+            [(3, "c", "x3")], "id int, val string, extra string"),
+            merge_schema=True)
+    else:  # the evolved column arrives with one replaced partition
+        t.set_partition_column("p")
+        t.append(_df(spark, [(1, "a"), (2, "b")])
+                 .withColumn("p", F.col("id") % 2))
+        t.overwrite_partitions(spark.createDataFrame(
+            [(1, "a", None, 1), (3, "c", "x3", 1)],
+            "id int, val string, extra string, p int"), "p")
+    # simulate a legacy log: strip the schema key from every commit doc
+    _strip_logged_schemas(t)
     t2 = TxnTable(t.path)
-    assert t2.table_schema() is None
+    assert "schema" not in t2._doc(t2.latest_version())
     got = {(r["id"], r["extra"]) for r in t2.read(spark).collect()}
     assert got == {(1, None), (2, None), (3, "x3")}
     t2.delete_where(spark, "id = 1")
+    assert "schema" in t2._doc(t2.latest_version())  # the log healed
+    assert [f.name for f in t2.table_schema().fields] == \
+        [f.name for f in t2._derived_schema(t2.latest_version() - 1).fields]
     t2.update_where(spark, "id = 3", {"extra": "'seen'"})
     got = {(r["id"], r["extra"]) for r in t2.read(spark).collect()}
     assert got == {(2, None), (3, "seen")}

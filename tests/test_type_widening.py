@@ -108,3 +108,33 @@ def test_widening_composes_with_column_mapping(spark, tmp_path):
     # era view: narrow type under the OLD name
     assert dict(t.read(spark, version=0).dtypes) == {"k": "int",
                                                      "amt": "float"}
+
+
+@pytest.mark.parametrize("write", ["overwrite_partitions", "append"])
+def test_partition_granular_type_change_refused(spark, tmp_path, write):
+    """A partition-granular write that changes a column's type off the
+    widening lattice is refused before it commits, naming the remedy,
+    and the table stays readable: the commit would have logged a
+    schema no scan can read its old files with."""
+    t = TxnTable(str(tmp_path / "t"))
+    if write == "append":
+        t.set_partition_column("p")
+    first = spark.createDataFrame([(1, 1.5, 0), (2, 2.5, 1)],
+                                  "id int, score double, p int")
+    bad = spark.createDataFrame([(3, "oops", 1)],
+                                "id int, score string, p int")
+    if write == "append":
+        t.append(first)
+        go = lambda: t.append(bad)  # noqa: E731
+    else:
+        t.overwrite_partitions(first, "p")
+        go = lambda: t.overwrite_partitions(bad, "p")  # noqa: E731
+    v0, dirs0 = t.latest_version(), set(os.listdir(t.path + "/data"))
+    with pytest.raises(ValueError, match=r"score.*double.*string"
+                       r".*cast the frame to the table's types"):
+        go()
+    assert t.latest_version() == v0
+    assert set(os.listdir(t.path + "/data")) == dirs0  # files reclaimed
+    assert dict(t.read(spark).dtypes)["score"] == "double"
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (1, 1.5, 0), (2, 2.5, 1)]
