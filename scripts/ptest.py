@@ -46,6 +46,7 @@ COSTS = {
     "test_deletion_vectors.py": 75,  # r11 partitioned DVs
     "test_row_rewrite.py": 200,  # the row-level rewrite's model grid
     "test_scan_plan.py": 140,  # every reader x layout, plan-job probe
+    "test_mv.py": 450,  # bucket-sharing parity grid (4 view kinds)
     "test_scale_paths.py": 60,
     "test_streaming.py": 45,
     "test_multimodal.py": 40,

@@ -23,9 +23,11 @@ Delta's "resync after a non-CDF commit" rule.
 Two view shapes live here. ``maintain_agg_view`` keeps a plain table of
 partials, overwritten per refresh — right while the group count stays
 tiny (per-BU rollups). The bucketed views (join, agg, map) share
-:class:`_BucketedView`: ``__kb`` partition-granular bucket replace and
-net-count application, so a refresh rewrites only the buckets its
-changed keys hash to.
+:class:`_BucketedView`: ``__kb`` partition-granular bucket replace, so a
+refresh rewrites only the buckets that changed. A view over sources
+bucketed the same way (stacked views) rebuilds those buckets from the
+sources in place, found from the sources' logs; a view over a raw
+source applies its change rows by net count.
 
 Every single-source derived state keeps the same bookkeeping: the
 source version it last absorbed, in its own commit meta, read back with
@@ -47,7 +49,12 @@ from functools import cache, reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txnlog import TxnTable, _Txn, agg_delta_from_changes
+from ..sources.txnlog import (
+    TxnTable,
+    _partition_segs,
+    _Txn,
+    agg_delta_from_changes,
+)
 
 
 def fold_changes(spark: SparkSession, source: TxnTable, state: TxnTable,
@@ -248,18 +255,34 @@ def buckets_for_rows(n_rows: int, target_rows: int = 100_000) -> int:
     return max(8, min(65_536, -(-n_rows // max(target_rows, 1))))
 
 
+def _is_bucket_leaf(rel_dir: str) -> bool:
+    return [c for c, _ in _partition_segs(rel_dir)] == ["__kb"]
+
+
 class _BucketedView:
     """The bucket machinery every bucketed view shares: one view table
     partitioned by ``__kb = pmod(hash(keys), n_buckets)``, written
     either whole (a (re)build) or bucket by bucket (a refresh replaces
-    exactly the buckets its changed keys hash to), with rows applied
-    by NET ROW COUNT — inserts/postimages +1, deletes/preimages -1,
-    summed per exact row value, so application is correct for
-    arbitrary multisets and independent of commit order. With
-    ``capture_changes`` every bucket replace of the view also writes
-    change files, so the view is itself a CDF source and further
-    incremental views stack on it. ``keys``: one column name or a
+    exactly the buckets that changed). ``keys``: one column name or a
     list of them.
+
+    Every view commit records its layout in its meta —
+    ``mv_bucket_by = {keys, n_buckets}`` — and the bucket ids it
+    replaced as ``mv_buckets`` (every bucket for a whole-table build).
+    A source whose newest ``mv_bucket_by`` equals this view's layout
+    SHARES its buckets: a view row's bucket holds exactly the source
+    rows it derives from. A refresh over such sources reads their
+    changed buckets from the log alone (:meth:`_changed_buckets`, no
+    Spark job) and rebuilds each from the source rows in place — no
+    copy of the source, one commit. Only a raw source (a table no view
+    maintains, or one bucketed another way) has its change rows applied
+    by NET ROW COUNT — inserts/postimages +1, deletes/preimages -1,
+    summed per exact row value, so application is correct for arbitrary
+    multisets and independent of commit order — to the buckets its
+    changed keys hash to (a bounded collect). With ``capture_changes``
+    every bucket replace of the view also writes change files, so the
+    view is itself a CDF source and views over raw-source paths stack
+    on it too.
 
     A table with no commit yet is not built bucket by bucket: the first
     batch's NET rows become the whole table in one ``_replace_all``
@@ -282,6 +305,65 @@ class _BucketedView:
         return F.pmod(F.hash(*[F.col(k) for k in self.keys]),
                       F.lit(self.n_buckets)).cast("int")
 
+    # -- buckets shared with a source ---------------------------------
+
+    def _layout(self) -> dict:
+        """This view's bucket layout, as ``mv_bucket_by`` records it."""
+        return {"keys": self.keys, "n_buckets": self.n_buckets}
+
+    def _view_meta(self, meta: dict, buckets) -> dict:
+        return {**meta, "mv_bucket_by": self._layout(),
+                "mv_buckets": sorted(buckets)}
+
+    def _shares_buckets(self, source: TxnTable, version: int) -> bool:
+        """True when ``source``'s newest layout record at ``version`` is
+        this view's layout. The log is walked back only past commits
+        that record none (a compaction) on a table with ``__kb=``
+        leaves: a raw table answers from its newest commit and its
+        live dirs, whatever the length of its log."""
+        meta = source.metas(version - 1, version)[0]
+        if "mv_bucket_by" not in meta:
+            if not any(map(_is_bucket_leaf, source.snapshot_dirs(version))):
+                return False
+            meta = source.meta_with("mv_bucket_by", version)[0]
+        return meta.get("mv_bucket_by") == self._layout()
+
+    def _changed_buckets(self, source: TxnTable, since: int,
+                         upto: int) -> list[int]:
+        """The buckets ``source``'s commits in (``since``, ``upto``]
+        replaced: the union of their ``mv_buckets``, read from the log
+        alone. A commit that records none under this layout (a
+        compaction, an overwrite or resync, a foreign write) and a
+        first build (``since`` < 0) mean every bucket."""
+        every = list(range(self.n_buckets))
+        if since < 0:
+            return every
+        out: set[int] = set()
+        for meta in source.metas(since, upto):
+            if (meta.get("mv_bucket_by") != self._layout()
+                    or "mv_buckets" not in meta):
+                return every
+            out.update(meta["mv_buckets"])
+        return sorted(out)
+
+    def _source_rows(self, spark, source: TxnTable, version: int,
+                     buckets: list[int] | None = None) -> DataFrame:
+        """``source``'s rows at ``version`` (``__kb`` dropped), only
+        those of ``buckets`` when given. The read is pruned to those
+        buckets' ``__kb=`` leaves when every row at ``version`` lives in
+        one; otherwise (rows a foreign write left outside the layout)
+        the source is read whole and re-bucketed, so no row is missed."""
+        if buckets is not None and len(buckets) < self.n_buckets:
+            rows = source._live_rows(version)  # noqa: SLF001
+            if all(n == 0 or _is_bucket_leaf(d) for d, n in rows.items()):
+                return (self._read_buckets(spark, source, buckets, version)
+                        .drop("__kb"))
+            return (source.read(spark, version=version).drop("__kb")
+                    .filter(self._bucket().isin(buckets)))
+        return source.read(spark, version=version).drop("__kb")
+
+    # -- change rows from a raw source ----------------------------------
+
     def _affected(self, df: DataFrame):
         """A memoized callable: the sorted ids of the buckets ``df``'s
         keys hash to — a bounded collect, at most n_buckets ints (the
@@ -302,19 +384,19 @@ class _BucketedView:
             .withColumn("__kb", self._bucket()))
 
     @staticmethod
-    def _read_buckets(spark, state: TxnTable,
-                      affected: list[int]) -> DataFrame:
+    def _read_buckets(spark, state: TxnTable, affected: list[int],
+                      version: int | None = None) -> DataFrame:
         """Partition-pruned bucket read, empty-graceful: a bucket can
         be live on one side only (read_partitions raises when nothing
         matches)."""
         try:
-            return state.read_partitions(spark, affected)
+            return state.read_partitions(spark, affected, version)
         except ValueError:
-            return (state.read(spark).limit(0)
+            return (state.read(spark, version=version).limit(0)
                     .withColumn("__kb", F.lit(0).cast("int")))
 
-    @staticmethod
-    def _replace_all(tbl: TxnTable, df: DataFrame, meta: dict) -> None:
+    def _replace_all(self, tbl: TxnTable, df: DataFrame,
+                     meta: dict) -> None:
         """Whole-table replace for a (re)build: ``df`` (with ``__kb``)
         becomes ``tbl``'s entire content in one commit. A partitioned
         write of ZERO rows leaves no files at all, which would commit
@@ -326,6 +408,9 @@ class _BucketedView:
         read path). The commit is based on the version read first, -1
         for an empty table, so a racing first commit conflicts instead
         of being built over."""
+        if tbl is self.view:
+            meta = self._view_meta(meta, range(self.n_buckets))
+
         def attempt(base: int) -> _Txn:
             adds = tbl._write_data_partitioned(df, "__kb")  # noqa: SLF001
             m = meta
@@ -373,18 +458,21 @@ class _BucketedView:
         """Partition-granular replace of exactly the affected buckets —
         unlike overwrite_partitions (which replaces partitions PRESENT
         in df), this also removes a bucket the delta emptied. When the
-        table being replaced is the VIEW and ``capture_changes`` is on,
-        the commit also writes change files (old bucket rows as
-        ``delete``, new rows as ``insert`` — unchanged rows inside a
-        replaced bucket appear as a cancelling delete+insert pair,
-        which every net-count/partial-sum consumer absorbs), so the
-        maintained view is itself a row-wise CDF source and FURTHER
-        incremental views stack on top of it (an agg MV over the join
-        MV — see tests/test_mv.py stacked test). Change volume is
+        table being replaced is the VIEW, the commit records the layout
+        and ``affected`` (:meth:`_view_meta`), and with
+        ``capture_changes`` it also writes change files (old bucket
+        rows as ``delete``, new rows as ``insert`` — unchanged rows
+        inside a replaced bucket appear as a cancelling delete+insert
+        pair, which every net-count/partial-sum consumer absorbs), so
+        the maintained view is itself a row-wise CDF source and views
+        that apply change rows stack on top of it (an agg MV over the
+        join MV — see tests/test_mv.py stacked test). Change volume is
         O(replaced buckets), the same order as the write itself.
         ``table`` has a commit: an empty one is built by
         :meth:`_replace_all`."""
         aff = {f"__kb={v}" for v in affected}
+        if table is self.view:
+            meta = self._view_meta(meta, affected)
 
         def attempt(base: int) -> _Txn:
             live = table.snapshot_dirs(base)
@@ -409,40 +497,51 @@ class _BucketedView:
 
 
 class JoinMaterializedView(_BucketedView):
-    """Inner equi-join of two txn tables, maintained incrementally from
-    BOTH sides' change feeds — the reference's ``final`` table is a JOIN
-    rebuilt wholesale every DAG run (read_delta.py:280-285); at 100 TB a
+    """Inner or left equi-join of two txn tables, maintained
+    incrementally — the reference's ``final`` table is a JOIN rebuilt
+    wholesale every DAG run (read_delta.py:280-285); at 100 TB a
     refresh must cost O(changed keys), not O(join).
 
-    The classic streaming-join state shape (what Flink keeps for a
-    two-sided join), materialized on the lakehouse: three bucketed
-    tables under one root — a keyed replica of each side (the per-key
-    state) and the join output. A refresh (1) reads each side's change
-    feed bounded to the captured version, (2) derives the set of
-    AFFECTED BUCKETS from the changed keys, (3) applies each side's
-    delta to its replica by net row count and (4) recomputes the join
-    for those buckets only, from the partition-pruned replicas, never
-    touching the sources. Every read and write in the refresh is
-    partition-granular (``commit(adds, removes)`` of ``__kb=``
-    subdirs), so refresh cost is O(changed keys x bucket width) while a
-    rebuild pays O(join).
+    Two paths, chosen per refresh from the sources' logs (no option):
 
-    The first refresh builds all three tables from the source
-    snapshots. Non-row-wise source history (overwrite / uncaptured-DV
-    delete — the feed raises) degrades to a flagged full rebuild, after
-    which incremental maintenance resumes. Join columns other than the
-    keys must be distinct between the two sides."""
+    - **Sources that share this view's buckets** (both are bucketed
+      views with this view's ``keys`` and ``n_buckets`` — e.g. a join
+      over another join view and an agg view): the refresh joins the
+      two sources' changed buckets, read in place at the pinned
+      ``(lv, rv)``, and replaces those buckets of the view in ONE
+      commit. The first build is the join of the two snapshots. No
+      replica is written.
+    - **Raw sources**: the classic streaming-join state shape (what
+      Flink keeps for a two-sided join), materialized on the lakehouse
+      — three bucketed tables under one root, a keyed replica of each
+      side (the per-key state) and the join output. A refresh (1)
+      reads each side's change feed bounded to the captured version,
+      (2) derives the set of AFFECTED BUCKETS from the changed keys,
+      (3) applies each side's delta to its replica by net row count
+      and (4) recomputes the join for those buckets only, from the
+      partition-pruned replicas, never touching the sources. The first
+      refresh builds all three tables from the source snapshots.
+      Non-row-wise source history (overwrite / uncaptured-DV delete —
+      the feed raises) degrades to a flagged full rebuild, after which
+      incremental maintenance resumes.
+
+    Every read and write in a refresh is partition-granular
+    (``commit(adds, removes)`` of ``__kb=`` subdirs), so refresh cost
+    is O(changed keys x bucket width) while a rebuild pays O(join).
+    Join columns other than the keys must be distinct between the two
+    sides."""
 
     def __init__(self, root: str, key, n_buckets: int = 32,
                  how: str = "inner", capture_changes: bool = False):
         """``how``: ``"inner"`` or ``"left"`` (the reference's
         ``final`` table is a LEFT join — read_delta.py:280-285, NULL
         counts preserved). Because a refresh RECOMPUTES the affected
-        buckets from the keyed replicas — it never reasons about
-        delta-join algebra — any join type that is local to a key
-        bucket is maintained correctly, including the appearing/
-        disappearing NULL-padded rows that make left-outer delta
-        rules hard in the classical formulation.
+        buckets — from the sources in place or from the keyed
+        replicas — and never reasons about delta-join algebra, any
+        join type that is local to a key bucket is maintained
+        correctly, including the appearing/disappearing NULL-padded
+        rows that make left-outer delta rules hard in the classical
+        formulation.
 
         ``capture_changes``: write row-wise change files with every
         view commit, so the maintained view is itself a CDF source and
@@ -473,8 +572,17 @@ class JoinMaterializedView(_BucketedView):
             return llast, rlast
         meta = {"operation": "join_mv_refresh",
                 "mv_left_version": lv, "mv_right_version": rv}
+        if self._shares_buckets(left, lv) and self._shares_buckets(right, rv):
+            return self._refresh_in_place(spark, left, right, llast, rlast,
+                                          lv, rv, meta)
         if llast < 0:  # first build
             self._rebuild(spark, left, right, lv, rv, meta)
+            return lv, rv
+        if self._replicas_behind(llast, rlast):
+            # the view moved without its replicas (their sources shared
+            # its buckets then): rebuild them with it
+            self._rebuild(spark, left, right, lv, rv,
+                          {**meta, "mv_resync": True})
             return lv, rv
         try:
             lch = left.read_changes(spark, since_version=llast, upto=lv)
@@ -502,6 +610,37 @@ class JoinMaterializedView(_BucketedView):
                                        lch_state=lst, rch_state=rst):
             return llast, rlast  # no changed keys: no empty commit
         return lv, rv
+
+    def _refresh_in_place(self, spark, left: TxnTable, right: TxnTable,
+                          llast: int, rlast: int, lv: int, rv: int,
+                          meta: dict) -> tuple[int, int]:
+        """The refresh over two sources that share this view's buckets:
+        one view commit of the join of their changed buckets, read at
+        the pinned ``(lv, rv)`` — or, for the first build, of their
+        snapshots. A crash before the commit leaves the view's record
+        where it was, so the retry reads the same log range."""
+        if llast < 0:
+            self._replace_all(self.view, self._join_of(
+                self._source_rows(spark, left, lv),
+                self._source_rows(spark, right, rv)), meta)
+            return lv, rv
+        buckets = sorted(set(self._changed_buckets(left, llast, lv))
+                         | set(self._changed_buckets(right, rlast, rv)))
+        if not buckets:
+            return llast, rlast  # no bucket changed: no empty commit
+        self._replace_buckets(self.view, self._join_of(
+            self._source_rows(spark, left, lv, buckets),
+            self._source_rows(spark, right, rv, buckets)), buckets, meta)
+        return lv, rv
+
+    def _replicas_behind(self, llast: int, rlast: int) -> bool:
+        """True when a replica's own record is older than the view's
+        ``(llast, rlast)`` (or it has none)."""
+        return any(
+            state.meta_with(key)[0].get(key, -1) < last
+            for state, key, last in (
+                (self.left_state, "mv_left_version", llast),
+                (self.right_state, "mv_right_version", rlast)))
 
     def _state_leg_feed(self, spark, source: TxnTable,
                         state: TxnTable, view_last: int, target: int,
@@ -545,7 +684,11 @@ class JoinMaterializedView(_BucketedView):
         commit already absorbed part of the window gets only the
         remainder (see ``_state_leg_feed``); affected buckets are
         always computed from the FULL view window so the view re-join
-        covers everything since its own record."""
+        covers everything since its own record. Raises ``ValueError``
+        when the view has commits but a replica has none (a view
+        ``refresh`` built in place): building that replica from one
+        batch would silently drop every row the batch does not
+        carry."""
         run = guard if guard is not None else (lambda table, fn: fn())
         # "__kb" is reserved: a source that is ITSELF a maintained
         # bucketed view (stacked join MVs) carries its own bucket
@@ -556,6 +699,16 @@ class JoinMaterializedView(_BucketedView):
             lch_state = lch_state.drop("__kb")
         if rch_state is not None:
             rch_state = rch_state.drop("__kb")
+        bare = [t.path for t in (self.left_state, self.right_state)
+                if t.latest_version() is None]
+        if bare and self.view.latest_version() is not None:
+            raise ValueError(
+                f"join view {self.view.path} has commits but its "
+                f"replica(s) {bare} have none: it was built in place "
+                "from sources that share its buckets, so change rows "
+                "cannot be applied to it. Keep maintaining it with "
+                "JoinMaterializedView.refresh, or feed change rows to "
+                "a view under a new root")
         affected = self._affected(
             lch.select(*self.keys)
             .unionByName(rch.select(*self.keys)).distinct())
@@ -589,18 +742,19 @@ class JoinMaterializedView(_BucketedView):
     # -- internals ---------------------------------------------------
 
     def _join_of(self, l: DataFrame, r: DataFrame) -> DataFrame:
-        lc = [c for c in l.columns
-              if c not in (*self.keys, "__kb")]
-        rc = [c for c in r.columns
-              if c not in (*self.keys, "__kb")]
-        return (l.join(r.drop("__kb"), self.keys, self.how)
-                .select(*self.keys, *lc, *rc, "__kb"))
+        """``l`` joined with ``r`` on the keys, bucketed (a side's own
+        ``__kb`` is dropped)."""
+        l, r = l.drop("__kb"), r.drop("__kb")
+        lc = [c for c in l.columns if c not in self.keys]
+        rc = [c for c in r.columns if c not in self.keys]
+        return (l.join(r, self.keys, self.how)
+                .select(*self.keys, *lc, *rc)
+                .withColumn("__kb", self._bucket()))
 
     def _rebuild(self, spark, left, right, lv, rv, meta) -> None:
-        ls = (left.read(spark, version=lv).drop("__kb")
-              .withColumn("__kb", self._bucket()))
-        rs = (right.read(spark, version=rv).drop("__kb")
-              .withColumn("__kb", self._bucket()))
+        ls, rs = (self._source_rows(spark, t, v).withColumn("__kb",
+                                                            self._bucket())
+                  for t, v in ((left, lv), (right, rv)))
         for tbl, df in ((self.left_state, ls), (self.right_state, rs),
                         (self.view, self._join_of(ls, rs))):
             self._replace_all(tbl, df, meta)
@@ -619,12 +773,32 @@ class _SingleSourceView(_BucketedView):
     def refresh(self, spark: SparkSession, source: TxnTable) -> int:
         """Bring the view up to ``source.latest_version()``; returns
         the source version now reflected. No empty commits. The first
-        refresh builds from the source snapshot, and so does a flagged
-        (``mv_resync``) resync over history the feed cannot express
-        row-wise; every other refresh is incremental."""
-        return self.fold(spark, source,
-                         {"operation": f"{self.NAME}_refresh"},
-                         rebuild=self._rebuild_from)
+        refresh builds from the source snapshot. Over a source that
+        shares this view's buckets, a refresh rebuilds the changed
+        buckets from the source's rows at its version (one commit; a
+        resync is the every-bucket case). Over a raw source it applies
+        the change rows, and history the feed cannot express row-wise
+        makes a flagged (``mv_resync``) rebuild from the snapshot."""
+        meta = {"operation": f"{self.NAME}_refresh"}
+        sv = source.latest_version()
+        if sv is None or not self._shares_buckets(source, sv):
+            return self.fold(spark, source, meta, rebuild=self._rebuild_from)
+        last = (self.view.meta_with("mv_source_version")[0]
+                .get("mv_source_version", -1))
+        if sv <= last:
+            return last
+        meta["mv_source_version"] = sv
+        if last < 0:
+            self._rebuild_from(spark, source, sv, meta)
+            return sv
+        buckets = self._changed_buckets(source, last, sv)
+        if not buckets:
+            return last  # no bucket changed: no empty commit
+        self._replace_buckets(
+            self.view, self._bucketed(
+                self._source_rows(spark, source, sv, buckets)),
+            buckets, meta)
+        return sv
 
     def fold(self, spark: SparkSession, source: TxnTable, meta: dict,
              guard=None, rebuild=None) -> int:
@@ -649,9 +823,12 @@ class _SingleSourceView(_BucketedView):
 
     def _rebuild_from(self, spark, source: TxnTable, sv: int,
                       meta: dict) -> None:
-        snap = source.read(spark, version=sv).drop("__kb")
-        self._replace_all(self.view, self._from_snapshot(snap)
-                          .withColumn("__kb", self._bucket()), meta)
+        self._replace_all(self.view, self._bucketed(
+            self._source_rows(spark, source, sv)), meta)
+
+    def _bucketed(self, rows: DataFrame) -> DataFrame:
+        """The view rows derived from source ``rows``, bucketed."""
+        return self._from_snapshot(rows).withColumn("__kb", self._bucket())
 
 
 class MapMaterializedView(_SingleSourceView):
@@ -776,16 +953,17 @@ class AggMaterializedView(_SingleSourceView):
         read_delta.py:280-294). Deliberately records NO
         ``mv_source_version``: nothing from the feed is considered
         absorbed, so a later batch refresh folds the entire feed and
-        the streaming ledger guards its own commits. No-op if the
-        view already has a commit."""
+        the streaming ledger guards its own commits. It records the
+        layout with no replaced bucket (``mv_buckets: []``), so a view
+        stacked on this one rebuilds nothing for it. No-op if the view
+        already has a commit."""
         if self.view.latest_version() is not None:
             return
         src = source.read(spark).limit(0)
-        empty = (self._from_snapshot(src.drop("__kb"))
-                 .withColumn("__kb", self._bucket())
+        empty = (self._bucketed(src.drop("__kb"))
                  .repartition(1))  # one 0-row file carries the schema
-        self.view.append(empty, {**(meta or {}),
-                                 "operation": "agg_mv_init_empty"})
+        self.view.append(empty, self._view_meta(
+            {**(meta or {}), "operation": "agg_mv_init_empty"}, []))
 
     def _from_snapshot(self, snap: DataFrame) -> DataFrame:
         return _partials(snap, self.keys, self.value_col)

@@ -915,6 +915,14 @@ class TxnTable:
             v -= 1
         return {}, None
 
+    def metas(self, since_version: int, upto: int) -> list[dict]:
+        """The commit metas of versions (``since_version``, ``upto``],
+        oldest first: what a follower of this table's commits reads
+        from the log alone (e.g. the buckets each view commit replaced),
+        with no Spark job."""
+        return [self._doc(v).get("meta", {})
+                for v in self._versions_tail(since_version, upto)]
+
     def max_stream_batch_id(self, app_id: str | None = None) -> int | None:
         """Highest ``stream_batch_id`` recorded by ANY commit (optionally
         restricted to commits whose ``stream_app_id`` matches ``app_id``).

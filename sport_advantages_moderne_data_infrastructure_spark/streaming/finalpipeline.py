@@ -25,10 +25,13 @@ commit of the batch's net rows:
    bucket-granular commit, change-capturing;
 3. ``jmv2.refresh(jmv1.view, aggv.view)`` — the layers just committed
    inside THIS trigger are intermediate, not external feeds, so jmv2
-   follows them through the batch high-water refresh (per-leg (lv, rv)
-   meta, crash-idempotent since r8): it reads exactly the view deltas
-   steps 1-2 produced, O(changed buckets);
-4. ``prime.refresh(jmv2.view)`` — same discipline.
+   follows them through the batch high-water refresh ((lv, rv) in its
+   meta). Both are bucketed like jmv2, so it keeps no replicas: it
+   takes the buckets steps 1-2 replaced from their logs
+   (``mv_buckets``) and joins those buckets of the two views in place,
+   one commit, O(changed buckets);
+4. ``prime.refresh(jmv2.view)`` — same discipline: the changed
+   buckets of jmv2's view, re-mapped in place, one commit.
 
 Exactly-once across a crash ANYWHERE in the trigger: the checkpoint
 only advances after foreachBatch returns, so a crash replays the same

@@ -93,7 +93,9 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     """Start the join-view maintenance stream; returns the
     StreamingQuery. Read the view with ``jmv.read``. Do not mix with
     batch ``jmv.refresh`` on the same view: the stream's bookkeeping
-    is the (app_id, batch_id) ledger, not ``mv_left_version``."""
+    is the (app_id, batch_id) ledger, not ``mv_left_version``. A view
+    that ``refresh`` built in place (from sources bucketed like it)
+    has no replicas, and its first batch raises ``ValueError``."""
     keys = jmv.keys
     # "__kb" excluded: a source that is itself a maintained bucketed
     # view carries its bucket column — physical layout, not data

@@ -715,3 +715,319 @@ def test_first_batch_with_deletes_builds_the_per_bucket_view(spark,
         lambda v: [v.left_state, v.right_state, v.view])
     assert rows(jmv.read(spark)) == Counter(
         [(1, "a", 10), (3, "C", 31)] + [(5, "e", 50)] * 4)
+
+
+# --- views over sources that share their buckets ------------------------
+
+def _sh_left(spark, rows):
+    return spark.createDataFrame(rows, "k int, lval string, lnum int")
+
+
+def _sh_right(spark, rows):
+    return spark.createDataFrame(rows, "k int, rval int")
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _doubled(df):
+    return df.select("k", "lval", (F.col("lnum") * 2).alias("l2"))
+
+
+def _shared_case(spark, root, kind):
+    """(raw left, raw right, the bucketed sources, the view under test,
+    ``check(step)``) for ``kind`` in inner / left / map / agg. The
+    bucketed sources are identity map views over the raw tables,
+    bucketed like the view; ``check`` refreshes every layer, asserts
+    the view equals its twin over the raw tables and a batch recompute,
+    and returns the view's rows."""
+    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
+        AggMaterializedView,
+        MapMaterializedView,
+    )
+
+    left, right = TxnTable(f"{root}/l"), TxnTable(f"{root}/r")
+    lb, rb = (MapMaterializedView(f"{root}/{n}b", "k", lambda df: df,
+                                  n_buckets=4) for n in "lr")
+
+    def make(name):
+        if kind in ("inner", "left"):
+            return JoinMaterializedView(f"{root}/{name}", "k", n_buckets=4,
+                                        how=kind, capture_changes=True)
+        if kind == "map":
+            return MapMaterializedView(f"{root}/{name}", "k", _doubled,
+                                       n_buckets=4)
+        return AggMaterializedView(f"{root}/{name}", "k", "lnum",
+                                   n_buckets=4)
+
+    view, twin = make("in_place"), make("raw")
+    if kind in ("inner", "left"):
+        def refresh():
+            lb.refresh(spark, left)
+            rb.refresh(spark, right)
+            view.refresh(spark, lb.view, rb.view)
+            twin.refresh(spark, left, right)
+
+        def want():
+            return (left.read(spark).join(right.read(spark), "k", kind)
+                    .select("k", "lval", "lnum", "rval"))
+    else:
+        def refresh():
+            lb.refresh(spark, left)
+            view.refresh(spark, lb.view)
+            twin.refresh(spark, left)
+
+        def want():
+            src = left.read(spark)
+            return (_doubled(src) if kind == "map" else
+                    src.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"),
+                                         F.sum("lnum").alias("sm")))
+
+    def check(step):
+        refresh()
+        cols = want().columns
+        got, raw, batch = (_rows(view.read(spark).select(*cols)),
+                           _rows(twin.read(spark).select(*cols)),
+                           _rows(want()))
+        assert got == raw == batch, (kind, step)
+        return got
+
+    return left, right, (lb, rb), view, check
+
+
+import pytest  # noqa: E402
+
+
+@pytest.mark.parametrize("kind", ["inner", "left", "map", "agg"])
+def test_view_over_bucket_sharing_sources_matches_raw_and_batch(
+        spark, tmp_path, kind):
+    """A view whose sources share its buckets rebuilds each changed
+    bucket from them in place, with no replica and no resync flag, and
+    equals the same view over the raw sources and a batch recompute
+    through inserts, deletes, update pairs, an emptied bucket, the
+    NULL-padded left row appearing and disappearing, a source resync
+    (overwrite), a source compaction and a crash before the view commit
+    followed by a retry."""
+    left, right, sources, view, check = _shared_case(
+        spark, str(tmp_path), kind)
+    left.append(_sh_left(spark, [(i, f"v{i}", i) for i in range(12)]
+                         + [(3, "v3", 3)]))
+    right.append(_sh_right(spark, [(i, 10 * i) for i in range(0, 12, 2)]
+                           + [(4, 41)]))
+    check("build")
+    left.append(_sh_left(spark, [(20, "n", 5), (21, "m", 6)]))
+    right.append(_sh_right(spark, [(21, 210), (1, 11)]))
+    check("insert")
+    right.delete_where(spark, "k = 0")  # left join: pad row appears
+    left.delete_where(spark, "k = 5")
+    got = check("delete")
+    if kind == "left":
+        assert got[(0, "v0", 0, None)] == 1
+    left.merge(spark, _sh_left(spark, [(7, "seven", 70)]), "k")
+    right.merge(spark, _sh_right(spark, [(2, 22)]), "k")
+    check("update pairs")
+    assert left.read(spark).filter("pmod(hash(k), 4) = 1").count()
+    left.delete_where(spark, "pmod(hash(k), 4) = 1")  # empties a bucket
+    check("emptied bucket")
+    assert not view.view.read(spark).filter("__kb = 1").count()
+    right.append(_sh_right(spark, [(0, 5)]))  # left join: pad row goes
+    got = check("pad row disappears")
+    if kind == "left":
+        assert got[(0, "v0", 0, None)] == 0
+    left.overwrite(_sh_left(spark, [(i, f"w{i}", i + 1)
+                                    for i in range(0, 30, 3)]))
+    check("source resync")
+    for s in sources:
+        if s.view.latest_version() is not None:
+            s.view.compact(spark)  # a source commit without mv_buckets
+    left.append(_sh_left(spark, [(40, "x", 4)]))
+    check("source compaction")
+
+    left.append(_sh_left(spark, [(41, "y", 1), (3, "again", 9)]))
+    before = view.view.latest_version()
+    real = TxnTable.commit
+    target = view.view.path
+
+    def crash(self, adds, removes, meta=None, *a, **k):
+        if self.path == target:
+            raise RuntimeError("crash before the view commit")
+        return real(self, adds, removes, meta, *a, **k)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(TxnTable, "commit", crash)
+        with pytest.raises(RuntimeError, match="crash before"):
+            check("crash")
+    assert view.view.latest_version() == before
+    check("retry")
+    assert view.view.latest_version() == before + 1
+    metas = [view.view._doc(v)["meta"]  # noqa: SLF001
+             for v in range(view.view.latest_version() + 1)]
+    assert not any(m.get("mv_resync") for m in metas)
+    assert all(m["mv_bucket_by"] == {"keys": ["k"], "n_buckets": 4}
+               for m in metas)
+    if kind in ("inner", "left"):
+        assert view.left_state.latest_version() is None
+        assert view.right_state.latest_version() is None
+
+
+def test_source_rows_outside_the_layout_are_read_whole(spark, tmp_path):
+    """A source that records this view's layout but holds rows outside
+    any ``__kb=`` leaf (a foreign plain append) is read whole and
+    re-bucketed, never read as empty buckets."""
+    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
+        MapMaterializedView,
+    )
+
+    src = TxnTable(str(tmp_path / "src"))
+    mv = MapMaterializedView(str(tmp_path / "mv"), "k", _doubled,
+                             n_buckets=4)
+    layout = {"mv_bucket_by": {"keys": ["k"], "n_buckets": 4}}
+    rows = [(i, f"v{i}", i) for i in range(8)]
+    src.append(_sh_left(spark, rows).withColumn(
+        "__kb", F.pmod(F.hash("k"), F.lit(4))),
+        {**layout, "mv_buckets": [0, 1, 2, 3]})
+    mv.refresh(spark, src)
+    src.append(_sh_left(spark, [(9, "n", 1)]).withColumn(
+        "__kb", F.pmod(F.hash("k"), F.lit(4))),
+        {**layout, "mv_buckets": [int(spark.range(1).select(
+            F.pmod(F.hash(F.lit(9)), F.lit(4))).first()[0])]})
+    mv.refresh(spark, src)
+    assert _rows(mv.read(spark).select("k", "lval", "l2")) == _rows(
+        _doubled(src.read(spark)))
+    assert mv.view.last_meta()["mv_source_version"] == 1
+
+
+def _mini_chain(spark, root, n_final=4, prime_keys="k"):
+    """jmv1 (l ⋈ r) and agg (over a) over raw tables, final = jmv1 ⟕
+    agg and prime = a map view over final — the cdc chain's shape."""
+    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
+        AggMaterializedView,
+        MapMaterializedView,
+    )
+
+    left, right, act = (TxnTable(f"{root}/{n}") for n in ("l", "r", "a"))
+    jmv1 = JoinMaterializedView(f"{root}/jmv1", "k", n_buckets=4,
+                                capture_changes=True)
+    agg = AggMaterializedView(f"{root}/agg", "k", "dur", n_buckets=4,
+                              capture_changes=True)
+    final = JoinMaterializedView(f"{root}/final", "k", n_buckets=n_final,
+                                 how="left", capture_changes=True)
+    prime = MapMaterializedView(
+        f"{root}/prime", prime_keys,
+        lambda df: df.select("k", "lval", "rval", "cnt",
+                             (F.col("sm") / F.col("cnt")).alias("mean")),
+        n_buckets=4)
+    left.append(_ldf(spark, [(i, f"e{i}") for i in range(10)]))
+    right.append(_rdf(spark, [(i, i) for i in range(10)]))
+    act.append(spark.createDataFrame([(i % 7, i) for i in range(20)],
+                                     "k int, dur int"))
+
+    def chain():
+        jmv1.refresh(spark, left, right)
+        agg.refresh(spark, act)
+        final.refresh(spark, jmv1.view, agg.view)
+        prime.refresh(spark, final.view)
+
+    return left, right, act, final, prime, chain
+
+
+def _final_want(spark, left, right, act):
+    a = act.read(spark).groupBy("k").agg(F.count(F.lit(1)).alias("cnt"),
+                                         F.sum("dur").alias("sm"))
+    return _rows(left.read(spark).join(right.read(spark), "k")
+                 .join(a, "k", "left").select("k", "lval", "rval", "cnt",
+                                              "sm"))
+
+
+def test_chain_step_commits_once_per_stacked_layer(spark, tmp_path):
+    """One step of the cdc chain's shape (an activity commit) commits
+    once on final's view and once on prime's, and never on final's
+    replica tables: both of final's sources share its buckets."""
+    left, right, act, final, prime, chain = _mini_chain(
+        spark, str(tmp_path))
+    chain()
+    assert final.view.latest_version() == prime.view.latest_version() == 0
+    act.append(spark.createDataFrame([(2, 5), (8, 1)], "k int, dur int"))
+    act.delete_where(spark, "dur = 3")
+    chain()
+    assert final.view.latest_version() == prime.view.latest_version() == 1
+    assert final.left_state.latest_version() is None
+    assert final.right_state.latest_version() is None
+    assert _rows(final.read(spark).select("k", "lval", "rval", "cnt", "sm")
+                 ) == _final_want(spark, left, right, act)
+    assert _rows(prime.read(spark).select("k", "cnt")) == _rows(
+        final.read(spark).select("k", "cnt"))
+
+
+@pytest.mark.parametrize("n_final, prime_keys",
+                         [(8, "k"), (4, ["k", "lval"])])
+def test_view_over_differently_bucketed_sources_keeps_replicas(
+        spark, tmp_path, n_final, prime_keys):
+    """A view whose bucket count (final over 4-bucket sources, with 8)
+    or keys (prime keyed by k and lval over final, keyed by k) differ
+    from its source's keeps the change-row path — final's replicas
+    commit, prime applies final's change rows — and stays correct."""
+    left, right, act, final, prime, chain = _mini_chain(
+        spark, str(tmp_path), n_final, prime_keys)
+    applied = []
+    real_apply = prime.apply_change_batch
+    prime.apply_change_batch = lambda *a, **k: applied.append(
+        real_apply(*a, **k))
+    for step in range(2):
+        chain()
+        assert (final.left_state.latest_version() is not None) == (
+            n_final == 8)
+        assert _rows(final.read(spark).select(
+            "k", "lval", "rval", "cnt", "sm")) == _final_want(
+            spark, left, right, act)
+        assert _rows(prime.read(spark).select("k", "lval", "rval", "cnt")
+                     ) == _rows(final.read(spark).select(
+                         "k", "lval", "rval", "cnt"))
+        act.append(spark.createDataFrame([(3, 4)], "k int, dur int"))
+    assert len(applied) == 1  # the second step's
+
+
+def test_change_rows_refused_on_a_view_built_in_place(spark, tmp_path):
+    """Change rows fed to a join view whose refresh built it in place
+    (no replica) raise with the remedy, instead of building a replica
+    from one batch and silently dropping every other row; a source
+    re-bucketed under the view moves it back to the replica path with a
+    flagged rebuild."""
+    from sport_advantages_moderne_data_infrastructure_spark.operators.mv import (  # noqa: E501
+        MapMaterializedView,
+    )
+
+    left, right = TxnTable(str(tmp_path / "l")), TxnTable(str(tmp_path / "r"))
+    lb, rb = (MapMaterializedView(str(tmp_path / f"{n}b"), "k",
+                                  lambda df: df, n_buckets=4)
+              for n in "lr")
+    jmv = JoinMaterializedView(str(tmp_path / "mv"), "k", n_buckets=4)
+    left.append(_ldf(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    right.append(_rdf(spark, [(1, 10), (2, 20), (3, 30)]))
+    lb.refresh(spark, left)
+    rb.refresh(spark, right)
+    jmv.refresh(spark, lb.view, rb.view)
+    v = jmv.view.latest_version()
+    lch = _ldf(spark, [(4, "d")]).withColumn("_change_type", F.lit("insert"))
+    rch = _rdf(spark, [(4, 40)]).withColumn("_change_type", F.lit("insert"))
+    with pytest.raises(ValueError, match="JoinMaterializedView.refresh"):
+        jmv.apply_change_batch(spark, lch, rch, {"operation": "feed"})
+    assert jmv.view.latest_version() == v
+    assert jmv.left_state.latest_version() is None
+
+    # the left source is rebuilt with 8 buckets: it no longer shares
+    lb8 = MapMaterializedView(lb.view.path, "k",
+                              lambda df: df, n_buckets=8)
+    lb8._rebuild_from(spark, left, 0,  # noqa: SLF001
+                      {"operation": "rebucket", "mv_source_version": 0})
+    left.append(_ldf(spark, [(5, "e")]))
+    right.append(_rdf(spark, [(5, 50)]))
+    lb8.refresh(spark, left)
+    rb.refresh(spark, right)
+    jmv.refresh(spark, lb8.view, rb.view)
+    assert jmv.view.last_meta().get("mv_resync") is True
+    assert jmv.left_state.latest_version() is not None
+    assert _jgot(spark, jmv) == _jwant(spark, left, right)
